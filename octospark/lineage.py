@@ -31,19 +31,58 @@ scalable, so the lineage checksum is the order-independent
 ``bit_xor(xxhash64(url, text))`` per bucket — computable as a streaming
 aggregate with map-side partial combine, still detects any changed /
 missing / duplicated row.
+
+Commit protocol — one flat directory per chunk, named in the manifest
+(the same protocol :func:`octospark.streamops.run_stream_exactly_once`
+uses per micro-batch):
+
+- **write**: each chunk of buckets an attempt commits is written flat
+  (no ``partitionBy``) with ``mode("errorifexists")`` into its own
+  directory ``data/<run_id>-<chunk index>``, rows sorted by ``part_key``
+  within each file so Parquet footer stats cover bucket ranges;
+- **commit**: the atomic manifest replace records, per bucket, the
+  ``run_id`` and the ``chunk`` directory that holds its rows;
+- **read**: :func:`read_extracted` opens exactly the chunk directories
+  the manifest names. A directory no manifest entry names — an aborted
+  attempt's chunk, or a generation a compaction superseded — is never
+  listed, let alone scanned.
+
+It replaced ``partitionBy("part_key")`` appends, which made every write
+task open one directory, one data file and one ``.crc`` file per bucket
+it held: O(tasks × buckets) small files on any filesystem, and, on a
+Hadoop build without its native library, one forked ``chmod`` process
+per directory and file (``RawLocalFileSystem.setPermission``). A flat
+chunk costs at most one data file per write task, whatever the bucket
+count.
 """
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
+import shutil
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from octospark.pipeline import EXTRACTED_SCHEMA
 
 DEFAULT_BUCKETS = 64
+
+# committed rows as written and read back: the extracted columns, then
+# the attempt that committed them, then their bucket
+SNAPSHOT_SCHEMA = T.StructType(
+    EXTRACTED_SCHEMA.fields
+    + [
+        T.StructField("run_id", T.StringType(), True),
+        T.StructField("part_key", T.IntegerType(), True),
+    ]
+)
 
 LINEAGE_COLS = (
     "part_key", "input_count", "output_count", "error_count", "checksum"
@@ -83,23 +122,29 @@ def _write_chunk(
     out_dir: str,
     writer: str,
     iceberg_table: str | None,
-) -> None:
-    """Append one chunk of buckets to the sink. Iceberg appends are
-    snapshot-committed by the table itself; the Parquet path relies on
-    the JSON manifest committed by the caller afterwards."""
+    index: int = 0,
+) -> str:
+    """Write one chunk of buckets to the sink and return the name of its
+    directory under ``data/``. Iceberg appends are snapshot-committed by
+    the table itself; the Parquet path writes one new flat directory per
+    chunk and relies on the JSON manifest, committed by the caller
+    afterwards, to name it."""
     chunk = extracted.filter(F.col("part_key").isin(keys)).withColumn(
         "run_id", F.lit(run_id)
     )
+    name = f"{run_id}-{index:04d}"
     if writer == "iceberg":
         # routing unit-tested with a stub frame (tests/test_lineage.py);
         # the real append needs the Iceberg jar, absent in this sandbox
         chunk.writeTo(iceberg_table).append()
     else:
         (
-            chunk.write.partitionBy("part_key")
-            .mode("append")
-            .parquet(os.path.join(out_dir, "data"))
+            chunk.select(*SNAPSHOT_SCHEMA.names)
+            .sortWithinPartitions("part_key")
+            .write.mode("errorifexists")
+            .parquet(os.path.join(out_dir, "data", name))
         )
+    return name
 
 
 def with_part_key(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
@@ -136,6 +181,27 @@ def commit_manifest(out_dir: str, manifest: dict) -> None:
 
 def committed_buckets(out_dir: str) -> list:
     return sorted(int(k) for k in read_manifest(out_dir)["buckets"])
+
+
+def committed_chunks(manifest: dict) -> dict:
+    """{chunk directory name: (run_id, sorted bucket keys)} of every
+    committed bucket. A bucket entry that names no chunk directory is an
+    error: there is no other layout to fall back on."""
+    chunks: dict = {}
+    for k, v in manifest["buckets"].items():
+        if "chunk" not in v:
+            raise ValueError(
+                f"manifest bucket {k} names no chunk directory; this "
+                "output was not written by the chunk-directory protocol"
+            )
+        chunks.setdefault(v["chunk"], (v["run_id"], []))[1].append(int(k))
+    return {c: (r, sorted(ks)) for c, (r, ks) in sorted(chunks.items())}
+
+
+def _parquet_files(path: str) -> list:
+    if not os.path.isdir(path):
+        return []
+    return sorted(n for n in os.listdir(path) if n.endswith(".parquet"))
 
 
 # --- run --------------------------------------------------------------------
@@ -194,9 +260,9 @@ def run_extract(
     # Every attempt (even one that later crashes before committing any
     # bucket) is registered in the manifest BEFORE any data file is
     # written. A caller-supplied run_id that was already attempted gets a
-    # per-attempt suffix, so orphan parquet files left by an aborted
-    # attempt can never share a (part_key, run_id) pair with a later
-    # resume — read_extracted's pair filter keeps them invisible.
+    # per-attempt suffix, so an aborted attempt's orphan chunk directory
+    # can never share a name or a (part_key, run_id) pair with a later
+    # resume's chunks.
     base = run_id or uuid.uuid4().hex[:12]
     run_id, attempt = base, 2
     while run_id in manifest["attempts"]:
@@ -243,15 +309,16 @@ def run_extract(
             .collect()
         }
 
-        # write data files under bucket=K dirs (partition pruning on read)
+        # one flat directory per chunk, named in the manifest below
         commit_keys = sorted(input_counts)
         if fail_after_buckets is not None:
             commit_keys = commit_keys[:fail_after_buckets]
         chunk_size = validate_every_k_buckets or len(commit_keys) or 1
-        for i in range(0, len(commit_keys), chunk_size):
+        for index, i in enumerate(range(0, len(commit_keys), chunk_size)):
             chunk_keys = commit_keys[i : i + chunk_size]
-            _write_chunk(
-                extracted, chunk_keys, run_id, out_dir, writer, iceberg_table
+            chunk = _write_chunk(
+                extracted, chunk_keys, run_id, out_dir, writer,
+                iceberg_table, index,
             )
             if validate_fn is not None:
                 drift = validate_fn()
@@ -266,6 +333,7 @@ def run_extract(
                 r = lineage_rows.get(k)
                 manifest["buckets"][str(k)] = {
                     "run_id": run_id,
+                    "chunk": chunk,
                     "input_count": input_counts.get(k, 0),
                     "output_count": int(r["output_count"]) if r else 0,
                     "error_count": int(r["error_count"]) if r else 0,
@@ -290,23 +358,30 @@ def run_extract(
 
 
 def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read back only committed data (snapshot isolation). The filter is
-    on the manifest's (part_key, run_id) PAIRS, not part_key alone: an
-    aborted run (crash or validation drift after data write, before
-    manifest commit) leaves orphan files in a bucket dir, and that bucket
-    may later be committed by a resume run under a different run_id — the
-    orphans must stay invisible, exactly like data files absent from an
-    Iceberg manifest. part_key isin() additionally prunes bucket dirs at
-    the scan; the broadcast semi-join enforces the pair match."""
-    m = read_manifest(out_dir)
-    pairs = [(int(k), v["run_id"]) for k, v in m["buckets"].items()]
-    df = spark.read.parquet(os.path.join(out_dir, "data"))
-    committed = spark.createDataFrame(
-        pairs, "part_key int, run_id string"
+    """Read back only committed data (snapshot isolation).
+
+    The scan's root paths are exactly the chunk directories the manifest
+    names, so an aborted attempt's chunk (data written, crash or drift
+    before the manifest commit) and a generation a compaction superseded
+    are never listed — exactly like data files absent from an Iceberg
+    manifest. Each chunk's ``(run_id, part_key ∈ keys)`` condition is
+    then applied as a plain column expression that Parquet receives as a
+    pushed filter: no listing job (the schema is known), no join.
+
+    Returns ``url, warc_ts, text, spans, lang, n_blocks, error, run_id,
+    part_key`` (:data:`SNAPSHOT_SCHEMA`); a run that committed no bucket
+    reads as an empty frame of that schema."""
+    chunks = committed_chunks(read_manifest(out_dir))
+    if not chunks:
+        return spark.createDataFrame([], SNAPSHOT_SCHEMA)
+    data_dir = os.path.join(out_dir, "data")
+    df = spark.read.schema(SNAPSHOT_SCHEMA).parquet(
+        *[os.path.join(data_dir, c) for c in chunks]
     )
-    return df.filter(
-        F.col("part_key").isin([p for p, _ in pairs])
-    ).join(F.broadcast(committed), ["part_key", "run_id"], "left_semi")
+    return df.filter(functools.reduce(operator.or_, [
+        (F.col("run_id") == run_id) & F.col("part_key").isin(keys)
+        for run_id, keys in chunks.values()
+    ]))
 
 
 EXPORT_FORMATS = ("parquet", "jsonl")
@@ -359,41 +434,44 @@ def compact_run(
     """Snapshot-preserving compaction + orphan GC — the Iceberg
     ``rewrite_data_files`` + ``expire_snapshots`` analog, and the
     maintenance op a resume-heavy 10^12-row table needs: every aborted
-    attempt leaves orphan parquet files, every resume run adds another
-    file generation per bucket, and at 100 TB the accumulated small
-    files dominate scan planning time.
+    attempt leaves an orphan chunk directory, every resume run adds
+    another chunk generation, and at 100 TB the accumulated small files
+    dominate scan planning time.
 
-    Protocol (crash-safe at every step):
+    Protocol (crash-safe at every step), on the same chunk-directory
+    layout as :func:`run_extract`:
 
-    1. read the committed snapshot (:func:`read_extracted` pair
-       semantics — orphans are invisible by construction);
-    2. rewrite it under a fresh ``compact-*`` run_id, one shuffle
-       partition per bucket (``repartition(part_key)``) so each bucket
-       lands as a single file per generation;
+    1. read the committed snapshot (:func:`read_extracted` — orphans
+       are invisible by construction);
+    2. rewrite it as ONE new chunk directory under a fresh
+       ``compact-*`` run_id, one shuffle partition per bucket
+       (``repartition(part_key)``) so each bucket lands in a single
+       file;
     3. VERIFY the rewrite: per-bucket output_count and the
        order-independent ``bit_xor(xxhash64(url, text))`` checksum of
-       the new files must equal the manifest's committed lineage —
-       a compaction that changed any row aborts and the old snapshot
-       stays live;
-    4. atomically commit a manifest pointing every bucket at the
-       compaction run_id (crash before this leaves the new files as
-       invisible orphans; the next compaction collects them);
-    5. GC: delete every data file that predates the rewrite — each is
-       now either superseded (was committed, rewritten in step 2) or a
-       true orphan from an aborted attempt (crash mid-delete is safe:
-       leftover old files stay invisible to the pair filter).
+       the new chunk must equal the manifest's committed lineage — a
+       compaction that changed any row deletes its chunk and aborts,
+       and the old snapshot stays live;
+    4. atomically commit a manifest pointing every bucket at the new
+       chunk (crash before this leaves it an unnamed orphan; the next
+       compaction collects it);
+    5. GC: delete every ``data/`` directory the manifest no longer
+       names — each is either superseded (its buckets were rewritten in
+       step 2) or an aborted attempt's orphan (crash mid-delete is
+       safe: a leftover directory stays unnamed, so unread).
 
     Returns {"files_before", "files_after", "old_files_removed",
-    "run_id"}.
+    "run_id"}, counting Parquet data files.
     """
-    import glob
-
     m = read_manifest(out_dir)
     if not m["buckets"]:
         return {"files_before": 0, "files_after": 0,
                 "old_files_removed": 0, "run_id": None}
     data_dir = os.path.join(out_dir, "data")
-    old_files = set(glob.glob(os.path.join(data_dir, "*", "*.parquet")))
+    files_before = sum(
+        len(_parquet_files(os.path.join(data_dir, d)))
+        for d in os.listdir(data_dir)
+    )
 
     base = f"compact-{uuid.uuid4().hex[:12]}"
     run_id, attempt = base, 2
@@ -403,23 +481,15 @@ def compact_run(
     m["attempts"].append(run_id)
     commit_manifest(out_dir, m)
 
-    snapshot = read_extracted(spark, out_dir).withColumn(
-        "run_id", F.lit(run_id)
+    keys = sorted(int(k) for k in m["buckets"])
+    chunk = _write_chunk(
+        read_extracted(spark, out_dir).repartition(len(keys), "part_key"),
+        keys, run_id, out_dir, "parquet", None,
     )
-    n_active = len(m["buckets"])
-    (
-        snapshot.repartition(n_active, "part_key")
-        .write.partitionBy("part_key")
-        .mode("append")
-        .parquet(data_dir)
-    )
+    chunk_dir = os.path.join(data_dir, chunk)
 
     # verify the rewrite against committed lineage before the swap
-    new_files = [
-        f for f in glob.glob(os.path.join(data_dir, "*", "*.parquet"))
-        if f not in old_files
-    ]
-    rewritten = spark.read.option("basePath", data_dir).parquet(*new_files)
+    rewritten = spark.read.schema(SNAPSHOT_SCHEMA).parquet(chunk_dir)
     got = {
         int(r["part_key"]): r
         for r in rewritten.groupBy("part_key")
@@ -437,8 +507,7 @@ def compact_run(
             and int(r["checksum"]) == v["checksum"]
         ) or (r is None and v["output_count"] == 0)
         if not ok:
-            for f in new_files:  # abort: old snapshot stays live
-                os.remove(f)
+            shutil.rmtree(chunk_dir)  # abort: old snapshot stays live
             raise RuntimeError(
                 f"compaction verify failed for bucket {k}: rewrite does "
                 f"not reproduce committed lineage — snapshot unchanged"
@@ -447,6 +516,7 @@ def compact_run(
     now = time.time()
     for v in m["buckets"].values():
         v["run_id"] = run_id
+        v["chunk"] = chunk
         v["compacted_at"] = now
     m["run_ids"].append(
         {"run_id": run_id, "committed_buckets": len(m["buckets"]),
@@ -455,22 +525,26 @@ def compact_run(
     commit_manifest(out_dir, m)
 
     removed = 0
-    for f in old_files:
-        if os.path.exists(f):
-            os.remove(f)
-            removed += 1
+    for d in os.listdir(data_dir):
+        if d != chunk:
+            removed += len(_parquet_files(os.path.join(data_dir, d)))
+            shutil.rmtree(os.path.join(data_dir, d))
     return {
-        "files_before": len(old_files),
-        "files_after": len(new_files),
+        "files_before": files_before,
+        "files_after": len(_parquet_files(chunk_dir)),
         "old_files_removed": removed,
         "run_id": run_id,
     }
 
 
 def inspect(out_dir: str) -> dict:
-    """JSON metadata dump (analog of `octopy inspect`)."""
+    """JSON metadata dump (analog of `octopy inspect`). ``chunks`` lists
+    every committed chunk directory with its bucket count and Parquet
+    data-file count, so a run's write amplification shows without a
+    diagnostic script."""
     m = read_manifest(out_dir)
     buckets = m["buckets"]
+    data_dir = os.path.join(out_dir, "data")
     return {
         "out_dir": out_dir,
         "n_runs": len(m["run_ids"]),
@@ -479,4 +553,9 @@ def inspect(out_dir: str) -> dict:
         "input_count": sum(b["input_count"] for b in buckets.values()),
         "output_count": sum(b["output_count"] for b in buckets.values()),
         "error_count": sum(b["error_count"] for b in buckets.values()),
+        "chunks": [
+            {"chunk": c, "run_id": run_id, "buckets": len(keys),
+             "data_files": len(_parquet_files(os.path.join(data_dir, c)))}
+            for c, (run_id, keys) in committed_chunks(m).items()
+        ],
     }

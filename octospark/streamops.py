@@ -346,8 +346,11 @@ def run_stream_exactly_once(
 def read_stream_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
     """Committed-batches-only reader for :func:`run_stream_exactly_once`
     output: directories not named in the manifest (torn batches) are
-    invisible, mirroring octospark.lineage.read_extracted's bucket
-    filter."""
+    invisible. This is the chunk-directory commit protocol that
+    :func:`octospark.lineage.read_extracted` also reads by: one
+    directory per committed unit (here a micro-batch, there a chunk of
+    buckets), and a reader that opens only the directories the manifest
+    names."""
     import os
 
     from octospark.lineage import read_manifest

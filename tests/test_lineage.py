@@ -94,7 +94,8 @@ def test_buckets_stable_across_parallelism(spark, pages, out_dir):
     assert got.groupBy("url").count().filter("count != 1").count() == 0
 
 
-def test_lineage_table_and_inspect(spark, pages, out_dir):
+def test_lineage_table_and_inspect(spark, pages, out_dir, monkeypatch,
+                                   capsys):
     run_extract(spark, pages, out_dir, n_buckets=N_BUCKETS, run_id="r1")
     lt = lineage_table(spark, out_dir)
     assert lt.count() == N_BUCKETS
@@ -105,6 +106,20 @@ def test_lineage_table_and_inspect(spark, pages, out_dir):
     ins = inspect(out_dir)
     assert ins["n_committed_buckets"] == N_BUCKETS
     assert ins["n_runs"] == 1
+    # each committed chunk directory, with its bucket and data-file count
+    (chunk,) = ins["chunks"]
+    assert chunk["chunk"] == chunk["run_id"] + "-0000"
+    assert chunk["run_id"] == "r1" and chunk["buckets"] == N_BUCKETS
+    assert chunk["data_files"] == len(
+        _parquet_files(os.path.join(out_dir, "data", chunk["chunk"])))
+    # jobs/inspect_run.py shows the chunks in its default output
+    import json
+
+    from jobs.inspect_run import main
+
+    monkeypatch.setattr("sys.argv", ["inspect_run.py", out_dir])
+    main()
+    assert json.loads(capsys.readouterr().out)["chunks"] == ins["chunks"]
 
 
 def test_manifest_commit_is_atomic(spark, pages, out_dir):
@@ -332,19 +347,143 @@ def test_write_chunk_routes_to_iceberg_append(spark):
     ]
 
 
-def test_read_extracted_prunes_partitions_at_scan(spark, pages, out_dir):
-    """The committed-bucket filter must reach the scan as a partition
-    filter (bucket dirs are partitionBy(part_key)), so a resume/export
-    over a 10^12-row table reads only committed directories."""
-    run_extract(spark, pages, out_dir, n_buckets=N_BUCKETS,
-                fail_after_buckets=4)
+def _data_dirs(out_dir):
+    return sorted(os.listdir(os.path.join(out_dir, "data")))
+
+
+def _parquet_files(path):
+    return sorted(n for n in os.listdir(path) if n.endswith(".parquet"))
+
+
+def _scan(df):
+    """The one Parquet scan leaf of ``df``'s executed plan."""
+    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
+    scans = [leaves.apply(i) for i in range(leaves.size())
+             if leaves.apply(i).nodeName().startswith("Scan parquet")]
+    assert len(scans) == 1
+    return scans[0]
+
+
+def test_read_extracted_scans_only_committed_chunks(spark, pages, out_dir):
+    """The scan's root paths are exactly the manifest's committed chunk
+    directories — an orphan chunk left by a drift abort is never listed,
+    let alone read — and each chunk's part_key condition reaches Parquet
+    as a pushed filter."""
+    from octospark.lineage import GoldenDriftError, committed_chunks
+
+    calls = []
+
+    def drift_on_second_chunk():
+        calls.append(1)
+        return [] if len(calls) == 1 else ["synthetic drift"]
+
+    with pytest.raises(GoldenDriftError):
+        run_extract(spark, pages, out_dir, n_buckets=N_BUCKETS,
+                    validate_every_k_buckets=4,
+                    validate_fn=drift_on_second_chunk)
+    chunks = committed_chunks(read_manifest(out_dir))
+    assert len(chunks) == 1 and len(committed_buckets(out_dir)) == 4
+    orphans = set(_data_dirs(out_dir)) - set(chunks)
+    assert len(orphans) == 1  # the aborted second chunk is on disk
+
     df = read_extracted(spark, out_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    assert "part_key" in plan.split("PartitionFilters:")[1][:200]
-    # and only the 4 committed buckets' rows come back
+    scan = _scan(df)
+    roots = scan.relation().location().rootPaths()
+    assert {
+        os.path.realpath(roots.apply(i).toUri().getPath())
+        for i in range(roots.size())
+    } == {os.path.realpath(os.path.join(out_dir, "data", c))
+          for c in chunks}
+    pushed = scan.pushedDownFilters()
+    pushed = [pushed.apply(i).toString() for i in range(pushed.size())]
+    assert any(f.startswith("In(part_key") for f in pushed), pushed
+    orphan_dir = os.path.realpath(
+        os.path.join(out_dir, "data", orphans.pop()))
+    assert not any(
+        os.path.realpath(f.replace("file:", "", 1)).startswith(orphan_dir)
+        for f in df.inputFiles()
+    )
+    # only the 4 committed buckets' rows come back, each row once
     keys = {r.part_key for r in df.select("part_key").distinct().collect()}
-    assert keys == set(committed_buckets(out_dir)) and len(keys) == 4
+    assert keys == set(committed_buckets(out_dir))
+    m = read_manifest(out_dir)
+    assert df.count() == sum(v["output_count"] for v in m["buckets"].values())
+
+
+def test_one_flat_directory_per_chunk(spark, pages, out_dir):
+    """Write amplification is bounded by the chunk, not the bucket: one
+    run_extract over 16 buckets in one chunk leaves one directory under
+    data/, holding at most one Parquet file per extraction task whatever
+    n_buckets is (each with its .crc checksum); a cadence of 4 buckets
+    leaves 4 directories."""
+    spread = pages.repartition(3)
+    tasks = spread.rdd.getNumPartitions()
+    for n_buckets in (N_BUCKETS, 4 * N_BUCKETS):
+        out = f"{out_dir}_{n_buckets}"
+        run_extract(spark, spread, out, n_buckets=n_buckets)
+        (chunk,) = _data_dirs(out)
+        files = _parquet_files(os.path.join(out, "data", chunk))
+        assert 1 <= len(files) <= tasks, (n_buckets, files)
+        for f in files:
+            assert os.path.exists(os.path.join(out, "data", chunk,
+                                               f".{f}.crc"))
+        assert read_manifest(out)["buckets"]["0"]["chunk"] == chunk
+
+    cadenced = out_dir + "_k4"
+    run_extract(spark, spread, cadenced, n_buckets=N_BUCKETS,
+                validate_every_k_buckets=4, validate_fn=lambda: [])
+    assert len(_data_dirs(cadenced)) == 4
+    assert read_extracted(spark, cadenced).count() == pages.count()
+
+
+def test_read_extracted_of_run_that_committed_nothing(spark, pages, out_dir):
+    """A run that committed no bucket reads back as an empty frame with
+    the snapshot schema, and exports 0 rows."""
+    from octospark.lineage import SNAPSHOT_SCHEMA, export_extracted
+
+    run_extract(spark, pages, out_dir, n_buckets=N_BUCKETS,
+                fail_after_buckets=0)
+    assert committed_buckets(out_dir) == []
+    df = read_extracted(spark, out_dir)
+    assert df.columns == [
+        "url", "warc_ts", "text", "spans", "lang", "n_blocks", "error",
+        "run_id", "part_key",
+    ]
+    assert [f.dataType for f in df.schema] == [
+        f.dataType for f in SNAPSHOT_SCHEMA
+    ]
+    assert df.count() == 0
+    assert export_extracted(spark, out_dir, out_dir + "_pq") == 0
+    assert export_extracted(spark, out_dir, out_dir + "_j", "jsonl") == 0
+
+
+def test_extract_job_preview_of_empty_input(spark, pages, out_dir,
+                                            monkeypatch, capsys):
+    """jobs/extract.py over an input with no pages commits nothing; its
+    export and its read-back preview both report 0 rows."""
+    import json
+
+    import octospark.session
+    from jobs.extract import main
+
+    src = out_dir + "_in"
+    pages.limit(0).write.parquet(src)
+    monkeypatch.setattr(octospark.session, "get_spark",
+                        lambda **_kw: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    monkeypatch.setattr("sys.argv", [
+        "extract.py", "--input", src, "--out", out_dir,
+        "--n-buckets", str(N_BUCKETS), "--mode", "text-only",
+        "--export-format", "parquet", "--export-dest", out_dir + "_x",
+    ])
+    try:
+        main()
+    finally:
+        spark.sparkContext.setLogLevel("ERROR")
+    meta = json.loads(capsys.readouterr().out)
+    assert meta["n_committed_buckets"] == 0
+    assert meta["exported_rows"] == 0
+    assert meta["preview_rows"] == 0
 
 
 def test_compact_run_collapses_files_and_removes_orphans(spark, pages,
@@ -378,7 +517,13 @@ def test_compact_run_collapses_files_and_removes_orphans(spark, pages,
     before = read_extracted(spark, out_dir)
     want = _texts(before)
     files_before = glob.glob(os.path.join(out_dir, "data", "*", "*.parquet"))
-    assert len(files_before) > N_BUCKETS  # multiple generations exist
+    # at least two chunk generations exist: the aborted attempt's orphan
+    # chunk and the resume's committed one
+    from octospark.lineage import committed_chunks
+
+    committed = set(committed_chunks(read_manifest(out_dir)))
+    assert len(_data_dirs(out_dir)) >= 2
+    assert set(_data_dirs(out_dir)) - committed  # an orphan generation
 
     res = compact_run(spark, out_dir)
     assert res["run_id"].startswith("compact-")
@@ -405,13 +550,15 @@ def test_compact_run_verify_aborts_on_divergence(spark, pages, out_dir,
     """A rewrite that fails to reproduce the committed lineage must
     abort BEFORE the manifest swap: old snapshot intact, new files
     deleted."""
-    import glob
-
     import octospark.lineage as lin
 
     run_extract(spark, pages, out_dir, n_buckets=N_BUCKETS)
     want = _texts(read_extracted(spark, out_dir))
     m_before = read_manifest(out_dir)
+    files = {
+        c: _parquet_files(os.path.join(out_dir, "data", c))
+        for c in lin.committed_chunks(m_before)
+    }
 
     real_read = lin.read_extracted
 
@@ -430,7 +577,10 @@ def test_compact_run_verify_aborts_on_divergence(spark, pages, out_dir,
     assert _texts(read_extracted(spark, out_dir)) == want
     m_after = read_manifest(out_dir)
     assert m_after["buckets"] == m_before["buckets"]
-    files = glob.glob(os.path.join(out_dir, "data", "*", "*.parquet"))
     got = read_extracted(spark, out_dir)
     assert got.count() == len(want)
-    assert len(files) >= N_BUCKETS
+    # every committed chunk directory is intact, and nothing else is left
+    assert {
+        c: _parquet_files(os.path.join(out_dir, "data", c))
+        for c in _data_dirs(out_dir)
+    } == files
