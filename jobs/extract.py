@@ -3,12 +3,17 @@
     spark-submit --py-files octospark.zip jobs/extract.py \
         --input /path/to/pages_parquet --out /path/to/extracted \
         [--sf-dir /root/testdata/sf0.001]  (synthesize pages instead)
-        [--n-buckets 64] [--max-bytes N] [--salted [--salt-partitions P]]
+        [--warc-dir /path/to/warc_files]   (ingest .warc.gz instead)
+        [--n-buckets 64] [--max-bytes N] [--run-id ID]
+        [--salted [--salt-partitions P] [--detect-skew]]
+        [--validate-every-k-buckets K [--golden-fixtures PATH]]
+        [--export-format parquet|jsonl [--export-dest PATH]]
         [--mode full|text-only|spans-only]
 
 Reads a pages table (or synthesizes one from a testdata sf dir), runs
-the fused extraction with per-bucket lineage, commits a manifest
-snapshot, prints the inspect JSON. Rerunning is always a resume:
+the fused extraction with per-bucket lineage, commits each chunk of
+buckets through the Parquet chunk-directory + manifest protocol of
+octospark.lineage, prints the inspect JSON. Rerunning is always a resume:
 commits are idempotent and only missing buckets are processed
 (reference analog: --resume, /root/reference/src/octopy/cli/train.py:
 140-162). --mode projects the committed output on read-back (the
@@ -59,11 +64,6 @@ def main() -> None:
     ap.add_argument("--export-dest", default=None)
     ap.add_argument("--run-id", default=None)
     ap.add_argument("--master", default=None)
-    ap.add_argument(
-        "--iceberg-table", default=None,
-        help="append to this Iceberg table when a catalog is configured "
-        "(falls back to Parquet+manifest otherwise)",
-    )
     ap.add_argument(
         "--validate-every-k-buckets", type=int, default=None,
         help="R25 cadence: re-check the frozen golden fixtures between "
@@ -119,7 +119,6 @@ def main() -> None:
         run_id=args.run_id, max_bytes=args.max_bytes,
         salted=args.salted, salt_partitions=args.salt_partitions,
         detect_skew=args.detect_skew,
-        iceberg_table=args.iceberg_table,
         validate_every_k_buckets=args.validate_every_k_buckets,
         validate_fn=validate_fn,
     )

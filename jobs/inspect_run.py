@@ -7,7 +7,8 @@ JSON (analog of `octopy inspect`,
 Key-selection flags mirror the reference (cli/inspect.py:63-68): the
 default output is the summary metadata, including each committed chunk
 directory with its bucket count and Parquet data-file count (the run's
-write amplification); ``-m/--metrics`` adds the run
+write amplification) and each committed stream micro-batch with its row
+count and chunk directory; ``-m/--metrics`` adds the run
 history (the training-metrics analog), ``-s/--spec`` adds the per-bucket
 lineage rows (the model-spec analog), ``-a/--all`` adds both.
 """

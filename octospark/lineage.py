@@ -3,12 +3,8 @@
 No Iceberg/Delta jar exists in this environment (SURVEY.md §7.0), so
 snapshot semantics are implemented over plain Parquet with an atomic
 JSON manifest commit log (write-tmp + os.replace = atomic rename),
-mirroring what an Iceberg table commit gives us. When a Spark catalog
-with Iceberg support is configured AND the caller passes
-``iceberg_table=``, :func:`choose_writer` flips :func:`run_extract`'s
-data append to a real ``writeTo(table).append()`` — same interface
-(the branch is unit-tested against a mocked catalog conf; the jar
-itself is absent in this sandbox).
+mirroring what an Iceberg table commit gives us. A real Iceberg sink
+(write, read and compact) waits for an Iceberg runtime jar.
 
 Reference analogs:
 - per-partition checkpointing  <- ModelCheckpoint top-k
@@ -32,28 +28,28 @@ scalable, so the lineage checksum is the order-independent
 aggregate with map-side partial combine, still detects any changed /
 missing / duplicated row.
 
-Commit protocol — one flat directory per chunk, named in the manifest
-(the same protocol :func:`octospark.streamops.run_stream_exactly_once`
-uses per micro-batch):
+Commit protocol — one flat directory per chunk, named in the manifest.
+This module is its one implementation; :func:`run_extract` (a chunk of
+buckets), :func:`compact_run` (the whole snapshot) and
+:func:`octospark.streamops.run_stream_exactly_once` (a micro-batch) all
+commit through it:
 
-- **write**: each chunk of buckets an attempt commits is written flat
-  (no ``partitionBy``) with ``mode("errorifexists")`` into its own
-  directory ``data/<run_id>-<chunk index>``, rows sorted by ``part_key``
-  within each file so Parquet footer stats cover bucket ranges;
-- **commit**: the atomic manifest replace records, per bucket, the
-  ``run_id`` and the ``chunk`` directory that holds its rows;
-- **read**: :func:`read_extracted` opens exactly the chunk directories
-  the manifest names. A directory no manifest entry names — an aborted
-  attempt's chunk, or a generation a compaction superseded — is never
-  listed, let alone scanned.
+- **attempt**: every attempt is registered in ``manifest["attempts"]``
+  under a unique id before it writes anything;
+- **write**: each chunk is written flat (no ``partitionBy``) with
+  ``mode("errorifexists")`` into its own directory ``data/<name>``, the
+  name derived from the attempt id, so a retry never overwrites;
+- **commit**: the atomic manifest replace records the ``chunk``
+  directory next to the unit's lineage stats (row count, error count,
+  checksum);
+- **read**: readers open exactly the chunk directories the manifest
+  names. A directory no manifest entry names — an aborted attempt's
+  chunk, a torn micro-batch, or a generation a compaction superseded —
+  is never listed, let alone scanned.
 
-It replaced ``partitionBy("part_key")`` appends, which made every write
-task open one directory, one data file and one ``.crc`` file per bucket
-it held: O(tasks × buckets) small files on any filesystem, and, on a
-Hadoop build without its native library, one forked ``chmod`` process
-per directory and file (``RawLocalFileSystem.setPermission``). A flat
-chunk costs at most one data file per write task, whatever the bucket
-count.
+A flat chunk costs at most one data file per write task, whatever the
+bucket count; ``partitionBy("part_key")`` cost one directory, data file
+and ``.crc`` file per task and bucket.
 """
 
 from __future__ import annotations
@@ -84,67 +80,11 @@ SNAPSHOT_SCHEMA = T.StructType(
     ]
 )
 
-LINEAGE_COLS = (
-    "part_key", "input_count", "output_count", "error_count", "checksum"
-)
-
 
 class GoldenDriftError(RuntimeError):
     """Raised by run_extract's validation cadence when the live extractor
     no longer reproduces the frozen golden fixtures (R25 analog:
     val_check_interval, reference src/octopy/train.py:71-74)."""
-
-
-def have_iceberg(spark: SparkSession) -> bool:
-    """True when an Iceberg catalog is configured (jar present)."""
-    try:
-        return bool(
-            spark.conf.get("spark.sql.catalog.spark_catalog", None)
-            and "iceberg" in str(spark.conf.get(
-                "spark.sql.catalog.spark_catalog")).lower()
-        )
-    except Exception:
-        return False
-
-
-def choose_writer(spark: SparkSession, iceberg_table: str | None) -> str:
-    """Writer branch selection: 'iceberg' only when the caller named a
-    table AND an Iceberg catalog is actually configured; otherwise the
-    Parquet+manifest snapshot emulation. Factored out so the branch is
-    unit-testable without an Iceberg jar."""
-    return "iceberg" if (iceberg_table and have_iceberg(spark)) else "parquet"
-
-
-def _write_chunk(
-    extracted: DataFrame,
-    keys: list,
-    run_id: str,
-    out_dir: str,
-    writer: str,
-    iceberg_table: str | None,
-    index: int = 0,
-) -> str:
-    """Write one chunk of buckets to the sink and return the name of its
-    directory under ``data/``. Iceberg appends are snapshot-committed by
-    the table itself; the Parquet path writes one new flat directory per
-    chunk and relies on the JSON manifest, committed by the caller
-    afterwards, to name it."""
-    chunk = extracted.filter(F.col("part_key").isin(keys)).withColumn(
-        "run_id", F.lit(run_id)
-    )
-    name = f"{run_id}-{index:04d}"
-    if writer == "iceberg":
-        # routing unit-tested with a stub frame (tests/test_lineage.py);
-        # the real append needs the Iceberg jar, absent in this sandbox
-        chunk.writeTo(iceberg_table).append()
-    else:
-        (
-            chunk.select(*SNAPSHOT_SCHEMA.names)
-            .sortWithinPartitions("part_key")
-            .write.mode("errorifexists")
-            .parquet(os.path.join(out_dir, "data", name))
-        )
-    return name
 
 
 def with_part_key(df: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
@@ -179,23 +119,103 @@ def commit_manifest(out_dir: str, manifest: dict) -> None:
     os.replace(tmp, _manifest_path(out_dir))
 
 
+def _register_attempt(out_dir: str, manifest: dict, base: str) -> str:
+    """Record a new attempt in the manifest before it writes any data and
+    return its id: ``base``, or ``base.<n>`` when ``base`` was already
+    attempted, so an aborted attempt's orphan chunk directory can never
+    share a name or a (part_key, run_id) pair with a later attempt's
+    chunks."""
+    run_id, n = base, 2
+    while run_id in manifest["attempts"]:
+        run_id = f"{base}.{n}"
+        n += 1
+    manifest["attempts"].append(run_id)
+    commit_manifest(out_dir, manifest)
+    return run_id
+
+
 def committed_buckets(out_dir: str) -> list:
     return sorted(int(k) for k in read_manifest(out_dir)["buckets"])
 
 
+def _chunk_of(kind: str, key: str, entry: dict) -> str:
+    """The chunk directory a committed manifest entry names. An entry
+    that names none is an error: there is no other layout to fall back
+    on."""
+    if "chunk" not in entry:
+        raise ValueError(
+            f"manifest {kind} {key} names no chunk directory; this "
+            "output was not written by the chunk-directory protocol"
+        )
+    return entry["chunk"]
+
+
 def committed_chunks(manifest: dict) -> dict:
     """{chunk directory name: (run_id, sorted bucket keys)} of every
-    committed bucket. A bucket entry that names no chunk directory is an
-    error: there is no other layout to fall back on."""
+    committed bucket."""
     chunks: dict = {}
     for k, v in manifest["buckets"].items():
-        if "chunk" not in v:
-            raise ValueError(
-                f"manifest bucket {k} names no chunk directory; this "
-                "output was not written by the chunk-directory protocol"
-            )
-        chunks.setdefault(v["chunk"], (v["run_id"], []))[1].append(int(k))
+        chunk = _chunk_of("bucket", k, v)
+        chunks.setdefault(chunk, (v["run_id"], []))[1].append(int(k))
     return {c: (r, sorted(ks)) for c, (r, ks) in sorted(chunks.items())}
+
+
+def committed_batches(manifest: dict) -> dict:
+    """{batch id: manifest entry} of every committed stream micro-batch,
+    in batch order; each entry names its chunk directory."""
+    batches = {}
+    for k, v in manifest.get("batches", {}).items():
+        _chunk_of("batch", k, v)
+        batches[int(k)] = v
+    return dict(sorted(batches.items()))
+
+
+# --- chunks ------------------------------------------------------------------
+
+_STATS = ("output_count", "error_count", "checksum")
+_NO_ROWS = dict.fromkeys(_STATS, 0)
+
+
+def _lineage_stats(df: DataFrame, by_part_key: bool = True) -> dict:
+    """The lineage aggregate, one partial-aggregated job: row count,
+    error count and the order-independent ``bit_xor(xxhash64(url,
+    text))`` checksum. Returns ``{part_key: stats}`` for the buckets
+    ``df`` has rows in, or ``{None: stats}`` over all of ``df``."""
+    keys = ["part_key"] if by_part_key else []
+    rows = df.groupBy(*keys).agg(
+        F.count("*").alias("output_count"),
+        F.count("error").alias("error_count"),
+        F.bit_xor(F.xxhash64("url", "text")).alias("checksum"),
+    ).collect()
+    return {
+        r["part_key"] if by_part_key else None:
+            {s: int(r[s] or 0) for s in _STATS}
+        for r in rows
+    }
+
+
+def _write_chunk(rows: DataFrame, out_dir: str, name: str) -> str:
+    """Write ``rows`` as the new chunk directory ``data/<name>`` and
+    return ``name``. A chunk is never overwritten (``errorifexists``):
+    a retry writes under a fresh attempt id, and only the manifest
+    commit that names the chunk makes it visible."""
+    rows.write.mode("errorifexists").parquet(
+        os.path.join(out_dir, "data", name)
+    )
+    return name
+
+
+def _read_chunks(
+    spark: SparkSession, out_dir: str, chunks, schema: T.StructType
+) -> DataFrame:
+    """Scan exactly the named chunk directories with an explicit schema
+    (no listing job to infer one); no chunk reads as an empty frame of
+    ``schema``."""
+    if not chunks:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(
+        *[os.path.join(out_dir, "data", c) for c in chunks]
+    )
 
 
 def _parquet_files(path: str) -> list:
@@ -217,7 +237,6 @@ def run_extract(
     salted: bool = False,
     salt_partitions: int | None = None,
     detect_skew: bool = False,
-    iceberg_table: str | None = None,
     validate_every_k_buckets: int | None = None,
     validate_fn=None,
 ) -> dict:
@@ -225,12 +244,11 @@ def run_extract(
 
     Buckets already in the manifest are skipped (anti-join semantics —
     done with a pushed-down NOT IN filter on the int bucket key, which
-    Catalyst evaluates at the scan). ``fail_after_buckets`` simulates a
-    crash after committing only k buckets (for resume tests).
-
-    ``iceberg_table``: when set AND an Iceberg catalog is configured
-    (:func:`have_iceberg`), data appends go to that table instead of the
-    Parquet emulation; lineage manifest semantics are unchanged.
+    Catalyst evaluates at the scan). Every bucket is committed, one the
+    input has no rows in with zero counts and checksum 0, so a finished
+    run over a sparse input is complete and its rerun a no-op.
+    ``fail_after_buckets`` simulates a crash after committing only k
+    buckets (for resume tests).
 
     ``validate_every_k_buckets`` + ``validate_fn`` (R25 validation
     cadence, reference train.py:71-74): commits happen in chunks of k
@@ -257,19 +275,11 @@ def run_extract(
     if not todo_keys:
         return manifest
 
-    # Every attempt (even one that later crashes before committing any
-    # bucket) is registered in the manifest BEFORE any data file is
-    # written. A caller-supplied run_id that was already attempted gets a
-    # per-attempt suffix, so an aborted attempt's orphan chunk directory
-    # can never share a name or a (part_key, run_id) pair with a later
-    # resume's chunks.
-    base = run_id or uuid.uuid4().hex[:12]
-    run_id, attempt = base, 2
-    while run_id in manifest["attempts"]:
-        run_id = f"{base}.{attempt}"
-        attempt += 1
-    manifest["attempts"].append(run_id)
-    commit_manifest(out_dir, manifest)
+    # registered even if it later crashes before committing any bucket;
+    # a caller-supplied run_id that was already attempted gets a suffix
+    run_id = _register_attempt(
+        out_dir, manifest, run_id or uuid.uuid4().hex[:12]
+    )
 
     todo = keyed.filter(F.col("part_key").isin(todo_keys))
     input_counts = {
@@ -292,33 +302,25 @@ def run_extract(
         num_partitions=salt_partitions,
         skewed_hosts=skewed_hosts,
     )
-    writer = choose_writer(spark, iceberg_table)
-    extracted = with_part_key(extracted, n_buckets).persist()
+    # columns in SNAPSHOT_SCHEMA order
+    extracted = with_part_key(
+        extracted.withColumn("run_id", F.lit(run_id)), n_buckets
+    ).persist()
     total_committed = 0
     try:
-        lineage_rows = {
-            int(r["part_key"]): r
-            for r in extracted.groupBy("part_key")
-            .agg(
-                F.count("*").alias("output_count"),
-                F.sum(
-                    F.when(F.col("error").isNotNull(), 1).otherwise(0)
-                ).alias("error_count"),
-                F.bit_xor(F.xxhash64("url", "text")).alias("checksum"),
-            )
-            .collect()
-        }
+        stats = _lineage_stats(extracted)
 
-        # one flat directory per chunk, named in the manifest below
-        commit_keys = sorted(input_counts)
+        commit_keys = todo_keys
         if fail_after_buckets is not None:
             commit_keys = commit_keys[:fail_after_buckets]
         chunk_size = validate_every_k_buckets or len(commit_keys) or 1
         for index, i in enumerate(range(0, len(commit_keys), chunk_size)):
             chunk_keys = commit_keys[i : i + chunk_size]
+            # sorted by part_key so footer stats cover bucket ranges
             chunk = _write_chunk(
-                extracted, chunk_keys, run_id, out_dir, writer,
-                iceberg_table, index,
+                extracted.filter(F.col("part_key").isin(chunk_keys))
+                .sortWithinPartitions("part_key"),
+                out_dir, f"{run_id}-{index:04d}",
             )
             if validate_fn is not None:
                 drift = validate_fn()
@@ -330,14 +332,11 @@ def run_extract(
                     )
             now = time.time()
             for k in chunk_keys:
-                r = lineage_rows.get(k)
                 manifest["buckets"][str(k)] = {
                     "run_id": run_id,
                     "chunk": chunk,
                     "input_count": input_counts.get(k, 0),
-                    "output_count": int(r["output_count"]) if r else 0,
-                    "error_count": int(r["error_count"]) if r else 0,
-                    "checksum": int(r["checksum"]) if r else 0,
+                    **stats.get(k, _NO_ROWS),
                     "committed_at": now,
                 }
             total_committed += len(chunk_keys)
@@ -372,16 +371,12 @@ def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
     part_key`` (:data:`SNAPSHOT_SCHEMA`); a run that committed no bucket
     reads as an empty frame of that schema."""
     chunks = committed_chunks(read_manifest(out_dir))
-    if not chunks:
-        return spark.createDataFrame([], SNAPSHOT_SCHEMA)
-    data_dir = os.path.join(out_dir, "data")
-    df = spark.read.schema(SNAPSHOT_SCHEMA).parquet(
-        *[os.path.join(data_dir, c) for c in chunks]
+    return _read_chunks(spark, out_dir, chunks, SNAPSHOT_SCHEMA).filter(
+        functools.reduce(operator.or_, [
+            (F.col("run_id") == run_id) & F.col("part_key").isin(keys)
+            for run_id, keys in chunks.values()
+        ], F.lit(False))
     )
-    return df.filter(functools.reduce(operator.or_, [
-        (F.col("run_id") == run_id) & F.col("part_key").isin(keys)
-        for run_id, keys in chunks.values()
-    ]))
 
 
 EXPORT_FORMATS = ("parquet", "jsonl")
@@ -447,9 +442,10 @@ def compact_run(
        ``compact-*`` run_id, one shuffle partition per bucket
        (``repartition(part_key)``) so each bucket lands in a single
        file;
-    3. VERIFY the rewrite: per-bucket output_count and the
-       order-independent ``bit_xor(xxhash64(url, text))`` checksum of
-       the new chunk must equal the manifest's committed lineage — a
+    3. VERIFY the rewrite: the per-bucket lineage stats of the new
+       chunk (row count, error count and the order-independent
+       ``bit_xor(xxhash64(url, text))`` checksum, the same aggregate
+       :func:`run_extract` commits) must equal the manifest's — a
        compaction that changed any row deletes its chunk and aborts,
        and the old snapshot stays live;
     4. atomically commit a manifest pointing every bucket at the new
@@ -458,7 +454,8 @@ def compact_run(
     5. GC: delete every ``data/`` directory the manifest no longer
        names — each is either superseded (its buckets were rewritten in
        step 2) or an aborted attempt's orphan (crash mid-delete is
-       safe: a leftover directory stays unnamed, so unread).
+       safe: a leftover directory stays unnamed, so unread). Committed
+       stream micro-batch chunks are named, so they stay.
 
     Returns {"files_before", "files_after", "old_files_removed",
     "run_id"}, counting Parquet data files.
@@ -473,40 +470,24 @@ def compact_run(
         for d in os.listdir(data_dir)
     )
 
-    base = f"compact-{uuid.uuid4().hex[:12]}"
-    run_id, attempt = base, 2
-    while run_id in m["attempts"]:  # pragma: no cover — uuid collision
-        run_id = f"{base}.{attempt}"
-        attempt += 1
-    m["attempts"].append(run_id)
-    commit_manifest(out_dir, m)
-
-    keys = sorted(int(k) for k in m["buckets"])
+    run_id = _register_attempt(
+        out_dir, m, f"compact-{uuid.uuid4().hex[:12]}"
+    )
     chunk = _write_chunk(
-        read_extracted(spark, out_dir).repartition(len(keys), "part_key"),
-        keys, run_id, out_dir, "parquet", None,
+        read_extracted(spark, out_dir)
+        .withColumn("run_id", F.lit(run_id))
+        .repartition(len(m["buckets"]), "part_key")
+        .sortWithinPartitions("part_key"),
+        out_dir, f"{run_id}-0000",
     )
     chunk_dir = os.path.join(data_dir, chunk)
 
     # verify the rewrite against committed lineage before the swap
-    rewritten = spark.read.schema(SNAPSHOT_SCHEMA).parquet(chunk_dir)
-    got = {
-        int(r["part_key"]): r
-        for r in rewritten.groupBy("part_key")
-        .agg(
-            F.count("*").alias("output_count"),
-            F.bit_xor(F.xxhash64("url", "text")).alias("checksum"),
-        )
-        .collect()
-    }
+    got = _lineage_stats(
+        _read_chunks(spark, out_dir, [chunk], SNAPSHOT_SCHEMA)
+    )
     for k, v in m["buckets"].items():
-        r = got.get(int(k))
-        ok = (
-            r is not None
-            and int(r["output_count"]) == v["output_count"]
-            and int(r["checksum"]) == v["checksum"]
-        ) or (r is None and v["output_count"] == 0)
-        if not ok:
+        if got.get(int(k), _NO_ROWS) != {s: v[s] for s in _STATS}:
             shutil.rmtree(chunk_dir)  # abort: old snapshot stays live
             raise RuntimeError(
                 f"compaction verify failed for bucket {k}: rewrite does "
@@ -524,9 +505,10 @@ def compact_run(
     )
     commit_manifest(out_dir, m)
 
+    named = {v["chunk"] for v in committed_batches(m).values()} | {chunk}
     removed = 0
     for d in os.listdir(data_dir):
-        if d != chunk:
+        if d not in named:
             removed += len(_parquet_files(os.path.join(data_dir, d)))
             shutil.rmtree(os.path.join(data_dir, d))
     return {
@@ -539,12 +521,19 @@ def compact_run(
 
 def inspect(out_dir: str) -> dict:
     """JSON metadata dump (analog of `octopy inspect`). ``chunks`` lists
-    every committed chunk directory with its bucket count and Parquet
-    data-file count, so a run's write amplification shows without a
-    diagnostic script."""
+    every committed bucket chunk directory with its bucket count and
+    Parquet data-file count, so a run's write amplification shows
+    without a diagnostic script; ``batches`` lists every committed
+    stream micro-batch with its row count and chunk directory. A
+    directory no manifest entry names (an orphan) is never listed."""
     m = read_manifest(out_dir)
     buckets = m["buckets"]
+    batches = committed_batches(m)
     data_dir = os.path.join(out_dir, "data")
+
+    def data_files(chunk: str) -> int:
+        return len(_parquet_files(os.path.join(data_dir, chunk)))
+
     return {
         "out_dir": out_dir,
         "n_runs": len(m["run_ids"]),
@@ -555,7 +544,17 @@ def inspect(out_dir: str) -> dict:
         "error_count": sum(b["error_count"] for b in buckets.values()),
         "chunks": [
             {"chunk": c, "run_id": run_id, "buckets": len(keys),
-             "data_files": len(_parquet_files(os.path.join(data_dir, c)))}
+             "data_files": data_files(c)}
             for c, (run_id, keys) in committed_chunks(m).items()
+        ],
+        "n_committed_batches": len(batches),
+        "batch_output_count": sum(
+            b["output_count"] for b in batches.values()
+        ),
+        "batches": [
+            {"batch_id": i, "chunk": b["chunk"], "run_id": b["run_id"],
+             "output_count": b["output_count"],
+             "data_files": data_files(b["chunk"])}
+            for i, b in batches.items()
         ],
     }

@@ -34,6 +34,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from octospark import MAX_HTML_BYTES
+from octospark.extractor import (
+    _ANCESTOR_LABELS,
+    _HEADING_TAGS,
+    _LINK_DENSITY_MAX,
+    _PREV_LINK_DENSITY_HIGH,
+    _TABLE_TAGS,
+)
 
 SPAN_TYPE = T.StructType(
     [
@@ -71,33 +78,6 @@ BLOCKS_SCHEMA = T.StructType(
         T.StructField("char_hist", T.ArrayType(T.IntegerType()), True),
     ]
 )
-
-
-# --------------------------------------------------------------------------
-# size guard (reference analog: MAX_IMAGE_PIXELS,
-# /root/reference/src/octopy/__init__.py:25) — filtered BEFORE the UDF but
-# never dropped from the output (never-drop law, FIXTURES.md §D).
-# --------------------------------------------------------------------------
-
-def split_size_guard(pages: DataFrame, max_bytes: int = MAX_HTML_BYTES):
-    """Return (ok, oversized_as_extracted). The oversized branch becomes
-    empty-text extracted rows without ever shipping the huge html to
-    Python."""
-    cond = F.col("html").isNotNull() & (F.length("html") <= F.lit(max_bytes))
-    ok = pages.filter(cond)
-    oversized = (
-        pages.filter(~F.coalesce(cond, F.lit(False)))
-        .select(
-            "url",
-            "warc_ts",
-            F.lit("").alias("text"),
-            F.array().cast(T.ArrayType(SPAN_TYPE)).alias("spans"),
-            "lang",
-            F.lit(0).alias("n_blocks"),
-            F.lit("size_guard").alias("error"),
-        )
-    )
-    return ok, oversized
 
 
 # --------------------------------------------------------------------------
@@ -161,34 +141,17 @@ def extract_pages(
     max_bytes: int = MAX_HTML_BYTES,
     salted: bool = False,
     num_partitions: int | None = None,
-    guard_mode: str = "inline",
     skewed_hosts: list | None = None,
 ) -> DataFrame:
     """pages -> extracted(url, warc_ts, text, spans, lang, n_blocks, error).
 
     One output row per input row, always (never-drop). Pure per-row UDF
-    ⇒ result is invariant under any partitioning.
-
-    ``guard_mode``:
-    - ``'inline'`` (default): size guard enforced inside the UDF — ONE
-      scan of the pages table (an oversized blob still crosses Arrow
-      once, but is never parsed). Right when no scan-level pruning of
-      html length is available (plain parquet).
-    - ``'split'``: two-branch plan where oversized rows never reach
-      Python at all — right when the source can prune cheaply (e.g. an
-      Iceberg table with a length metadata column).
-    """
+    ⇒ result is invariant under any partitioning. The size guard runs
+    inside the UDF, so the plan has ONE scan of the pages table: an
+    oversized or null html crosses Arrow once but is never parsed, and
+    yields an empty-text row with ``error='size_guard'``. Works on a
+    batch or a streaming ``pages`` frame."""
     src = pages.select("url", "warc_ts", "html", "lang")  # prune golden text
-    if guard_mode == "split":
-        ok, oversized = split_size_guard(src, max_bytes)
-        if salted:
-            ok = salted_repartition(
-                ok, num_partitions=num_partitions, skewed_hosts=skewed_hosts
-            )
-        extracted = ok.mapInPandas(
-            _make_extract_batches(max_bytes), EXTRACTED_SCHEMA
-        )
-        return extracted.unionByName(oversized)
     if salted:
         src = salted_repartition(
             src, num_partitions=num_partitions, skewed_hosts=skewed_hosts
@@ -227,8 +190,16 @@ def _segment_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def segment(pages: DataFrame, max_bytes: int = MAX_HTML_BYTES) -> DataFrame:
-    """Stage 1: pages -> blocks (DOM order = block_id order per url)."""
-    ok, _ = split_size_guard(pages, max_bytes)
+    """Stage 1: pages -> blocks (DOM order = block_id order per url).
+
+    The size guard (reference analog: MAX_IMAGE_PIXELS, reference
+    src/octopy/__init__.py:25) filters null and
+    oversized html BEFORE the UDF, so it never ships to Python; such a
+    page has no blocks, and :func:`merge` with ``pages`` still keeps it
+    as an empty-text row (never-drop law, FIXTURES.md §D)."""
+    ok = pages.filter(
+        F.col("html").isNotNull() & (F.length("html") <= F.lit(max_bytes))
+    )
     return ok.select("url", "html").mapInPandas(_segment_batches, BLOCKS_SCHEMA)
 
 
@@ -236,31 +207,44 @@ def segment(pages: DataFrame, max_bytes: int = MAX_HTML_BYTES) -> DataFrame:
 # staged path — stage 2: classify, as pure Spark expressions
 # --------------------------------------------------------------------------
 
-# These literals mirror octospark.extractor exactly; the floats compare
+# The rule constants are octospark.extractor's own; the floats compare
 # bit-identically because both sides compute IEEE-754 float64 from the
-# same integers.
-_ANCESTOR_LABEL_MAP = {
-    "nav": "boilerplate-nav",
-    "header": "boilerplate-header",
-    "footer": "boilerplate-footer",
-    "aside": "advert",
-    "form": "noise",
-}
-_HEADINGS = ("h1", "h2", "h3", "h4", "h5", "h6")
-_TABLES = ("table", "td", "th", "tr", "thead", "tbody")
-_LINK_DENSITY_MAX = 0.333333
-_PREV_LINK_DENSITY_HIGH = 0.555555
+# same integers. Tag sets reach ``isin`` sorted, so the plan text does
+# not depend on the string hash seed.
 
 
 def _ancestor_label(path_arr: Column) -> Column:
     """Nearest forced-ancestor label via a left fold (later = nearer)."""
     mapping = F.create_map(
-        *[F.lit(x) for kv in _ANCESTOR_LABEL_MAP.items() for x in kv]
+        *[F.lit(x) for kv in _ANCESTOR_LABELS.items() for x in kv]
     )
     return F.aggregate(
         path_arr,
         F.lit(None).cast(T.StringType()),
         lambda acc, t: F.coalesce(mapping[t], acc),
+    )
+
+
+def _structural_label() -> Column:
+    """The labels a block's tag path forces before any word-count rule
+    (steps 1-2 of :func:`octospark.extractor.classify_block`): nearest
+    forced ancestor, heading, caption, then table with the layout-table
+    carve-out (long low-link prose in a table falls through); null when
+    none applies. Shared by every classify strategy."""
+    path_arr = F.split(F.col("tag_path"), "/")
+    last = F.element_at(path_arr, -1)
+    return F.coalesce(
+        _ancestor_label(path_arr),
+        F.when(last.isin(*sorted(_HEADING_TAGS)), F.lit("heading")),
+        F.when(last == "figcaption", F.lit("caption")),
+        F.when(
+            F.exists(path_arr, lambda t: t.isin(*sorted(_TABLE_TAGS)))
+            & ~(
+                (F.col("n_words") > 16)
+                & (F.col("link_density") <= F.lit(_LINK_DENSITY_MAX))
+            ),
+            F.lit("table"),
+        ),
     )
 
 
@@ -272,8 +256,6 @@ def classify(blocks: DataFrame) -> Column | DataFrame:
     from ``lag``/``lead`` over (url, block_id) — the Spark analog of
     Boilerpipe's prev/next context."""
     w = Window.partitionBy("url").orderBy("block_id")
-    path_arr = F.split(F.col("tag_path"), "/")
-    last = F.element_at(path_arr, -1)
     prev_words = F.coalesce(F.lag("n_words", 1).over(w), F.lit(0))
     prev_ld = F.coalesce(F.lag("link_density", 1).over(w), F.lit(0.0))
     next_words = F.coalesce(F.lead("n_words", 1).over(w), F.lit(0))
@@ -297,22 +279,7 @@ def classify(blocks: DataFrame) -> Column | DataFrame:
         )
     )
 
-    label = F.coalesce(
-        _ancestor_label(path_arr),
-        F.when(last.isin(*_HEADINGS), F.lit("heading")),
-        F.when(last == "figcaption", F.lit("caption")),
-        # layout-table carve-out (mirrors extractor.classify_block):
-        # long low-link prose in a table falls through to the cascade
-        F.when(
-            F.exists(path_arr, lambda t: t.isin(*_TABLES))
-            & ~(
-                (F.col("n_words") > 16)
-                & (F.col("link_density") <= F.lit(_LINK_DENSITY_MAX))
-            ),
-            F.lit("table"),
-        ),
-        numwords_label,
-    )
+    label = F.coalesce(_structural_label(), numwords_label)
     # never-drop fallback: any null that slips through becomes 'unknown'
     return blocks.withColumn("label", F.coalesce(label, F.lit("unknown")))
 
@@ -341,24 +308,11 @@ def classify_with(
     from octospark.scorer import score_blocks
 
     scored = score_blocks(blocks, model)
-    path_arr = F.split(F.col("tag_path"), "/")
-    last = F.element_at(path_arr, -1)
-    structural = F.coalesce(
-        _ancestor_label(path_arr),
-        F.when(last.isin(*_HEADINGS), F.lit("heading")),
-        F.when(last == "figcaption", F.lit("caption")),
-        F.when(
-            F.exists(path_arr, lambda t: t.isin(*_TABLES))
-            & ~(
-                (F.col("n_words") > 16)
-                & (F.col("link_density") <= F.lit(_LINK_DENSITY_MAX))
-            ),
-            F.lit("table"),
-        ),
-    )
     return scored.withColumn(
         "label",
-        F.coalesce(structural, F.col("scored_label"), F.lit("unknown")),
+        F.coalesce(
+            _structural_label(), F.col("scored_label"), F.lit("unknown")
+        ),
     ).drop("score", "scored_label", "prev_words", "next_words",
            "prev_link_density")
 

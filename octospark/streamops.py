@@ -3,15 +3,18 @@ unbounded pages stream.
 
 The reference is strictly batch (its "streaming" is a progress loop,
 /root/reference/src/octopy/cli/segment.py:134-145); this module is the
-Spark-native extension: the SAME ``mapInPandas`` extraction stage runs
-unchanged on a streaming DataFrame, because mapInPandas is stateless
-per-row — octopy's per-document independence is what makes the pipeline
-streamable for free.
+Spark-native extension: the SAME fused extraction plan
+(:func:`octospark.pipeline.extract_pages`) runs unchanged on a streaming
+DataFrame, because mapInPandas is stateless per-row — octopy's
+per-document independence is what makes the pipeline streamable for
+free.
 
 Patterns covered (SURVEY.md §2.2 streaming extras):
 - file-source streaming ingest (`readStream.schema(...).parquet`)
 - watermarked late-data handling (`withWatermark`)
 - in-stream url dedup (`dropDuplicatesWithinWatermark`)
+- an exactly-once sink that commits each micro-batch through the
+  chunk-directory protocol of :mod:`octospark.lineage`
 - tumbling-window throughput metrics (the batch-equivalent twins are
   oracle-checked in octospark.relational)
 - `Trigger.AvailableNow` batch-drain for testable runs
@@ -19,23 +22,36 @@ Patterns covered (SURVEY.md §2.2 streaming extras):
 
 from __future__ import annotations
 
+import os
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from octospark.pipeline import EXTRACTED_SCHEMA, _make_extract_batches
+from octospark import MAX_HTML_BYTES
+from octospark.lineage import (
+    _lineage_stats,
+    _read_chunks,
+    _register_attempt,
+    _write_chunk,
+    commit_manifest,
+    committed_batches,
+    read_manifest,
+)
+from octospark.pipeline import EXTRACTED_SCHEMA, extract_pages
 from octospark.sources import PAGES_SCHEMA
 
-from octospark import MAX_HTML_BYTES
 
-
-def read_pages_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    """Unbounded pages source: each new parquet file in ``input_dir`` is
-    one micro-batch (the file-arrival pattern of a crawl landing zone)."""
+def read_pages_stream(
+    spark: SparkSession, input_dir: str, max_files_per_trigger: int = 8
+) -> DataFrame:
+    """Unbounded pages source: each micro-batch takes up to
+    ``max_files_per_trigger`` new parquet files from ``input_dir`` (the
+    file-arrival pattern of a crawl landing zone)."""
     return (
         spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )
 
@@ -48,12 +64,11 @@ def extract_stream(
 ) -> DataFrame:
     """Streaming extraction: watermark late crawls, drop duplicate urls
     within the watermark (latest-crawl-wins happens downstream in batch
-    compaction), then the identical extraction UDF."""
+    compaction), then the batch path's fused extraction plan."""
     src = pages.withWatermark("warc_ts", watermark)
     if dedup_urls:
         src = src.dropDuplicatesWithinWatermark(["url"])
-    src = src.select("url", "warc_ts", "html", "lang")
-    return src.mapInPandas(_make_extract_batches(max_bytes), EXTRACTED_SCHEMA)
+    return extract_pages(src, max_bytes=max_bytes)
 
 
 def throughput_metrics(
@@ -218,30 +233,6 @@ def sessionize_stream(
     )
 
 
-def run_stream_to_parquet(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    watermark: str = "10 minutes",
-):
-    """End-to-end streaming job: ingest -> extract -> parquet sink with
-    exactly-once file-sink semantics (Spark's transactional file sink +
-    checkpointed offsets — the streaming twin of octospark.lineage)."""
-    pages = read_pages_stream(spark, input_dir)
-    extracted = extract_stream(pages, watermark=watermark)
-    writer = (
-        extracted.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def run_stream_exactly_once(
     spark: SparkSession,
     input_dir: str,
@@ -257,55 +248,53 @@ def run_stream_exactly_once(
     checkpoint/resume protocol (reference analog: the train loop's
     resumable checkpoints, /root/reference/src/octopy/cli/train.py:76-97).
 
-    Why foreachBatch and not the plain file sink: the transactional
-    file sink gives exactly-once FILES, but no lineage rows, no
-    checksums, and no manifest a downstream batch consumer (or
-    ``jobs/inspect_run.py``) can read — this sink commits every
-    micro-batch through the SAME atomic ``_manifest.json`` protocol as
-    the batch path, so one inspection/read surface covers both.
+    Each micro-batch commits through the chunk-directory protocol of
+    :mod:`octospark.lineage`, the one :func:`run_extract` and
+    :func:`octospark.lineage.compact_run` use: the query registers its
+    attempt in ``manifest["attempts"]``, writes each micro-batch as the
+    new chunk ``data/<attempt>-<batch_id>`` and then atomically records
+    it, with the batch's lineage stats (row count, error count,
+    ``bit_xor(xxhash64(url, text))`` checksum), in
+    ``manifest["batches"][batch_id]``. So one inspection surface
+    (:func:`octospark.lineage.inspect`, ``jobs/inspect_run.py``) covers
+    batch and stream output, and :func:`read_stream_extracted` reads
+    through the same chunk reader as
+    :func:`octospark.lineage.read_extracted`.
 
     The exactly-once argument, both halves:
     - REPLAY SAFETY: Spark writes the batch's source offsets to the
       checkpoint WAL before running it, so after a crash the SAME
-      batch_id re-runs with the SAME input slice. The commit fn is a
-      transaction keyed on batch_id: already-in-manifest => no-op;
-      otherwise data files go to a per-batch directory with
-      mode("overwrite") (scrubbing any partial files the crashed
-      attempt left) and only then is the manifest atomically replaced.
+      batch_id re-runs with the SAME input slice. A batch already in
+      the manifest is a no-op; otherwise the replay, running under the
+      restarted query's new attempt id, writes a fresh chunk directory.
     - READER ISOLATION: :func:`read_stream_extracted` reads ONLY the
-      directories named in the manifest, so a torn batch (data written,
-      crash before manifest commit) is invisible — no dup, no partial.
+      chunk directories the manifest names, so a torn batch (data
+      written, crash before the manifest commit) is an unnamed orphan
+      directory, the same as a drift-aborted bucket chunk — no dup, no
+      partial.
 
     ``fail_after_batches=k`` simulates the worst-case crash for tests:
     the (k+1)-th batch of the run writes its data files and dies BEFORE
     the manifest commit.
 
-    Scale shape: per-batch stats are one partial-agg pass (count, error
-    count, xor-of-hash checksum) over the already-extracted batch; the
-    manifest grows one small JSON row per micro-batch, never per page."""
-    import os
-
-    from octospark.lineage import commit_manifest, read_manifest
-
+    Scale shape: per-batch stats are one partial-agg pass over the
+    already-extracted batch; the manifest grows one small JSON row per
+    micro-batch, never per page."""
     os.makedirs(out_dir, exist_ok=True)
+    attempt = _register_attempt(
+        out_dir, read_manifest(out_dir), f"stream-{uuid.uuid4().hex[:12]}"
+    )
     committed_this_run = [0]
 
     def _commit(batch_df, batch_id: int) -> None:
         m = read_manifest(out_dir)
-        m.setdefault("batches", {})
-        if str(batch_id) in m["batches"]:
+        batches = m.setdefault("batches", {})
+        if str(batch_id) in batches:
             return  # checkpoint replay of a committed batch: no-op
         batch_df = batch_df.persist()
         try:
-            stats = batch_df.agg(
-                F.count("*").alias("n"),
-                F.sum(
-                    F.when(F.col("error").isNotNull(), 1).otherwise(0)
-                ).alias("errs"),
-                F.bit_xor(F.xxhash64("url", "text")).alias("checksum"),
-            ).collect()[0]
-            path = os.path.join(out_dir, "data", f"batch_id={batch_id}")
-            batch_df.write.mode("overwrite").parquet(path)
+            stats = _lineage_stats(batch_df, by_part_key=False)[None]
+            chunk = _write_chunk(batch_df, out_dir, f"{attempt}-{batch_id}")
             if (
                 fail_after_batches is not None
                 and committed_this_run[0] >= fail_after_batches
@@ -314,12 +303,10 @@ def run_stream_exactly_once(
                     "simulated crash after data write, before manifest "
                     f"commit (batch {batch_id})"
                 )
-            m["batches"][str(batch_id)] = {
-                "output_count": int(stats["n"]),
-                "error_count": int(stats["errs"] or 0),
-                "checksum": int(stats["checksum"])
-                if stats["checksum"] is not None
-                else 0,
+            batches[str(batch_id)] = {
+                "run_id": attempt,
+                "chunk": chunk,
+                **stats,
                 "committed_at": time.time(),
             }
             commit_manifest(out_dir, m)
@@ -327,11 +314,7 @@ def run_stream_exactly_once(
         finally:
             batch_df.unpersist()
 
-    pages = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    pages = read_pages_stream(spark, input_dir, max_files_per_trigger)
     extracted = extract_stream(pages, watermark=watermark)
     writer = (
         extracted.writeStream.foreachBatch(_commit)
@@ -345,26 +328,15 @@ def run_stream_exactly_once(
 
 def read_stream_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
     """Committed-batches-only reader for :func:`run_stream_exactly_once`
-    output: directories not named in the manifest (torn batches) are
-    invisible. This is the chunk-directory commit protocol that
-    :func:`octospark.lineage.read_extracted` also reads by: one
-    directory per committed unit (here a micro-batch, there a chunk of
-    buckets), and a reader that opens only the directories the manifest
-    names."""
-    import os
-
-    from octospark.lineage import read_manifest
-
-    ids = sorted(
-        int(k) for k in read_manifest(out_dir).get("batches", {})
+    output, in :data:`octospark.pipeline.EXTRACTED_SCHEMA`: it opens
+    exactly the chunk directories ``manifest["batches"]`` names, so a
+    torn batch's directory is invisible. A batch entry that names no
+    chunk directory is an error."""
+    batches = committed_batches(read_manifest(out_dir))
+    return _read_chunks(
+        spark, out_dir, [b["chunk"] for b in batches.values()],
+        EXTRACTED_SCHEMA,
     )
-    if not ids:
-        return spark.createDataFrame([], EXTRACTED_SCHEMA)
-    return spark.read.option(
-        "basePath", os.path.join(out_dir, "data")
-    ).parquet(
-        *[os.path.join(out_dir, "data", f"batch_id={i}") for i in ids]
-    ).drop("batch_id")
 
 
 def windowed_page_counts(

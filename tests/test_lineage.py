@@ -76,11 +76,19 @@ def test_resume_after_partial_commit(spark, pages, out_dir):
 
 
 def test_rerun_of_complete_output_is_noop(spark, pages, out_dir):
-    run_extract(spark, pages, out_dir, n_buckets=N_BUCKETS, run_id="first")
-    m = run_extract(spark, pages, out_dir, n_buckets=N_BUCKETS, run_id="again")
-    assert all(v["run_id"] == "first" for v in m["buckets"].values())
-    # no duplicate rows appended
-    assert read_extracted(spark, out_dir).count() == pages.count()
+    # the sparse input leaves most of its 64 buckets empty; those are
+    # committed too, so its finished run is complete as well
+    for src, n_buckets, out in (
+        (pages, N_BUCKETS, out_dir),
+        (pages.orderBy("url").limit(5), 64, out_dir + "_sparse"),
+    ):
+        run_extract(spark, src, out, n_buckets=n_buckets, run_id="first")
+        m = run_extract(spark, src, out, n_buckets=n_buckets, run_id="again")
+        assert all(v["run_id"] == "first" for v in m["buckets"].values())
+        assert len(m["buckets"]) == n_buckets
+        assert m["attempts"] == ["first"]
+        # no duplicate rows appended
+        assert read_extracted(spark, out).count() == src.count()
 
 
 def test_buckets_stable_across_parallelism(spark, pages, out_dir):
@@ -284,69 +292,6 @@ def test_run_id_reuse_after_abort_keeps_orphans_invisible(spark, pages,
     assert got.groupBy("url").count().filter("count != 1").count() == 0
 
 
-def test_choose_writer_branch(spark):
-    """Iceberg append is selected only when a table is named AND an
-    Iceberg catalog is configured; this sandbox has no jar, so the
-    Parquet+manifest emulation must win even with a table name."""
-    from octospark.lineage import choose_writer, have_iceberg
-
-    assert have_iceberg(spark) is False
-    assert choose_writer(spark, "cat.db.extracted") == "parquet"
-    assert choose_writer(spark, None) == "parquet"
-
-    class _Conf:
-        def get(self, key, default=None):
-            return "org.apache.iceberg.spark.SparkCatalog"
-
-    class _FakeSpark:
-        conf = _Conf()
-
-    assert have_iceberg(_FakeSpark()) is True
-    assert choose_writer(_FakeSpark(), "cat.db.extracted") == "iceberg"
-    assert choose_writer(_FakeSpark(), None) == "parquet"
-
-
-def test_write_chunk_routes_to_iceberg_append(spark):
-    """The Iceberg data-append arm (VERDICT r2 #4): _write_chunk must
-    route through writeTo(table).append() when the writer is 'iceberg',
-    and never touch the Parquet sink. Exercised with a stub frame since
-    the sandbox has no Iceberg jar — the branch logic and call chain are
-    what this pins."""
-    from octospark.lineage import _write_chunk
-
-    calls = []
-
-    class _Writer:
-        def __init__(self, table):
-            self.table = table
-
-        def append(self):
-            calls.append(("append", self.table))
-
-    class _StubFrame:
-        def filter(self, _cond):
-            return self
-
-        def withColumn(self, _name, _col):
-            return self
-
-        def writeTo(self, table):
-            calls.append(("writeTo", table))
-            return _Writer(table)
-
-        @property
-        def write(self):  # the parquet arm must never be reached
-            raise AssertionError("parquet sink used on the iceberg arm")
-
-    _write_chunk(
-        _StubFrame(), keys=[1, 2], run_id="r", out_dir="/nowhere",
-        writer="iceberg", iceberg_table="cat.db.extracted",
-    )
-    assert calls == [
-        ("writeTo", "cat.db.extracted"), ("append", "cat.db.extracted")
-    ]
-
-
 def _data_dirs(out_dir):
     return sorted(os.listdir(os.path.join(out_dir, "data")))
 
@@ -459,8 +404,8 @@ def test_read_extracted_of_run_that_committed_nothing(spark, pages, out_dir):
 
 def test_extract_job_preview_of_empty_input(spark, pages, out_dir,
                                             monkeypatch, capsys):
-    """jobs/extract.py over an input with no pages commits nothing; its
-    export and its read-back preview both report 0 rows."""
+    """jobs/extract.py over an input with no pages commits every bucket
+    empty; its export and its read-back preview both report 0 rows."""
     import json
 
     import octospark.session
@@ -481,7 +426,8 @@ def test_extract_job_preview_of_empty_input(spark, pages, out_dir,
     finally:
         spark.sparkContext.setLogLevel("ERROR")
     meta = json.loads(capsys.readouterr().out)
-    assert meta["n_committed_buckets"] == 0
+    assert meta["n_committed_buckets"] == N_BUCKETS
+    assert meta["input_count"] == meta["output_count"] == 0
     assert meta["exported_rows"] == 0
     assert meta["preview_rows"] == 0
 
@@ -584,3 +530,14 @@ def test_compact_run_verify_aborts_on_divergence(spark, pages, out_dir,
         c: _parquet_files(os.path.join(out_dir, "data", c))
         for c in _data_dirs(out_dir)
     } == files
+
+
+def test_entry_without_chunk_is_rejected():
+    """A bucket or stream-batch manifest entry that names no chunk
+    directory (an output of an older layout) is rejected, not read."""
+    from octospark.lineage import committed_batches, committed_chunks
+
+    with pytest.raises(ValueError, match="bucket 3 names no chunk"):
+        committed_chunks({"buckets": {"3": {"run_id": "r"}}})
+    with pytest.raises(ValueError, match="batch 1 names no chunk"):
+        committed_batches({"buckets": {}, "batches": {"1": {"run_id": "r"}}})

@@ -14,7 +14,6 @@ from octospark.pipeline import (
     merge,
     salted_repartition,
     segment,
-    split_size_guard,
 )
 from tests.fixtures.adversarial import CASES
 
@@ -80,8 +79,6 @@ def test_size_guard_filters_but_never_drops(spark, pages):
     guarded = ext.filter(F.col("error") == "size_guard")
     assert guarded.count() > 0
     assert guarded.filter(F.length("text") > 0).count() == 0
-    ok, oversized = split_size_guard(pages, max_bytes=1100)
-    assert ok.count() + oversized.count() == pages.count()
 
 
 def test_null_html_goes_to_guard_branch(spark):

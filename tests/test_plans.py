@@ -60,7 +60,7 @@ def test_fused_extraction_single_scan_and_pruned(spark, tmp_path):
     pages = spark.read.parquet(p)
     ext = extract_pages(pages, salted=True, num_partitions=4)
     plan = plan_of(ext)
-    # inline guard mode: exactly ONE parquet scan feeds the UDF
+    # size guard inside the UDF: exactly ONE parquet scan feeds it
     assert plan.count("Scan parquet") == 1
     # golden text column pruned before the UDF (html needed, text not)
     assert "text" not in plan.split("ReadSchema:")[-1].split("\n")[0]

@@ -16,13 +16,16 @@ def pages_dir(spark, pages, tmp_path):
 
 
 def test_stream_extract_matches_batch(spark, pages, pages_dir, tmp_path):
-    from octospark.streamops import run_stream_to_parquet
+    from octospark.streamops import (
+        read_stream_extracted,
+        run_stream_exactly_once,
+    )
 
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    q = run_stream_to_parquet(spark, pages_dir, out, ckpt)
+    q = run_stream_exactly_once(spark, pages_dir, out, ckpt)
     q.awaitTermination(120)
-    got = spark.read.parquet(out)
+    got = read_stream_extracted(spark, out)
     n = got.count()
     assert n == 100
     # byte-identity also holds on the streaming path (same UDF)
@@ -36,12 +39,15 @@ def test_stream_extract_matches_batch(spark, pages, pages_dir, tmp_path):
 
 def test_stream_resume_processes_only_new_files(spark, pages, pages_dir,
                                                 tmp_path):
-    from octospark.streamops import run_stream_to_parquet
+    from octospark.streamops import (
+        read_stream_extracted,
+        run_stream_exactly_once,
+    )
 
     out = str(tmp_path / "out2")
     ckpt = str(tmp_path / "ckpt2")
-    run_stream_to_parquet(spark, pages_dir, out, ckpt,
-                          watermark="3650 days").awaitTermination(120)
+    run_stream_exactly_once(spark, pages_dir, out, ckpt,
+                            watermark="3650 days").awaitTermination(120)
     # land new files (write elsewhere first: writing a frame derived from
     # pages_dir back into pages_dir would re-read it mid-write), then
     # restart from the checkpoint
@@ -58,9 +64,9 @@ def test_stream_resume_processes_only_new_files(spark, pages, pages_dir,
     # huge watermark delay: landed rows have older warc_ts than the first
     # batch, and a realistic 10-minute watermark would (correctly) drop
     # them as late — this test is about file-offset resume, not lateness
-    run_stream_to_parquet(spark, pages_dir, out, ckpt,
-                          watermark="3650 days").awaitTermination(120)
-    got = spark.read.parquet(out)
+    run_stream_exactly_once(spark, pages_dir, out, ckpt,
+                            watermark="3650 days").awaitTermination(120)
+    got = read_stream_extracted(spark, out)
     assert got.count() == 150
     assert got.groupBy("url").count().filter("count != 1").count() == 0
 
@@ -189,7 +195,10 @@ def test_stream_dedup_within_watermark(spark, pages, tmp_path):
     """Duplicate urls landing in the stream within the watermark are
     emitted once (dropDuplicatesWithinWatermark) — the in-stream
     recrawl guard; batch compaction handles latest-wins later."""
-    from octospark.streamops import run_stream_to_parquet
+    from octospark.streamops import (
+        read_stream_extracted,
+        run_stream_exactly_once,
+    )
 
     src = pages.orderBy("url").limit(40)
     p = str(tmp_path / "pages_dup_in")
@@ -200,9 +209,9 @@ def test_stream_dedup_within_watermark(spark, pages, tmp_path):
 
     out = str(tmp_path / "out_dedup")
     ckpt = str(tmp_path / "ckpt_dedup")
-    q = run_stream_to_parquet(spark, p, out, ckpt)
+    q = run_stream_exactly_once(spark, p, out, ckpt)
     q.awaitTermination(120)
-    got = spark.read.parquet(out)
+    got = read_stream_extracted(spark, out)
     assert got.count() == 40
     assert got.select("url").distinct().count() == 40
 
@@ -492,18 +501,26 @@ def test_exactly_once_sink_kill_resume_no_dup_no_gap(
     )
     with pytest.raises(StreamingQueryException):
         q.awaitTermination(180)
-    from octospark.lineage import read_manifest
+    from octospark.lineage import inspect, read_manifest
 
     m = read_manifest(out)
     assert list(m.get("batches", {})) == ["0"]
     import os
 
-    # torn batch's data files exist on disk but are reader-invisible
-    assert os.path.isdir(os.path.join(out, "data", "batch_id=1"))
+    # torn batch's data files exist on disk, in a data/ directory the
+    # manifest does not name, and are reader-invisible
+    named = {b["chunk"] for b in m["batches"].values()}
+    orphans = set(os.listdir(os.path.join(out, "data"))) - named
+    assert len(orphans) == 1
     partial = read_stream_extracted(spark, out)
     n_committed = partial.count()
     assert 0 < n_committed < 80
     assert partial.groupBy("url").count().filter("count != 1").count() == 0
+    # inspect lists the committed batch and never the orphan
+    ins = inspect(out)
+    assert ins["n_committed_batches"] == 1
+    assert ins["batch_output_count"] == n_committed
+    assert [b["chunk"] for b in ins["batches"]] == [m["batches"]["0"]["chunk"]]
 
     # resume from the checkpoint: batch 1 replays, run completes
     run_stream_exactly_once(
@@ -516,6 +533,10 @@ def test_exactly_once_sink_kill_resume_no_dup_no_gap(
     assert got_df.groupBy("url").count().filter("count != 1").count() == 0
     ids = sorted(int(k) for k in read_manifest(out)["batches"])
     assert ids == list(range(len(ids)))  # contiguous batch commits
+    ins = inspect(out)
+    assert ins["n_committed_batches"] == len(ids)
+    assert ins["batch_output_count"] == 80
+    assert orphans.isdisjoint(b["chunk"] for b in ins["batches"])
 
 
 def test_stream_stream_join_respects_time_bound_and_emits_once(
