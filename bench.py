@@ -484,7 +484,9 @@ def write_bench_md(result: dict) -> None:
         for pair, v in s["pairs"].items():
             pb = pair_best.get(pair, {})
             lines.append(
-                f"- N->4N pair {pair}: efficiency **{v['efficiency']}** "
+                f"- N->4N pair {pair}: level-throughput ratio "
+                f"{v['efficiency']}, median paired pass "
+                f"**{v.get('efficiency_median_pass')}** "
                 f"(paired per-pass: {v.get('efficiency_per_pass')}, "
                 f"best pass {v.get('efficiency_best_pass')}; pure-CPU "
                 f"hardware ceiling on this VM: "

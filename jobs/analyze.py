@@ -1,7 +1,7 @@
 """spark-submit entry point: block-level corpus analysis (staged path).
 
     python jobs/analyze.py --sf-dir /root/testdata/sf0.001 --out /tmp/an
-        [--strategy heuristic|scored|scored-distributed] [--merge alias=target ...]
+        [--strategy heuristic|scored] [--merge alias=target ...]
         [--input pages_parquet]
 
 Runs the staged pipeline (segment -> classify -> label stats) and writes
@@ -10,8 +10,9 @@ and ``label_stats`` (per-class counts with alias rollup, the R27 analog
 — reference class summary, /root/reference/src/octopy/train.py:99-121).
 ``--merge`` applies class-merge rules (R10 analog, chain-resolved
 driver-side — reference train.py:199-240); ``--strategy scored`` fits
-the logistic scorer on the heuristic labels first (self-training) and
-classifies with it (R4 strategy dispatch, reference segment.py:52-57).
+the logistic scorer on the heuristic labels first (self-training; 60
+exact distributed gradient steps, octospark/trainer.py) and classifies
+with it (R4 strategy dispatch, reference segment.py:52-57).
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ def main() -> None:
     ap.add_argument("--sf-dir", help="testdata dir to synthesize pages from")
     ap.add_argument("--out", required=True)
     ap.add_argument("--strategy",
-                    choices=("heuristic", "scored", "scored-distributed"),
+                    choices=("heuristic", "scored"),
                     default="heuristic")
     ap.add_argument("--merge", nargs="*", default=[],
                     help="label merge rules alias=target (target '-' drops)")
@@ -59,14 +60,7 @@ def main() -> None:
     if args.strategy == "scored":
         from octospark.scorer import fit_scorer
 
-        model = fit_scorer(classify(blocks), epochs=100, max_rows=50_000)
-        labeled = classify_with(blocks, "scored", model)
-    elif args.strategy == "scored-distributed":
-        # the scale path: no driver-side sample, bit-identical at any
-        # parallelism (octospark/trainer.py)
-        from octospark.scorer import fit_scorer_distributed
-
-        model = fit_scorer_distributed(classify(blocks), steps=60)
+        model = fit_scorer(classify(blocks), steps=60)
         labeled = classify_with(blocks, "scored", model)
     else:
         labeled = classify_with(blocks, "heuristic")

@@ -77,6 +77,8 @@ def main() -> None:
     args = ap.parse_args()
     if not args.input and not args.sf_dir and not args.warc_dir:
         ap.error("one of --input / --sf-dir / --warc-dir is required")
+    if args.detect_skew and not args.salted:
+        ap.error("--detect-skew requires --salted")
 
     from octospark.lineage import (
         export_extracted, inspect, read_extracted, run_extract,

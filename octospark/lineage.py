@@ -248,7 +248,9 @@ def run_extract(
     input has no rows in with zero counts and checksum 0, so a finished
     run over a sparse input is complete and its rerun a no-op.
     ``fail_after_buckets`` simulates a crash after committing only k
-    buckets (for resume tests).
+    buckets (for resume tests). ``detect_skew`` (a giant-host census
+    whose hosts are then salted row-level) needs ``salted``; without it
+    the call raises ``ValueError`` before anything is written.
 
     ``validate_every_k_buckets`` + ``validate_fn`` (R25 validation
     cadence, reference train.py:71-74): commits happen in chunks of k
@@ -264,6 +266,11 @@ def run_extract(
     from octospark import MAX_HTML_BYTES
     from octospark.pipeline import extract_pages
 
+    if detect_skew and not salted:
+        raise ValueError(
+            "detect_skew requires salted=True: the skew census only feeds "
+            "the salted repartition"
+        )
     if max_bytes is None:
         max_bytes = MAX_HTML_BYTES
     os.makedirs(out_dir, exist_ok=True)
@@ -288,7 +295,7 @@ def run_extract(
     }
 
     skewed_hosts = None
-    if salted and detect_skew:
+    if detect_skew:
         # first-pass giant-host census (url-only column-pruned scan);
         # see tests/test_pipeline.py::test_skewed_host_branch_spreads_
         # giant_host for the partition-spread guarantee it buys
@@ -423,9 +430,7 @@ def lineage_table(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
-def compact_run(
-    spark: SparkSession, out_dir: str, n_buckets: int | None = None
-) -> dict:
+def compact_run(spark: SparkSession, out_dir: str) -> dict:
     """Snapshot-preserving compaction + orphan GC — the Iceberg
     ``rewrite_data_files`` + ``expire_snapshots`` analog, and the
     maintenance op a resume-heavy 10^12-row table needs: every aborted

@@ -248,17 +248,35 @@ def _structural_label() -> Column:
     )
 
 
+CONTEXT_COLS = ("prev_words", "next_words", "prev_link_density")
+
+
+def with_context(blocks: DataFrame) -> DataFrame:
+    """blocks -> blocks + :data:`CONTEXT_COLS`: the previous block's
+    word count, the next block's word count and the previous block's
+    link density within the page (0 at the page edges), from
+    ``lag``/``lead`` over (url, block_id) — the Spark analog of
+    Boilerpipe's prev/next context. The one window shared by the rule
+    cascade (:func:`classify`) and the learned scorer."""
+    w = Window.partitionBy("url").orderBy("block_id")
+    return blocks.withColumns({
+        "prev_words": F.coalesce(F.lag("n_words", 1).over(w), F.lit(0)),
+        "next_words": F.coalesce(F.lead("n_words", 1).over(w), F.lit(0)),
+        "prev_link_density": F.coalesce(
+            F.lag("link_density", 1).over(w), F.lit(0.0)
+        ),
+    })
+
+
 def classify(blocks: DataFrame) -> Column | DataFrame:
     """Stage 2: blocks -> blocks + ``label``, entirely JVM-side.
 
     The rule cascade is the expression translation of
     :func:`octospark.extractor.classify_block`; neighbor features come
-    from ``lag``/``lead`` over (url, block_id) — the Spark analog of
-    Boilerpipe's prev/next context."""
-    w = Window.partitionBy("url").orderBy("block_id")
-    prev_words = F.coalesce(F.lag("n_words", 1).over(w), F.lit(0))
-    prev_ld = F.coalesce(F.lag("link_density", 1).over(w), F.lit(0.0))
-    next_words = F.coalesce(F.lead("n_words", 1).over(w), F.lit(0))
+    from :func:`with_context`."""
+    prev_words = F.col("prev_words")
+    prev_ld = F.col("prev_link_density")
+    next_words = F.col("next_words")
 
     numwords_label = F.when(
         F.col("link_density") > F.lit(_LINK_DENSITY_MAX),
@@ -281,7 +299,9 @@ def classify(blocks: DataFrame) -> Column | DataFrame:
 
     label = F.coalesce(_structural_label(), numwords_label)
     # never-drop fallback: any null that slips through becomes 'unknown'
-    return blocks.withColumn("label", F.coalesce(label, F.lit("unknown")))
+    return with_context(blocks).withColumn(
+        "label", F.coalesce(label, F.lit("unknown"))
+    ).drop(*CONTEXT_COLS)
 
 
 def classify_with(
@@ -293,8 +313,10 @@ def classify_with(
     chosen by config, no monkeypatch).
 
     - ``'heuristic'``: the rule cascade (:func:`classify`), pure JVM.
-    - ``'scored'``: the learned logistic scorer
-      (:func:`octospark.scorer.score_blocks`), also pure JVM at
+    - ``'scored'``: the learned logistic scorer — ``model`` is the dict
+      :func:`octospark.scorer.fit_scorer` returns (or
+      :func:`octospark.scorer.load_model` reads back), scored by
+      :func:`octospark.scorer.score_blocks`, also pure JVM at
       inference; forced ancestor/tag labels still win (the scorer only
       arbitrates content-vs-noise), so structural labels stay stable
       across strategies.
@@ -313,8 +335,7 @@ def classify_with(
         F.coalesce(
             _structural_label(), F.col("scored_label"), F.lit("unknown")
         ),
-    ).drop("score", "scored_label", "prev_words", "next_words",
-           "prev_link_density")
+    ).drop("score", "scored_label")
 
 
 # --------------------------------------------------------------------------

@@ -2072,9 +2072,9 @@ def corpus_split_assign(spark, sf):
     pure projection, so the SAME doc lands in the SAME split on every
     run, at any parallelism, and when the corpus grows (new docs slot
     in without reshuffling old ones — the property randomSplit lacks).
-    Hashing the row-unique key, never the feature tuple, is the
-    fit_scorer lesson (duplicate feature rows must spread across
-    splits like production duplicates do).
+    Hashing the row-unique key, never the feature tuple, is the block
+    scorer's (url, block_id) split lesson (duplicate feature rows must
+    spread across splits like production duplicates do).
 
     Scale shape: one map-side projection inside the scan stage — zero
     shuffles, zero Python; downstream stages filter on `split` and the

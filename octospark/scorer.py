@@ -7,22 +7,20 @@ scorer standing in for Kraken's recognition model", BASELINE.json).
 Training protocol (reference analogs cited):
 - labels come from the deterministic heuristic classifier
   (self-training target), so no external data is needed;
-- deterministic seed 42 everywhere (train.py:56-60);
-- train/val split by ratio (`partition`, train.py:65-66, 243-286);
-- top-k checkpoint retention by val metric (train.py:80-87);
-- on-exception checkpoint (train.py:76-79);
-- resume / warm-start from a checkpoint (train.py:89-97, 140-162).
+- train/val split by a hash of the row-unique (url, block_id) key
+  (train.py:65-66, 243-286), stable under any partitioning;
+- full-batch gradient descent where each step is ONE distributed
+  aggregation over every labeled block (octospark/trainer.py exact
+  fixed-point design): bit-identical at any parallelism, nothing
+  row-shaped on the driver; 10^12 blocks train like 10^3;
+- the fitted model is checkpointed once, as ``best_distributed.json``.
+  Resume of the extraction itself lives in the lineage manifest
+  (octospark/lineage.py), not here.
 
-Two trainers:
-- :func:`fit_scorer` — driver-side bounded deterministic sample (cap
-  `max_rows`), numpy GD: the cheap path when a 100k-row sample is
-  statistically enough;
-- :func:`fit_scorer_distributed` — the SCALE path: full-batch GD where
-  each step is ONE distributed aggregation (octospark/trainer.py exact
-  fixed-point design), bit-identical at any parallelism, nothing
-  row-shaped on the driver; 10^12 blocks train like 10^3.
-Scoring is a constant-folded JVM expression either way: no Python
-anywhere in the inference path.
+Training and scoring read the same integer feature columns
+(:func:`_with_features`), and scoring is the trainer's own
+constant-folded JVM expression: no Python anywhere in the inference
+path.
 """
 
 from __future__ import annotations
@@ -31,291 +29,108 @@ import json
 import math
 import os
 
-import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-SEED = 42
+from octospark.pipeline import CONTEXT_COLS, with_context
+from octospark.trainer import fit_logistic_exact, score_expr_exact
+
 FEATURES = ("n_words", "link_density", "depth", "text_density",
             "prev_words", "next_words", "prev_link_density")
+QUANTIZE_UNIT = 1048576.0  # 2**20
+PARTITION = 0.9  # train share of the R20 train/val split
+LR = 0.5
+_INT_FEATURES = [f"i_{name}" for name in FEATURES]
 
 
-def _with_context(blocks: DataFrame) -> DataFrame:
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("url").orderBy("block_id")
-    return (
-        blocks.withColumn(
-            "prev_words", F.coalesce(F.lag("n_words", 1).over(w), F.lit(0))
-        )
-        .withColumn(
-            "next_words", F.coalesce(F.lead("n_words", 1).over(w), F.lit(0))
-        )
-        .withColumn(
-            "prev_link_density",
-            F.coalesce(F.lag("link_density", 1).over(w), F.lit(0.0)),
-        )
-    )
-
-
-def content_target() -> Column:
-    """The binary training target: labels the scorer treats as
-    content-ish. ONE definition shared by both trainers so they can
-    never silently diverge."""
-    return F.col("label").isin("content", "heading").cast("int")
-
-
-def training_frame(labeled_blocks: DataFrame) -> DataFrame:
-    """blocks+label -> features + binary target (content-ish or not)."""
-    return _with_context(labeled_blocks).select(
-        *FEATURES, content_target().alias("y")
+def _with_features(blocks: DataFrame, quantize_unit: float) -> DataFrame:
+    """blocks -> blocks + neighbor context + one integer column
+    ``i_<name>`` per feature: the value floored to 1/quantize_unit
+    units. The exact trainer takes integer features only; floor is
+    order-independent, and standardization absorbs the scaling, so at
+    2^-20 units the quantization costs < 1e-6 relative precision."""
+    q = F.lit(quantize_unit)
+    return with_context(blocks).select(
+        "*",
+        *[
+            F.floor(F.col(name).cast("double") * q).cast("long").alias(col)
+            for name, col in zip(FEATURES, _INT_FEATURES)
+        ],
     )
 
 
 def fit_scorer(
     labeled_blocks: DataFrame,
-    partition: float = 0.9,
-    epochs: int = 200,
-    lr: float = 0.5,
-    max_rows: int = 100_000,
-    checkpoint_dir: str | None = None,
-    resume_from: str | None = None,
-    top_k: int = 10,
-) -> dict:
-    """Fit logistic weights; returns {weights, bias, val_acc, history}.
-
-    Deterministic: seeded sample + seeded split + full-batch gradient
-    descent (no minibatch RNG)."""
-    if epochs < 1:
-        raise ValueError("epochs must be >= 1 (use load_model to read "
-                         "a checkpoint without training)")
-    # persist: count + the two split collects would otherwise recompute
-    # the expensive upstream (segment/classify mapInPandas) three times
-    base = training_frame(labeled_blocks).persist()
-    try:
-        total = base.count()
-        df = (
-            base.sample(fraction=max_rows / total, seed=SEED)
-            if total > max_rows
-            else base
-        )
-        train_df, val_df = df.randomSplit(
-            [partition, 1 - partition], seed=SEED
-        )
-        tr = np.asarray(train_df.collect(), dtype="float64")
-        va = np.asarray(val_df.collect(), dtype="float64")
-    finally:
-        base.unpersist()
-    if tr.ndim != 2 or len(tr) == 0:
-        raise ValueError(
-            "no training rows for scored strategy (empty/too-small input)"
-        )
-    val_is_train_fallback = len(va) == 0
-    if val_is_train_fallback:
-        va = tr
-    Xt, yt = tr[:, :-1], tr[:, -1]
-    Xv, yv = va[:, :-1], va[:, -1]
-    if resume_from:
-        # warm start (R24): reuse the checkpoint's weights AND its
-        # standardization stats — weights are only meaningful in the
-        # feature space they were trained in
-        ckpt = load_model(resume_from)
-        if "quantize_unit" in ckpt:
-            raise ValueError(
-                "resume_from points at a DISTRIBUTED checkpoint: its "
-                "mu/sigma live in quantized feature space and would "
-                "poison a raw-feature warm start — resume via "
-                "fit_scorer_distributed / score it directly instead"
-            )
-        w = np.asarray(ckpt["weights"], dtype="float64")
-        b = float(ckpt["bias"])
-        mu = np.asarray(ckpt["mu"], dtype="float64")
-        sigma = np.asarray(ckpt["sigma"], dtype="float64")
-    else:
-        # feature standardization (stats kept with the model)
-        mu, sigma = Xt.mean(axis=0), Xt.std(axis=0) + 1e-9
-        w = np.zeros(Xt.shape[1])
-        b = 0.0
-    Xt = (Xt - mu) / sigma
-    Xv = (Xv - mu) / sigma
-    best: list = []  # (val_acc, epoch, weights, bias) top-k
-    history = []
-    try:
-        for epoch in range(epochs):
-            z = Xt @ w + b
-            p = 1.0 / (1.0 + np.exp(-z))
-            g = p - yt
-            w -= lr * (Xt.T @ g) / len(yt)
-            b -= lr * g.mean()
-            if epoch % 10 == 9 or epoch == epochs - 1:
-                val_acc = float(
-                    (((Xv @ w + b) > 0).astype("float64") == yv).mean()
-                )
-                history.append({"epoch": epoch, "val_acc": round(val_acc, 5)})
-                best.append((val_acc, epoch, w.copy(), float(b)))
-                best.sort(key=lambda t: (-t[0], t[1]))
-                del best[top_k:]  # retain top-k by val metric (R22)
-                if checkpoint_dir:
-                    _save_ckpt(checkpoint_dir, f"epoch{epoch}", w, b, mu,
-                               sigma, val_acc)
-    except Exception:
-        if checkpoint_dir:  # crash-safe capture (R23)
-            _save_ckpt(checkpoint_dir, "checkpoint_abort", w, b, mu, sigma,
-                       float("nan"))
-        raise
-    val_acc, epoch, w, b = best[0]
-    model = {
-        "features": list(FEATURES),
-        "weights": [float(x) for x in w],
-        "bias": float(b),
-        "mu": [float(x) for x in mu],
-        "sigma": [float(x) for x in sigma],
-        "val_acc": round(val_acc, 5),
-        # visible when the split produced no held-out rows: val_acc is
-        # then TRAIN accuracy and must not be read as generalization
-        "val_is_train_fallback": val_is_train_fallback,
-        "best_epoch": epoch,
-        "history": history,
-        "seed": SEED,
-    }
-    if checkpoint_dir:
-        with open(os.path.join(checkpoint_dir, "best.json"), "w") as f:
-            json.dump(model, f, indent=1)
-    return model
-
-
-def fit_scorer_distributed(
-    labeled_blocks: DataFrame,
-    partition: float = 0.9,
     steps: int = 30,
-    lr: float = 0.5,
     checkpoint_dir: str | None = None,
 ) -> dict:
-    """The SCALE path for scorer training (upgrades :func:`fit_scorer`'s
-    bounded driver-side sample): full-batch gradient descent where each
-    step is ONE distributed aggregation over every labeled block — see
-    octospark/trainer.py for the exact fixed-point design that makes
-    the result bit-identical at any parallelism. Nothing row-shaped
-    reaches the driver; 10^12 blocks train the same way 10^3 do.
-
-    Double-valued block features (link_density, text_density) are
-    quantized once to 2^-20 integer units at ingest — floor is
-    order-independent, and standardization absorbs the scaling, so the
-    quantization costs < 1e-6 relative feature precision.
+    """Fit the block scorer on blocks+label: ``steps`` full-batch
+    gradient steps of :func:`octospark.trainer.fit_logistic_exact`
+    toward the binary target "label is content or heading".
 
     The train/val split hashes the ROW-unique (url, block_id) key into
-    1000 buckets vs ``partition`` — iid at row level yet stable under
+    1000 buckets vs ``PARTITION`` — iid at row level yet stable under
     any partitioning (a feature-tuple hash would send every duplicate
     tuple to one side: distribution shift). Reference analog: the
     epoch loop + partition split of /root/reference/src/octopy/cli/
-    train.py:64-77,243-286."""
-    from octospark.trainer import fit_logistic_exact
+    train.py:64-77,243-286.
 
-    q = F.lit(1048576.0)  # 2**20
-    df = _with_context(labeled_blocks)
-    feats = [f"i_{name}" for name in FEATURES]
-    # split on the ROW-unique (url, block_id) key: iid at row level (a
-    # hash of the feature tuple would send every duplicate tuple to one
-    # side — distribution shift), yet stable under any partitioning
-    # 1000-bucket granularity: int(round(p*10)) would turn 0.85 into
-    # an 80% split and 0.95 into a degenerate no-validation split
+    Returns the trainer's model dict plus ``features`` (the raw feature
+    names) and ``quantize_unit``; with ``checkpoint_dir`` the full dict
+    is also written to ``best_distributed.json`` there."""
     bucket = F.pmod(F.xxhash64("url", "block_id"), F.lit(1000))
-    frame = df.select(
-        *[
-            F.floor(F.col(name).cast("double") * q).cast("long").alias(f"i_{name}")
-            for name in FEATURES
-        ],
-        content_target().alias("y"),
-        (bucket < F.lit(int(round(partition * 1000)))).alias("is_train"),
+    frame = _with_features(labeled_blocks, QUANTIZE_UNIT).select(
+        *_INT_FEATURES,
+        F.col("label").isin("content", "heading").cast("int").alias("y"),
+        (bucket < F.lit(int(round(PARTITION * 1000)))).alias("is_train"),
     )
     model = fit_logistic_exact(
-        frame, feats, steps=steps, lr=lr, link="logistic"
+        frame, _INT_FEATURES, steps=steps, lr=LR, link="logistic"
     )
     model["features"] = list(FEATURES)
-    model["quantize_unit"] = 1048576.0
+    model["quantize_unit"] = QUANTIZE_UNIT
     if checkpoint_dir:
-        # persist the FULL model dict: _save_ckpt's reduced shape would
-        # drop features/quantize_unit, making the reload unusable (and
-        # its 2^20-space mu/sigma poisonous to a raw-feature warm start)
         os.makedirs(checkpoint_dir, exist_ok=True)
         with open(
             os.path.join(checkpoint_dir, "best_distributed.json"), "w"
         ) as f:
             # NaN (no validation rows) is not valid JSON — store null
-            safe = dict(model)
-            if isinstance(safe.get("val_acc"), float) and math.isnan(
-                safe["val_acc"]
-            ):
-                safe["val_acc"] = None
-            json.dump(safe, f, indent=1)
+            val_acc = model["val_acc"]
+            json.dump(
+                {**model, "val_acc": None if math.isnan(val_acc) else val_acc},
+                f, indent=1,
+            )
     return model
 
 
-def _linear_fold(model: dict, transform=None) -> Column:
-    """The shared standardized linear form b + sum(w*(x'-mu)/sigma),
-    where x' is the raw column or ``transform`` of it — ONE fold used
-    by both model formats so they cannot drift."""
-    z = F.lit(model["bias"])
-    for name, w, m, s in zip(
-        model["features"], model["weights"], model["mu"], model["sigma"]
-    ):
-        x = F.col(name).cast("double")
-        if transform is not None:
-            x = transform(x)
-        z = z + F.lit(w) * ((x - F.lit(m)) / F.lit(s))
-    return z
-
-
-def score_expr_distributed(model: dict) -> Column:
-    """Inference for a distributed-trained model: quantize features with
-    the SAME floor the trainer used, then the standardized linear form —
-    still a pure-JVM constant-folded expression."""
-    q = F.lit(model["quantize_unit"])
-    return _linear_fold(
-        model, transform=lambda x: F.floor(x * q).cast("double")
-    )
-
-
-def _save_ckpt(d, name, w, b, mu, sigma, val_acc) -> None:
-    os.makedirs(d, exist_ok=True)
-    with open(os.path.join(d, f"{name}.json"), "w") as f:
-        json.dump(
-            {"weights": [float(x) for x in w], "bias": float(b),
-             "mu": [float(x) for x in mu],
-             "sigma": [float(x) for x in sigma],
-             "val_acc": None if math.isnan(val_acc) else round(val_acc, 5)},
-            f,
-        )
-
-
 def load_model(path: str) -> dict:
-    """Warm-start / resume (R24): load a checkpointed model."""
+    """Load a model checkpointed by :func:`fit_scorer`."""
     with open(path) as f:
         return json.load(f)
 
 
-def score_expr(model: dict) -> Column:
-    """The inference path: w·x + b as a constant-folded JVM expression
-    over context-enriched blocks — zero Python per row."""
-    return _linear_fold(model)
-
-
-def score_blocks(blocks: DataFrame, model: dict, threshold: float = 0.0) -> DataFrame:
+def score_blocks(blocks: DataFrame, model: dict) -> DataFrame:
     """blocks -> blocks + score + scored_label ('content'/'noise').
 
     The scored path is the `--strategy scored` alternative to the
     heuristic cascade (plugin-dispatch analog, reference
     src/octopy/segment.py:52-57 — strategy chosen by config, plain
     function dispatch instead of a monkeypatch)."""
-    enriched = _with_context(blocks)
-    # distributed-trained models carry the quantize unit and need the
-    # matching floor at inference; driver-fit models score raw features
-    z = (
-        score_expr_distributed(model)
-        if "quantize_unit" in model
-        else score_expr(model)
+    if "quantize_unit" not in model:
+        raise ValueError(
+            "model has no quantize_unit: raw-feature models (the removed "
+            "driver-side trainer's format) are not scored; refit with "
+            "fit_scorer"
+        )
+    z = score_expr_exact(
+        {**model, "features": [f"i_{name}" for name in model["features"]]}
     )
-    return enriched.withColumn("score", z).withColumn(
-        "scored_label",
-        F.when(F.col("score") > threshold, "content").otherwise("noise"),
+    return (
+        _with_features(blocks, model["quantize_unit"])
+        .withColumn("score", z)
+        .withColumn(
+            "scored_label",
+            F.when(F.col("score") > F.lit(0.0), "content").otherwise("noise"),
+        )
+        .drop(*CONTEXT_COLS, *_INT_FEATURES)
     )

@@ -5,9 +5,9 @@ The reference's ``train`` command (/root/reference/src/octopy/cli/train.py:
 Spark-first analog here is FULL-BATCH gradient descent where each step's
 gradient is ONE distributed aggregation over the training frame — map-side
 partial sums per partition, a kilobyte of sufficient statistics to the
-driver, nothing else ever leaves the executors. This replaces the bounded
-driver-side sample of :func:`octospark.scorer.fit_scorer` as the scale
-path: the gradient pass streams 10^12 rows the same way any groupBy does.
+driver, nothing else ever leaves the executors. It is the one trainer
+behind the block scorer (:func:`octospark.scorer.fit_scorer`): the
+gradient pass streams 10^12 rows the same way any groupBy does.
 
 Exactness design (why the result is bit-identical at ANY parallelism and
 reproducible in any engine):

@@ -171,6 +171,29 @@ def test_run_extract_salted_and_max_bytes(spark, pages, out_dir):
     assert g2.filter("text != ''").count() == 0
 
 
+def test_detect_skew_without_salted_is_rejected(spark, pages, out_dir,
+                                                monkeypatch):
+    """The skew census only feeds the salted repartition: asking for it
+    unsalted is an error raised before the output directory or an
+    attempt exists, not a run that silently skips the census; the job
+    rejects the flag combination at argument parsing."""
+    from jobs.extract import main
+
+    with pytest.raises(ValueError, match="detect_skew requires salted"):
+        run_extract(spark, pages, out_dir, n_buckets=N_BUCKETS,
+                    detect_skew=True)
+    assert not os.path.exists(os.path.join(out_dir, "_manifest.json"))
+    assert not os.path.exists(out_dir)
+    monkeypatch.setattr("sys.argv", [
+        "extract.py", "--sf-dir", "unused", "--out", out_dir,
+        "--detect-skew",
+    ])
+    with pytest.raises(SystemExit) as exc:
+        main()
+    assert exc.value.code == 2
+    assert not os.path.exists(out_dir)
+
+
 def test_validation_cadence_kill_on_drift(spark, pages, out_dir):
     """R25: drift detected between chunk commits aborts the run; chunks
     committed before the drift survive in the manifest, and a healthy

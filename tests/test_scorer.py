@@ -1,11 +1,8 @@
-"""Scorer (train-command analog) tests: deterministic fit, top-k
-checkpoints, resume, JVM-only inference, and agreement with the
+"""Scorer (train-command analog) tests: exact distributed fit,
+checkpoint round trip, JVM-only inference, and agreement with the
 heuristic classifier it distills."""
 
 from __future__ import annotations
-
-import json
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -26,15 +23,12 @@ def labeled(spark, pages):
     return df
 
 
-def test_fit_deterministic(spark, labeled):
-    m1 = fit_scorer(labeled, epochs=60)
-    m2 = fit_scorer(labeled, epochs=60)
-    assert m1["weights"] == m2["weights"]
-    assert m1["val_acc"] == m2["val_acc"]
+@pytest.fixture(scope="module")
+def model(spark, labeled):
+    return fit_scorer(labeled, steps=30)
 
 
-def test_fit_distills_heuristic(spark, labeled):
-    model = fit_scorer(labeled, epochs=200)
+def test_fit_distills_heuristic(spark, labeled, model):
     # the linear scorer should reproduce the rule cascade reasonably
     assert model["val_acc"] > 0.9
     scored = score_blocks(labeled, model)
@@ -49,20 +43,7 @@ def test_fit_distills_heuristic(spark, labeled):
     assert acc > 0.9
 
 
-def test_checkpoints_and_resume(spark, labeled, tmp_path):
-    ckpt = str(tmp_path / "ckpt")
-    model = fit_scorer(labeled, epochs=60, checkpoint_dir=ckpt)
-    files = os.listdir(ckpt)
-    assert "best.json" in files
-    assert any(f.startswith("epoch") for f in files)
-    loaded = load_model(os.path.join(ckpt, "best.json"))
-    assert loaded["weights"] == model["weights"]
-    with open(os.path.join(ckpt, "best.json")) as f:
-        assert json.load(f)["seed"] == 42
-
-
-def test_inference_is_jvm_only(spark, labeled):
-    model = fit_scorer(labeled, epochs=30)
+def test_inference_is_jvm_only(spark, labeled, model):
     scored = score_blocks(labeled.limit(100), model)
     plan = scored._jdf.queryExecution().executedPlan().toString()
     # scoring adds no Python eval nodes — the score is a Project expr
@@ -73,15 +54,13 @@ def test_inference_is_jvm_only(spark, labeled):
     assert scored.filter(F.col("scored_label").isNull()).count() == 0
 
 
-def test_classify_with_dispatch(spark, labeled):
+def test_classify_with_dispatch(spark, labeled, model):
     """R4 strategy dispatch: heuristic == classify(); scored keeps
     structural labels and emits content/noise from the model."""
     from octospark.pipeline import classify_with
-    from octospark.scorer import fit_scorer
 
     blocks = labeled.drop("label")
     heur = classify_with(blocks, "heuristic")
-    model = fit_scorer(labeled, epochs=30, max_rows=5_000)
     sc = classify_with(blocks, "scored", model)
     assert set(sc.columns) == set(heur.columns)
     labels = {r.label for r in sc.select("label").distinct().collect()}
@@ -107,73 +86,49 @@ def test_classify_with_dispatch(spark, labeled):
 
 def test_fit_empty_training_frame_clear_error(spark, labeled):
     """An empty (filtered-to-nothing) training frame raises a clear
-    ValueError, not a cryptic IndexError from 1-D slicing."""
+    ValueError, not a cryptic error from an empty aggregate."""
     with pytest.raises(ValueError, match="no training rows"):
-        fit_scorer(labeled.filter(F.lit(False)), epochs=5)
+        fit_scorer(labeled.filter(F.lit(False)), steps=5)
 
 
 def test_distributed_scorer_partitioning_invariant_and_learns(spark, labeled):
-    """The scale path (fit_scorer_distributed) is bit-identical at any
-    partitioning and reproduces the heuristic cascade about as well as
-    the driver-side trainer does."""
-    from octospark.scorer import fit_scorer_distributed, score_expr_distributed
-    from pyspark.sql import functions as F
-
-    m1 = fit_scorer_distributed(labeled.coalesce(1), steps=20)
-    m2 = fit_scorer_distributed(labeled.repartition(7), steps=20)
+    """fit_scorer is bit-identical at any partitioning and reproduces
+    the heuristic cascade."""
+    m1 = fit_scorer(labeled.coalesce(1), steps=20)
+    m2 = fit_scorer(labeled.repartition(7), steps=20)
     assert m1["weights"] == m2["weights"] and m1["bias"] == m2["bias"]
     assert m1["val_total"] > 0 and m1["val_acc"] >= 0.75
     # inference path stays pure-JVM: scoring agrees with training labels
-    from octospark.scorer import _with_context, training_frame
-
-    scored = _with_context(labeled).withColumn(
-        "z", score_expr_distributed(m1)
-    )
+    scored = score_blocks(labeled, m1)
     agree = scored.select(
         (
-            (F.col("z") > 0)
+            (F.col("score") > 0)
             == F.col("label").isin("content", "heading")
         ).cast("int").alias("ok")
     ).agg(F.avg("ok")).collect()[0][0]
     assert agree >= 0.75
 
 
-def test_resume_from_actually_warm_starts(spark, labeled, tmp_path):
-    """Code-review regression: resume_from was accepted but ignored. A
-    resumed 1-epoch fit must start from the checkpoint's weights and
-    standardization stats, not from zeros."""
-    import json
-
-    ckpt = str(tmp_path / "warm")
-    m0 = fit_scorer(labeled, epochs=60, checkpoint_dir=ckpt)
-    m1 = fit_scorer(
-        labeled, epochs=1, resume_from=str(tmp_path / "warm" / "best.json")
-    )
-    # stats are inherited from the checkpoint, not recomputed
-    assert m1["mu"] == m0["mu"] and m1["sigma"] == m0["sigma"]
-    # one epoch from the trained weights stays near the checkpoint's
-    # quality; one epoch from zeros does not
-    cold = fit_scorer(labeled, epochs=1)
-    assert m1["val_acc"] >= m0["val_acc"] - 0.05
-    assert m1["val_acc"] > cold["val_acc"]
-    assert m0["val_is_train_fallback"] is False
-
-
 def test_distributed_checkpoint_roundtrips_full_model(spark, labeled, tmp_path):
-    """Code-review regression: the distributed checkpoint previously
-    dropped features/quantize_unit, so a reloaded model crashed
-    score_blocks (or silently warm-started in the wrong feature
-    space). The persisted file must round-trip the FULL model."""
-    from octospark.scorer import (
-        fit_scorer_distributed,
-        load_model,
-        score_blocks,
-    )
-
+    """Code-review regression: the checkpoint previously dropped
+    features/quantize_unit, so a reloaded model crashed score_blocks.
+    The persisted file must round-trip the FULL model."""
     ckpt = str(tmp_path / "dist_ckpt")
-    m = fit_scorer_distributed(labeled, steps=5, checkpoint_dir=ckpt)
+    m = fit_scorer(labeled, steps=5, checkpoint_dir=ckpt)
     reloaded = load_model(f"{ckpt}/best_distributed.json")
     assert reloaded["features"] == list(m["features"])
     assert reloaded["quantize_unit"] == m["quantize_unit"]
+    assert reloaded["weights"] == m["weights"]
+    assert reloaded["bias"] == m["bias"]
     scored = score_blocks(labeled, reloaded)
     assert scored.filter(F.col("scored_label").isNull()).count() == 0
+
+
+def test_raw_feature_model_is_rejected(spark, labeled):
+    """A model dict without quantize_unit (the raw-feature format of
+    the removed driver-side trainer) is refused, not scored in the
+    wrong feature space."""
+    raw = {"features": ["n_words"], "weights": [1.0], "bias": 0.0,
+           "mu": [0.0], "sigma": [1.0]}
+    with pytest.raises(ValueError, match="quantize_unit"):
+        score_blocks(labeled, raw)
