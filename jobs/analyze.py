@@ -56,7 +56,9 @@ def main() -> None:
         spark.read.parquet(args.input) if args.input
         else build_pages(spark, args.sf_dir)
     )
-    blocks = segment(pages)
+    # the one Python stage: every write, the stats collect and the
+    # scorer's training read these blocks, so segment each page once
+    blocks = segment(pages).persist()
     if args.strategy == "scored":
         from octospark.scorer import fit_scorer
 
@@ -80,6 +82,7 @@ def main() -> None:
         {"strategy": args.strategy, "merges": merges, "label_counts": rows},
         indent=1, sort_keys=True,
     ))
+    blocks.unpersist()
     spark.stop()
 
 

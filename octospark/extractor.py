@@ -19,9 +19,18 @@ Structure mirrors the reference's two-stage flow (jahtz/octopy):
 - :func:`merge_spans`     — span concatenation with offset bookkeeping
   (analog of ``_segmentation_to_pagexml`` join/sort/serialize,
   reference src/octopy/segment.py:117-157).
-- :func:`extract`         — the fused per-page pipeline; pure function
-  of (html bytes) with row-level error tolerance (analog of the
-  per-document try/except, reference src/octopy/cli/segment.py:137-145).
+- :func:`extract_row`     — the fused per-page kernel the Spark UDF
+  calls: one pass of the block walk, then the same rule cascade
+  (:func:`_label`) and span arithmetic as the three stages above, over
+  block records instead of Block objects; a pure function of (html
+  bytes) with row-level error tolerance (analog of the per-document
+  try/except, reference src/octopy/cli/segment.py:137-145).
+  :func:`extract` returns the same row as a dict.
+
+Stage 1 has two walks that produce the same block records: the one-pass
+regex tokenizer (:func:`_fast_walk`, the default) and the stdlib
+``html.parser`` reference (:class:`_BlockParser`), which no Spark path
+runs and which the tests hold the fast walk and the fused kernel to.
 
 Determinism rules (SURVEY.md §7.3):
 - pure functions of the input bytes; no RNG, no global state;
@@ -94,6 +103,18 @@ _QUOTE = frozenset("\"'`")
 _BRACKET = frozenset("()[]{}<>")
 
 
+# --- block walk state -------------------------------------------------------
+# An open tag is an immutable linked node (tag, parent, forced, in_table):
+# ``forced`` is the nearest forced-ancestor label on the path from the
+# root to this tag (the tag itself included), ``in_table`` whether any tag
+# on that path is a table tag. A push is O(1), and a block keeps the node
+# that was current at its first data, so a block costs O(1) at any nesting
+# depth and the rule cascade reads the three facts it needs in O(1).
+# ``tag_path`` and ``depth`` are read off the node only when
+# :func:`segment_blocks` builds a :class:`Block`.
+_ROOT = ("", None, None, False)
+
+
 @dataclass
 class Block:
     """Stage-1 IR: one candidate text block (analog of a BaselineLine,
@@ -110,7 +131,7 @@ class Block:
     text_density: float
     char_hist: list    # list[int] of len 8, HIST_BUCKETS order
     label: str = ""    # filled by stage 2
-    path_tags: list | None = None  # tag_path pre-split (perf cache)
+    node: tuple = _ROOT  # open-tag node at the block's first data
 
 
 @dataclass
@@ -168,84 +189,58 @@ def char_histogram(text: str) -> list:
     return h
 
 
+def _flush(pieces: list, links: list, node: tuple, records: list) -> None:
+    """Close the current block: append its record ``(text, n_words,
+    n_link_chars, link_density, node)`` unless it has no words, then
+    empty ``pieces`` (its raw data) and ``links`` (the pieces of it that
+    sit inside ``<a>``)."""
+    raw = pieces[0] if len(pieces) == 1 else "".join(pieces)
+    words = raw.split()  # one pass: text = _norm_ws(raw), words, count
+    if words:
+        text = " ".join(words)
+        n_chars = len(text)
+        n_link_chars = (
+            min(sum(len(_norm_ws(p)) for p in links), n_chars) if links else 0
+        )
+        records.append(
+            (text, len(words), n_link_chars, n_link_chars / n_chars, node)
+        )
+    pieces.clear()
+    links.clear()
+
+
 class _BlockParser(HTMLParser):
-    """Stdlib-HTMLParser DOM walk that accumulates text into blocks.
+    """Stdlib-HTMLParser DOM walk into block records — the reference the
+    fast walk (:func:`_fast_walk`) is tested block-identical against.
 
     Lenient on malformed nesting by design (FIXTURES.md §C case 4): stray
     end tags pop to the nearest matching open tag; unclosed tags simply
     leave stack residue (depth is a feature, not a correctness anchor).
     """
 
-    def __init__(self, with_hist: bool = True) -> None:
+    def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
-        self.with_hist = with_hist
-        self.stack: list = []
+        self.node = _ROOT
         self.open_counts: dict = {}  # tag -> open count (O(1) membership)
         self.skip_depth = 0
         self.link_depth = 0
-        self.pieces: list = []       # (raw_text, is_link) for current block
-        self.block_has_link = False  # any piece with is_link in pieces
-        self.block_stack_snapshot: list = []
-        self.blocks: list = []
+        self.pieces: list = []
+        self.links: list = []
+        self.block_node = _ROOT
+        self.records: list = []
 
-    # -- block lifecycle ---------------------------------------------------
-    def _flush(self) -> None:
-        pieces = self.pieces
-        if not pieces:
-            return
-        raw = (
-            pieces[0][0] if len(pieces) == 1
-            else "".join(p for p, _ in pieces)
-        )
-        words = raw.split()  # one pass: text = _norm_ws(raw), words, count
-        if not words:
-            self.pieces = []
-            self.block_has_link = False
-            return
-        text = " ".join(words)
-        n_chars = len(text)
-        n_words = len(words)
-        if self.block_has_link:
-            n_link_chars = sum(
-                len(_norm_ws(p)) for p, is_link in pieces if is_link
-            )
-            n_link_chars = min(n_link_chars, n_chars)
-        else:  # common case: no <a> in the block — skip the scan
-            n_link_chars = 0
-        link_density = n_link_chars / n_chars
-        # words-per-wrapped-line proxy at 80 cols (Boilerpipe-style density)
-        lines = max(1, math.ceil(n_chars / 80))
-        text_density = n_words / lines
-        path = self.block_stack_snapshot
-        self.blocks.append(
-            Block(
-                block_id=len(self.blocks),
-                tag_path="/".join(path),
-                depth=len(path),
-                text=text,
-                n_chars=n_chars,
-                n_words=n_words,
-                n_link_chars=n_link_chars,
-                link_density=link_density,
-                text_density=text_density,
-                char_hist=char_histogram(text) if self.with_hist else [],
-                path_tags=path,
-            )
-        )
-        self.pieces = []
-        self.block_has_link = False
-
-    # -- parser callbacks ----------------------------------------------------
     def handle_starttag(self, tag: str, attrs) -> None:
         if tag in _SKIP_TAGS:
             self.skip_depth += 1
             return
         if tag in _BLOCK_TAGS and self.pieces:
-            self._flush()
+            _flush(self.pieces, self.links, self.block_node, self.records)
         if tag == "a":
             self.link_depth += 1
         if tag not in ("br", "hr"):  # void elements don't nest
-            self.stack.append(tag)
+            node = self.node
+            self.node = (tag, node, _ANCESTOR_LABELS.get(tag) or node[2],
+                         node[3] or tag in _TABLE_TAGS)
             oc = self.open_counts
             oc[tag] = oc.get(tag, 0) + 1
 
@@ -255,53 +250,64 @@ class _BlockParser(HTMLParser):
                 self.skip_depth -= 1
             return
         if tag in _BLOCK_TAGS and self.pieces:
-            self._flush()
+            _flush(self.pieces, self.links, self.block_node, self.records)
         if tag == "a" and self.link_depth > 0:
             self.link_depth -= 1
-        # pop to nearest matching open tag (lenient recovery); the
-        # open_counts dict makes the membership test O(1) instead of an
-        # O(depth) list scan per end tag
         oc = self.open_counts
-        if oc.get(tag):
-            stack = self.stack
-            while stack:
-                top = stack.pop()
+        if oc.get(tag):  # pop to the nearest matching open tag
+            node = self.node
+            while True:
+                top = node[0]
+                node = node[1]
                 oc[top] -= 1
                 if top == tag:
                     break
+            self.node = node
 
     def handle_startendtag(self, tag: str, attrs) -> None:
         if tag in ("br", "hr"):
-            is_link = self.link_depth > 0
-            self.pieces.append((" ", is_link))
-            if is_link:
-                self.block_has_link = True
+            self.pieces.append(" ")
+            if self.link_depth > 0:
+                self.links.append(" ")
 
     def handle_data(self, data: str) -> None:
         if self.skip_depth > 0 or not data:
             return
         if not self.pieces:
-            self.block_stack_snapshot = list(self.stack)
-        is_link = self.link_depth > 0
-        self.pieces.append((data, is_link))
-        if is_link:
-            self.block_has_link = True
+            self.block_node = self.node
+        self.pieces.append(data)
+        if self.link_depth > 0:
+            self.links.append(data)
+
+
+def _stdlib_walk(text: str) -> list:
+    """Block records of ``text`` through html.parser.HTMLParser."""
+    p = _BlockParser()
+    try:
+        p.feed(text)
+        p.close()
+    except Exception:
+        pass  # parser blow-up: keep the blocks produced so far
+    if p.pieces:
+        _flush(p.pieces, p.links, p.block_node, p.records)
+    return p.records
 
 
 # --- fast tokenizer --------------------------------------------------------
-# Drives the SAME _BlockParser handler methods as the stdlib HTMLParser
-# but with a single lean scan (~2-3x faster: the stdlib machinery —
-# attribute materialization, updatepos, charref splitting — dominates
-# the profile and none of it feeds our features). Tag-boundary decisions
-# reuse html.parser's OWN compiled tolerant regexes, so the tokenization
-# is behavior-identical by construction; equivalence with the stdlib
-# walk is additionally enforced block-for-block in
-# tests/test_extractor.py over every fixture, every sf0.001 page, and
-# thousands of byte-level mutations.
+# One loop that tokenizes and keeps the block state itself (skip depth,
+# link depth, open-tag node, pieces), with no per-token method call: the
+# stdlib machinery — attribute materialization, updatepos, charref
+# splitting, handler dispatch — dominates a HTMLParser profile and none of
+# it feeds our features. One compiled pattern, :data:`_TOKEN`, takes the
+# data before the next '<' together with the common construct there;
+# any other construct goes through :func:`_tolerant_token`, whose
+# tag-boundary decisions reuse html.parser's OWN compiled tolerant
+# regexes. Equivalence with the stdlib walk is enforced block-for-block
+# in tests/test_extractor.py over every fixture, generated pages,
+# thousands of byte-level mutations and a hypothesis fuzz.
 
 try:  # CPython html.parser module-level regexes (3.8-3.12 stable names)
     from html.parser import attrfind_tolerant as _ATTRFIND
-    from html.parser import endtagfind as _ENDTAGFIND
     from html.parser import locatestarttagend_tolerant as _LOCATE_START
     from html.parser import tagfind_tolerant as _TAGFIND
 
@@ -309,22 +315,33 @@ try:  # CPython html.parser module-level regexes (3.8-3.12 stable names)
 except ImportError:  # pragma: no cover — fall back to stdlib engine
     _HAVE_TOLERANT = False
 
+# Groups: (1) the data before '<', then at most one of (2) an end-tag
+# name, (3) a start-tag name with (4) '/' when self-closing; a comment or
+# declaration sets none of them.
+_TOKEN = re.compile(
+    r"([^<]*+)<(?:"
+    # end tag in endtagfind's form '</ name >'
+    r"/\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>"
+    # conservative well-formed start tag: simple name, simple attrs (no
+    # '<'/'>'/stray quotes inside), optional '/>' suffix. By construction
+    # every match is tokenized identically by the stdlib tolerant
+    # machinery (incl. the self-closing rule: a bare value eats a
+    # trailing '/', so only a detached '/' marks '/>')
+    r"|([a-zA-Z][-a-zA-Z0-9:_.]*)"
+    r"(?:\s+[^\s/>=\"'<]+"
+    r"(?:\s*=\s*(?:\"[^\"<>]*\"|'[^'<>]*'|[^\s>\"'`=<]+))?)*"
+    r"\s*(/?)>"
+    # closed comment
+    r"|!--(?s:.*?)-->"
+    # doctype / bogus comment: '<!' not opening a comment or marked section
+    r"|!(?!--|\[)[^>]*+>"
+    r")"
+)
 _CDATA_STRICT = {
     "script": re.compile(r"</\s*script\s*>", re.IGNORECASE),
     "style": re.compile(r"</\s*style\s*>", re.IGNORECASE),
 }
-# Conservative well-formed start tag (the hot path): simple name, simple
-# attrs (no '<'/'>'/stray quotes inside), optional '/>' suffix. By
-# construction every match is tokenized identically by the stdlib
-# tolerant machinery (incl. the self-closing rule: a bare value eats a
-# trailing '/', so only a detached '/' marks '/>'); anything else falls
-# back to the tolerant path below.
-_SIMPLE_START = re.compile(
-    r"<([a-zA-Z][-a-zA-Z0-9:_.]*)"
-    r"((?:\s+[^\s/>=\"'<]+"
-    r"(?:\s*=\s*(?:\"[^\"<>]*\"|'[^'<>]*'|[^\s>\"'`=<]+))?)*)"
-    r"\s*(/?)>"
-)
+_DECLNAME = re.compile(r"[a-zA-Z][-_.a-zA-Z0-9]*")  # stdlib _scan_name
 _MARKED_CLOSE = re.compile(r"]\s*]\s*>")   # standard  ]]>
 _MS_MARKED_CLOSE = re.compile(r"]\s*>")    # MS Office ]>  (if/else/endif)
 _MARKED_STD = frozenset({"temp", "cdata", "ignore", "include", "rcdata"})
@@ -335,167 +352,228 @@ _INCOMPLETE_NEXT = frozenset(
 )
 
 
-def _recover(text: str, p: _BlockParser, lt: int) -> int:
+def _recover(text: str, lt: int) -> tuple:
     """stdlib goahead() end-of-input recovery for an incomplete
-    construct at ``lt``: emit through the next '>' (inclusive) or up to
-    the next '<', unescaped, else just '<'; return the resume index."""
+    construct at ``lt``: data through the next '>' (inclusive) or up to
+    the next '<', unescaped, else just '<'; as a token of
+    :func:`_tolerant_token`."""
     j = text.find(">", lt + 1)
     if j >= 0:
         chunk = text[lt : j + 1]
     else:
         j2 = text.find("<", lt + 1)
-        if j2 >= 0:
-            chunk = text[lt:j2]
-            j = j2 - 1
-        else:
-            p.handle_data("<")
-            return lt + 1
-    p.handle_data(_unescape(chunk) if "&" in chunk else chunk)
-    return j + 1
+        if j2 < 0:
+            return "<", None, None, False, lt + 1
+        chunk = text[lt:j2]
+        j = j2 - 1
+    if "&" in chunk:
+        chunk = _unescape(chunk)
+    return chunk, None, None, False, j + 1
 
 
-def _fast_walk(text: str, p: _BlockParser) -> None:
-    """Tokenize ``text`` and drive the handler callbacks of ``p``,
-    mirroring stdlib HTMLParser(convert_charrefs=True) semantics for
-    everything our handler observes: charrefs decoded in data; CDATA
-    content mode for script/style (tags inside are NOT parsed, and only
-    a strict ``</script>`` leaves the mode); '/>'-suffixed tags routed
-    to handle_startendtag; broken start tags emitted raw; bogus end
-    tags consumed as comments; incomplete constructs recovered via
-    :func:`_recover`; stray '<' emitted as data."""
-    i, n = 0, len(text)
-    find = text.find
-    while i < n:
-        lt = find("<", i)
-        if lt < 0:
-            chunk = text[i:]
-            p.handle_data(_unescape(chunk) if "&" in chunk else chunk)
-            break
-        if lt > i:
-            chunk = text[i:lt]
-            p.handle_data(_unescape(chunk) if "&" in chunk else chunk)
-        nxt = text[lt + 1] if lt + 1 < n else ""
-        if nxt == "/":
-            gt = find(">", lt + 1)
-            if gt < 0:  # no '>' anywhere: incomplete endtag
-                i = _recover(text, p, lt)
-                continue
-            # fast path: plain '</name>' (name all ascii letters) —
-            # exactly what _ENDTAGFIND accepts with no whitespace, so
-            # behavior-identical by construction; skips a regex match
-            # on the overwhelmingly common case
-            name = text[lt + 2 : gt]
-            if name.isascii() and name.isalpha():
-                p.handle_endtag(name.lower())
-                i = gt + 1
-                continue
-            m = _ENDTAGFIND.match(text, lt)  # strict '</ name >'
-            if m:
-                p.handle_endtag(m.group(1).lower())
-                i = m.end()
-                continue
-            nm = _TAGFIND.match(text, lt + 2)  # tolerant name at i+2
-            if nm:
-                p.handle_endtag(nm.group(1).lower())
-                i = find(">", nm.end()) + 1  # exists: gt >= name end
-                continue
-            if text.startswith("</>", lt):
-                i = lt + 3
-                continue
-            i = gt + 1  # bogus comment: silent consume to '>'
-            continue
-        elif "a" <= nxt <= "z" or "A" <= nxt <= "Z":
-            ms = _SIMPLE_START.match(text, lt)
-            if ms:
-                tag = ms.group(1).lower()
-                selfclose = ms.group(3) == "/"
-                endpos = ms.end()
-            else:  # weird tag: stdlib tolerant machinery, verbatim
-                m = _LOCATE_START.match(text, lt)
-                j = m.end()
-                nc = text[j : j + 1]
-                if nc == ">":
-                    endpos = j + 1
-                elif nc == "/" and text.startswith("/>", j):
-                    endpos = j + 2
-                elif nc == "" or nc in _INCOMPLETE_NEXT:
-                    i = _recover(text, p, lt)  # incomplete at input end
+def _tolerant_token(text: str, lt: int) -> tuple:
+    """Tokenize a construct at ``text[lt] == '<'`` that :data:`_TOKEN`
+    does not match, as stdlib HTMLParser(convert_charrefs=True) does for
+    everything our walk observes: returns ``(data, end tag, start tag,
+    self-closing, resume index)`` with at most one of data / end tag /
+    start tag set. Tolerant end tags and weird start tags follow
+    html.parser's own regexes; broken start tags are emitted raw; bogus
+    end tags, marked sections and processing instructions are consumed
+    silently; incomplete constructs (an unclosed comment among them)
+    recover via :func:`_recover`; a stray '<' is data. An unknown marked
+    section raises, as stdlib does."""
+    nxt = text[lt + 1 : lt + 2]
+    if nxt == "/":
+        gt = text.find(">", lt + 1)
+        if gt < 0:  # no '>' anywhere: incomplete endtag
+            return _recover(text, lt)
+        nm = _TAGFIND.match(text, lt + 2)  # tolerant name at i+2
+        if nm:  # resume past the '>' (exists: gt >= name end)
+            return "", nm.group(1), None, False, text.find(">", nm.end()) + 1
+        if text.startswith("</>", lt):
+            return "", None, None, False, lt + 3
+        return "", None, None, False, gt + 1  # bogus comment
+    if "a" <= nxt <= "z" or "A" <= nxt <= "Z":
+        # stdlib tolerant start-tag machinery, verbatim
+        j = _LOCATE_START.match(text, lt).end()
+        nc = text[j : j + 1]
+        if nc == ">":
+            endpos = j + 1
+        elif nc == "/" and text.startswith("/>", j):
+            endpos = j + 2
+        elif nc == "" or nc in _INCOMPLETE_NEXT:
+            return _recover(text, lt)  # incomplete at input end
+        else:  # broken start tag: raw data through attr region
+            return text[lt:j], None, None, False, j
+        # faithful parse_starttag: walk attrs, then classify the tail —
+        # '>' start, '/>' startend, else raw data
+        nm = _TAGFIND.match(text, lt + 1)
+        k = nm.end()
+        while k < endpos:
+            am = _ATTRFIND.match(text, k)
+            if not am:
+                break
+            k = am.end()
+        tail = text[k:endpos].strip()
+        if tail == ">":
+            return "", None, nm.group(1), False, endpos
+        if tail == "/>":
+            return "", None, nm.group(1), True, endpos
+        return text[lt:endpos], None, None, False, endpos
+    if nxt == "!":
+        if text.startswith("<![", lt):
+            sect = _DECLNAME.match(text[lt + 3 : lt + 20])
+            name = sect.group(0).lower() if sect else ""
+            if name in _MARKED_STD:
+                mc = _MARKED_CLOSE.search(text, lt + 3)
+            elif name in _MARKED_MS:
+                mc = _MS_MARKED_CLOSE.search(text, lt + 3)
+            else:
+                raise ValueError("unknown marked section")  # = stdlib
+            if mc is None:
+                return _recover(text, lt)
+            return "", None, None, False, mc.end()
+        return _recover(text, lt)  # unclosed comment, '<!' with no '>'
+    if nxt == "?":
+        j = text.find(">", lt + 2)
+        if j >= 0:
+            return "", None, None, False, j + 1
+        return _recover(text, lt)
+    return "<", None, None, False, lt + 1  # lone/stray '<': data
+
+
+def _fast_walk(text: str) -> list:
+    """Block records of ``text``, mirroring stdlib
+    HTMLParser(convert_charrefs=True) semantics for everything the block
+    state observes: charrefs decoded in data; CDATA content mode for
+    script/style (tags inside are NOT parsed, and only a strict
+    ``</script>`` leaves the mode); '/>'-suffixed tags are start-end
+    tags; the rest as :func:`_tolerant_token`. A tokenizer exception
+    keeps the blocks produced so far, as the stdlib walk does."""
+    records: list = []
+    pieces: list = []
+    links: list = []
+    node = block_node = _ROOT
+    open_counts: dict = {}
+    skip_depth = link_depth = 0
+    scanner = _TOKEN.scanner
+    scan = scanner(text).match  # each match starts where the last ended
+    last = None  # the current scanner's last match
+    i, n = 0, len(text)  # where the current scanner started
+    try:
+        while True:
+            m = scan()
+            if m is not None:
+                last = m
+                data, etag, stag, selfclose = m.groups()
+                if "&" in data:
+                    data = _unescape(data)
+            else:
+                if last is not None:
+                    i = last.end()
+                if i >= n:
+                    break
+                lt = text.find("<", i)
+                if lt == i:
+                    data, etag, stag, selfclose, i = _tolerant_token(text, i)
+                else:  # the data before the construct, or up to the end
+                    if lt < 0:
+                        data, i = text[i:], n
+                    else:
+                        data, i = text[i:lt], lt
+                    if "&" in data:
+                        data = _unescape(data)
+                    etag = stag = None
+                scan = scanner(text, i).match
+                last = None
+            if data and not skip_depth:
+                if not pieces:
+                    block_node = node
+                pieces.append(data)
+                if link_depth:
+                    links.append(data)
+            if etag is not None:
+                tag = etag.lower()
+                if tag in _SKIP_TAGS:
+                    if skip_depth:
+                        skip_depth -= 1
                     continue
-                else:  # broken start tag: raw data through attr region
-                    p.handle_data(text[lt:j])
-                    i = j
+                if tag == "a" and link_depth:
+                    link_depth -= 1
+                if open_counts.get(tag):  # pop to the nearest matching tag
+                    while True:
+                        top = node[0]
+                        node = node[1]
+                        open_counts[top] -= 1
+                        if top == tag:
+                            break
+            elif stag is not None:
+                tag = stag.lower()
+                if selfclose:
+                    if tag == "br" or tag == "hr":
+                        pieces.append(" ")
+                        if link_depth:
+                            links.append(" ")
                     continue
-                # faithful parse_starttag: walk attrs, then classify the
-                # tail — '>' start, '/>' startend, else raw data
-                nm = _TAGFIND.match(text, lt + 1)
-                tag = nm.group(1).lower()
-                k = nm.end()
-                while k < endpos:
-                    am = _ATTRFIND.match(text, k)
-                    if not am:
-                        break
-                    k = am.end()
-                tail = text[k:endpos].strip()
-                if tail == ">":
-                    selfclose = False
-                elif tail == "/>":
-                    selfclose = True
-                else:
-                    p.handle_data(text[lt:endpos])
-                    i = endpos
+                if tag in _SKIP_TAGS:
+                    skip_depth += 1
+                    cd = _CDATA_STRICT.get(tag)
+                    if cd is not None:  # content mode: no tag parsing inside
+                        mc = cd.search(text, i if last is None else last.end())
+                        if mc is None:
+                            break  # never strictly closed: rest is raw data
+                        i = mc.start()  # the strict close is an end tag
+                        scan = scanner(text, i).match
+                        last = None
                     continue
-            i = endpos
-            if selfclose:
-                p.handle_startendtag(tag, None)
+                if tag == "a":
+                    link_depth += 1
+                if tag != "br" and tag != "hr":  # void elements don't nest
+                    node = (tag, node, _ANCESTOR_LABELS.get(tag) or node[2],
+                            node[3] or tag in _TABLE_TAGS)
+                    open_counts[tag] = open_counts.get(tag, 0) + 1
+            else:
                 continue
-            p.handle_starttag(tag, None)
-            cd = _CDATA_STRICT.get(tag)
-            if cd is not None:  # content mode: no tag parsing inside
-                mc = cd.search(text, i)
-                if mc is None:
-                    break  # never strictly closed: rest is raw data
-                i = mc.start()  # strict close: _ENDTAGFIND consumes it
-            continue
-        elif nxt == "!":
-            if text.startswith("<!--", lt):
-                j = find("-->", lt + 4)
-                if j >= 0:
-                    i = j + 3
-                    continue
-                i = _recover(text, p, lt)
-                continue
-            if text.startswith("<![", lt):
-                # stdlib _scan_name's declname token
-                sect = re.match(r"[a-zA-Z][-_.a-zA-Z0-9]*",
-                                text[lt + 3 : lt + 20])
-                name = sect.group(0).lower() if sect else ""
-                if name in _MARKED_STD:
-                    mc = _MARKED_CLOSE.search(text, lt + 3)
-                elif name in _MARKED_MS:
-                    mc = _MS_MARKED_CLOSE.search(text, lt + 3)
-                else:
-                    raise ValueError("unknown marked section")  # = stdlib
-                if mc is None:
-                    i = _recover(text, p, lt)
-                    continue
-                i = mc.end()
-                continue
-            j = find(">", lt + 2)
-            if j >= 0:  # doctype / bogus comment: silent
-                i = j + 1
-                continue
-            i = _recover(text, p, lt)
-            continue
-        elif nxt == "?":
-            j = find(">", lt + 2)
-            if j >= 0:
-                i = j + 1
-                continue
-            i = _recover(text, p, lt)
-            continue
-        # lone/stray '<': data (tolerant mode)
-        p.handle_data("<")
-        i = lt + 1
+            # a block tag closes the open block; the push/pop above does
+            # not touch what the flush reads
+            if pieces and tag in _BLOCK_TAGS:
+                _flush(pieces, links, block_node, records)
+    except Exception:
+        pass  # tokenizer blow-up (= stdlib's): keep the blocks so far
+    if pieces:
+        _flush(pieces, links, block_node, records)
+    return records
+
+
+_WALKS = {"fast": _fast_walk, "stdlib": _stdlib_walk}
+_DEFAULT_WALK = _fast_walk if _HAVE_TOLERANT else _stdlib_walk
+
+
+def _block(block_id: int, record: tuple, with_hist: bool) -> Block:
+    """A :class:`Block` from a walk's block record."""
+    text, n_words, n_link_chars, link_density, node = record
+    path = []
+    nd = node
+    while nd is not _ROOT:
+        path.append(nd[0])
+        nd = nd[1]
+    path.reverse()
+    n_chars = len(text)
+    # words-per-wrapped-line proxy at 80 cols (Boilerpipe-style density)
+    lines = max(1, math.ceil(n_chars / 80))
+    return Block(
+        block_id=block_id,
+        tag_path="/".join(path),
+        depth=len(path),
+        text=text,
+        n_chars=n_chars,
+        n_words=n_words,
+        n_link_chars=n_link_chars,
+        link_density=link_density,
+        text_density=n_words / lines,
+        char_hist=char_histogram(text) if with_hist else [],
+        node=node,
+    )
 
 
 def segment_blocks(
@@ -504,28 +582,24 @@ def segment_blocks(
     """Stage 1: html -> ordered list[Block] in DOM order.
 
     Pure function of the input bytes; DOM order is preserved (reading
-    order, analog of reference src/octopy/segment.py:149-156).
-    ``with_hist=False`` skips the char-class histogram (~20% of parse
-    cost) — used by the fused extraction path, where the classifier
-    never reads it. ``engine='fast'`` (default) uses the lean regex
-    tokenizer; ``'stdlib'`` uses html.parser.HTMLParser — both drive the
-    same handler and are tested block-identical.
+    order, analog of reference src/octopy/segment.py:149-156). Used by
+    the staged path and the tests; the fused path (:func:`extract_row`)
+    runs the same walk without building Blocks. ``with_hist=False``
+    skips the char-class histogram. ``engine='fast'`` (default) uses the
+    one-pass regex tokenizer; ``'stdlib'`` uses html.parser.HTMLParser
+    as the reference — both produce the same block records and are
+    tested block-identical. Any other engine name raises ``ValueError``.
     """
     if engine is None:
-        engine = "fast" if _HAVE_TOLERANT else "stdlib"
-    text = decode_html(html)
-    parser = _BlockParser(with_hist=with_hist)
-    try:
-        if engine == "fast":
-            _fast_walk(text, parser)
-        else:
-            parser.feed(text)
-            parser.close()
-    except Exception:
-        # parser blow-up: salvage whatever blocks were produced
-        pass
-    parser._flush()
-    return parser.blocks
+        walk = _DEFAULT_WALK
+    else:
+        walk = _WALKS.get(engine)
+        if walk is None:
+            raise ValueError(
+                f"unknown engine {engine!r}; expected one of {sorted(_WALKS)}"
+            )
+    records = walk(decode_html(html))
+    return [_block(k, r, with_hist) for k, r in enumerate(records)]
 
 
 # --- stage 2: classification ----------------------------------------------
@@ -538,50 +612,58 @@ _LINK_DENSITY_MAX = 0.333333
 _PREV_LINK_DENSITY_HIGH = 0.555555
 
 
-def classify_block(
-    curr: Block, prev: Block | None, next_: Block | None
+def _label(
+    node: tuple, n_words: int, link_density: float,
+    prev_words: int, prev_link_density: float, next_words: int,
 ) -> str:
-    """Label one block from its features and its neighbors' features.
+    """The deterministic rule cascade for one block, from its open-tag
+    node, its features and its neighbors' (0 at the page edges):
 
-    Deterministic rule cascade:
-    1. forced ancestor labels (nav/header/footer/aside/form) — the analog
-       of the fixed region-class mapping (reference
-       src/octopy/mappings.py:15-48);
-    2. heading / table / caption tags;
+    1. forced ancestor labels (nav/header/footer/aside/form), nearest
+       ancestor first — the analog of the fixed region-class mapping
+       (reference src/octopy/mappings.py:15-48);
+    2. heading / caption tags, then table with the layout-table
+       carve-out;
     3. Boilerpipe-style (prev, curr, next) word-count + link-density rules.
     """
-    path_tags = curr.path_tags
-    if path_tags is None:
-        path_tags = curr.tag_path.split("/") if curr.tag_path else []
-    for tag in reversed(path_tags):  # nearest ancestor wins
-        if tag in _ANCESTOR_LABELS:
-            return _ANCESTOR_LABELS[tag]
-    last = path_tags[-1] if path_tags else ""
+    forced = node[2]
+    if forced is not None:
+        return forced
+    last = node[0]
     if last in _HEADING_TAGS:
         return "heading"
     if last == "figcaption":
         return "caption"
-    if last in _TABLE_TAGS or any(t in _TABLE_TAGS for t in path_tags):
-        # layout-table carve-out (r3): long, low-link prose inside a
-        # table is page content rendered through a layout table — let it
-        # fall through to the word-count cascade instead of losing it.
-        # Short cells / link-heavy rows keep the 'table' label.
-        if not (
-            curr.n_words > 16 and curr.link_density <= _LINK_DENSITY_MAX
-        ):
-            return "table"
-    if curr.link_density > _LINK_DENSITY_MAX:
+    # layout-table carve-out (r3): long, low-link prose inside a table is
+    # page content rendered through a layout table — let it fall through
+    # to the word-count cascade instead of losing it. Short cells /
+    # link-heavy rows keep the 'table' label.
+    if node[3] and not (n_words > 16 and link_density <= _LINK_DENSITY_MAX):
+        return "table"
+    if link_density > _LINK_DENSITY_MAX:
         return "boilerplate-nav"
-    prev_words = prev.n_words if prev is not None else 0
-    prev_ld = prev.link_density if prev is not None else 0.0
-    next_words = next_.n_words if next_ is not None else 0
-    if prev_ld > _PREV_LINK_DENSITY_HIGH:
-        if curr.n_words > 40 or next_words > 17:
+    if prev_link_density > _PREV_LINK_DENSITY_HIGH:
+        if n_words > 40 or next_words > 17:
             return "content"
         return "noise"
-    if curr.n_words > 16 or next_words > 15 or prev_words > 4:
+    if n_words > 16 or next_words > 15 or prev_words > 4:
         return "content"
     return "noise"
+
+
+def classify_block(
+    curr: Block, prev: Block | None, next_: Block | None
+) -> str:
+    """Label one block from its features and its neighbors' features
+    (the rule cascade :func:`_label`)."""
+    return _label(
+        curr.node,
+        curr.n_words,
+        curr.link_density,
+        prev.n_words if prev is not None else 0,
+        prev.link_density if prev is not None else 0.0,
+        next_.n_words if next_ is not None else 0,
+    )
 
 
 def classify_blocks(blocks: list) -> list:
@@ -629,26 +711,51 @@ def merge_spans(blocks: list) -> tuple:
     return "\n".join(parts), spans
 
 
-def extract(html: bytes | str | None) -> dict:
-    """Fused per-page pipeline: html -> {text, spans, n_blocks, error}.
+# --- the fused kernel ---------------------------------------------------------
 
-    Never raises — any failure yields text='' with the error recorded
-    (row-level error tolerance, analog of the per-document try/except in
-    reference src/octopy/cli/segment.py:137-145). Every input page yields
-    exactly one output row (never-drop law)."""
+def extract_row(html: bytes | str | None) -> tuple:
+    """Fused per-page kernel: html -> the UDF row ``(text,
+    [(block_id, start, end, label)], n_blocks, error)``.
+
+    The same result as :func:`merge_spans` over :func:`classify_blocks`
+    over :func:`segment_blocks`, in one walk over block records with no
+    Block objects. Never raises — any failure yields text='' with the
+    error recorded (row-level error tolerance, analog of the per-document
+    try/except in reference src/octopy/cli/segment.py:137-145). Every
+    input page yields exactly one output row (never-drop law)."""
     try:
-        blocks = classify_blocks(segment_blocks(html, with_hist=False))
-        text, spans = merge_spans(blocks)
-        return {
-            "text": text,
-            "spans": [
-                {"block_id": s.block_id, "start": s.start, "end": s.end,
-                 "label": s.label}
-                for s in spans
-            ],
-            "n_blocks": len(blocks),
-            "error": None,
-        }
+        records = _DEFAULT_WALK(decode_html(html))
+        parts: list = []
+        spans: list = []
+        pos = 0
+        prev_words, prev_ld = 0, 0.0
+        last = len(records) - 1
+        for k, (text, n_words, _, ld, node) in enumerate(records):
+            next_words = records[k + 1][1] if k < last else 0
+            label = _label(node, n_words, ld, prev_words, prev_ld, next_words)
+            if label in CONTENT_LABELS:
+                if parts:
+                    pos += 1  # the '\n' joiner
+                end = pos + len(text)
+                spans.append((k, pos, end, label))
+                parts.append(text)
+                pos = end
+            prev_words, prev_ld = n_words, ld
+        return "\n".join(parts), spans, len(records), None
     except Exception as exc:  # pragma: no cover — defensive outer guard
-        return {"text": "", "spans": [], "n_blocks": 0,
-                "error": f"{type(exc).__name__}: {exc}"}
+        return "", [], 0, f"{type(exc).__name__}: {exc}"
+
+
+def extract(html: bytes | str | None) -> dict:
+    """:func:`extract_row` as a dict: ``{text, spans, n_blocks, error}``
+    with each span a ``{block_id, start, end, label}`` dict."""
+    text, spans, n_blocks, error = extract_row(html)
+    return {
+        "text": text,
+        "spans": [
+            {"block_id": b, "start": s, "end": e, "label": lab}
+            for b, s, e, lab in spans
+        ],
+        "n_blocks": n_blocks,
+        "error": error,
+    }

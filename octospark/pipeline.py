@@ -88,26 +88,12 @@ def _make_extract_batches(max_bytes: int):
     def _extract_batches(
         batches: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
-        from octospark.extractor import extract  # lazy import in worker
+        from octospark.extractor import extract_row  # lazy import in worker
 
+        # inline size guard: oversized/null html is never parsed but
+        # still yields a row (never-drop; reference analog
+        # MAX_IMAGE_PIXELS, src/octopy/__init__.py:25)
         guard_row = ("", [], 0, "size_guard")
-
-        def one(h):
-            # inline size guard: oversized/null html is never parsed but
-            # still yields a row (never-drop; reference analog
-            # MAX_IMAGE_PIXELS, src/octopy/__init__.py:25)
-            if h is None or len(h) > max_bytes:
-                return guard_row
-            r = extract(h)
-            # spans as tuples: ~2x cheaper than dicts through Arrow
-            return (
-                r["text"],
-                [(s["block_id"], s["start"], s["end"], s["label"])
-                 for s in r["spans"]],
-                r["n_blocks"],
-                r["error"],
-            )
-
         for pdf in batches:
             # columnar assembly: fill the four output columns directly
             # instead of a row-tuple list re-traversed per column
@@ -116,11 +102,14 @@ def _make_extract_batches(max_bytes: int):
             n_blocks: list = []
             errors: list = []
             for h in pdf["html"]:
-                r = one(h)
-                texts.append(r[0])
-                spans.append(r[1])
-                n_blocks.append(r[2])
-                errors.append(r[3])
+                text, sp, nb, err = (
+                    guard_row if h is None or len(h) > max_bytes
+                    else extract_row(h)
+                )
+                texts.append(text)
+                spans.append(sp)
+                n_blocks.append(nb)
+                errors.append(err)
             yield pd.DataFrame(
                 {
                     "url": pdf["url"].values,

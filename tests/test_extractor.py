@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import pathlib
 
@@ -147,18 +148,16 @@ def test_fast_engine_equivalent_on_fixtures(name, html):
     assert _engines_agree(html)
 
 
-def test_fast_engine_equivalent_on_corpus_and_mutations():
-    """Block-identical fast vs stdlib tokenization over generated pages
-    plus byte-level mutations (truncations + adversarial injections at
-    several positions) — the contract that lets the fast engine be the
-    default."""
+def _corpus_and_mutations():
+    """(html, note) pairs: 60 generated pages, then truncations and
+    adversarial injections at several positions of the first 12."""
     rows = duckdb.sql(
         "SELECT doc_id, text, source FROM "
         "'/root/testdata/sf0.001/documents.parquet' LIMIT 60"
     ).fetchall()
     pages = [build_html(*r) for r in rows]
     for h in pages:
-        assert _engines_agree(h)
+        yield h, None
     inject = [
         b"<", b"<<>", b"</", b"<!--oops", b"<p junk='a>b'",
         b"&amp;&bogus;&#65;", b"<br/>", b"<ScRiPt>x<div></sCrIpT>",
@@ -174,10 +173,84 @@ def test_fast_engine_equivalent_on_corpus_and_mutations():
     for h in pages[:12]:
         n = len(h)
         for cut in [3, 17, n // 7, n // 3, n // 2, n - 5, n - 1]:
-            assert _engines_agree(h[:cut]), ("trunc", cut)
+            yield h[:cut], ("trunc", cut)
         for inj in inject:
             for pos in [n // 4, n // 2, 3 * n // 4]:
-                assert _engines_agree(h[:pos] + inj + h[pos:]), (inj, pos)
+                yield h[:pos] + inj + h[pos:], (inj, pos)
+
+
+def test_fast_engine_equivalent_on_corpus_and_mutations():
+    """Block-identical fast vs stdlib tokenization over generated pages
+    plus byte-level mutations (truncations + adversarial injections at
+    several positions) — the contract that lets the fast engine be the
+    default."""
+    for h, note in _corpus_and_mutations():
+        assert _engines_agree(h), note
+
+
+# --- fused kernel vs the staged reference -----------------------------------
+
+def _kernel_agrees(html) -> bool:
+    """extract() (the fused kernel) equals the three stages composed over
+    the stdlib reference walk, on text, spans and n_blocks."""
+    r = extract(html)
+    blocks = classify_blocks(segment_blocks(html, engine="stdlib"))
+    text, spans = merge_spans(blocks)
+    return (r["text"], r["spans"], r["n_blocks"]) == (
+        text, [dataclasses.asdict(s) for s in spans], len(blocks)
+    )
+
+
+@pytest.mark.parametrize("name,html", CASES, ids=[c[0] for c in CASES])
+def test_kernel_equals_reference_on_fixtures(name, html):
+    assert _kernel_agrees(html)
+
+
+def test_kernel_equals_reference_on_corpus_and_mutations():
+    for h, note in _corpus_and_mutations():
+        assert _kernel_agrees(h), note
+
+
+def test_unknown_engine_rejected():
+    with pytest.raises(ValueError, match="unknown engine 'fsat'"):
+        segment_blocks(b"<p>x</p>", engine="fsat")
+    for engine in (None, "fast", "stdlib"):
+        blocks = segment_blocks(b"<p>x</p>", engine=engine)
+        assert [b.text for b in blocks] == ["x"]
+
+
+def test_adversarial_nesting_is_linear_time():
+    """Unclosed ``<div><span>x `` repeated n times: every block opens one
+    level deeper, so a walk that copies the open-tag path per block is
+    quadratic (such a walk took 2.2 s at n=4k and 9.4 s at n=8k on a
+    4-core VM). Doubling n must cost at most 2.5x. Each ratio is of the best
+    of 5 interleaved runs per size with the cyclic GC paused; a shared
+    machine can slow every run of one window, so the bound is checked on
+    the least disturbed of up to 3 such measurements."""
+    import gc
+    import time
+
+    h4, h8 = "<div><span>x " * 4000, "<div><span>x " * 8000
+    ratios = []
+    for _ in range(3):
+        b4 = b8 = float("inf")
+        gc.collect()
+        gc.disable()
+        try:
+            for _ in range(5):
+                t0 = time.perf_counter()
+                extract(h4)
+                t1 = time.perf_counter()
+                extract(h8)
+                t2 = time.perf_counter()
+                b4, b8 = min(b4, t1 - t0), min(b8, t2 - t1)
+        finally:
+            gc.enable()
+        assert b8 < 1.0
+        ratios.append(b8 / b4)
+        if ratios[-1] <= 2.5:
+            break
+    assert min(ratios) <= 2.5, ratios
 
 
 # --- property-based fuzz (hypothesis) ---------------------------------------
@@ -206,6 +279,12 @@ try:
               suppress_health_check=[HealthCheck.too_slow])
     def test_fuzz_fast_engine_equivalent(html):
         assert _engines_agree(html)
+
+    @given(_PAGE)
+    @settings(max_examples=300, deadline=None,
+              suppress_health_check=[HealthCheck.too_slow])
+    def test_fuzz_kernel_equals_reference(html):
+        assert _kernel_agrees(html)
 
     @given(st.binary(max_size=300))
     @settings(max_examples=200, deadline=None)

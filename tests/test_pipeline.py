@@ -211,3 +211,29 @@ def test_blocks_schema_and_order(spark, pages):
     assert w_ok.filter(
         (F.col("max_id") != F.col("n") - 1) | (F.col("d") != F.col("n"))
     ).count() == 0
+
+
+def test_analyze_job_heuristic_smoke(sf_dir, tmp_path):
+    """jobs/analyze.py end to end in its own process: the label counts it
+    prints sum to the rows of the ``blocks`` table it wrote."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    import duckdb
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = tmp_path / "an"
+    proc = subprocess.run(
+        [sys.executable, os.path.join(repo, "jobs", "analyze.py"),
+         "--sf-dir", sf_dir, "--out", str(out), "--master", "local[2]"],
+        cwd=repo, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    meta = json.loads(proc.stdout[proc.stdout.index("{"):])
+    n_rows = duckdb.sql(
+        f"SELECT count(*) FROM '{out}/blocks/*.parquet'"
+    ).fetchone()[0]
+    assert meta["strategy"] == "heuristic" and n_rows > 0
+    assert sum(meta["label_counts"].values()) == n_rows
