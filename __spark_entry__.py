@@ -25,39 +25,25 @@ def entry(spark: SparkSession) -> DataFrame:
     return extract_pages(pages, salted=True, num_partitions=8)
 
 
+def _registry():
+    """Import the six operator modules, which fill the one registry;
+    the import order is the key order of the surface."""
+    import octospark
+    import octospark.relational
+    import octospark.sketchops
+    import octospark.textops
+    import octospark.pdfops
+    import octospark.warcops
+    import octospark.webops  # noqa: F401
+
+    return octospark
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator (SURVEY.md §2.2 + extras)."""
-    import octospark.pdfops as pdfops
-    import octospark.relational as rel
-    import octospark.sketchops as sketchops
-    import octospark.textops as textops
-    import octospark.warcops as warcops
-    import octospark.webops as webops
-
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    out.update(rel.QUERIES)
-    out.update(sketchops.QUERIES)
-    out.update(textops.QUERIES)
-    out.update(pdfops.QUERIES)
-    out.update(warcops.QUERIES)
-    out.update(webops.QUERIES)
-    return out
+    return dict(_registry().QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL per query key (omitted => rows-only)."""
-    import octospark.pdfops as pdfops
-    import octospark.relational as rel
-    import octospark.sketchops as sketchops
-    import octospark.textops as textops
-    import octospark.warcops as warcops
-    import octospark.webops as webops
-
-    out: dict[str, str] = {}
-    out.update(rel.ORACLE)
-    out.update(sketchops.ORACLE)
-    out.update(textops.ORACLE)
-    out.update(pdfops.ORACLE)
-    out.update(warcops.ORACLE)
-    out.update(webops.ORACLE)
-    return out
+    return dict(_registry().ORACLE)

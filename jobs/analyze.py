@@ -9,10 +9,12 @@ two parquet tables under --out: ``blocks`` (per-block features + label)
 and ``label_stats`` (per-class counts with alias rollup, the R27 analog
 — reference class summary, /root/reference/src/octopy/train.py:99-121).
 ``--merge`` applies class-merge rules (R10 analog, chain-resolved
-driver-side — reference train.py:199-240); ``--strategy scored`` fits
-the logistic scorer on the heuristic labels first (self-training; 60
-exact distributed gradient steps, octospark/trainer.py) and classifies
-with it (R4 strategy dispatch, reference segment.py:52-57).
+driver-side — reference train.py:199-240) to the written ``blocks``
+labels, and the stats roll each alias up into its target;
+``--strategy scored`` fits the logistic scorer on the heuristic labels
+first (self-training; 60 exact distributed gradient steps,
+octospark/trainer.py) and classifies with it,
+``classify(blocks, model)`` (R4 analog, reference segment.py:52-57).
 """
 
 from __future__ import annotations
@@ -41,7 +43,7 @@ def main() -> None:
         ap.error("one of --input / --sf-dir is required")
 
     from octospark.labelmap import apply_merges, label_stats
-    from octospark.pipeline import classify, classify_with, segment
+    from octospark.pipeline import classify, segment
     from octospark.session import get_spark
     from octospark.sources import build_pages
 
@@ -59,19 +61,17 @@ def main() -> None:
     # the one Python stage: every write, the stats collect and the
     # scorer's training read these blocks, so segment each page once
     blocks = segment(pages).persist()
+    model = None
     if args.strategy == "scored":
         from octospark.scorer import fit_scorer
 
         model = fit_scorer(classify(blocks), steps=60)
-        labeled = classify_with(blocks, "scored", model)
-    else:
-        labeled = classify_with(blocks, "heuristic")
-    if merges:
-        labeled = apply_merges(labeled, merges)
-    labeled.write.mode("overwrite").parquet(
+    labeled = classify(blocks, model)
+    apply_merges(labeled, merges).write.mode("overwrite").parquet(
         os.path.join(args.out, "blocks")
     )
-    stats = label_stats(labeled)
+    # the rollup lists the source labels, so it reads them unmerged
+    stats = label_stats(labeled, merges)
     stats.write.mode("overwrite").parquet(
         os.path.join(args.out, "label_stats")
     )

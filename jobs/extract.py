@@ -5,7 +5,7 @@
         [--sf-dir /root/testdata/sf0.001]  (synthesize pages instead)
         [--warc-dir /path/to/warc_files]   (ingest .warc.gz instead)
         [--n-buckets 64] [--max-bytes N] [--run-id ID]
-        [--salted [--salt-partitions P] [--detect-skew]]
+        [--salted [--salt-partitions P]]
         [--validate-every-k-buckets K [--golden-fixtures PATH]]
         [--export-format parquet|jsonl [--export-dest PATH]]
         [--mode full|text-only|spans-only]
@@ -43,15 +43,13 @@ def main() -> None:
     ap.add_argument("--out", required=True, help="output dir (data + manifest)")
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--max-bytes", type=int, default=None)
-    ap.add_argument("--salted", action="store_true",
-                    help="salted url-hash repartition before the UDF")
-    ap.add_argument("--salt-partitions", type=int, default=None)
     ap.add_argument(
-        "--detect-skew", action="store_true",
-        help="with --salted: first-pass giant-host census, then salt "
-        "those hosts' rows row-level so one hot host/url cannot "
-        "straggle a partition",
+        "--salted", action="store_true",
+        help="first-pass giant-host census, then a url-hash repartition "
+        "before the UDF that salts those hosts' rows row-level so one "
+        "hot host/url cannot straggle a partition",
     )
+    ap.add_argument("--salt-partitions", type=int, default=None)
     ap.add_argument(
         "--mode", choices=("full", "text-only", "spans-only"),
         default="full",
@@ -77,8 +75,6 @@ def main() -> None:
     args = ap.parse_args()
     if not args.input and not args.sf_dir and not args.warc_dir:
         ap.error("one of --input / --sf-dir / --warc-dir is required")
-    if args.detect_skew and not args.salted:
-        ap.error("--detect-skew requires --salted")
 
     from octospark.lineage import (
         export_extracted, inspect, read_extracted, run_extract,
@@ -120,7 +116,6 @@ def main() -> None:
         spark, pages, args.out, n_buckets=args.n_buckets,
         run_id=args.run_id, max_bytes=args.max_bytes,
         salted=args.salted, salt_partitions=args.salt_partitions,
-        detect_skew=args.detect_skew,
         validate_every_k_buckets=args.validate_every_k_buckets,
         validate_fn=validate_fn,
     )

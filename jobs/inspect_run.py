@@ -2,7 +2,7 @@
 JSON (analog of `octopy inspect`,
 /root/reference/src/octopy/cli/inspect.py:38-69).
 
-    python jobs/inspect_run.py OUT_DIR [-a] [-s] [-m] [--lineage]
+    python jobs/inspect_run.py OUT_DIR [-a] [-s] [-m]
 
 Key-selection flags mirror the reference (cli/inspect.py:63-68): the
 default output is the summary metadata, including each committed chunk
@@ -33,8 +33,6 @@ def main() -> None:
     ap.add_argument("-m", "--metrics", dest="output_metrics",
                     action="store_true",
                     help="include the per-run commit history")
-    ap.add_argument("--lineage", action="store_true",
-                    help="alias of --spec (kept for compatibility)")
     args = ap.parse_args()
 
     from octospark.lineage import inspect, read_manifest
@@ -42,7 +40,7 @@ def main() -> None:
     meta = inspect(args.out_dir)
     if not args.output_metrics and not args.output_all:
         meta.pop("runs", None)
-    if args.output_spec or args.output_all or args.lineage:
+    if args.output_spec or args.output_all:
         meta["buckets"] = read_manifest(args.out_dir)["buckets"]
     print(json.dumps(meta, indent=1))
 

@@ -17,9 +17,39 @@ Everything here is public-knowledge Spark: DataFrame API, Arrow-batched
 pandas UDFs, window functions. No per-row Python in the hot path.
 """
 
+from __future__ import annotations
+
+from collections.abc import Callable
+
 __version__ = "0.1.0"
 
 MAX_HTML_BYTES = 20_000_000
 """Input size guard: pages whose html exceeds this are filtered out before
 the UDF stage (analog of the reference's MAX_IMAGE_PIXELS guard,
 src/octopy/__init__.py:25) but still counted in lineage."""
+
+
+QUERIES: dict = {}
+"""The operator registry: every query key's ``fn(spark, sf_dir) ->
+DataFrame``, filled by :func:`register` when an operator module is
+imported."""
+
+ORACLE: dict = {}
+"""Query key -> DuckDB-runnable ANSI SQL (a key without one is checked
+rows-only)."""
+
+
+def register(name: str, sql: str | None = None) -> Callable:
+    """Decorator: register a query callable under ``name`` and
+    (optionally) its DuckDB oracle. A name is registered once; a second
+    registration raises instead of replacing the first."""
+
+    def deco(fn: Callable) -> Callable:
+        if name in QUERIES:
+            raise ValueError(f"query key {name!r} is already registered")
+        QUERIES[name] = fn
+        if sql is not None:
+            ORACLE[name] = sql
+        return fn
+
+    return deco

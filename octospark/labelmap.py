@@ -62,15 +62,12 @@ def merge_expr(col: Column, merges: dict) -> Column:
 
 
 def apply_merges(
-    labeled: DataFrame, merges: dict, label_col: str = "label",
-    drop: bool = True,
+    labeled: DataFrame, merges: dict, drop: bool = True
 ) -> DataFrame:
-    """Apply merge rules to a labeled blocks DataFrame; optionally drop
-    rows whose label maps to None."""
-    out = labeled.withColumn(
-        label_col, merge_expr(F.col(label_col), merges)
-    )
-    return out.filter(F.col(label_col).isNotNull()) if drop else out
+    """Apply merge rules to the ``label`` column of a labeled blocks
+    DataFrame; optionally drop rows whose label maps to None."""
+    out = labeled.withColumn("label", merge_expr(F.col("label"), merges))
+    return out.filter(F.col("label").isNotNull()) if drop else out
 
 
 def label_stats(labeled: DataFrame, merges: dict | None = None) -> DataFrame:

@@ -236,7 +236,6 @@ def run_extract(
     max_bytes: int | None = None,
     salted: bool = False,
     salt_partitions: int | None = None,
-    detect_skew: bool = False,
     validate_every_k_buckets: int | None = None,
     validate_fn=None,
 ) -> dict:
@@ -248,9 +247,12 @@ def run_extract(
     input has no rows in with zero counts and checksum 0, so a finished
     run over a sparse input is complete and its rerun a no-op.
     ``fail_after_buckets`` simulates a crash after committing only k
-    buckets (for resume tests). ``detect_skew`` (a giant-host census
-    whose hosts are then salted row-level) needs ``salted``; without it
-    the call raises ``ValueError`` before anything is written.
+    buckets (for resume tests). ``salted`` first runs the giant-host
+    census (:func:`octospark.pipeline.find_skewed_hosts`, a url-only
+    column-pruned scan) and salts the rows of the hosts it names
+    row-level in the url-hash repartition before the UDF, over
+    ``salt_partitions`` partitions; placement never changes a committed
+    row.
 
     ``validate_every_k_buckets`` + ``validate_fn`` (R25 validation
     cadence, reference train.py:71-74): commits happen in chunks of k
@@ -264,13 +266,8 @@ def run_extract(
     Returns the updated manifest dict.
     """
     from octospark import MAX_HTML_BYTES
-    from octospark.pipeline import extract_pages
+    from octospark.pipeline import extract_pages, find_skewed_hosts
 
-    if detect_skew and not salted:
-        raise ValueError(
-            "detect_skew requires salted=True: the skew census only feeds "
-            "the salted repartition"
-        )
     if max_bytes is None:
         max_bytes = MAX_HTML_BYTES
     os.makedirs(out_dir, exist_ok=True)
@@ -295,12 +292,9 @@ def run_extract(
     }
 
     skewed_hosts = None
-    if detect_skew:
-        # first-pass giant-host census (url-only column-pruned scan);
+    if salted:
         # see tests/test_pipeline.py::test_skewed_host_branch_spreads_
-        # giant_host for the partition-spread guarantee it buys
-        from octospark.pipeline import find_skewed_hosts
-
+        # giant_host for the partition-spread guarantee the census buys
         skewed_hosts = find_skewed_hosts(todo) or None
     extracted = extract_pages(
         todo.drop("part_key"),

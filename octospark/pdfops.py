@@ -19,27 +19,15 @@ in octospark.pipeline when host-skewed inputs demand it.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from octospark import ORACLE, QUERIES, register
 from octospark.sources import load_table
-
-QUERIES: dict = {}
-ORACLE: dict = {}
-
-
-def register(name: str, sql: str | None = None):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 _EXTRACT_SCHEMA = T.StructType([

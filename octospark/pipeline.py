@@ -12,8 +12,9 @@ byte-identical per url between them and to the pure-Python oracle):
 2. **Staged declarative path** :func:`segment` -> :func:`classify` ->
    :func:`merge` — stage 1 is the only Python stage (DOM walk must be);
    stage 2 classification is PURE Spark column expressions + window
-   lag/lead (JVM, whole-stage codegen), stage 3 merge is
-   window/array_sort/aggregate built-ins. Used for analysis queries
+   lag/lead (JVM, whole-stage codegen): the rule cascade, or the
+   learned scorer when a fitted model is given; stage 3 merge is
+   window/array_sort/array_join built-ins. Used for analysis queries
    (label stats, span tables) and to keep the classifier declarative.
 
 Scale notes (SURVEY.md §4):
@@ -35,6 +36,7 @@ from pyspark.sql import types as T
 
 from octospark import MAX_HTML_BYTES
 from octospark.extractor import (
+    CONTENT_LABELS,
     _ANCESTOR_LABELS,
     _HEADING_TAGS,
     _LINK_DENSITY_MAX,
@@ -178,16 +180,16 @@ def _segment_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(cols)
 
 
-def segment(pages: DataFrame, max_bytes: int = MAX_HTML_BYTES) -> DataFrame:
+def segment(pages: DataFrame) -> DataFrame:
     """Stage 1: pages -> blocks (DOM order = block_id order per url).
 
     The size guard (reference analog: MAX_IMAGE_PIXELS, reference
     src/octopy/__init__.py:25) filters null and
     oversized html BEFORE the UDF, so it never ships to Python; such a
-    page has no blocks, and :func:`merge` with ``pages`` still keeps it
+    page has no blocks, and :func:`merge` still keeps it
     as an empty-text row (never-drop law, FIXTURES.md §D)."""
     ok = pages.filter(
-        F.col("html").isNotNull() & (F.length("html") <= F.lit(max_bytes))
+        F.col("html").isNotNull() & (F.length("html") <= MAX_HTML_BYTES)
     )
     return ok.select("url", "html").mapInPandas(_segment_batches, BLOCKS_SCHEMA)
 
@@ -214,29 +216,6 @@ def _ancestor_label(path_arr: Column) -> Column:
     )
 
 
-def _structural_label() -> Column:
-    """The labels a block's tag path forces before any word-count rule
-    (steps 1-2 of :func:`octospark.extractor.classify_block`): nearest
-    forced ancestor, heading, caption, then table with the layout-table
-    carve-out (long low-link prose in a table falls through); null when
-    none applies. Shared by every classify strategy."""
-    path_arr = F.split(F.col("tag_path"), "/")
-    last = F.element_at(path_arr, -1)
-    return F.coalesce(
-        _ancestor_label(path_arr),
-        F.when(last.isin(*sorted(_HEADING_TAGS)), F.lit("heading")),
-        F.when(last == "figcaption", F.lit("caption")),
-        F.when(
-            F.exists(path_arr, lambda t: t.isin(*sorted(_TABLE_TAGS)))
-            & ~(
-                (F.col("n_words") > 16)
-                & (F.col("link_density") <= F.lit(_LINK_DENSITY_MAX))
-            ),
-            F.lit("table"),
-        ),
-    )
-
-
 CONTEXT_COLS = ("prev_words", "next_words", "prev_link_density")
 
 
@@ -257,89 +236,87 @@ def with_context(blocks: DataFrame) -> DataFrame:
     })
 
 
-def classify(blocks: DataFrame) -> Column | DataFrame:
+def classify(blocks: DataFrame, model: dict | None = None) -> DataFrame:
     """Stage 2: blocks -> blocks + ``label``, entirely JVM-side.
 
-    The rule cascade is the expression translation of
-    :func:`octospark.extractor.classify_block`; neighbor features come
-    from :func:`with_context`."""
-    prev_words = F.col("prev_words")
-    prev_ld = F.col("prev_link_density")
-    next_words = F.col("next_words")
-
-    numwords_label = F.when(
-        F.col("link_density") > F.lit(_LINK_DENSITY_MAX),
-        F.lit("boilerplate-nav"),
-    ).otherwise(
-        F.when(
-            prev_ld > F.lit(_PREV_LINK_DENSITY_HIGH),
-            F.when(
-                (F.col("n_words") > 40) | (next_words > 17), F.lit("content")
-            ).otherwise(F.lit("noise")),
+    The labels a block's tag path forces come first (steps 1-2 of
+    :func:`octospark.extractor.classify_block`): nearest forced
+    ancestor, heading, caption, then table with the layout-table
+    carve-out (long low-link prose in a table falls through). A block
+    none of them applies to is labeled by the word-count rule cascade
+    (the expression translation of ``classify_block``, neighbor
+    features from :func:`with_context`) when ``model`` is None, and
+    otherwise by the fitted scorer ``model`` — the dict
+    :func:`octospark.scorer.fit_scorer` returns or
+    :func:`octospark.scorer.load_model` reads back — as ``content`` or
+    ``noise`` (:func:`octospark.scorer.score_blocks`). Structural labels
+    are therefore the same with or without a model. This is the
+    plugin-choice analog (reference src/octopy/segment.py:52-57), chosen
+    by whether a fitted model exists."""
+    if model is None:
+        framed = with_context(blocks)
+        n_words, next_words = F.col("n_words"), F.col("next_words")
+        rest = F.when(
+            F.col("link_density") > F.lit(_LINK_DENSITY_MAX),
+            F.lit("boilerplate-nav"),
         ).otherwise(
             F.when(
-                (F.col("n_words") > 16)
-                | (next_words > 15)
-                | (prev_words > 4),
-                F.lit("content"),
-            ).otherwise(F.lit("noise"))
+                F.col("prev_link_density") > F.lit(_PREV_LINK_DENSITY_HIGH),
+                F.when(
+                    (n_words > 40) | (next_words > 17), F.lit("content")
+                ).otherwise(F.lit("noise")),
+            ).otherwise(
+                F.when(
+                    (n_words > 16)
+                    | (next_words > 15)
+                    | (F.col("prev_words") > 4),
+                    F.lit("content"),
+                ).otherwise(F.lit("noise"))
+            )
         )
-    )
+        added = CONTEXT_COLS
+    else:
+        from octospark.scorer import score_blocks
 
-    label = F.coalesce(_structural_label(), numwords_label)
-    # never-drop fallback: any null that slips through becomes 'unknown'
-    return with_context(blocks).withColumn(
-        "label", F.coalesce(label, F.lit("unknown"))
-    ).drop(*CONTEXT_COLS)
+        framed = score_blocks(blocks, model)
+        rest = F.col("scored_label")
+        added = ("score", "scored_label")
 
-
-def classify_with(
-    blocks: DataFrame, strategy: str = "heuristic", model: dict | None = None
-) -> DataFrame:
-    """Strategy dispatch for stage 2 — the plugin-override analog
-    (reference src/octopy/segment.py:52-57 registers a polygonizer by
-    name and monkeypatches it in; here it is plain function dispatch
-    chosen by config, no monkeypatch).
-
-    - ``'heuristic'``: the rule cascade (:func:`classify`), pure JVM.
-    - ``'scored'``: the learned logistic scorer — ``model`` is the dict
-      :func:`octospark.scorer.fit_scorer` returns (or
-      :func:`octospark.scorer.load_model` reads back), scored by
-      :func:`octospark.scorer.score_blocks`, also pure JVM at
-      inference; forced ancestor/tag labels still win (the scorer only
-      arbitrates content-vs-noise), so structural labels stay stable
-      across strategies.
-    """
-    if strategy == "heuristic":
-        return classify(blocks)
-    if strategy != "scored":
-        raise ValueError(f"unknown classify strategy: {strategy!r}")
-    if model is None:
-        raise ValueError("strategy 'scored' requires a fitted model dict")
-    from octospark.scorer import score_blocks
-
-    scored = score_blocks(blocks, model)
-    return scored.withColumn(
-        "label",
-        F.coalesce(
-            _structural_label(), F.col("scored_label"), F.lit("unknown")
+    path_arr = F.split(F.col("tag_path"), "/")
+    last = F.element_at(path_arr, -1)
+    label = F.coalesce(
+        _ancestor_label(path_arr),
+        F.when(last.isin(*sorted(_HEADING_TAGS)), F.lit("heading")),
+        F.when(last == "figcaption", F.lit("caption")),
+        F.when(
+            F.exists(path_arr, lambda t: t.isin(*sorted(_TABLE_TAGS)))
+            & ~(
+                (F.col("n_words") > 16)
+                & (F.col("link_density") <= F.lit(_LINK_DENSITY_MAX))
+            ),
+            F.lit("table"),
         ),
-    ).drop("score", "scored_label")
+        rest,
+        # never-drop fallback: any null that slips through
+        F.lit("unknown"),
+    )
+    return framed.withColumn("label", label).drop(*added)
 
 
 # --------------------------------------------------------------------------
 # staged path — merge: spans + text via built-ins only
 # --------------------------------------------------------------------------
 
-def merge(labeled_blocks: DataFrame, pages: DataFrame | None = None) -> DataFrame:
-    """Stage 3: labeled blocks -> extracted(url, text, spans).
+def merge(labeled_blocks: DataFrame, pages: DataFrame) -> DataFrame:
+    """Stage 3: labeled blocks + pages -> extracted(url, warc_ts, text,
+    spans, lang), one row per page.
 
     Offsets computed with a running-sum window (ROWS UNBOUNDED PRECEDING),
-    assembly with array_sort + aggregate — no Python, one shuffle on url.
-    If ``pages`` is given, urls with zero content blocks are preserved
-    with empty text (never-drop law)."""
+    assembly with array_sort + array_join — no Python, one shuffle on
+    url. A page with zero content blocks keeps its row with empty text
+    and no spans (never-drop law)."""
     content = labeled_blocks.filter(
-        F.col("label").isin("content", "heading")
+        F.col("label").isin(*sorted(CONTENT_LABELS))
     ).select("url", "block_id", "text", "label", F.length("text").alias("len"))
 
     w = (
@@ -362,14 +339,10 @@ def merge(labeled_blocks: DataFrame, pages: DataFrame | None = None) -> DataFram
         )
         .select(
             "url",
-            F.aggregate(
-                "ordered",
-                F.lit(""),
-                lambda acc, x: F.concat(
-                    acc,
-                    F.when(F.length(acc) > 0, F.lit("\n")).otherwise(F.lit("")),
-                    x["text"],
-                ),
+            # block texts are never empty, so joining with "\n" is the
+            # extractor's separator rule
+            F.array_join(
+                F.transform("ordered", lambda x: x["text"]), "\n"
             ).alias("text"),
             F.transform(
                 "ordered",
@@ -382,21 +355,17 @@ def merge(labeled_blocks: DataFrame, pages: DataFrame | None = None) -> DataFram
             ).alias("spans"),
         )
     )
-    if pages is not None:
-        base = pages.select("url", "warc_ts", "lang")
-        merged = (
-            base.join(merged, "url", "left")
-            .select(
-                "url",
-                "warc_ts",
-                F.coalesce("text", F.lit("")).alias("text"),
-                F.coalesce(
-                    "spans", F.array().cast(T.ArrayType(SPAN_TYPE))
-                ).alias("spans"),
-                "lang",
-            )
-        )
-    return merged
+    return pages.select("url", "warc_ts", "lang").join(
+        merged, "url", "left"
+    ).select(
+        "url",
+        "warc_ts",
+        F.coalesce("text", F.lit("")).alias("text"),
+        F.coalesce(
+            "spans", F.array().cast(T.ArrayType(SPAN_TYPE))
+        ).alias("spans"),
+        "lang",
+    )
 
 
 # --------------------------------------------------------------------------

@@ -21,27 +21,12 @@ pipeline and the reference behavior it re-expresses (SURVEY.md §2.1).
 
 from __future__ import annotations
 
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from octospark import ORACLE, QUERIES, register
 from octospark.sources import load_table
-
-QUERIES: dict = {}
-ORACLE: dict = {}
-
-
-def register(name: str, sql: str | None = None):
-    """Register a query callable and (optionally) its DuckDB oracle."""
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 def _dec_sum(col, prec="decimal(28,6)", alias=None):

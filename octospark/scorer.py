@@ -32,6 +32,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from octospark.extractor import CONTENT_LABELS
 from octospark.pipeline import CONTEXT_COLS, with_context
 from octospark.trainer import fit_logistic_exact, score_expr_exact
 
@@ -81,7 +82,7 @@ def fit_scorer(
     bucket = F.pmod(F.xxhash64("url", "block_id"), F.lit(1000))
     frame = _with_features(labeled_blocks, QUANTIZE_UNIT).select(
         *_INT_FEATURES,
-        F.col("label").isin("content", "heading").cast("int").alias("y"),
+        F.col("label").isin(*sorted(CONTENT_LABELS)).cast("int").alias("y"),
         (bucket < F.lit(int(round(PARTITION * 1000)))).alias("is_train"),
     )
     model = fit_logistic_exact(
@@ -112,10 +113,8 @@ def load_model(path: str) -> dict:
 def score_blocks(blocks: DataFrame, model: dict) -> DataFrame:
     """blocks -> blocks + score + scored_label ('content'/'noise').
 
-    The scored path is the `--strategy scored` alternative to the
-    heuristic cascade (plugin-dispatch analog, reference
-    src/octopy/segment.py:52-57 — strategy chosen by config, plain
-    function dispatch instead of a monkeypatch)."""
+    :func:`octospark.pipeline.classify` labels with it, in place of the
+    rule cascade, when it is given a fitted model."""
     if "quantize_unit" not in model:
         raise ValueError(
             "model has no quantize_unit: raw-feature models (the removed "

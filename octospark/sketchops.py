@@ -26,25 +26,10 @@ is the bottleneck; cross-snapshot overlap for incremental crawls.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from octospark import ORACLE, QUERIES, register
 from octospark.sources import load_table
-
-QUERIES: dict = {}
-ORACLE: dict = {}
-
-
-def register(name: str, sql: str | None = None):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 @register(

@@ -29,7 +29,6 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from octospark import MAX_HTML_BYTES
 from octospark.lineage import (
     _lineage_stats,
     _read_chunks,
@@ -56,19 +55,15 @@ def read_pages_stream(
     )
 
 
-def extract_stream(
-    pages: DataFrame,
-    watermark: str = "10 minutes",
-    dedup_urls: bool = True,
-    max_bytes: int = MAX_HTML_BYTES,
-) -> DataFrame:
+def extract_stream(pages: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """Streaming extraction: watermark late crawls, drop duplicate urls
     within the watermark (latest-crawl-wins happens downstream in batch
-    compaction), then the batch path's fused extraction plan."""
-    src = pages.withWatermark("warc_ts", watermark)
-    if dedup_urls:
-        src = src.dropDuplicatesWithinWatermark(["url"])
-    return extract_pages(src, max_bytes=max_bytes)
+    compaction), then the batch path's fused extraction plan with its
+    default size guard."""
+    return extract_pages(
+        pages.withWatermark("warc_ts", watermark)
+        .dropDuplicatesWithinWatermark(["url"])
+    )
 
 
 def throughput_metrics(

@@ -19,10 +19,7 @@ from collections.abc import Callable
 
 
 def golden_drift(
-    cases: list,
-    golden: dict,
-    fields: tuple = ("text", "spans", "n_blocks"),
-    known_loss: frozenset = frozenset(),
+    cases: list, golden: dict, known_loss: frozenset = frozenset()
 ) -> list:
     """Diff live extractions of ``cases`` [(name, html_bytes), ...]
     against the frozen ``golden`` mapping name -> {text, spans,
@@ -43,7 +40,7 @@ def golden_drift(
             drift.append(f"{name}: no frozen expectation")
             continue
         live = extract(html)
-        for f in fields:
+        for f in ("text", "spans", "n_blocks"):
             want, got = golden[name].get(f), live.get(f)
             # spans round-trip through JSON as lists; normalize
             if json.loads(json.dumps(got)) != want:
@@ -59,15 +56,13 @@ def golden_drift(
     return drift
 
 
-def make_golden_validator(
-    cases: list, golden_path: str, known_loss: frozenset = frozenset()
-) -> Callable[[], list]:
+def make_golden_validator(cases: list, golden_path: str) -> Callable[[], list]:
     """Bind (cases, frozen-expectation file) into a zero-arg
     ``validate_fn`` for :func:`octospark.lineage.run_extract`."""
     with open(golden_path) as f:
         golden = json.load(f)
 
     def validate() -> list:
-        return golden_drift(cases, golden, known_loss=known_loss)
+        return golden_drift(cases, golden)
 
     return validate

@@ -30,28 +30,16 @@ import glob
 import os
 import shutil
 import zlib
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from octospark import ORACLE, QUERIES, register
 from octospark.sources import load_table
 from octospark.warcgen import build_warc_file
-
-QUERIES: dict = {}
-ORACLE: dict = {}
-
-
-def register(name: str, sql: str | None = None):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 # --------------------------------------------------------------------------

@@ -16,30 +16,17 @@ these keys are the corpus-side tables that prior is computed from.
 
 from __future__ import annotations
 
-from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from octospark import ORACLE, QUERIES, register
 from octospark.sources import build_pages, load_table
 from octospark.textops import (
     _WORD_FREQ_CTES_SQL,
     _words,
     word_frequency_scored,
 )
-
-QUERIES: dict = {}
-ORACLE: dict = {}
-
-
-def register(name: str, sql: str | None = None):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
 
 
 # --------------------------------------------------------------------------
@@ -603,8 +590,7 @@ def corpus_quality_tiers(spark, sf):
     )
 
 
-QUERIES["corpus_quality_tiers"] = corpus_quality_tiers
-ORACLE["corpus_quality_tiers"] = _tiers_oracle()
+register("corpus_quality_tiers", _tiers_oracle())(corpus_quality_tiers)
 
 
 # --------------------------------------------------------------------------
@@ -857,9 +843,7 @@ def _bloom_bit_sqls(fp_expr: str) -> list:
 
 
 def _bloom_sql() -> str:
-    from octospark.textops import ORACLE as _TEXT_ORACLE
-
-    fp_sql = _TEXT_ORACLE["text_fingerprint"]
+    fp_sql = ORACLE["text_fingerprint"]
     bits = _bloom_bit_sqls("fp")
     abits = "\n      UNION\n      ".join(
         f"SELECT DISTINCT {b} AS bit FROM a" for b in bits

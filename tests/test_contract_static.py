@@ -74,3 +74,16 @@ def test_readme_key_count_matches_registry():
     assert int(m.group(1)) == len(e.oracle_sql())
     m2 = re.search(r"(\d+) with\nthe six documented rows-only", readme)
     assert m2 and int(m2.group(1)) == len(e.queries())
+
+
+def test_register_rejects_a_key_registered_twice():
+    """One key, one query: registering a taken key raises and keeps the
+    first registration — a silent replace would hide a clash between
+    two operator modules behind a wrong oracle."""
+    from octospark.relational import ORACLE, QUERIES, register
+
+    first, sql = QUERIES["filter_predicate"], ORACLE["filter_predicate"]
+    with pytest.raises(ValueError, match="already registered"):
+        register("filter_predicate", "SELECT 1")(lambda spark, sf: None)
+    assert QUERIES["filter_predicate"] is first
+    assert ORACLE["filter_predicate"] == sql

@@ -171,27 +171,39 @@ def test_run_extract_salted_and_max_bytes(spark, pages, out_dir):
     assert g2.filter("text != ''").count() == 0
 
 
-def test_detect_skew_without_salted_is_rejected(spark, pages, out_dir,
-                                                monkeypatch):
-    """The skew census only feeds the salted repartition: asking for it
-    unsalted is an error raised before the output directory or an
-    attempt exists, not a run that silently skips the census; the job
-    rejects the flag combination at argument parsing."""
-    from jobs.extract import main
+def test_salted_run_takes_the_skew_census(spark, pages, out_dir,
+                                          monkeypatch):
+    """``salted`` runs the giant-host census and salts the hosts it
+    names; the committed buckets are byte-identical to an unsalted
+    run's (placement never changes a row)."""
+    import octospark.pipeline as pipeline
 
-    with pytest.raises(ValueError, match="detect_skew requires salted"):
-        run_extract(spark, pages, out_dir, n_buckets=N_BUCKETS,
-                    detect_skew=True)
-    assert not os.path.exists(os.path.join(out_dir, "_manifest.json"))
-    assert not os.path.exists(out_dir)
-    monkeypatch.setattr("sys.argv", [
-        "extract.py", "--sf-dir", "unused", "--out", out_dir,
-        "--detect-skew",
-    ])
-    with pytest.raises(SystemExit) as exc:
-        main()
-    assert exc.value.code == 2
-    assert not os.path.exists(out_dir)
+    census, named = pipeline.find_skewed_hosts, []
+
+    def recording_census(df):
+        # lowered thresholds, so the sf0.001 hosts count as giants
+        named.append(census(df, threshold_fraction=0.04, min_pages=10))
+        return named[-1]
+
+    monkeypatch.setattr(pipeline, "find_skewed_hosts", recording_census)
+    plain = out_dir + "_plain"
+    run_extract(spark, pages, plain, n_buckets=N_BUCKETS, run_id="p")
+    assert named == []
+    run_extract(spark, pages, out_dir, n_buckets=N_BUCKETS, run_id="p",
+                salted=True, salt_partitions=8)
+    assert len(named) == 1 and named[0]
+
+    def committed(d):
+        buckets = read_manifest(d)["buckets"]
+        rows = sorted(
+            read_extracted(spark, d).drop("run_id").collect(),
+            key=lambda r: (r["url"], r["warc_ts"]),
+        )
+        return {k: {s: v[s] for s in ("input_count", "output_count",
+                                      "error_count", "checksum")}
+                for k, v in buckets.items()}, rows
+
+    assert committed(out_dir) == committed(plain)
 
 
 def test_validation_cadence_kill_on_drift(spark, pages, out_dir):

@@ -215,7 +215,9 @@ def test_blocks_schema_and_order(spark, pages):
 
 def test_analyze_job_heuristic_smoke(sf_dir, tmp_path):
     """jobs/analyze.py end to end in its own process: the label counts it
-    prints sum to the rows of the ``blocks`` table it wrote."""
+    prints sum to the rows of the ``blocks`` table it wrote; with
+    ``--merge`` the table carries the merged label and the stats row of
+    the target still lists the alias it absorbed."""
     import json
     import os
     import subprocess
@@ -227,7 +229,8 @@ def test_analyze_job_heuristic_smoke(sf_dir, tmp_path):
     out = tmp_path / "an"
     proc = subprocess.run(
         [sys.executable, os.path.join(repo, "jobs", "analyze.py"),
-         "--sf-dir", sf_dir, "--out", str(out), "--master", "local[2]"],
+         "--sf-dir", sf_dir, "--out", str(out), "--master", "local[2]",
+         "--merge", "boilerplate-header=boilerplate-nav"],
         cwd=repo, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
@@ -237,3 +240,12 @@ def test_analyze_job_heuristic_smoke(sf_dir, tmp_path):
     ).fetchone()[0]
     assert meta["strategy"] == "heuristic" and n_rows > 0
     assert sum(meta["label_counts"].values()) == n_rows
+    assert duckdb.sql(
+        f"SELECT count(*) FROM '{out}/blocks/*.parquet' "
+        "WHERE label = 'boilerplate-header'"
+    ).fetchone()[0] == 0
+    [sources] = duckdb.sql(
+        f"SELECT source_labels FROM '{out}/label_stats/*.parquet' "
+        "WHERE canonical = 'boilerplate-nav'"
+    ).fetchone()
+    assert "boilerplate-header" in sources

@@ -283,7 +283,24 @@ def test_format_source_staging_is_idempotent(spark):
         read_csv_table(spark, SF, "nation", "no_such_col long")
 
 
-def test_every_query_plan_is_free_of_antipatterns(spark):
+@pytest.fixture(scope="module")
+def surface_plans(spark):
+    """{key: its executed-plan string, or the exception building it
+    raised} over the whole queries() surface. Building a plan runs the
+    key's eager actions (iterative keys checkpoint as they go), so the
+    full-surface checks below share one build."""
+    import __spark_entry__ as entrymod
+
+    plans = {}
+    for name, fn in entrymod.queries().items():
+        try:
+            plans[name] = plan_of(fn(spark, SF))
+        except Exception as exc:  # raised again by every reader
+            plans[name] = exc
+    return plans
+
+
+def test_every_query_plan_is_free_of_antipatterns(surface_plans):
     """Sweep the ENTIRE queries() surface and reject scale anti-patterns
     in each physical plan:
     - row-at-a-time Python (BatchEvalPython) anywhere;
@@ -295,8 +312,6 @@ def test_every_query_plan_is_free_of_antipatterns(spark):
       assignment);
     - CartesianProduct outside explicitly-bounded broadcast cross joins.
     """
-    import __spark_entry__ as entrymod
-
     ALLOW_PYTHON = {
         "udf_map_in_pandas", "udf_pandas_scalar", "udf_grouped_apply",
         "multimodal_meta", "multimodal_decode", "multimodal_resize",
@@ -386,8 +401,9 @@ def test_every_query_plan_is_free_of_antipatterns(spark):
     }
     ALLOW_CARTESIAN = set()
     failures = []
-    for name, fn in entrymod.queries().items():
-        plan = plan_of(fn(spark, SF))
+    for name, plan in surface_plans.items():
+        if isinstance(plan, Exception):
+            raise plan
         if "BatchEvalPython" in plan:
             failures.append(f"{name}: row-at-a-time Python UDF")
         if "MapInPandas" in plan and name not in ALLOW_PYTHON:
@@ -650,7 +666,7 @@ def test_new_key_plan_shapes_round4(spark):
     assert "hashpartitioning(source" in plan
 
 
-def test_plan_fingerprints_unchanged(spark):
+def test_plan_fingerprints_unchanged(surface_plans):
     """Plan REGRESSION gate: every key's physical-plan node-count
     fingerprint (exchanges, scans, python stages, windows, join
     strategies) must match the committed PLAN_FINGERPRINTS.json — a new
@@ -661,8 +677,6 @@ def test_plan_fingerprints_unchanged(spark):
     import importlib.util
     import json
     import os
-
-    import __spark_entry__ as entrymod
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location(
@@ -676,10 +690,10 @@ def test_plan_fingerprints_unchanged(spark):
         committed = json.load(f)["keys"]
 
     diffs = []
-    for name, fn in entrymod.queries().items():
-        got = pf.fingerprint_of(
-            fn(spark, pf.SF)._jdf.queryExecution().executedPlan().toString()
-        )
+    for name, plan in surface_plans.items():
+        if isinstance(plan, Exception):
+            raise plan
+        got = pf.fingerprint_of(plan)
         want = committed.get(name)
         if want is None:
             diffs.append(f"{name}: NEW key with no committed fingerprint")
@@ -690,7 +704,7 @@ def test_plan_fingerprints_unchanged(spark):
                 if got[k] != want.get(k)
             }
             diffs.append(f"{name}: {delta} (committed, current)")
-    stale = set(committed) - set(entrymod.queries())
+    stale = set(committed) - set(surface_plans)
     if stale:
         diffs.append(f"stale fingerprints for removed keys: {sorted(stale)}")
     assert not diffs, (

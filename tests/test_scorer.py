@@ -55,33 +55,30 @@ def test_inference_is_jvm_only(spark, labeled, model):
 
 
 def test_classify_with_dispatch(spark, labeled, model):
-    """R4 strategy dispatch: heuristic == classify(); scored keeps
-    structural labels and emits content/noise from the model."""
-    from octospark.pipeline import classify_with
+    """R4 stage-2 choice: classify(blocks, model) keeps the structural
+    labels of classify(blocks) and emits content/noise from the
+    model."""
+    from octospark.pipeline import classify
 
     blocks = labeled.drop("label")
-    heur = classify_with(blocks, "heuristic")
-    sc = classify_with(blocks, "scored", model)
+    heur = classify(blocks)
+    sc = classify(blocks, model)
     assert set(sc.columns) == set(heur.columns)
     labels = {r.label for r in sc.select("label").distinct().collect()}
     assert labels <= {"content", "noise", "heading", "caption", "table",
                       "boilerplate-nav", "boilerplate-header",
                       "boilerplate-footer", "advert", "unknown"}
-    # structural labels identical across strategies
+    # structural labels identical with and without a model
     j = (heur.selectExpr("url", "block_id", "label AS lh")
          .join(sc.selectExpr("url", "block_id", "label AS ls"),
                ["url", "block_id"]))
-    # boilerplate-nav excluded: the heuristic also assigns it from
-    # link density, which the scored strategy intentionally arbitrates
+    # boilerplate-nav excluded: the rule cascade also assigns it from
+    # link density, which the model intentionally arbitrates
     structural = ("heading", "caption", "table",
                   "boilerplate-header", "boilerplate-footer", "advert")
     assert j.filter(
         (F.col("lh").isin(*structural)) & (F.col("lh") != F.col("ls"))
     ).count() == 0
-    with pytest.raises(ValueError):
-        classify_with(blocks, "bogus")
-    with pytest.raises(ValueError):
-        classify_with(blocks, "scored")
 
 
 def test_fit_empty_training_frame_clear_error(spark, labeled):
