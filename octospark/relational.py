@@ -21,7 +21,6 @@ pipeline and the reference behavior it re-expresses (SURVEY.md §2.1).
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 

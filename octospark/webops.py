@@ -16,7 +16,6 @@ these keys are the corpus-side tables that prior is computed from.
 
 from __future__ import annotations
 
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
