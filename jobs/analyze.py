@@ -5,8 +5,10 @@
         [--input pages_parquet]
 
 Runs the staged pipeline (segment -> classify -> label stats) and writes
-two parquet tables under --out: ``blocks`` (per-block features + label)
-and ``label_stats`` (per-class counts with alias rollup, the R27 analog
+two parquet tables under --out: ``blocks`` (one row per block of each
+``(url, warc_ts)`` page: ``block_id``, the stage-1 ``structural`` label
+or null, ``depth``, the text features, ``char_hist`` and the final
+``label``) and ``label_stats`` (per-class counts with alias rollup, the R27 analog
 — reference class summary, /root/reference/src/octopy/train.py:99-121).
 ``--merge`` applies class-merge rules (R10 analog, chain-resolved
 driver-side — reference train.py:199-240) to the written ``blocks``

@@ -104,15 +104,14 @@ _BRACKET = frozenset("()[]{}<>")
 
 
 # --- block walk state -------------------------------------------------------
-# An open tag is an immutable linked node (tag, parent, forced, in_table):
-# ``forced`` is the nearest forced-ancestor label on the path from the
-# root to this tag (the tag itself included), ``in_table`` whether any tag
-# on that path is a table tag. A push is O(1), and a block keeps the node
-# that was current at its first data, so a block costs O(1) at any nesting
-# depth and the rule cascade reads the three facts it needs in O(1).
-# ``tag_path`` and ``depth`` are read off the node only when
-# :func:`segment_blocks` builds a :class:`Block`.
-_ROOT = ("", None, None, False)
+# An open tag is an immutable linked node (tag, parent, forced, in_table,
+# depth): ``forced`` is the nearest forced-ancestor label on the path from
+# the root to this tag (the tag itself included), ``in_table`` whether any
+# tag on that path is a table tag, ``depth`` the path's length. A push is
+# O(1), and a block keeps the node that was current at its first data, so
+# a block costs O(1) at any nesting depth and :func:`_structural` reads
+# the facts it needs in O(1).
+_ROOT = ("", None, None, False, 0)
 
 
 @dataclass
@@ -121,7 +120,6 @@ class Block:
     reference src/octopy/segment.py:104-114)."""
 
     block_id: int
-    tag_path: str
     depth: int
     text: str          # whitespace-normalized visible text
     n_chars: int
@@ -240,7 +238,7 @@ class _BlockParser(HTMLParser):
         if tag not in ("br", "hr"):  # void elements don't nest
             node = self.node
             self.node = (tag, node, _ANCESTOR_LABELS.get(tag) or node[2],
-                         node[3] or tag in _TABLE_TAGS)
+                         node[3] or tag in _TABLE_TAGS, node[4] + 1)
             oc = self.open_counts
             oc[tag] = oc.get(tag, 0) + 1
 
@@ -280,17 +278,21 @@ class _BlockParser(HTMLParser):
             self.links.append(data)
 
 
-def _stdlib_walk(text: str) -> list:
-    """Block records of ``text`` through html.parser.HTMLParser."""
+def _stdlib_walk(text: str) -> tuple:
+    """``(records, salvage)``: the block records of ``text`` through
+    html.parser.HTMLParser. A parser exception keeps the blocks produced
+    so far and sets ``salvage`` to ``'salvaged:<exception type>'``;
+    otherwise it is None."""
     p = _BlockParser()
+    salvage = None
     try:
         p.feed(text)
         p.close()
-    except Exception:
-        pass  # parser blow-up: keep the blocks produced so far
+    except Exception as exc:
+        salvage = f"salvaged:{type(exc).__name__}"
     if p.pieces:
         _flush(p.pieces, p.links, p.block_node, p.records)
-    return p.records
+    return p.records, salvage
 
 
 # --- fast tokenizer --------------------------------------------------------
@@ -341,7 +343,7 @@ _CDATA_STRICT = {
     "script": re.compile(r"</\s*script\s*>", re.IGNORECASE),
     "style": re.compile(r"</\s*style\s*>", re.IGNORECASE),
 }
-_DECLNAME = re.compile(r"[a-zA-Z][-_.a-zA-Z0-9]*")  # stdlib _scan_name
+_DECLNAME = re.compile(r"[a-zA-Z][-_.a-zA-Z0-9]*\s*")  # stdlib _scan_name
 _MARKED_CLOSE = re.compile(r"]\s*]\s*>")   # standard  ]]>
 _MS_MARKED_CLOSE = re.compile(r"]\s*>")    # MS Office ]>  (if/else/endif)
 _MARKED_STD = frozenset({"temp", "cdata", "ignore", "include", "rcdata"})
@@ -381,7 +383,7 @@ def _tolerant_token(text: str, lt: int) -> tuple:
     end tags, marked sections and processing instructions are consumed
     silently; incomplete constructs (an unclosed comment among them)
     recover via :func:`_recover`; a stray '<' is data. An unknown marked
-    section raises, as stdlib does."""
+    section raises AssertionError, as stdlib does."""
     nxt = text[lt + 1 : lt + 2]
     if nxt == "/":
         gt = text.find(">", lt + 1)
@@ -422,14 +424,16 @@ def _tolerant_token(text: str, lt: int) -> tuple:
         return text[lt:endpos], None, None, False, endpos
     if nxt == "!":
         if text.startswith("<![", lt):
-            sect = _DECLNAME.match(text[lt + 3 : lt + 20])
-            name = sect.group(0).lower() if sect else ""
+            sect = _DECLNAME.match(text, lt + 3)
+            if (sect.end() if sect else lt + 3) == len(text):
+                return _recover(text, lt)  # name runs to the end: incomplete
+            name = sect.group(0).strip().lower() if sect else ""
             if name in _MARKED_STD:
                 mc = _MARKED_CLOSE.search(text, lt + 3)
             elif name in _MARKED_MS:
                 mc = _MS_MARKED_CLOSE.search(text, lt + 3)
-            else:
-                raise ValueError("unknown marked section")  # = stdlib
+            else:  # stdlib's exception type, so a salvage reads the same
+                raise AssertionError("unknown marked section")
             if mc is None:
                 return _recover(text, lt)
             return "", None, None, False, mc.end()
@@ -442,14 +446,17 @@ def _tolerant_token(text: str, lt: int) -> tuple:
     return "<", None, None, False, lt + 1  # lone/stray '<': data
 
 
-def _fast_walk(text: str) -> list:
-    """Block records of ``text``, mirroring stdlib
+def _fast_walk(text: str) -> tuple:
+    """``(records, salvage)`` as :func:`_stdlib_walk`: the block records
+    of ``text``, mirroring stdlib
     HTMLParser(convert_charrefs=True) semantics for everything the block
     state observes: charrefs decoded in data; CDATA content mode for
     script/style (tags inside are NOT parsed, and only a strict
     ``</script>`` leaves the mode); '/>'-suffixed tags are start-end
     tags; the rest as :func:`_tolerant_token`. A tokenizer exception
-    keeps the blocks produced so far, as the stdlib walk does."""
+    (the stdlib's own, e.g. on an unknown marked section) keeps the
+    blocks produced so far and is reported in ``salvage``, as the stdlib
+    walk does."""
     records: list = []
     pieces: list = []
     links: list = []
@@ -460,6 +467,7 @@ def _fast_walk(text: str) -> list:
     scan = scanner(text).match  # each match starts where the last ended
     last = None  # the current scanner's last match
     i, n = 0, len(text)  # where the current scanner started
+    salvage = None
     try:
         while True:
             m = scan()
@@ -530,7 +538,7 @@ def _fast_walk(text: str) -> list:
                     link_depth += 1
                 if tag != "br" and tag != "hr":  # void elements don't nest
                     node = (tag, node, _ANCESTOR_LABELS.get(tag) or node[2],
-                            node[3] or tag in _TABLE_TAGS)
+                            node[3] or tag in _TABLE_TAGS, node[4] + 1)
                     open_counts[tag] = open_counts.get(tag, 0) + 1
             else:
                 continue
@@ -538,11 +546,11 @@ def _fast_walk(text: str) -> list:
             # not touch what the flush reads
             if pieces and tag in _BLOCK_TAGS:
                 _flush(pieces, links, block_node, records)
-    except Exception:
-        pass  # tokenizer blow-up (= stdlib's): keep the blocks so far
+    except Exception as exc:
+        salvage = f"salvaged:{type(exc).__name__}"
     if pieces:
         _flush(pieces, links, block_node, records)
-    return records
+    return records, salvage
 
 
 _WALKS = {"fast": _fast_walk, "stdlib": _stdlib_walk}
@@ -552,19 +560,12 @@ _DEFAULT_WALK = _fast_walk if _HAVE_TOLERANT else _stdlib_walk
 def _block(block_id: int, record: tuple, with_hist: bool) -> Block:
     """A :class:`Block` from a walk's block record."""
     text, n_words, n_link_chars, link_density, node = record
-    path = []
-    nd = node
-    while nd is not _ROOT:
-        path.append(nd[0])
-        nd = nd[1]
-    path.reverse()
     n_chars = len(text)
     # words-per-wrapped-line proxy at 80 cols (Boilerpipe-style density)
     lines = max(1, math.ceil(n_chars / 80))
     return Block(
         block_id=block_id,
-        tag_path="/".join(path),
-        depth=len(path),
+        depth=node[4],
         text=text,
         n_chars=n_chars,
         n_words=n_words,
@@ -598,7 +599,7 @@ def segment_blocks(
             raise ValueError(
                 f"unknown engine {engine!r}; expected one of {sorted(_WALKS)}"
             )
-    records = walk(decode_html(html))
+    records, _ = walk(decode_html(html))
     return [_block(k, r, with_hist) for k, r in enumerate(records)]
 
 
@@ -607,24 +608,24 @@ def segment_blocks(
 # Boilerpipe NumWordsRulesClassifier thresholds (public knowledge:
 # boilerpipe's NumWordsRulesClassifier; also SNIPPETS.md). All comparisons
 # are on exact float64 values derived identically in the Spark-expression
-# variant (octospark.pipeline.classify), so both paths agree bit-for-bit.
+# word-count cascade (octospark.pipeline.classify), so both paths agree
+# bit-for-bit.
 _LINK_DENSITY_MAX = 0.333333
 _PREV_LINK_DENSITY_HIGH = 0.555555
 
 
-def _label(
-    node: tuple, n_words: int, link_density: float,
-    prev_words: int, prev_link_density: float, next_words: int,
-) -> str:
-    """The deterministic rule cascade for one block, from its open-tag
-    node, its features and its neighbors' (0 at the page edges):
+def _structural(node: tuple, n_words: int, link_density: float) -> str | None:
+    """The label a block's open-tag node forces, else None — the
+    structural half of the rule cascade, which the staged path takes
+    from stage 1 (the block's ``structural`` column) as the reference
+    takes each unit's class from segmentation (reference
+    src/octopy/segment.py:159-180):
 
     1. forced ancestor labels (nav/header/footer/aside/form), nearest
        ancestor first — the analog of the fixed region-class mapping
        (reference src/octopy/mappings.py:15-48);
     2. heading / caption tags, then table with the layout-table
-       carve-out;
-    3. Boilerpipe-style (prev, curr, next) word-count + link-density rules.
+       carve-out.
     """
     forced = node[2]
     if forced is not None:
@@ -640,6 +641,20 @@ def _label(
     # link-heavy rows keep the 'table' label.
     if node[3] and not (n_words > 16 and link_density <= _LINK_DENSITY_MAX):
         return "table"
+    return None
+
+
+def _label(
+    node: tuple, n_words: int, link_density: float,
+    prev_words: int, prev_link_density: float, next_words: int,
+) -> str:
+    """The deterministic rule cascade for one block, from its open-tag
+    node, its features and its neighbors' (0 at the page edges): the
+    structural labels (:func:`_structural`), then Boilerpipe-style
+    (prev, curr, next) word-count + link-density rules."""
+    label = _structural(node, n_words, link_density)
+    if label is not None:
+        return label
     if link_density > _LINK_DENSITY_MAX:
         return "boilerplate-nav"
     if prev_link_density > _PREV_LINK_DENSITY_HIGH:
@@ -721,10 +736,12 @@ def extract_row(html: bytes | str | None) -> tuple:
     over :func:`segment_blocks`, in one walk over block records with no
     Block objects. Never raises — any failure yields text='' with the
     error recorded (row-level error tolerance, analog of the per-document
-    try/except in reference src/octopy/cli/segment.py:137-145). Every
-    input page yields exactly one output row (never-drop law)."""
+    try/except in reference src/octopy/cli/segment.py:137-145); a parse
+    the walk salvaged keeps the text of the blocks before the failure
+    and reports ``error='salvaged:<exception type>'``. Every input page
+    yields exactly one output row (never-drop law)."""
     try:
-        records = _DEFAULT_WALK(decode_html(html))
+        records, salvage = _DEFAULT_WALK(decode_html(html))
         parts: list = []
         spans: list = []
         pos = 0
@@ -741,7 +758,7 @@ def extract_row(html: bytes | str | None) -> tuple:
                 parts.append(text)
                 pos = end
             prev_words, prev_ld = n_words, ld
-        return "\n".join(parts), spans, len(records), None
+        return "\n".join(parts), spans, len(records), salvage
     except Exception as exc:  # pragma: no cover — defensive outer guard
         return "", [], 0, f"{type(exc).__name__}: {exc}"
 

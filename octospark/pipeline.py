@@ -10,12 +10,17 @@ byte-identical per url between them and to the pure-Python oracle):
    one Arrow round-trip per page batch.
 
 2. **Staged declarative path** :func:`segment` -> :func:`classify` ->
-   :func:`merge` — stage 1 is the only Python stage (DOM walk must be);
-   stage 2 classification is PURE Spark column expressions + window
-   lag/lead (JVM, whole-stage codegen): the rule cascade, or the
-   learned scorer when a fitted model is given; stage 3 merge is
-   window/array_sort/array_join built-ins. Used for analysis queries
-   (label stats, span tables) and to keep the classifier declarative.
+   :func:`merge` — stage 1 is the only Python stage (DOM walk must be)
+   and emits each block's structural label (the tag rules of
+   :func:`octospark.extractor._structural`), as the reference's
+   segmentation emits each unit's class; stage 2 classification
+   resolves the rest in PURE Spark column expressions + window lag/lead
+   (JVM, whole-stage codegen): the word-count cascade, or the learned
+   scorer when a fitted model is given; stage 3 merge is
+   window/array_sort/array_join built-ins. A page is keyed by
+   ``(url, warc_ts)``, so the re-crawls of one url stay apart. Used for
+   analysis queries (label stats, span tables) and to keep the
+   classifier declarative.
 
 Scale notes (SURVEY.md §4):
 - Catalyst does NOT push predicates through ``mapInPandas`` — the size
@@ -29,6 +34,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -37,11 +43,8 @@ from pyspark.sql import types as T
 from octospark import MAX_HTML_BYTES
 from octospark.extractor import (
     CONTENT_LABELS,
-    _ANCESTOR_LABELS,
-    _HEADING_TAGS,
     _LINK_DENSITY_MAX,
     _PREV_LINK_DENSITY_HIGH,
-    _TABLE_TAGS,
 )
 
 SPAN_TYPE = T.StructType(
@@ -68,8 +71,9 @@ EXTRACTED_SCHEMA = T.StructType(
 BLOCKS_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
+        T.StructField("warc_ts", T.TimestampType(), True),
         T.StructField("block_id", T.IntegerType(), False),
-        T.StructField("tag_path", T.StringType(), True),
+        T.StructField("structural", T.StringType(), True),
         T.StructField("depth", T.IntegerType(), True),
         T.StructField("text", T.StringType(), True),
         T.StructField("n_chars", T.IntegerType(), True),
@@ -155,20 +159,24 @@ def extract_pages(
 # --------------------------------------------------------------------------
 
 def _segment_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from octospark.extractor import segment_blocks  # lazy import in worker
+    from octospark.extractor import _structural, segment_blocks  # in worker
 
     for pdf in batches:
         # columnar assembly: per-column lists, not row tuples — pandas
         # builds each column in one shot instead of transposing rows,
         # and the numeric columns land as real numpy arrays (VERDICT r2
         # #6; the per-page DOM walk itself is the irreducible part)
-        cols: dict = {f.name: [] for f in BLOCKS_SCHEMA.fields}
+        # the page key (url, warc_ts) is taken from pdf by each block's row
+        page: list = []
+        cols: dict = {f.name: [] for f in BLOCKS_SCHEMA.fields[2:]}
         ap = {k: v.append for k, v in cols.items()}
-        for url, html in zip(pdf["url"], pdf["html"]):
+        for row, html in enumerate(pdf["html"]):
             for b in segment_blocks(html):
-                ap["url"](url)
+                page.append(row)
                 ap["block_id"](b.block_id)
-                ap["tag_path"](b.tag_path)
+                ap["structural"](
+                    _structural(b.node, b.n_words, b.link_density)
+                )
                 ap["depth"](b.depth)
                 ap["text"](b.text)
                 ap["n_chars"](b.n_chars)
@@ -177,11 +185,19 @@ def _segment_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 ap["link_density"](b.link_density)
                 ap["text_density"](b.text_density)
                 ap["char_hist"](b.char_hist)
-        yield pd.DataFrame(cols)
+        page_idx = np.asarray(page, dtype=np.intp)
+        yield pd.DataFrame({
+            "url": pdf["url"].values[page_idx],
+            "warc_ts": pdf["warc_ts"].values[page_idx],
+            **cols,
+        })
 
 
 def segment(pages: DataFrame) -> DataFrame:
-    """Stage 1: pages -> blocks (DOM order = block_id order per url).
+    """Stage 1: pages -> blocks (:data:`BLOCKS_SCHEMA`; DOM order =
+    block_id order per ``(url, warc_ts)`` page). Each block carries its
+    features and ``structural``, the label its open tags force (null
+    when none does), which :func:`classify` takes as is.
 
     The size guard (reference analog: MAX_IMAGE_PIXELS, reference
     src/octopy/__init__.py:25) filters null and
@@ -191,7 +207,9 @@ def segment(pages: DataFrame) -> DataFrame:
     ok = pages.filter(
         F.col("html").isNotNull() & (F.length("html") <= MAX_HTML_BYTES)
     )
-    return ok.select("url", "html").mapInPandas(_segment_batches, BLOCKS_SCHEMA)
+    return ok.select("url", "warc_ts", "html").mapInPandas(
+        _segment_batches, BLOCKS_SCHEMA
+    )
 
 
 # --------------------------------------------------------------------------
@@ -200,21 +218,7 @@ def segment(pages: DataFrame) -> DataFrame:
 
 # The rule constants are octospark.extractor's own; the floats compare
 # bit-identically because both sides compute IEEE-754 float64 from the
-# same integers. Tag sets reach ``isin`` sorted, so the plan text does
-# not depend on the string hash seed.
-
-
-def _ancestor_label(path_arr: Column) -> Column:
-    """Nearest forced-ancestor label via a left fold (later = nearer)."""
-    mapping = F.create_map(
-        *[F.lit(x) for kv in _ANCESTOR_LABELS.items() for x in kv]
-    )
-    return F.aggregate(
-        path_arr,
-        F.lit(None).cast(T.StringType()),
-        lambda acc, t: F.coalesce(mapping[t], acc),
-    )
-
+# same integers.
 
 CONTEXT_COLS = ("prev_words", "next_words", "prev_link_density")
 
@@ -223,10 +227,11 @@ def with_context(blocks: DataFrame) -> DataFrame:
     """blocks -> blocks + :data:`CONTEXT_COLS`: the previous block's
     word count, the next block's word count and the previous block's
     link density within the page (0 at the page edges), from
-    ``lag``/``lead`` over (url, block_id) — the Spark analog of
-    Boilerpipe's prev/next context. The one window shared by the rule
-    cascade (:func:`classify`) and the learned scorer."""
-    w = Window.partitionBy("url").orderBy("block_id")
+    ``lag``/``lead`` over block_id within each ``(url, warc_ts)`` page —
+    the Spark analog of Boilerpipe's prev/next context. The one window
+    shared by the rule cascade (:func:`classify`) and the learned
+    scorer."""
+    w = Window.partitionBy("url", "warc_ts").orderBy("block_id")
     return blocks.withColumns({
         "prev_words": F.coalesce(F.lag("n_words", 1).over(w), F.lit(0)),
         "next_words": F.coalesce(F.lead("n_words", 1).over(w), F.lit(0)),
@@ -239,14 +244,14 @@ def with_context(blocks: DataFrame) -> DataFrame:
 def classify(blocks: DataFrame, model: dict | None = None) -> DataFrame:
     """Stage 2: blocks -> blocks + ``label``, entirely JVM-side.
 
-    The labels a block's tag path forces come first (steps 1-2 of
-    :func:`octospark.extractor.classify_block`): nearest forced
+    A block's ``structural`` label from stage 1 (nearest forced
     ancestor, heading, caption, then table with the layout-table
-    carve-out (long low-link prose in a table falls through). A block
-    none of them applies to is labeled by the word-count rule cascade
-    (the expression translation of ``classify_block``, neighbor
-    features from :func:`with_context`) when ``model`` is None, and
-    otherwise by the fitted scorer ``model`` — the dict
+    carve-out: :func:`octospark.extractor._structural`) comes first. A
+    block without one is labeled by the word-count rule cascade (the
+    expression translation of the rest of
+    :func:`octospark.extractor._label`, neighbor features from
+    :func:`with_context`) when ``model`` is None, and otherwise by the
+    fitted scorer ``model`` — the dict
     :func:`octospark.scorer.fit_scorer` returns or
     :func:`octospark.scorer.load_model` reads back — as ``content`` or
     ``noise`` (:func:`octospark.scorer.score_blocks`). Structural labels
@@ -282,20 +287,8 @@ def classify(blocks: DataFrame, model: dict | None = None) -> DataFrame:
         rest = F.col("scored_label")
         added = ("score", "scored_label")
 
-    path_arr = F.split(F.col("tag_path"), "/")
-    last = F.element_at(path_arr, -1)
     label = F.coalesce(
-        _ancestor_label(path_arr),
-        F.when(last.isin(*sorted(_HEADING_TAGS)), F.lit("heading")),
-        F.when(last == "figcaption", F.lit("caption")),
-        F.when(
-            F.exists(path_arr, lambda t: t.isin(*sorted(_TABLE_TAGS)))
-            & ~(
-                (F.col("n_words") > 16)
-                & (F.col("link_density") <= F.lit(_LINK_DENSITY_MAX))
-            ),
-            F.lit("table"),
-        ),
+        F.col("structural"),
         rest,
         # never-drop fallback: any null that slips through
         F.lit("unknown"),
@@ -312,15 +305,20 @@ def merge(labeled_blocks: DataFrame, pages: DataFrame) -> DataFrame:
     spans, lang), one row per page.
 
     Offsets computed with a running-sum window (ROWS UNBOUNDED PRECEDING),
-    assembly with array_sort + array_join — no Python, one shuffle on
-    url. A page with zero content blocks keeps its row with empty text
-    and no spans (never-drop law)."""
+    assembly with array_sort + array_join — no Python. A page is its
+    ``(url, warc_ts)`` pair, so each re-crawl of a url keeps its own
+    text, and the merged rows join back to ``pages`` null-safely on both
+    columns, so a page with a null ``warc_ts`` keeps its text too. A
+    page with zero content blocks keeps its row with empty text and no
+    spans (never-drop law). Two rows that share url and ``warc_ts`` are
+    one page to this path (FIXTURES.md §D)."""
     content = labeled_blocks.filter(
         F.col("label").isin(*sorted(CONTENT_LABELS))
-    ).select("url", "block_id", "text", "label", F.length("text").alias("len"))
+    ).select("url", "warc_ts", "block_id", "text", "label",
+             F.length("text").alias("len"))
 
     w = (
-        Window.partitionBy("url")
+        Window.partitionBy("url", "warc_ts")
         .orderBy("block_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
@@ -329,7 +327,7 @@ def merge(labeled_blocks: DataFrame, pages: DataFrame) -> DataFrame:
     ).withColumn("start", F.greatest(F.lit(0), F.col("end") - F.col("len")))
 
     merged = (
-        with_end.groupBy("url")
+        with_end.groupBy("url", "warc_ts")
         .agg(
             F.array_sort(
                 F.collect_list(
@@ -339,6 +337,7 @@ def merge(labeled_blocks: DataFrame, pages: DataFrame) -> DataFrame:
         )
         .select(
             "url",
+            "warc_ts",
             # block texts are never empty, so joining with "\n" is the
             # extractor's separator rule
             F.array_join(
@@ -355,11 +354,15 @@ def merge(labeled_blocks: DataFrame, pages: DataFrame) -> DataFrame:
             ).alias("spans"),
         )
     )
-    return pages.select("url", "warc_ts", "lang").join(
-        merged, "url", "left"
+    p, m = pages.select("url", "warc_ts", "lang").alias("p"), merged.alias("m")
+    return p.join(
+        m,
+        (F.col("p.url") == F.col("m.url"))
+        & F.col("p.warc_ts").eqNullSafe(F.col("m.warc_ts")),
+        "left",
     ).select(
-        "url",
-        "warc_ts",
+        "p.url",
+        "p.warc_ts",
         F.coalesce("text", F.lit("")).alias("text"),
         F.coalesce(
             "spans", F.array().cast(T.ArrayType(SPAN_TYPE))

@@ -201,16 +201,50 @@ def test_salted_repartition_preserves_rows(spark, pages):
 
 
 def test_blocks_schema_and_order(spark, pages):
+    from octospark.pipeline import BLOCKS_SCHEMA
+
     blocks = segment(pages.limit(20))
-    w_ok = blocks.groupBy("url").agg(
+    assert blocks.schema.fieldNames() == BLOCKS_SCHEMA.fieldNames()
+    w_ok = blocks.groupBy("url", "warc_ts").agg(
         F.count("*").alias("n"),
         F.max("block_id").alias("max_id"),
         F.countDistinct("block_id").alias("d"),
     )
-    # block_id is 0..n-1 per url (DOM order, dense)
+    # block_id is 0..n-1 per (url, warc_ts) page (DOM order, dense)
     assert w_ok.filter(
         (F.col("max_id") != F.col("n") - 1) | (F.col("d") != F.col("n"))
     ).count() == 0
+
+
+def test_staged_equals_fused_per_crawl(spark, pages):
+    """The staged path keys a page by (url, warc_ts): two crawls of one
+    url with the same html each get the fused text (neither doubled nor
+    relabelled by the other's blocks in the lag/lead window), a re-crawl
+    with other html gets its own, and a page with a null warc_ts keeps
+    its text through the null-safe join back to ``pages``."""
+    base = pages.select("url", "warc_ts", "html", "lang").orderBy("url")
+    (u1, ts, h1, lang), (u2, _, h2, _) = base.limit(2).collect()
+    later = ts.replace(year=ts.year + 1)
+    rows = [
+        (u1, ts, h1, lang),
+        (u1, later, h1, lang),  # re-crawl, same html
+        (u1, ts.replace(year=ts.year + 2), h2, lang),  # re-crawl, new html
+        (u2, None, h2, lang),  # no crawl time
+    ]
+    crawls = spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, html binary, lang string"
+    )
+
+    def by_page(df):
+        return sorted(
+            (r.url, r.warc_ts, r.text, [tuple(s) for s in r.spans])
+            for r in df.select("url", "warc_ts", "text", "spans").collect()
+        )
+
+    fused = by_page(extract_pages(crawls))
+    staged = by_page(merge(classify(segment(crawls)), crawls))
+    assert staged == fused
+    assert len(fused) == 4 and all(text for _, _, text, _ in fused)
 
 
 def test_analyze_job_heuristic_smoke(sf_dir, tmp_path):
