@@ -38,10 +38,12 @@ commit through it:
   under a unique id before it writes anything;
 - **write**: each chunk is written flat (no ``partitionBy``) with
   ``mode("errorifexists")`` into its own directory ``data/<name>``, the
-  name derived from the attempt id, so a retry never overwrites;
+  name derived from the attempt id, so a retry never overwrites. The
+  write yields the chunk's lineage stats (row count, error count,
+  checksum), read back from the chunk as written, so they cover the
+  committed bytes and no cached copy of the rows is kept;
 - **commit**: the atomic manifest replace records the ``chunk``
-  directory next to the unit's lineage stats (row count, error count,
-  checksum);
+  directory next to the unit's lineage stats;
 - **read**: readers open exactly the chunk directories the manifest
   names. A directory no manifest entry names — an aborted attempt's
   chunk, a torn micro-batch, or a generation a compaction superseded —
@@ -176,33 +178,40 @@ _STATS = ("output_count", "error_count", "checksum")
 _NO_ROWS = dict.fromkeys(_STATS, 0)
 
 
-def _lineage_stats(df: DataFrame, by_part_key: bool = True) -> dict:
+def _lineage_stats(df: DataFrame) -> dict:
     """The lineage aggregate, one partial-aggregated job: row count,
     error count and the order-independent ``bit_xor(xxhash64(url,
     text))`` checksum. Returns ``{part_key: stats}`` for the buckets
-    ``df`` has rows in, or ``{None: stats}`` over all of ``df``."""
-    keys = ["part_key"] if by_part_key else []
+    ``df`` has rows in when ``df`` has a ``part_key`` column, else
+    ``{None: stats}`` over all of ``df``."""
+    keys = ["part_key"] if "part_key" in df.columns else []
     rows = df.groupBy(*keys).agg(
         F.count("*").alias("output_count"),
         F.count("error").alias("error_count"),
         F.bit_xor(F.xxhash64("url", "text")).alias("checksum"),
     ).collect()
     return {
-        r["part_key"] if by_part_key else None:
-            {s: int(r[s] or 0) for s in _STATS}
+        r["part_key"] if keys else None: {s: int(r[s] or 0) for s in _STATS}
         for r in rows
     }
 
 
-def _write_chunk(rows: DataFrame, out_dir: str, name: str) -> str:
+def _write_chunk(
+    rows: DataFrame, out_dir: str, name: str, schema: T.StructType
+) -> dict:
     """Write ``rows`` as the new chunk directory ``data/<name>`` and
-    return ``name``. A chunk is never overwritten (``errorifexists``):
-    a retry writes under a fresh attempt id, and only the manifest
-    commit that names the chunk makes it visible."""
+    return the lineage stats (:func:`_lineage_stats`) of the chunk as
+    written, read back as ``schema``: the checksum covers the committed
+    bytes, and column pruning makes the read one of ``url, text,
+    error[, part_key]``. A chunk is never overwritten
+    (``errorifexists``): a retry writes under a fresh attempt id, and
+    only the manifest commit that names the chunk makes it visible."""
     rows.write.mode("errorifexists").parquet(
         os.path.join(out_dir, "data", name)
     )
-    return name
+    return _lineage_stats(
+        _read_chunks(rows.sparkSession, out_dir, [name], schema)
+    )
 
 
 def _read_chunks(
@@ -263,6 +272,14 @@ def run_extract(
     instead of re-extracting 10^12 rows. ``validate_fn`` alone (cadence
     None) means one final pre-commit validation.
 
+    Each chunk is its own extraction of only its buckets' rows, written,
+    then committed with the stats read back from the written chunk, so
+    the cadence stops extraction at the drift and a crash after k
+    buckets has extracted only those k. The cost is one input scan per
+    chunk rather than per attempt, filtered to the chunk's buckets
+    before the UDF; the skew census and the per-bucket input count run
+    once per attempt.
+
     Returns the updated manifest dict.
     """
     from octospark import MAX_HTML_BYTES
@@ -296,63 +313,54 @@ def run_extract(
         # see tests/test_pipeline.py::test_skewed_host_branch_spreads_
         # giant_host for the partition-spread guarantee the census buys
         skewed_hosts = find_skewed_hosts(todo) or None
-    extracted = extract_pages(
-        todo.drop("part_key"),
-        max_bytes=max_bytes,
-        salted=salted,
-        num_partitions=salt_partitions,
-        skewed_hosts=skewed_hosts,
-    )
-    # columns in SNAPSHOT_SCHEMA order
-    extracted = with_part_key(
-        extracted.withColumn("run_id", F.lit(run_id)), n_buckets
-    ).persist()
-    total_committed = 0
-    try:
-        stats = _lineage_stats(extracted)
 
-        commit_keys = todo_keys
-        if fail_after_buckets is not None:
-            commit_keys = commit_keys[:fail_after_buckets]
-        chunk_size = validate_every_k_buckets or len(commit_keys) or 1
-        for index, i in enumerate(range(0, len(commit_keys), chunk_size)):
-            chunk_keys = commit_keys[i : i + chunk_size]
-            # sorted by part_key so footer stats cover bucket ranges
-            chunk = _write_chunk(
-                extracted.filter(F.col("part_key").isin(chunk_keys))
-                .sortWithinPartitions("part_key"),
-                out_dir, f"{run_id}-{index:04d}",
-            )
-            if validate_fn is not None:
-                drift = validate_fn()
-                if drift:
-                    raise GoldenDriftError(
-                        f"golden fixture drift after "
-                        f"{total_committed} committed buckets: "
-                        + "; ".join(str(d) for d in drift[:5])
-                    )
-            now = time.time()
-            for k in chunk_keys:
-                manifest["buckets"][str(k)] = {
-                    "run_id": run_id,
-                    "chunk": chunk,
-                    "input_count": input_counts.get(k, 0),
-                    **stats.get(k, _NO_ROWS),
-                    "committed_at": now,
-                }
-            total_committed += len(chunk_keys)
-            manifest["run_ids"].append(
-                {"run_id": run_id, "committed_buckets": total_committed,
-                 "committed_at": now}
-            )
-            # collapse per-chunk entries of this run into one history row
-            manifest["run_ids"] = [
-                e for e in manifest["run_ids"]
-                if e["run_id"] != run_id
-            ] + [manifest["run_ids"][-1]]
-            commit_manifest(out_dir, manifest)
-    finally:
-        extracted.unpersist()
+    commit_keys = todo_keys
+    if fail_after_buckets is not None:
+        commit_keys = commit_keys[:fail_after_buckets]
+    chunk_size = validate_every_k_buckets or len(commit_keys) or 1
+    total_committed = 0
+    for index, i in enumerate(range(0, len(commit_keys), chunk_size)):
+        chunk_keys = commit_keys[i : i + chunk_size]
+        extracted = extract_pages(
+            keyed.filter(F.col("part_key").isin(chunk_keys)).drop("part_key"),
+            max_bytes=max_bytes,
+            salted=salted,
+            num_partitions=salt_partitions,
+            skewed_hosts=skewed_hosts,
+        )
+        # columns in SNAPSHOT_SCHEMA order, sorted by part_key so footer
+        # stats cover bucket ranges
+        chunk = f"{run_id}-{index:04d}"
+        stats = _write_chunk(
+            with_part_key(
+                extracted.withColumn("run_id", F.lit(run_id)), n_buckets
+            ).sortWithinPartitions("part_key"),
+            out_dir, chunk, SNAPSHOT_SCHEMA,
+        )
+        if validate_fn is not None:
+            drift = validate_fn()
+            if drift:
+                raise GoldenDriftError(
+                    f"golden fixture drift after "
+                    f"{total_committed} committed buckets: "
+                    + "; ".join(str(d) for d in drift[:5])
+                )
+        now = time.time()
+        for k in chunk_keys:
+            manifest["buckets"][str(k)] = {
+                "run_id": run_id,
+                "chunk": chunk,
+                "input_count": input_counts.get(k, 0),
+                **stats.get(k, _NO_ROWS),
+                "committed_at": now,
+            }
+        total_committed += len(chunk_keys)
+        # one history row per attempt, updated at each chunk commit
+        manifest["run_ids"] = [
+            e for e in manifest["run_ids"] if e["run_id"] != run_id
+        ] + [{"run_id": run_id, "committed_buckets": total_committed,
+              "committed_at": now}]
+        commit_manifest(out_dir, manifest)
 
     return manifest
 
@@ -392,19 +400,15 @@ def export_extracted(
     (JSONL via Spark's json sink). Returns the exported row count."""
     if fmt not in EXPORT_FORMATS:
         raise ValueError(f"fmt must be one of {EXPORT_FORMATS}")
+    buckets = read_manifest(out_dir)["buckets"]
     df = read_extracted(spark, out_dir).drop("part_key", "run_id")
-    # count the frame we write, not the sink: re-reading an empty JSONL
-    # dataset raises (no data files to infer a schema from)
-    df = df.persist()
-    try:
-        n = df.count()
-        if fmt == "jsonl":
-            df.write.mode("overwrite").json(dest)
-        else:
-            df.write.mode("overwrite").parquet(dest)
-    finally:
-        df.unpersist()
-    return n
+    if fmt == "jsonl":
+        df.write.mode("overwrite").json(dest)
+    else:
+        df.write.mode("overwrite").parquet(dest)
+    # each bucket's output_count was counted from its committed chunk,
+    # so the sum is exactly the rows read_extracted returned
+    return sum(v["output_count"] for v in buckets.values())
 
 
 def lineage_table(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -472,19 +476,17 @@ def compact_run(spark: SparkSession, out_dir: str) -> dict:
     run_id = _register_attempt(
         out_dir, m, f"compact-{uuid.uuid4().hex[:12]}"
     )
-    chunk = _write_chunk(
+    chunk = f"{run_id}-0000"
+    chunk_dir = os.path.join(data_dir, chunk)
+    got = _write_chunk(
         read_extracted(spark, out_dir)
         .withColumn("run_id", F.lit(run_id))
         .repartition(len(m["buckets"]), "part_key")
         .sortWithinPartitions("part_key"),
-        out_dir, f"{run_id}-0000",
+        out_dir, chunk, SNAPSHOT_SCHEMA,
     )
-    chunk_dir = os.path.join(data_dir, chunk)
 
     # verify the rewrite against committed lineage before the swap
-    got = _lineage_stats(
-        _read_chunks(spark, out_dir, [chunk], SNAPSHOT_SCHEMA)
-    )
     for k, v in m["buckets"].items():
         if got.get(int(k), _NO_ROWS) != {s: v[s] for s in _STATS}:
             shutil.rmtree(chunk_dir)  # abort: old snapshot stays live

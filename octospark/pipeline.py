@@ -403,17 +403,23 @@ def host_of(url_col: Column) -> Column:
 def find_skewed_hosts(
     pages: DataFrame, threshold_fraction: float = 0.05, min_pages: int = 10_000
 ) -> list:
-    """First-pass groupBy(host).count() to find giant hosts (> max(
+    """First-pass host histogram to find giant hosts (> max(
     threshold_fraction * total, min_pages) pages). At 100 TB this is a
-    cheap column-pruned scan of ``url`` only."""
-    counts = (
+    cheap column-pruned scan of ``url`` only. One aggregate, a
+    ``rollup(host)``, yields both the per-host counts and the total;
+    only the total and the hosts over ``min_pages`` (each cutoff is at
+    least that, so the list is bounded) are collected, and the cutoff
+    is applied on the driver."""
+    rows = (
         pages.select(host_of(F.col("url")).alias("host"))
-        .groupBy("host")
-        .count()
+        .rollup("host")
+        .agg(F.count("*").alias("n"), F.grouping_id().alias("total"))
+        .filter((F.col("n") > min_pages) | (F.col("total") == 1))
+        .collect()
     )
-    total = pages.count()
+    total = sum(r["n"] for r in rows if r["total"])
     cutoff = max(int(total * threshold_fraction), min_pages)
-    return [r["host"] for r in counts.filter(F.col("count") > cutoff).collect()]
+    return [r["host"] for r in rows if not r["total"] and r["n"] > cutoff]
 
 
 def salted_repartition(

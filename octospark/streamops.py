@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from octospark.lineage import (
-    _lineage_stats,
     _read_chunks,
     _register_attempt,
     _write_chunk,
@@ -272,9 +271,11 @@ def run_stream_exactly_once(
     the (k+1)-th batch of the run writes its data files and dies BEFORE
     the manifest commit.
 
-    Scale shape: per-batch stats are one partial-agg pass over the
-    already-extracted batch; the manifest grows one small JSON row per
-    micro-batch, never per page."""
+    Scale shape: each micro-batch is extracted once, by its chunk
+    write; its stats are one partial-agg pass over a column-pruned read
+    of the chunk just written (``url, text, error``), so nothing is
+    cached. The manifest grows one small JSON row per micro-batch,
+    never per page."""
     os.makedirs(out_dir, exist_ok=True)
     attempt = _register_attempt(
         out_dir, read_manifest(out_dir), f"stream-{uuid.uuid4().hex[:12]}"
@@ -286,28 +287,24 @@ def run_stream_exactly_once(
         batches = m.setdefault("batches", {})
         if str(batch_id) in batches:
             return  # checkpoint replay of a committed batch: no-op
-        batch_df = batch_df.persist()
-        try:
-            stats = _lineage_stats(batch_df, by_part_key=False)[None]
-            chunk = _write_chunk(batch_df, out_dir, f"{attempt}-{batch_id}")
-            if (
-                fail_after_batches is not None
-                and committed_this_run[0] >= fail_after_batches
-            ):
-                raise RuntimeError(
-                    "simulated crash after data write, before manifest "
-                    f"commit (batch {batch_id})"
-                )
-            batches[str(batch_id)] = {
-                "run_id": attempt,
-                "chunk": chunk,
-                **stats,
-                "committed_at": time.time(),
-            }
-            commit_manifest(out_dir, m)
-            committed_this_run[0] += 1
-        finally:
-            batch_df.unpersist()
+        chunk = f"{attempt}-{batch_id}"
+        stats = _write_chunk(batch_df, out_dir, chunk, EXTRACTED_SCHEMA)[None]
+        if (
+            fail_after_batches is not None
+            and committed_this_run[0] >= fail_after_batches
+        ):
+            raise RuntimeError(
+                "simulated crash after data write, before manifest "
+                f"commit (batch {batch_id})"
+            )
+        batches[str(batch_id)] = {
+            "run_id": attempt,
+            "chunk": chunk,
+            **stats,
+            "committed_at": time.time(),
+        }
+        commit_manifest(out_dir, m)
+        committed_this_run[0] += 1
 
     pages = read_pages_stream(spark, input_dir, max_files_per_trigger)
     extracted = extract_stream(pages, watermark=watermark)

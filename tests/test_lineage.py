@@ -234,6 +234,70 @@ def test_validation_cadence_kill_on_drift(spark, pages, out_dir):
     assert read_extracted(spark, out_dir).count() == pages.count()
 
 
+def _record_extracted_rows(monkeypatch) -> list:
+    """Wrap ``pipeline.extract_pages`` so each call records how many
+    input rows it was given."""
+    import octospark.pipeline as pipeline
+
+    extract, seen = pipeline.extract_pages, []
+
+    def recording_extract(df, **kwargs):
+        seen.append(df.count())
+        return extract(df, **kwargs)
+
+    monkeypatch.setattr(pipeline, "extract_pages", recording_extract)
+    return seen
+
+
+def test_crash_attempt_extracts_only_what_it_commits(spark, pages, out_dir,
+                                                     monkeypatch):
+    """An attempt that commits 5 of 16 buckets extracts only the rows of
+    those 5 buckets, not the whole input."""
+    seen = _record_extracted_rows(monkeypatch)
+    m = run_extract(spark, pages, out_dir, n_buckets=N_BUCKETS,
+                    fail_after_buckets=5)
+    assert len(m["buckets"]) == 5
+    assert sum(seen) == sum(v["input_count"] for v in m["buckets"].values())
+    assert 0 < sum(seen) < pages.count()
+
+
+def test_cadence_stops_extraction_at_the_drift(spark, pages, out_dir,
+                                               monkeypatch):
+    """Each cadence chunk is its own extraction, so a drift found after
+    the third chunk leaves the fourth chunk's rows unextracted."""
+    from octospark.lineage import GoldenDriftError, with_part_key
+
+    seen = _record_extracted_rows(monkeypatch)
+    calls = []
+
+    def drift_on_third_chunk():
+        calls.append(1)
+        return [] if len(calls) <= 2 else ["synthetic drift"]
+
+    with pytest.raises(GoldenDriftError):
+        run_extract(spark, pages, out_dir, n_buckets=N_BUCKETS,
+                    validate_every_k_buckets=4,
+                    validate_fn=drift_on_third_chunk)
+    keyed = with_part_key(pages, N_BUCKETS)
+    assert seen == [
+        keyed.filter(F.col("part_key").isin(list(range(i, i + 4)))).count()
+        for i in (0, 4, 8)
+    ]
+
+
+def test_attempt_job_counts(spark, pages, out_dir, count_jobs):
+    """An attempt runs the input count, then per chunk one write and one
+    read-back of its lineage stats (two jobs each for the two
+    aggregates, as AQE runs each shuffle stage as a job); a salted one
+    adds the one-aggregate census and the salted exchange."""
+    _, unsalted = count_jobs(run_extract, spark, pages, out_dir,
+                             n_buckets=N_BUCKETS)
+    _, salted = count_jobs(run_extract, spark, pages, out_dir + "_s",
+                           n_buckets=N_BUCKETS, salted=True)
+    assert unsalted <= 5
+    assert salted <= unsalted + 3
+
+
 def test_validation_cadence_healthy_golden(spark, pages, out_dir):
     """The real golden validator passes against the frozen fixtures and
     a full run with cadence enabled commits everything."""

@@ -11,6 +11,7 @@ from octospark.pipeline import (
     classify,
     extract_pages,
     find_skewed_hosts,
+    host_of,
     merge,
     salted_repartition,
     segment,
@@ -185,6 +186,24 @@ def test_skewed_host_branch_spreads_giant_host(spark, pages):
         )
     )
     assert plain == salted
+
+
+def test_skew_census_is_one_aggregate(spark, pages, count_jobs):
+    """The census takes the total and the giant hosts from one host
+    histogram: its shuffle stage and its collect are its only jobs."""
+    hosts, jobs = count_jobs(find_skewed_hosts, pages,
+                             threshold_fraction=0.04, min_pages=10)
+    assert jobs <= 2
+    counts = {
+        r["host"]: r["count"]
+        for r in pages.select(host_of(F.col("url")).alias("host"))
+        .groupBy("host").count().collect()
+    }
+    cutoff = max(int(pages.count() * 0.04), 10)
+    assert sorted(hosts) == sorted(h for h, n in counts.items() if n > cutoff)
+    assert hosts
+    assert find_skewed_hosts(pages) == []
+    assert find_skewed_hosts(pages.limit(0), min_pages=0) == []
 
 
 def test_salted_repartition_preserves_rows(spark, pages):
