@@ -571,16 +571,23 @@ def write_bench_md(result: dict) -> None:
         for key, exp in sorted(ab.items()):
             for metric, m in exp["metrics"].items():
                 for sk, sv in m.items():
-                    if not sk.startswith("speedup_"):
-                        continue
-                    lines.append(
-                        f"- `{key}` / {metric} {sk[len('speedup_'):]}: "
-                        f"median per-pass speedup "
-                        f"**{sv['median_per_pass']}x** "
-                        f"(per-pass {sv['per_pass']}, ratio-of-min "
-                        f"{sv['min_ratio_of_mins']}; mins "
-                        f"{json.dumps(m['per_side_min_sec'])})\n"
-                    )
+                    if sk.startswith("speedup_"):
+                        lines.append(
+                            f"- `{key}` / {metric} {sk[len('speedup_'):]}: "
+                            f"median per-pass speedup "
+                            f"**{sv['median_per_pass']}x** "
+                            f"(per-pass {sv['per_pass']}, ratio-of-min "
+                            f"{sv['min_ratio_of_mins']}; mins "
+                            f"{json.dumps(m['per_side_min_sec'])})\n"
+                        )
+                    elif "_vs_" in sk:  # perfbench mode: one entry per side
+                        lines.append(
+                            f"- `{key}` / {metric} {sk}: median change "
+                            f"**{sv['median_change']:+.1%}**, "
+                            f"won {sv['won']} (per-pass ratio "
+                            f"{sv['per_pass_ratio']}; medians "
+                            f"{json.dumps(m['median'])})\n"
+                        )
     with open(path, "w") as f:  # overwrite: one current-results doc
         f.writelines(lines)
 

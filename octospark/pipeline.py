@@ -23,8 +23,11 @@ byte-identical per url between them and to the pure-Python oracle):
    classifier declarative.
 
 Scale notes (SURVEY.md §4):
-- Catalyst does NOT push predicates through ``mapInPandas`` — the size
-  guard and null filter are placed before the UDF here, by hand.
+- Catalyst does NOT push predicates through ``mapInPandas``. The staged
+  :func:`segment` places the size guard and null filter before its UDF,
+  by hand; the fused :func:`extract_pages` runs the guard inside the UDF,
+  so its plan scans the pages table once and a guarded page still
+  yields its ``size_guard`` row.
 - ``html`` is pruned from every projection after the UDF stage.
 - Skew: one giant host must not pin a single task — see
   :func:`salted_repartition` (north_rule requirement).
