@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from octospark import ORACLE, QUERIES, register
 from octospark.sources import load_table
+from octospark.session import materialize
 
 
 def _dec_sum(col, prec="decimal(28,6)", alias=None):
@@ -2542,13 +2543,14 @@ def events_ab_lift_test(spark, sf):
 
 
 # --------------------------------------------------------------------------
-# events_ewma_hourly — truncated EWMA smoothing with exact halving
+# densified hourly series — shared by the sequential detectors
+# (EWMA, CUSUM, seasonal baseline, Holt forecast): every hour between
+# each type's first and last event, zero-filled, so silent hours are
+# DATA (they drain a cusum, anchor a seasonal median, decay a forecast)
+# instead of invisible gaps.
 # --------------------------------------------------------------------------
 
-_EWMA_WINDOW = 8  # hours of history folded into the smooth
-
-_EWMA_SQL = f"""
-    WITH c AS ({_HOURLY_COUNTS_CTE}),
+_DENSE_HOURLY_CTE = """c AS ({hourly}),
     span AS (
       SELECT event_type, min(win_start) AS lo, max(win_start) AS hi
       FROM c GROUP BY 1),
@@ -2563,7 +2565,57 @@ _EWMA_SQL = f"""
              COALESCE(c.n, CAST(0 AS BIGINT)) AS n
       FROM dense LEFT JOIN c
         ON c.event_type = dense.event_type
-       AND c.win_start = dense.win_start),
+       AND c.win_start = dense.win_start)"""
+
+
+def _densified_hourly(spark, sf) -> DataFrame:
+    """Densified hourly (event_type, win_start, n) count table: the
+    hourly rollup left-joined onto each type's full first-to-last hour
+    range, zero-filled. One partial-agg shuffle collapses the events
+    scan; the densify join runs on the collapsed (types x hours)
+    table, never the event stream."""
+    c = _hourly_type_counts(load_table(spark, sf, "events"))
+    # the rollup feeds TWO plan branches (the span rollup and the
+    # densify join) — materialize it once so the 100 TB events table
+    # is scanned exactly once, not twice (events_anomaly_mad rule)
+    c = materialize(c)
+    span = c.groupBy("event_type").agg(
+        F.min("win_start").alias("lo"), F.max("win_start").alias("hi")
+    )
+    hours = span.select(
+        "event_type",
+        F.explode(
+            F.sequence(
+                F.to_timestamp("lo"),
+                F.to_timestamp("hi"),
+                F.expr("interval 1 hour"),
+            )
+        ).alias("ts_h"),
+    )
+    return (
+        hours.select(
+            "event_type",
+            F.date_format("ts_h", "yyyy-MM-dd HH:mm:ss").alias(
+                "win_start"
+            ),
+        )
+        .join(c, ["event_type", "win_start"], "left")
+        .select(
+            "event_type",
+            "win_start",
+            F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n"),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
+# events_ewma_hourly — truncated EWMA smoothing with exact halving
+# --------------------------------------------------------------------------
+
+_EWMA_WINDOW = 8  # hours of history folded into the smooth
+
+_EWMA_SQL = f"""
+    WITH {_DENSE_HOURLY_CTE},
     w AS (
       SELECT event_type, win_start, n,
              list(CAST(n AS DOUBLE)) OVER (
@@ -2578,7 +2630,9 @@ _EWMA_SQL = f"""
     """
 
 
-@register("events_ewma_hourly", _EWMA_SQL)
+@register(
+    "events_ewma_hourly", _EWMA_SQL.format(hourly=_HOURLY_COUNTS_CTE)
+)
 def events_ewma_hourly(spark, sf):
     """Truncated exponential smoothing of hourly volumes per event
     type (alpha = 0.5) — the denoised baseline the anomaly alarm
@@ -2606,34 +2660,7 @@ def events_ewma_hourly(spark, sf):
     generate + left join to fill gaps, one type-partitioned ordered
     window collecting at most 8 values per row, and a constant-length
     fold."""
-    c = _hourly_type_counts(load_table(spark, sf, "events"))
-    span = c.groupBy("event_type").agg(
-        F.min("win_start").alias("lo"), F.max("win_start").alias("hi")
-    )
-    hours = span.select(
-        "event_type",
-        F.explode(
-            F.sequence(
-                F.to_timestamp("lo"),
-                F.to_timestamp("hi"),
-                F.expr("interval 1 hour"),
-            )
-        ).alias("ts_h"),
-    )
-    dense = (
-        hours.select(
-            "event_type",
-            F.date_format("ts_h", "yyyy-MM-dd HH:mm:ss").alias(
-                "win_start"
-            ),
-        )
-        .join(c, ["event_type", "win_start"], "left")
-        .select(
-            "event_type",
-            "win_start",
-            F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n"),
-        )
-    )
+    dense = _densified_hourly(spark, sf)
     w = Window.partitionBy("event_type").orderBy("win_start").rowsBetween(
         -(_EWMA_WINDOW - 1), Window.currentRow
     )
@@ -3907,7 +3934,7 @@ def events_rfm_segments(spark, sf):
     Reference analog: R27 class statistics (per-class count rollups,
     reference src/octopy/train.py:99-121) applied to user value."""
     ev = load_table(spark, sf, "events")
-    u = ev.groupBy("user_id").agg(
+    u = materialize(ev.groupBy("user_id").agg(
         F.max(F.col("ts").cast("date")).alias("last_day"),
         F.count("*").alias("freq"),
         F.sum(F.floor(F.col("value") * 1000000).cast("long"))
@@ -3916,7 +3943,7 @@ def events_rfm_segments(spark, sf):
         # user-rollup-sized: materialize once so its four consumers
         # (corpus-day scalar, cutoffs, scoring, rollup) never re-scan
         # the event stream — the corpus_token_budget_plan discipline
-    ).localCheckpoint(eager=True)
+    ))
     mx = u.agg(F.max("last_day").alias("corpus_day"))
     ur = u.crossJoin(F.broadcast(mx)).select(
         "user_id",
@@ -4436,7 +4463,7 @@ def events_anomaly_mad(spark, sf):
     # the hourly rollup is tiny (types x hours) but feeds FOUR plan
     # branches (m, d, s, and the final join) — materialize it once so
     # the 100 TB events table is scanned exactly once, not four times
-    c = c.localCheckpoint(eager=True)
+    c = materialize(c)
     m = c.groupBy("event_type").agg(
         (2 * F.median("n")).cast("long").alias("med2")
     )
@@ -4692,7 +4719,7 @@ def events_cuped_lift(spark, sf):
     # pooled-moments and the per-variant branches — materialize it once
     # so the 100 TB events table is scanned twice (bounds + rollup),
     # never four times
-    u = u.localCheckpoint(eager=True)
+    u = materialize(u)
     dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
     p = u.agg(
         F.count("*").cast("long").alias("n"),
@@ -4874,7 +4901,7 @@ def table_deletion_vectors(spark, sf):
     side is tiny relative to base data (deleted fraction of a file),
     so the positional application join broadcasts per-file DV
     partitions; stats are ONE partial-agg groupBy(file_id). The base
-    table is localCheckpointed once so base and DV branches do not
+    table is materialized once so base and DV branches do not
     recompute the scan+window twice.
 
     Reference analog: octopy never mutates its input page images;
@@ -4884,7 +4911,7 @@ def table_deletion_vectors(spark, sf):
     base-plus-overlay read."""
     o = load_table(spark, sf, "orders").select("o_orderkey")
     w = Window.partitionBy("file_id").orderBy("o_orderkey")
-    base = (
+    base = materialize(
         o.select(
             "o_orderkey",
             F.expr(f"o_orderkey div {_DV_FILE_ROWS}").alias("file_id"),
@@ -4894,7 +4921,6 @@ def table_deletion_vectors(spark, sf):
             "file_id",
             F.row_number().over(w).cast("long").alias("pos"),
         )
-        .localCheckpoint(eager=True)
     )
     dv = base.filter(F.col("o_orderkey") % 13 == 3).select(
         "file_id", "pos", F.lit(1).alias("dv")
@@ -4910,72 +4936,6 @@ def table_deletion_vectors(spark, sf):
             F.lit(0),
         ).cast("long").alias("live_key_sum"),
         (5 * dead >= F.count("*")).alias("rewrite"),
-    )
-
-
-# --------------------------------------------------------------------------
-# densified hourly series — shared by the sequential detectors
-# (CUSUM, seasonal baseline, Holt forecast): every hour between each
-# type's first and last event, zero-filled, so silent hours are DATA
-# (they drain a cusum, anchor a seasonal median, decay a forecast)
-# instead of invisible gaps.
-# --------------------------------------------------------------------------
-
-_DENSE_HOURLY_CTE = """c AS ({hourly}),
-    span AS (
-      SELECT event_type, min(win_start) AS lo, max(win_start) AS hi
-      FROM c GROUP BY 1),
-    dense AS (
-      SELECT s.event_type,
-             strftime(unnest(generate_series(
-                 CAST(s.lo AS TIMESTAMP), CAST(s.hi AS TIMESTAMP),
-                 INTERVAL 1 HOUR)), '%Y-%m-%d %H:%M:%S') AS win_start
-      FROM span s),
-    d AS (
-      SELECT dense.event_type, dense.win_start,
-             COALESCE(c.n, CAST(0 AS BIGINT)) AS n
-      FROM dense LEFT JOIN c
-        ON c.event_type = dense.event_type
-       AND c.win_start = dense.win_start)"""
-
-
-def _densified_hourly(spark, sf) -> DataFrame:
-    """Densified hourly (event_type, win_start, n) count table: the
-    hourly rollup left-joined onto each type's full first-to-last hour
-    range, zero-filled. One partial-agg shuffle collapses the events
-    scan; the densify join runs on the collapsed (types x hours)
-    table, never the event stream."""
-    c = _hourly_type_counts(load_table(spark, sf, "events"))
-    # the rollup feeds TWO plan branches (the span rollup and the
-    # densify join) — materialize it once so the 100 TB events table
-    # is scanned exactly once, not twice (events_anomaly_mad rule)
-    c = c.localCheckpoint(eager=True)
-    span = c.groupBy("event_type").agg(
-        F.min("win_start").alias("lo"), F.max("win_start").alias("hi")
-    )
-    hours = span.select(
-        "event_type",
-        F.explode(
-            F.sequence(
-                F.to_timestamp("lo"),
-                F.to_timestamp("hi"),
-                F.expr("interval 1 hour"),
-            )
-        ).alias("ts_h"),
-    )
-    return (
-        hours.select(
-            "event_type",
-            F.date_format("ts_h", "yyyy-MM-dd HH:mm:ss").alias(
-                "win_start"
-            ),
-        )
-        .join(c, ["event_type", "win_start"], "left")
-        .select(
-            "event_type",
-            "win_start",
-            F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n"),
-        )
     )
 
 
@@ -5136,7 +5096,7 @@ def events_seasonal_baseline(spark, sf):
     # tiny (types x hours) table feeding three plan branches: the two
     # median rollups and the flag join — materialize once so the
     # events table is scanned exactly once (events_anomaly_mad rule)
-    h = h.localCheckpoint(eager=True)
+    h = materialize(h)
     m = h.groupBy("event_type", "hod").agg(
         (2 * F.median("n")).cast("long").alias("med2")
     )
@@ -6165,9 +6125,9 @@ def events_user_overlap_jaccard(spark, sf):
     # ONE user shuffle feeds both the pair expansion and the audience
     # sizes (each user lists a type once, so exploded counts ARE the
     # distinct-user counts) — events scanned exactly once
-    u = e.groupBy("user_id").agg(
+    u = materialize(e.groupBy("user_id").agg(
         F.collect_set("event_type").alias("ts")
-    ).localCheckpoint(eager=True)
+    ))
     pairs = (
         u.select(F.explode("ts").alias("type_a"), "ts")
         .select("type_a", F.explode("ts").alias("type_b"))
@@ -6175,11 +6135,10 @@ def events_user_overlap_jaccard(spark, sf):
         .groupBy("type_a", "type_b")
         .agg(F.count("*").alias("n_inter"))
     )
-    s = (
+    s = materialize(
         u.select(F.explode("ts").alias("event_type"))
         .groupBy("event_type")
         .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=True)
     )
     return (
         pairs.join(
@@ -6454,12 +6413,11 @@ def join_scd2_asof(spark, sf):
     # compaction and the fact custkey lookup) — materialize it once
     # so orders is scanned once (at production scale: the persisted
     # dimension-change table table_scd2_history maintains)
-    o = (
+    o = materialize(
         load_table(spark, sf, "orders")
         .select(
             "o_custkey", "o_orderstatus", "o_orderdate", "o_orderkey"
         )
-        .localCheckpoint(eager=True)
     )
     li = load_table(spark, sf, "lineitem")
     wchg = Window.partitionBy("o_custkey").orderBy(
@@ -6665,7 +6623,7 @@ def events_dow_hod_heatmap(spark, sf):
         ).alias("dow"),
         F.hour("ts").cast("long").alias("hod"),
     ).agg(F.count("*").alias("n"))
-    c = c.localCheckpoint(eager=True)
+    c = materialize(c)
     t = c.groupBy("event_type").agg(F.sum("n").alias("total"))
     return c.join(F.broadcast(t), "event_type").select(
         "event_type",
@@ -6929,7 +6887,7 @@ def table_expectations_report(spark, sf):
     check-then-proceed contract, materialized as data."""
     o = load_table(spark, sf, "orders")
     c = load_table(spark, sf, "customer").select("c_custkey")
-    row = o.agg(
+    row = materialize(o.agg(
         F.count("*").alias("n_checked"),
         F.count(F.when(F.col("o_orderkey").isNull(), 1)).alias(
             "v_null_key"
@@ -6957,11 +6915,10 @@ def table_expectations_report(spark, sf):
         F.count(
             F.when(~F.col("o_orderstatus").isin("O", "F", "P"), 1)
         ).alias("v_status"),
-    ).localCheckpoint(eager=True)
-    ref = (
+    ))
+    ref = materialize(
         o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"], "left_anti")
         .agg(F.count("*").alias("v_ref"))
-        .localCheckpoint(eager=True)
     )
     exps = [
         ("orderkey_not_null", "v_null_key", row),
@@ -7043,7 +7000,7 @@ def events_forecast_residual_alarm(spark, sf):
     Reference analog: octopy's validation cadence compares actual
     vs expected loss trajectory and stops on divergence (reference
     src/octopy/cli/train.py) — forecast-gated alarming."""
-    h = events_forecast_holt(spark, sf).localCheckpoint(eager=True)
+    h = materialize(events_forecast_holt(spark, sf))
     k = h.groupBy("event_type").agg(
         F.expr("sum(n) div count(*)").alias("k")
     )

@@ -1,4 +1,5 @@
-"""SparkSession construction with scale-appropriate defaults.
+"""SparkSession construction with scale-appropriate defaults, and the
+one lineage cut of the operator modules.
 
 One place to set every config that matters at 100 TB so tests, bench and
 jobs agree: AQE (runtime re-plan + skew-join), Arrow batching for pandas
@@ -9,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 ARROW_MAX_RECORDS_PER_BATCH = 8192  # ~10 MB of html per batch; big enough
@@ -59,3 +60,19 @@ def get_spark(
         for k, v in extra_conf.items():
             builder = builder.config(k, str(v))
     return builder.getOrCreate()
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Compute ``df`` now and cut its lineage: the plans built on the
+    result start from its stored rows, so an iterative operator's plan
+    does not grow with its rounds and a shared sub-plan is computed once.
+
+    With a checkpoint directory on the SparkContext (Spark's own
+    ``--conf spark.checkpoint.dir=...``) the rows are written there by
+    ``checkpoint``, and a lost executor costs nothing. Without one they
+    are ``localCheckpoint`` blocks, which die with the executor that
+    holds them.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from octospark import ORACLE, QUERIES, register
 from octospark.sources import load_table
+from octospark.session import materialize
 
 
 # --------------------------------------------------------------------------
@@ -1822,7 +1823,7 @@ def dedup_cluster_cc(spark, sf):
     large-star/small-star O(log n) variant, same per-round shape).
     Scale behavior per round: one shuffle-join (edges x labels, both
     partitioned on the join key) + one partial-aggregated groupBy-min;
-    lineage is truncated per round with an eager localCheckpoint so
+    lineage is truncated per round with ``materialize`` so
     the plan never grows with iteration count. Convergence is detected
     by the monotone label-sum (labels only decrease; equal sum =>
     fixpoint) — a single-scalar driver read per round, never a
@@ -1843,23 +1844,21 @@ def dedup_cluster_cc(spark, sf):
     ).select("id1", "id2")
     # materialize the edge set once: every iteration reuses it (at
     # corpus scale this is a persisted, doc_id-partitioned table)
-    sym = (
+    sym = materialize(
         edges.select(F.col("id1").alias("a"), F.col("id2").alias("b"))
         .union(edges.select(F.col("id2").alias("a"), F.col("id1").alias("b")))
-        .localCheckpoint(eager=True)
     )
     cc = docs.select("doc_id", F.col("doc_id").alias("cluster_id"))
-    cc = cc.localCheckpoint(eager=True)
+    cc = materialize(cc)
     prev_sum = cc.agg(F.sum("cluster_id")).collect()[0][0]
     for _ in range(16):  # >= diameter of any real dup cluster
         msgs = sym.join(cc, sym["a"] == cc["doc_id"]).select(
             F.col("b").alias("doc_id"), "cluster_id"
         )
-        cc = (
+        cc = materialize(
             cc.unionByName(msgs)
             .groupBy("doc_id")
             .agg(F.min("cluster_id").alias("cluster_id"))
-            .localCheckpoint(eager=True)
         )
         cur_sum = cc.agg(F.sum("cluster_id")).collect()[0][0]
         if cur_sum == prev_sum:  # monotone labels: fixpoint reached
@@ -2156,28 +2155,71 @@ def _modular_edges(docs, n: int):
     )
 
 
-def _pagerank_sql(iters: int) -> str:
-    """Unrolled integer-unit PageRank oracle (see graph_pagerank)."""
+def _pagerank_sql(
+    iters: int, seed: str = "TRUE", col: str = "rank_units"
+) -> str:
+    """Unrolled integer-unit PageRank oracle whose teleport mass lands
+    only on the documents where ``seed`` holds (see _seeded_pagerank):
+    (node, <col>) after ``iters`` rounds."""
     ctes = [
         *_MODULAR_EDGES_CTES,
         "deg AS (SELECT src, count(*) AS out_deg FROM edges GROUP BY src)",
-        ("r0 AS (SELECT doc_id AS node, CAST(1000000 AS BIGINT) AS "
-         "rank_units FROM documents)"),
+        (f"r0 AS (SELECT doc_id AS node, CAST(CASE WHEN {seed} "
+         f"THEN 1000000 ELSE 0 END AS BIGINT) AS {col} FROM documents)"),
     ]
     for i in range(1, iters + 1):
         ctes.append(f"""r{i} AS (
           SELECT d.doc_id AS node,
-                 150000 + 85 * COALESCE(SUM(
-                     r.rank_units // g.out_deg), 0) // 100 AS rank_units
+                 CASE WHEN {seed} THEN 150000 ELSE 0 END
+                 + 85 * COALESCE(SUM(
+                     r.{col} // g.out_deg), 0) // 100 AS {col}
           FROM documents d
           LEFT JOIN (edges e JOIN deg g ON e.src = g.src
                      JOIN r{i - 1} r ON r.node = e.src)
             ON d.doc_id = e.dst
           GROUP BY d.doc_id)""")
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f" SELECT node, rank_units FROM r{iters}"
-    )
+    return "WITH " + ",\n".join(ctes) + f" SELECT * FROM r{iters}"
+
+
+def _seeded_pagerank(docs, is_seed, iters: int, col: str):
+    """Integer-unit PageRank over docs(doc_id)'s modular edge list whose
+    teleport mass lands only on the rows where ``is_seed`` holds:
+    (node, <col>) after ``iters`` rounds. A seed starts at 1,000,000
+    units, any other page at 0; each round a page gets
+    ``150000 * [seed] + 85 * sum(units div out_deg) div 100``, so with
+    every page a seed this is graph_pagerank. The src-partitioned
+    edges+degree table is materialized once and every round reuses
+    it."""
+    par = docs.sparkSession.sparkContext.defaultParallelism
+    n = docs.count()  # single scalar, bounded driver read
+    edges = _modular_edges(docs, n)
+    deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
+    ed = materialize(edges.join(deg, "src").repartition(par, "src"))
+
+    def teleport(units):
+        return F.when(is_seed, F.lit(units)).otherwise(F.lit(0))
+
+    ranks = materialize(docs.select(
+        F.col("doc_id").alias("node"),
+        teleport(1_000_000).cast("long").alias(col),
+    ))
+    for _ in range(iters):
+        sums = (
+            ed.join(ranks, ed["src"] == ranks["node"])
+            .select("dst", F.expr(f"{col} div out_deg").alias("contrib"))
+            .groupBy("dst")
+            .agg(F.sum("contrib").alias("s"))
+        )
+        ranks = materialize(
+            docs.join(sums, docs["doc_id"] == sums["dst"], "left")
+            .select(
+                F.col("doc_id").alias("node"),
+                (teleport(150_000) + F.expr("85 * coalesce(s, 0) div 100"))
+                .cast("long")
+                .alias(col),
+            )
+        )
+    return ranks
 
 
 @register("graph_pagerank", _pagerank_sql(5))
@@ -2199,50 +2241,14 @@ def graph_pagerank(spark, sf):
 
     Scale shape per iteration: one shuffle-join of edges x ranks (both
     partitioned on src) + one partial-aggregated groupBy(dst) sum +
-    left join back to nodes; lineage truncated per round with an eager
-    localCheckpoint so the plan never grows with iteration count.
+    left join back to nodes; lineage truncated per round with
+    ``materialize`` so the plan never grows with iteration count.
     Dangling nodes cannot occur (the (i+1) mod n ring edge guarantees
     out_degree >= 1). Reference analog: iterative refinement over the
     full dataset per epoch, /root/reference/src/octopy/train.py:64-77.
     """
-    par = spark.sparkContext.defaultParallelism
     docs = load_table(spark, sf, "documents").select("doc_id")
-    n = docs.count()  # single scalar, bounded driver read
-    edges = _modular_edges(docs, n)
-    deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
-    # materialize edges+degree once; every iteration reuses it (at
-    # corpus scale: a persisted, src-partitioned table)
-    ed = (
-        edges.join(deg, "src")
-        .repartition(par, "src")
-        .localCheckpoint(eager=True)
-    )
-    ranks = docs.select(
-        F.col("doc_id").alias("node"),
-        F.lit(1_000_000).cast("long").alias("rank_units"),
-    ).localCheckpoint(eager=True)
-    for _ in range(5):
-        sums = (
-            ed.join(ranks, ed["src"] == ranks["node"])
-            .select(
-                "dst",
-                F.expr("rank_units div out_deg").alias("contrib"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("s"))
-        )
-        ranks = (
-            docs.join(sums, docs["doc_id"] == sums["dst"], "left")
-            .select(
-                F.col("doc_id").alias("node"),
-                (
-                    F.lit(150_000)
-                    + F.expr("85 * coalesce(s, 0L) div 100")
-                ).cast("long").alias("rank_units"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
+    return _seeded_pagerank(docs, F.lit(True), 5, "rank_units")
 
 
 def _lpa_sql(rounds: int) -> str:
@@ -2289,8 +2295,8 @@ def graph_label_propagation(spark, sf):
     label)) picks the winner per node with NO window and NO row_number
     sort (the table_merge_upsert argmax discipline: min/max of a
     struct combines map-side, a rank window would sort whole key
-    groups through the shuffle).  Lineage truncated per round with an
-    eager localCheckpoint, same as the other iterative keys.
+    groups through the shuffle).  Lineage truncated per round with
+    ``materialize``, same as the other iterative keys.
 
     Reference analog: octopy's class-merge pass collapses equivalent
     segment labels toward a canonical representative
@@ -2301,7 +2307,7 @@ def graph_label_propagation(spark, sf):
     docs = load_table(spark, sf, "documents").select("doc_id")
     n = docs.count()  # single scalar, bounded driver read
     edges = _modular_edges(docs, n)
-    und = (
+    und = materialize(
         edges.union(
             edges.select(
                 F.col("dst").alias("src"), F.col("src").alias("dst")
@@ -2309,18 +2315,17 @@ def graph_label_propagation(spark, sf):
         )
         .distinct()
         .repartition(par, "dst")
-        .localCheckpoint(eager=True)
     )
-    labels = docs.select(
+    labels = materialize(docs.select(
         F.col("doc_id").alias("node"), F.col("doc_id").alias("lbl")
-    ).localCheckpoint(eager=True)
+    ))
     for _ in range(2):
         votes = (
             und.join(labels, und["dst"] == labels["node"])
             .groupBy(und["src"].alias("v"), "lbl")
             .agg(F.count("*").alias("c"))
         )
-        labels = (
+        labels = materialize(
             votes.groupBy(F.col("v").alias("node"))
             .agg(
                 F.min(
@@ -2329,7 +2334,6 @@ def graph_label_propagation(spark, sf):
                     )
                 )["l"].alias("lbl")
             )
-            .localCheckpoint(eager=True)
         )
     return labels.select("node", F.col("lbl").alias("label"))
 
@@ -4838,12 +4842,12 @@ def graph_hits_scores(spark, sf):
     Scale shape per iteration: two edge-keyed shuffle joins + two
     partial-aggregated groupBys (the pagerank shape run twice), one
     single-row max broadcast back per side; lineage truncated per
-    round with eager localCheckpoint. Reference analog: R22/R26
+    round with ``materialize``. Reference analog: R22/R26
     alternating refine-and-rescale epochs
     (/root/reference/src/octopy/train.py:64-77)."""
     docs = load_table(spark, sf, "documents").select("doc_id")
     n = docs.count()  # single scalar, bounded driver read
-    edges = _modular_edges(docs, n).localCheckpoint(eager=True)
+    edges = materialize(_modular_edges(docs, n))
 
     def _normalize(raw: DataFrame, key: str, out: str) -> DataFrame:
         m = raw.agg(F.max("v").alias("m"))
@@ -4864,13 +4868,13 @@ def graph_hits_scores(spark, sf):
             .groupBy("dst")
             .agg(F.sum("h").alias("v"))
         )
-        a = _normalize(ar, "dst", "a").localCheckpoint(eager=True)
+        a = materialize(_normalize(ar, "dst", "a"))
         hr = (
             edges.join(a, "dst")
             .groupBy("src")
             .agg(F.sum("a").alias("v"))
         )
-        h = _normalize(hr, "src", "h").localCheckpoint(eager=True)
+        h = materialize(_normalize(hr, "src", "h"))
     return (
         docs.join(h, docs["doc_id"] == h["src"], "left")
         .join(a, docs["doc_id"] == a["dst"], "left")
@@ -5538,7 +5542,7 @@ def _und_edges(docs, n: int):
         F.col("doc_id").alias("src"),
         ((F.col("doc_id") + 2) % n).alias("dst"),
     )
-    return (
+    return materialize(
         _modular_edges(docs, n)
         .unionByName(chord)
         .filter(F.col("src") != F.col("dst"))
@@ -5547,7 +5551,6 @@ def _und_edges(docs, n: int):
             F.greatest("src", "dst").alias("b"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
 
@@ -5645,10 +5648,9 @@ def graph_reciprocal_links(spark, sf):
     partial-aggregated rollup and one division per node."""
     docs = load_table(spark, sf, "documents").select("doc_id")
     n = docs.count()
-    e = (
+    e = materialize(
         _modular_edges(docs, n)
         .filter(F.col("src") != F.col("dst"))
-        .localCheckpoint(eager=True)
     )
     rev = e.select(
         F.col("dst").alias("src"), F.col("src").alias("dst")
@@ -6060,7 +6062,7 @@ def _bpe_learn(spark, sf):
     w_word = Window.partitionBy("word").orderBy("pos")
     tops = []
     for rnd in range(1, _BPE_ROUNDS + 1):
-        sym = sym.localCheckpoint(eager=True)
+        sym = materialize(sym)
         pairs = (
             sym.select(
                 "wt", "sym", F.lead("sym", 1).over(w_word).alias("nxt")
@@ -6069,10 +6071,9 @@ def _bpe_learn(spark, sf):
             .groupBy(F.col("sym").alias("l"), F.col("nxt").alias("r"))
             .agg(F.sum("wt").cast("long").alias("cnt"))
         )
-        top = (
+        top = materialize(
             pairs.orderBy(F.col("cnt").desc(), "l", "r")
             .limit(1)
-            .localCheckpoint(eager=True)
         )
         tops.append(
             top.select(
@@ -6166,7 +6167,7 @@ def text_bpe_merges(spark, sf):
     words), the standard BPE design point — symbol rows are bounded by
     total unique-word length, never corpus token count. Per round: one
     word-partitioned window pass + one pair groupBy + a broadcast
-    1-row top pair; sym/top are localCheckpointed per round to truncate
+    1-row top pair; sym/top are materialized per round to truncate
     the 3-round lineage (the graph-key discipline) so no subtree is
     recomputed."""
     tops, _ = _bpe_learn(spark, sf)
@@ -6227,8 +6228,8 @@ def graph_kcore_peel(spark, sf):
     Scale shape per round: one self-contained degree recount = two
     hash joins of edges x alive (both shuffled on the join key, alive
     is the SMALL side and broadcastable once peeling bites) + one
-    partial-aggregated groupBy(src); lineage truncated with an eager
-    localCheckpoint per round so the plan stays flat (same discipline
+    partial-aggregated groupBy(src); lineage truncated with
+    ``materialize`` per round so the plan stays flat (same discipline
     as graph_pagerank / dedup_cluster_cc).  Integer counts only — the
     DuckDB oracle unrolls the same three rounds exactly.
 
@@ -6239,12 +6240,11 @@ def graph_kcore_peel(spark, sf):
     docs = load_table(spark, sf, "documents").select("doc_id")
     n = docs.count()  # single scalar, bounded driver read
     edges = _modular_edges(docs, n).filter(F.col("src") != F.col("dst"))
-    sym = (
+    sym = materialize(
         edges.select("src", "dst")
         .union(edges.select(F.col("dst").alias("src"),
                             F.col("src").alias("dst")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     alive = sym.select(F.col("src").alias("node")).distinct()
     deg = None
@@ -6257,10 +6257,9 @@ def graph_kcore_peel(spark, sf):
             .groupBy("src")
             .agg(F.count("*").alias("deg"))
         )
-        alive = (
+        alive = materialize(
             deg.filter(F.col("deg") >= _KCORE_K)
             .select(F.col("src").alias("node"))
-            .localCheckpoint(eager=True)
         )
     return deg.filter(F.col("deg") >= _KCORE_K).select(
         F.col("src").alias("node"), "deg"
@@ -6743,7 +6742,7 @@ def text_cooccurrence_pmi(spark, sf):
     pos) window as lead(1)/lead(2) and fan out as an in-row array
     explode (never a positional self-join); the pair groupBy
     partial-aggregates its Zipf head map-side.  The unigram table is
-    vocabulary-sized and localCheckpointed once, so its three
+    vocabulary-sized and materialized once, so its three
     consumers (x-side join, y-side join, the scalar N rollup) reuse
     n_vocab rows instead of re-deriving the corpus scan per branch —
     the corpus is read exactly twice (token window + unigram count)
@@ -6781,11 +6780,7 @@ def text_cooccurrence_pmi(spark, sf):
         .select("p.x", "p.y")
     )
     pc = pairs.groupBy("x", "y").agg(F.count("*").alias("pair_n"))
-    uc = (
-        toks.groupBy("word")
-        .agg(F.count("*").alias("uni_n"))
-        .localCheckpoint(eager=True)
-    )
+    uc = materialize(toks.groupBy("word").agg(F.count("*").alias("uni_n")))
     tot = uc.agg(F.sum("uni_n").cast("long").alias("n_tokens"))
     return (
         pc.filter(F.col("pair_n") >= _PMI_MIN_PAIR)
@@ -6959,7 +6954,7 @@ def text_kneser_ney_bigram(spark, sf):
 
     Scale shape: ONE corpus-token shuffle (the (doc_id, pos) lead
     window) feeding one (w1,w2) partial-agg groupBy; the bigram-type
-    table is materialized once (localCheckpoint) and EVERYTHING else
+    table is materialized once (``materialize``) and EVERYTHING else
     — context totals, N1+ fan-outs, continuation counts, the type
     count — is a vocabulary-sized rollup of that table, never a
     second corpus pass (the text_cooccurrence_pmi discipline).  Both
@@ -6974,11 +6969,7 @@ def text_kneser_ney_bigram(spark, sf):
         F.col("word").alias("w1"),
         F.lead("word", 1).over(wnd).alias("w2"),
     ).filter(F.col("w2").isNotNull())
-    bg = (
-        adj.groupBy("w1", "w2")
-        .agg(F.count("*").alias("pair_n"))
-        .localCheckpoint(eager=True)
-    )
+    bg = materialize(adj.groupBy("w1", "w2").agg(F.count("*").alias("pair_n")))
     ctx = bg.groupBy("w1").agg(
         F.sum("pair_n").alias("ctx_n"), F.count("*").alias("n1plus")
     )
@@ -7239,7 +7230,7 @@ def graph_jaccard_link_pred(spark, sf):
     docs = load_table(spark, sf, "documents").select("doc_id")
     n = docs.count()
     e = _modular_edges(docs, n).filter(F.col("src") != F.col("dst"))
-    adj = (
+    adj = materialize(
         e.select(F.col("src").alias("v"), F.col("dst").alias("w"))
         .unionByName(
             e.select(F.col("dst").alias("v"), F.col("src").alias("w"))
@@ -7249,7 +7240,6 @@ def graph_jaccard_link_pred(spark, sf):
         # sides, two degree projections, the already-linked probe) reuse
         # the adjacency instead of re-deriving the corpus scan each —
         # the graph_hits_scores edge-checkpoint idiom
-        .localCheckpoint(eager=True)
     )
     deg = adj.groupBy("v").agg(F.count("*").alias("d"))
     a1 = adj.select("v", F.col("w").alias("x"))
@@ -7510,10 +7500,7 @@ def graph_hostgraph_collapse(spark, sf):
     # branches (edge generation + both endpoint joins): materialize
     # it once — at 10^12 pages even the pruned projection is worth
     # scanning exactly once
-    hosts = (
-        docs.select("doc_id", F.col("source").alias("host"))
-        .localCheckpoint(eager=True)
-    )
+    hosts = materialize(docs.select("doc_id", F.col("source").alias("host")))
     e = _modular_edges(hosts.select("doc_id"), n)
     he = (
         e.join(
@@ -7680,24 +7667,22 @@ def _bfs_hops(edges, seeds, iters: int):
     dist(node, hop). `edges` must already be repartitioned on src and
     checkpointed (every round reuses that partitioning); `seeds` is a
     doc_id DataFrame at hop 0."""
-    dist = (
+    dist = materialize(
         seeds.select(
             F.col("doc_id").alias("node"),
             F.lit(0).cast("long").alias("hop"),
         )
-        .localCheckpoint(eager=True)
     )
     frontier = dist.select("node")
     for i in range(1, iters + 1):
-        nxt = (
+        nxt = materialize(
             edges.join(frontier, edges["src"] == frontier["node"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(dist, "node", "left_anti")
             .select("node", F.lit(i).cast("long").alias("hop"))
-            .localCheckpoint(eager=True)
         )
-        dist = dist.unionByName(nxt).localCheckpoint(eager=True)
+        dist = materialize(dist.unionByName(nxt))
         frontier = nxt.select("node")
     return dist
 
@@ -7726,7 +7711,7 @@ def graph_bfs_layers(spark, sf):
 
     Scale shape per round: one src-keyed shuffle join of
     edges x frontier (edges repartitioned on src ONCE and
-    localCheckpointed — every round reuses the same partitioning; at
+    materialized — every round reuses the same partitioning; at
     corpus scale a persisted src-bucketed edge table), one distinct on
     the candidate set, one anti-join against the reached set (both
     sides node-keyed), and lineage truncation per round so the plan
@@ -7741,11 +7726,7 @@ def graph_bfs_layers(spark, sf):
     par = spark.sparkContext.defaultParallelism
     docs = load_table(spark, sf, "documents").select("doc_id")
     n = docs.count()  # single scalar, bounded driver read
-    edges = (
-        _modular_edges(docs, n)
-        .repartition(par, "src")
-        .localCheckpoint(eager=True)
-    )
+    edges = materialize(_modular_edges(docs, n).repartition(par, "src"))
     dist = _bfs_hops(
         edges, docs.filter(F.col("doc_id") % 97 == 0), _BFS_ITERS
     )
@@ -7835,7 +7816,7 @@ def corpus_ingest_drift(spark, sf):
     # one (source, bucket) shuffle feeds all three rollups: the two
     # coarser aggregations partial-agg from the checkpointed rollup,
     # so the 100 TB documents table is scanned exactly once
-    per_sb = per_sb.localCheckpoint(eager=True)
+    per_sb = materialize(per_sb)
     tot_src = per_sb.groupBy("source").agg(
         F.sum("o").alias("total_s")
     )
@@ -7867,7 +7848,7 @@ def corpus_ingest_drift(spark, sf):
     # the grid (sources x buckets) feeds the TV rollup AND the final
     # join — materialize once so the upstream join pipeline (and its
     # shuffles) runs once, not twice
-    dev = dev.localCheckpoint(eager=True)
+    dev = materialize(dev)
     tv = dev.groupBy("source").agg(
         F.sum(F.abs(F.col("dev_ppm"))).alias("tv_ppm")
     )
@@ -7941,7 +7922,7 @@ def corpus_shard_skew_audit(spark, sf):
     )
     # the S-row shard rollup feeds the global fold AND the final
     # join — materialize it once so the corpus is scanned once
-    s = s.localCheckpoint(eager=True)
+    s = materialize(s)
     g = s.agg(
         F.sum("n_bytes").alias("total_bytes"),
         F.max("n_bytes").alias("max_bytes"),
@@ -8018,12 +7999,11 @@ def graph_scc_pivot(spark, sf):
     par = spark.sparkContext.defaultParallelism
     docs = load_table(spark, sf, "documents").select("doc_id")
     n = docs.count()  # single scalar, bounded driver read
-    e = _modular_edges(docs, n).localCheckpoint(eager=True)
-    fwd = e.repartition(par, "src").localCheckpoint(eager=True)
-    bwd = (
+    e = materialize(_modular_edges(docs, n))
+    fwd = materialize(e.repartition(par, "src"))
+    bwd = materialize(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         .repartition(par, "src")
-        .localCheckpoint(eager=True)
     )
     seeds = docs.filter(F.col("doc_id") == 0)
     fa = _bfs_hops(fwd, seeds, _BFS_ITERS).withColumnRenamed(
@@ -8117,10 +8097,7 @@ def web_spam_farm_score(spark, sf):
     # branches (edge generation + both endpoint joins): materialize
     # it once — at 10^12 pages even the pruned projection is worth
     # scanning exactly once
-    hosts = (
-        docs.select("doc_id", F.col("source").alias("host"))
-        .localCheckpoint(eager=True)
-    )
+    hosts = materialize(docs.select("doc_id", F.col("source").alias("host")))
     e = _modular_edges(hosts.select("doc_id"), n)
     he = (
         e.join(
@@ -8473,19 +8450,15 @@ def graph_walk_sample(spark, sf):
     docs = load_table(spark, sf, "documents").select("doc_id")
     n = docs.count()
     par = spark.sparkContext.defaultParallelism
-    edges = (
-        _modular_edges(docs, n)
-        .repartition(par, "src")
-        .localCheckpoint(eager=True)
-    )
+    edges = materialize(_modular_edges(docs, n).repartition(par, "src"))
     wnb = Window.partitionBy("src").orderBy("dst")
     nb = edges.withColumn("idx", F.row_number().over(wnb))
     deg = edges.groupBy("src").agg(F.count("*").alias("d"))
-    nb = nb.localCheckpoint(eager=True)
-    deg = deg.localCheckpoint(eager=True)
-    cur = docs.select(
+    nb = materialize(nb)
+    deg = materialize(deg)
+    cur = materialize(docs.select(
         F.col("doc_id").alias("start"), F.col("doc_id").alias("pos")
-    ).localCheckpoint(eager=True)
+    ))
     parts = [
         cur.select(
             "start",
@@ -8495,7 +8468,7 @@ def graph_walk_sample(spark, sf):
     ]
     deg_p = deg.withColumnRenamed("src", "pos")
     for t in range(1, _WALK_STEPS + 1):
-        nxt = (
+        nxt = materialize(
             cur.join(deg_p, "pos")
             .withColumn(
                 "nidx",
@@ -8515,7 +8488,6 @@ def graph_walk_sample(spark, sf):
                 ["pos", "nidx"],
             )
             .select("start", F.col("npos").alias("pos"))
-            .localCheckpoint(eager=True)
         )
         parts.append(
             nxt.select(
@@ -8892,7 +8864,7 @@ def graph_harmonic_closeness(spark, sf):
 
     Scale shape per round: one src-keyed shuffle join of the edge list
     against the (seed, node) frontier (edges repartitioned on src ONCE,
-    localCheckpointed, reused every round), a distinct and an anti-join
+    materialized, reused every round), a distinct and an anti-join
     both keyed (seed, node), lineage truncation per round.  Cost is
     |seeds| x the single-BFS cost — the sampling knob (_HARM_SEED_MOD)
     IS the budget control, exactly how WebGraph's HyperBall samples at
@@ -8906,23 +8878,18 @@ def graph_harmonic_closeness(spark, sf):
     par = spark.sparkContext.defaultParallelism
     docs = load_table(spark, sf, "documents").select("doc_id")
     n = docs.count()  # single scalar, bounded driver read
-    edges = (
-        _modular_edges(docs, n)
-        .repartition(par, "src")
-        .localCheckpoint(eager=True)
-    )
-    dist = (
+    edges = materialize(_modular_edges(docs, n).repartition(par, "src"))
+    dist = materialize(
         docs.filter(F.col("doc_id") % _HARM_SEED_MOD == 0)
         .select(
             F.col("doc_id").alias("seed"),
             F.col("doc_id").alias("node"),
             F.lit(0).cast("long").alias("hop"),
         )
-        .localCheckpoint(eager=True)
     )
     frontier = dist.select("seed", "node")
     for i in range(1, _HARM_ITERS + 1):
-        nxt = (
+        nxt = materialize(
             edges.join(frontier, edges["src"] == frontier["node"])
             .select("seed", F.col("dst").alias("node"))
             .distinct()
@@ -8930,9 +8897,8 @@ def graph_harmonic_closeness(spark, sf):
             .select(
                 "seed", "node", F.lit(i).cast("long").alias("hop")
             )
-            .localCheckpoint(eager=True)
         )
-        dist = dist.unionByName(nxt).localCheckpoint(eager=True)
+        dist = materialize(dist.unionByName(nxt))
         frontier = nxt.select("seed", "node")
     return dist.groupBy("seed").agg(
         (F.count("*") - 1).cast("long").alias("n_reached"),
@@ -9021,7 +8987,7 @@ def graph_modularity_score(spark, sf):
     docs = load_table(spark, sf, "documents").select("doc_id")
     n = docs.count()  # single scalar, bounded driver read
     edges = _modular_edges(docs, n)
-    und = (
+    und = materialize(
         edges.union(
             edges.select(
                 F.col("dst").alias("src"), F.col("src").alias("dst")
@@ -9029,7 +8995,6 @@ def graph_modularity_score(spark, sf):
         )
         .distinct()
         .repartition(par, "src")
-        .localCheckpoint(eager=True)
     )
     lab = graph_label_propagation(spark, sf)
     mm = und.agg(F.count("*").cast("long").alias("m2"))
@@ -9415,7 +9380,7 @@ def graph_assortativity(spark, sf):
     docs = load_table(spark, sf, "documents").select("doc_id")
     n_docs = docs.count()  # single scalar, bounded driver read
     edges = _modular_edges(docs, n_docs)
-    und = (
+    und = materialize(
         edges.union(
             edges.select(
                 F.col("dst").alias("src"), F.col("src").alias("dst")
@@ -9423,7 +9388,6 @@ def graph_assortativity(spark, sf):
         )
         .distinct()
         .repartition(par, "src")
-        .localCheckpoint(eager=True)
     )
     deg = und.groupBy(F.col("src").alias("node")).agg(
         F.count("*").cast("long").alias("d")
@@ -9705,9 +9669,7 @@ def table_clustering_depth(spark, sf):
     # checkpoint the footer pass: it feeds both self-join branches,
     # and without truncation the binaryFile read + pyarrow parse
     # (the one Python stage) would execute twice
-    stats = scan_parquet_rowgroup_stats(spark, sf).localCheckpoint(
-        eager=True
-    )
+    stats = materialize(scan_parquet_rowgroup_stats(spark, sf))
     a = stats.select(
         "layout",
         F.col("row_group_id"),
@@ -9792,11 +9754,7 @@ def graph_two_hop_reach(spark, sf):
     par = spark.sparkContext.defaultParallelism
     docs = load_table(spark, sf, "documents").select("doc_id")
     n = docs.count()  # single scalar, bounded driver read
-    edges = (
-        _modular_edges(docs, n)
-        .repartition(par, "dst")
-        .localCheckpoint(eager=True)
-    )
+    edges = materialize(_modular_edges(docs, n).repartition(par, "dst"))
     e2 = edges.select(
         F.col("src").alias("mid"), F.col("dst").alias("reach")
     )
@@ -9821,41 +9779,14 @@ def graph_two_hop_reach(spark, sf):
 
 _PPR_SEED_MOD = 97   # the BFS/seed-list family's sampled seed set
 _PPR_ITERS = 4
+_PPR_SEED = f"doc_id % {_PPR_SEED_MOD} = 0"
 
 
-def _ppr_sql(iters: int) -> str:
-    """Unrolled integer-unit PERSONALIZED PageRank oracle (see
-    graph_pagerank_personalized): identical round mechanics to
-    _pagerank_sql, but the teleport mass lands ONLY on the seed set."""
-    seed = f"doc_id % {_PPR_SEED_MOD} = 0"
-    ctes = [
-        *_MODULAR_EDGES_CTES,
-        "deg AS (SELECT src, count(*) AS out_deg FROM edges GROUP BY src)",
-        (f"p0 AS (SELECT doc_id AS node, CAST(CASE WHEN {seed} "
-         "THEN 1000000 ELSE 0 END AS BIGINT) AS ppr_units "
-         "FROM documents)"),
-    ]
-    for i in range(1, iters + 1):
-        ctes.append(f"""p{i} AS (
-          SELECT d.doc_id AS node,
-                 CASE WHEN d.doc_id % {_PPR_SEED_MOD} = 0
-                      THEN 150000 ELSE 0 END
-                 + 85 * COALESCE(SUM(
-                     r.ppr_units // g.out_deg), 0) // 100 AS ppr_units
-          FROM documents d
-          LEFT JOIN (edges e JOIN deg g ON e.src = g.src
-                     JOIN p{i - 1} r ON r.node = e.src)
-            ON d.doc_id = e.dst
-          GROUP BY d.doc_id)""")
-    return (
-        "WITH " + ",\n".join(ctes)
-        + f""" SELECT node, ppr_units,
-               node % {_PPR_SEED_MOD} = 0 AS is_seed
-        FROM p{iters}"""
-    )
-
-
-@register("graph_pagerank_personalized", _ppr_sql(_PPR_ITERS))
+@register(
+    "graph_pagerank_personalized",
+    f"""SELECT node, ppr_units, node % {_PPR_SEED_MOD} = 0 AS is_seed
+    FROM ({_pagerank_sql(_PPR_ITERS, _PPR_SEED, "ppr_units")})""",
+)
 def graph_pagerank_personalized(spark, sf):
     """PERSONALIZED PageRank from a trusted seed set — the quality-
     propagation operator web curation actually runs (TrustRank /
@@ -9885,47 +9816,10 @@ def graph_pagerank_personalized(spark, sf):
     high-confidence anchors and propagates outward (reference
     src/octopy/cli/recognize.py) — trust radiating from a seeded
     frontier."""
-    par = spark.sparkContext.defaultParallelism
     docs = load_table(spark, sf, "documents").select("doc_id")
-    n = docs.count()  # single scalar, bounded driver read
-    edges = _modular_edges(docs, n)
-    deg = edges.groupBy("src").agg(F.count("*").alias("out_deg"))
-    ed = (
-        edges.join(deg, "src")
-        .repartition(par, "src")
-        .localCheckpoint(eager=True)
+    ranks = _seeded_pagerank(
+        docs, F.expr(_PPR_SEED), _PPR_ITERS, "ppr_units"
     )
-    is_seed = F.col("doc_id") % _PPR_SEED_MOD == 0
-    ranks = docs.select(
-        F.col("doc_id").alias("node"),
-        F.when(is_seed, F.lit(1_000_000))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("ppr_units"),
-    ).localCheckpoint(eager=True)
-    for _ in range(_PPR_ITERS):
-        sums = (
-            ed.join(ranks, ed["src"] == ranks["node"])
-            .select(
-                "dst",
-                F.expr("ppr_units div out_deg").alias("contrib"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("contrib").alias("s"))
-        )
-        ranks = (
-            docs.join(sums, docs["doc_id"] == sums["dst"], "left")
-            .select(
-                F.col("doc_id").alias("node"),
-                (
-                    F.when(is_seed, F.lit(150_000)).otherwise(F.lit(0))
-                    + F.expr("85 * coalesce(s, 0) div 100")
-                )
-                .cast("long")
-                .alias("ppr_units"),
-            )
-            .localCheckpoint(eager=True)
-        )
     return ranks.select(
         "node",
         "ppr_units",
@@ -10101,7 +9995,7 @@ def _louvain_parts(spark, sf):
     docs = load_table(spark, sf, "documents").select("doc_id")
     n = docs.count()  # single scalar, bounded driver read
     edges = _modular_edges(docs, n)
-    und = (
+    und = materialize(
         edges.union(
             edges.select(
                 F.col("dst").alias("src"), F.col("src").alias("dst")
@@ -10109,9 +10003,8 @@ def _louvain_parts(spark, sf):
         )
         .distinct()
         .repartition(par, "src")
-        .localCheckpoint(eager=True)
     )
-    lab = graph_label_propagation(spark, sf).localCheckpoint(eager=True)
+    lab = materialize(graph_label_propagation(spark, sf))
     mm = und.agg(F.count("*").cast("long").alias("m2"))
     deg = und.groupBy("src").agg(F.count("*").cast("long").alias("d"))
     cdeg = (
@@ -10248,7 +10141,7 @@ def graph_conductance(spark, sf):
     # checkpoint the composed rollup: it feeds BOTH the row set and
     # the 2m aggregate below, and without truncation each reference
     # would re-run the whole modularity DAG (edge build + label joins)
-    m = graph_modularity_score(spark, sf).localCheckpoint(eager=True)
+    m = materialize(graph_modularity_score(spark, sf))
     mm = m.agg(
         F.sum("degree_sum").cast("long").alias("m2")
     )  # sum of community volumes = |und| = 2m, no second edge scan
@@ -10342,9 +10235,7 @@ def graph_coarsen_communities(spark, sf):
     # checkpointed symmetric edge list it was computed over, so the
     # contraction never rebuilds the edge pipeline a second time
     und, moves = _louvain_parts(spark, sf)
-    moved = (
-        moves.select("node", "new_label").localCheckpoint(eager=True)
-    )
+    moved = materialize(moves.select("node", "new_label"))
     la = moved.select(
         F.col("node").alias("na"), F.col("new_label").alias("super_src")
     )
@@ -10624,7 +10515,7 @@ def cluster_kmeans_iterate(spark, sf):
     groupBy(vec, cluster) for distances, the min-encoded argmin (no
     window), and one partial-agg (cluster, dim) rollup for the
     update — identical to cluster_kmeans_step's shape, looped with
-    localCheckpoint lineage truncation (the graph-family recipe), so
+    ``materialize`` lineage truncation (the graph-family recipe), so
     the plan never grows with rounds.
 
     Reference analog: octopy's train loop = epoch-wise refit over the
@@ -10632,9 +10523,9 @@ def cluster_kmeans_iterate(spark, sf):
     (reference src/octopy/train.py:64-77) — this is that loop for
     clustering, with n_changed as the improvement signal."""
     q = _quantized(spark, sf).select("vec_id", "q")
-    ex = q.select(
+    ex = materialize(q.select(
         "vec_id", F.posexplode("q").alias("dim", "code")
-    ).localCheckpoint(eager=True)
+    ))
     cents = ex.filter(F.col("vec_id") < _KMEANS_K).select(
         F.col("vec_id").alias("cluster"), "dim",
         F.col("code").alias("cent"),
@@ -10642,7 +10533,7 @@ def cluster_kmeans_iterate(spark, sf):
     assign = prev_assign = None
     dists = None
     for r in range(1, _KMI_ROUNDS + 1):
-        dists = (
+        dists = materialize(
             ex.join(F.broadcast(cents), "dim")
             .groupBy("vec_id", "cluster")
             .agg(
@@ -10653,9 +10544,9 @@ def cluster_kmeans_iterate(spark, sf):
                 .cast("long")
                 .alias("dist")
             )
-        ).localCheckpoint(eager=True)
+        )
         prev_assign = assign
-        assign = dists.groupBy("vec_id").agg(
+        assign = materialize(dists.groupBy("vec_id").agg(
             (
                 F.min(
                     F.col("dist") * _KMEANS_K + F.col("cluster")
@@ -10664,7 +10555,7 @@ def cluster_kmeans_iterate(spark, sf):
             )
             .cast("long")
             .alias("cluster")
-        ).localCheckpoint(eager=True)
+        ))
         if r < _KMI_ROUNDS:
             sums = (
                 ex.join(assign.withColumnRenamed("cluster", "acl"),
@@ -10675,7 +10566,7 @@ def cluster_kmeans_iterate(spark, sf):
                     F.sum("code").cast("long").alias("s"),
                 )
             )
-            cents = (
+            cents = materialize(
                 cents.join(sums, ["cluster", "dim"], "left")
                 .select(
                     "cluster",
@@ -10684,7 +10575,6 @@ def cluster_kmeans_iterate(spark, sf):
                         F.expr("s div n"), F.col("cent")
                     ).alias("cent"),
                 )
-                .localCheckpoint(eager=True)
             )
     final_d = dists.join(
         assign, ["vec_id", "cluster"]

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from octospark import ORACLE, QUERIES, register
 from octospark.sources import build_pages, load_table
+from octospark.session import materialize
 from octospark.textops import (
     _WORD_FREQ_CTES_SQL,
     _words,
@@ -913,9 +914,9 @@ def dedup_bloom_snapshot(spark, sf):
     # filter build, exact-eval set, probe batch) — production persists
     # this table; without it each branch re-scans and re-aggregates
     # the corpus (plan showed 3x the fp sub-plan)
-    fpdf = text_fingerprint(spark, sf).select(
+    fpdf = materialize(text_fingerprint(spark, sf).select(
         "doc_id", F.col("fp").cast("long").alias("fp")
-    ).localCheckpoint(eager=True)
+    ))
     a = fpdf.filter(F.col("doc_id") % 3 != 1)
     b = fpdf.filter(F.col("doc_id") % 3 == 1)
     a_bits = (
@@ -1114,11 +1115,11 @@ def extract_regression_check(spark, sf):
     a distributed job instead."""
     from octospark.pipeline import extract_pages
 
-    # materialize the synthesized pages ONCE (eager localCheckpoint —
-    # same idiom as the CC rounds in textops): both the golden leg and
+    # materialize the synthesized pages ONCE (the same cut as the CC
+    # rounds in textops): both the golden leg and
     # the extraction leg read the checkpointed partitions, instead of
     # re-running the mapInPandas synthesis per leg
-    pages = build_pages(spark, sf).localCheckpoint(eager=True)
+    pages = materialize(build_pages(spark, sf))
     golden = pages.select("url", F.col("text").alias("golden"))
     ext = extract_pages(pages, salted=True, num_partitions=8).select(
         "url", "text"
@@ -1506,7 +1507,7 @@ def web_redirect_resolve(spark, sf):
 
     Rounds run to a CONVERGENCE PROBE (count of unresolved rows — a
     single scalar per round, never a row collect), each round's state
-    eagerly localCheckpointed so the plan never grows with the doubling
+    materialized so the plan never grows with the doubling
     depth (same lineage discipline as graph_pagerank / dedup_cluster_cc).
     All arithmetic is integer; the DuckDB oracle replays the same walk
     with a recursive CTE, so the value-hash compare is exact.
@@ -1520,14 +1521,14 @@ def web_redirect_resolve(spark, sf):
     step = F.greatest(
         F.col("doc_id") - (F.col("doc_id") % 3 + 1), F.lit(0)
     )
-    state = docs.select(
+    state = materialize(docs.select(
         F.col("doc_id").alias("node"),
         F.when(terminal, F.col("doc_id")).otherwise(step).alias("ptr"),
         F.when(terminal, F.lit(0)).otherwise(F.lit(1))
         .cast("long")
         .alias("hops"),
         terminal.alias("done"),
-    ).localCheckpoint(eager=True)
+    ))
     # Doubling: after k rounds ptr has followed min(2^k, chain) hops.
     # Every ptr target is a doc_id present in the table (ids are
     # contiguous from 0 and steps are clamped at 0), so the self-join
@@ -1539,7 +1540,7 @@ def web_redirect_resolve(spark, sf):
             F.col("hops").alias("t_hops"),
             F.col("done").alias("t_done"),
         )
-        state = (
+        state = materialize(
             state.join(nxt, state["ptr"] == nxt["t_node"])
             .select(
                 "node",
@@ -1551,7 +1552,6 @@ def web_redirect_resolve(spark, sf):
                 .alias("hops"),
                 (F.col("done") | F.col("t_done")).alias("done"),
             )
-            .localCheckpoint(eager=True)
         )
     return state.select(
         F.col("node").alias("doc_id"),
@@ -1684,7 +1684,7 @@ def corpus_token_budget_plan(spark, sf):
     Scale shape: ONE corpus shuffle (the per-language token-count
     partial agg — per-doc token counts are computed map-side from the
     split array, never exploded corpus-wide), and the n_langs-row
-    result is localCheckpointed so the three downstream consumers
+    result is materialized so the three downstream consumers
     (total, normalizer, final projection) reuse it instead of
     re-deriving the corpus scan per branch — without the checkpoint
     the unreused lineage re-reads `documents` 4x; everything after
@@ -1699,10 +1699,10 @@ def corpus_token_budget_plan(spark, sf):
     toks = F.size(
         F.filter(F.split(F.col("text"), " "), lambda x: x != "")
     ).cast("long")
-    lt = d.groupBy("lang").agg(
+    lt = materialize(d.groupBy("lang").agg(
         F.count("*").alias("lang_docs"),
         F.sum(toks).alias("lang_tokens"),
-    ).localCheckpoint(eager=True)
+    ))
     tot = lt.agg(F.sum("lang_tokens").alias("n"))
     sc = lt.crossJoin(F.broadcast(tot)).select(
         "lang",

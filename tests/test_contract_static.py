@@ -87,3 +87,38 @@ def test_register_rejects_a_key_registered_twice():
         register("filter_predicate", "SELECT 1")(lambda spark, sf: None)
     assert QUERIES["filter_predicate"] is first
     assert ORACLE["filter_predicate"] == sql
+
+
+def test_lineage_cuts_only_in_session_materialize():
+    """Checkpointing lives in one place: across ``octospark/*.py`` the
+    only ``localCheckpoint`` and ``checkpoint`` calls are the two in
+    ``session.materialize``, so a checkpoint directory reaches every
+    lineage cut."""
+    import ast
+    import glob
+
+    cuts = []
+
+    class Cuts(ast.NodeVisitor):
+        def __init__(self, module):
+            self.where = [module, "<module>"]
+
+        def visit_FunctionDef(self, node):
+            self.where.append(node.name)
+            self.generic_visit(node)
+            self.where.pop()
+
+        def visit_Call(self, node):
+            if isinstance(node.func, ast.Attribute) and node.func.attr in (
+                "checkpoint", "localCheckpoint"
+            ):
+                cuts.append((self.where[0], self.where[-1], node.func.attr))
+            self.generic_visit(node)
+
+    for path in glob.glob(os.path.join(REPO, "octospark", "*.py")):
+        module = os.path.basename(path)[:-3]
+        Cuts(module).visit(ast.parse(open(path).read()))
+    assert sorted(cuts) == [
+        ("session", "materialize", "checkpoint"),
+        ("session", "materialize", "localCheckpoint"),
+    ], cuts
