@@ -26,12 +26,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def _registry():
-    """Import the six operator modules, which fill the one registry;
+    """Import the seven operator modules, which fill the one registry;
     the import order is the key order of the surface."""
     import octospark
     import octospark.relational
     import octospark.sketchops
     import octospark.textops
+    import octospark.mediaops
     import octospark.pdfops
     import octospark.warcops
     import octospark.webops  # noqa: F401

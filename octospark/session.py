@@ -55,6 +55,9 @@ def get_spark(
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # a materialize cut's checkpoint files go once its RDD is
+        # garbage-collected; Spark keeps them by default
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     if extra_conf:
         for k, v in extra_conf.items():
@@ -69,9 +72,10 @@ def materialize(df: DataFrame) -> DataFrame:
 
     With a checkpoint directory on the SparkContext (Spark's own
     ``--conf spark.checkpoint.dir=...``) the rows are written there by
-    ``checkpoint``, and a lost executor costs nothing. Without one they
-    are ``localCheckpoint`` blocks, which die with the executor that
-    holds them.
+    ``checkpoint``, and a lost executor costs nothing; the files are
+    deleted when the checkpointed RDD is garbage-collected on the
+    driver. Without one they are ``localCheckpoint`` blocks, which die
+    with the executor that holds them.
     """
     if df.sparkSession.sparkContext.getCheckpointDir():
         return df.checkpoint(eager=True)

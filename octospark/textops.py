@@ -1,10 +1,10 @@
 """Training-data pipeline operators: deduplication, similarity search,
-text analysis, multimodal plumbing — the operations a 100 TB
-web-text corpus pipeline needs beyond relational queries.
+text analysis — the operations a 100 TB web-text corpus pipeline needs
+beyond relational queries (the media keys are in
+:mod:`octospark.mediaops`).
 
 All hot paths are JVM built-ins (higher-order array functions, hash
-functions, window aggregates); Python appears only in the multimodal
-``mapInPandas`` plumbing demo. Oracle parity rules are the same as
+functions, window aggregates). Oracle parity rules are the same as
 :mod:`octospark.relational` (exact int arithmetic, sequential
 double folds via aggregate/list_reduce on both engines, unique-key
 tie-breaks).
@@ -282,7 +282,6 @@ def dedup_containment(spark, sf):
         .filter(F.col("containment") >= 0.8)
         .orderBy(F.col("containment").desc(), "id1", "id2")
     )
-
 
 
 # --------------------------------------------------------------------------
@@ -1152,316 +1151,6 @@ def text_fingerprint(spark, sf):
     )
 
 
-# --------------------------------------------------------------------------
-# multimodal plumbing (real codecs absent in this container — decode uses a
-# documented deterministic fake format so correctness is oracle-checkable;
-# the Spark-side schema, partitioning, Arrow batching, and numpy pixel work
-# are real and identical to what a PIL/libvips/ffmpeg backend would need)
-#
-# Fake formats (deterministic from doc_id; encoder + decoder below):
-#   image: b"OIMG" | width:uint16be | height:uint16be | channels:uint8(=1)
-#          | width*height pixel bytes, constant fill (doc_id % 256)
-#          width = 1 + doc_id % 64, height = 1 + (doc_id * 7) % 48
-#   video: b"OVID" | n_frames:uint16be | n_frames * 16-byte frame blobs
-#          n_frames = 1 + doc_id % 30
-# --------------------------------------------------------------------------
-
-_IMG_MAGIC = b"OIMG"
-_VID_MAGIC = b"OVID"
-
-
-def _fake_image_bytes(doc_id: int) -> bytes:
-    w = 1 + doc_id % 64
-    h = 1 + (doc_id * 7) % 48
-    return (
-        _IMG_MAGIC
-        + w.to_bytes(2, "big")
-        + h.to_bytes(2, "big")
-        + bytes([1])
-        + bytes([doc_id % 256]) * (w * h)
-    )
-
-
-def _fake_video_bytes(doc_id: int) -> bytes:
-    n = 1 + doc_id % 30
-    frames = b"".join(
-        bytes([(doc_id + i) % 256]) * 16 for i in range(n)
-    )
-    return _VID_MAGIC + n.to_bytes(2, "big") + frames
-
-
-def _decode_fake_image(b: bytes):
-    """Parse the fake header + numpy pixel stats — the same shape of
-    work (header parse, buffer view, vectorized reduction) a real
-    decoder does. Raises ValueError on bad magic (never-drop: callers
-    emit an error row instead of failing the task, the
-    kraken_polygonizer.py:109-122 fallback analog)."""
-    import numpy as np
-
-    if b[:4] != _IMG_MAGIC:
-        raise ValueError("bad image magic")
-    w = int.from_bytes(b[4:6], "big")
-    h = int.from_bytes(b[6:8], "big")
-    px = np.frombuffer(b[9 : 9 + w * h], dtype=np.uint8)
-    return w, h, float(px.mean())
-
-
-def _load_image_backend():
-    """THE real-codec plug-point. Resolve an image decode backend and
-    return a callable ``bytes -> (width, height)``, or None when no
-    backend is installed (this sandbox: PIL/libvips absent, so the
-    deterministic OIMG fake carries the oracle-checked plumbing). The
-    day the deployment image gains codecs, ONLY this function changes —
-    decode_image_batches and every multimodal_* key pick it up via
-    _decode_image_real. Swap-in examples: libvips (pyvips.Image
-    .new_from_buffer) or turbojpeg for JPEG-only hot paths."""
-    try:
-        from PIL import Image  # type: ignore
-        import io
-
-        return lambda data: Image.open(io.BytesIO(data)).size
-    except ImportError:
-        return None
-
-
-# lazily resolved once per process (executor workers re-resolve on
-# first use after fork/import; [] = not yet resolved)
-_IMAGE_BACKEND_CACHE: list = []
-
-
-def _image_backend():
-    if not _IMAGE_BACKEND_CACHE:
-        _IMAGE_BACKEND_CACHE.append(_load_image_backend())
-    return _IMAGE_BACKEND_CACHE[0]
-
-
-def _decode_image_real(data: bytes):
-    """Decode via the plugged real backend; NotImplementedError when
-    none is installed (callers fall back to the fake-format decode or
-    an error row — never a task failure)."""
-    backend = _image_backend()
-    if backend is None:
-        raise NotImplementedError("image decode backend not installed")
-    return backend(data)
-
-
-@register(
-    "multimodal_meta",
-    "SELECT doc_id, octet_length(CAST(text AS BLOB)) AS n_bytes, "
-    "lower(hex(CAST(substring(text, 1, 4) AS BLOB))) AS header_hex "
-    "FROM documents",
-)
-def multimodal_meta(spark, sf):
-    """Multimodal column plumbing: opaque binary 'media' column processed
-    in Arrow batches via mapInPandas — schema, batching, and typed
-    metadata extraction are real; decode falls back to a deterministic
-    header fingerprint when no codec backend exists."""
-    d = load_table(spark, sf, "documents").select(
-        "doc_id", F.col("text").cast("binary").alias("media")
-    )
-    return d.mapInPandas(
-        meta_batches, "doc_id long, n_bytes long, header_hex string"
-    )
-
-
-def meta_batches(batches):
-    """mapInPandas body for opaque-media metadata (module-level so tests
-    can run it on adversarial frames). A NULL blob (e.g. NULL text cast
-    to binary — an expected upstream-extraction-failure case) yields
-    NULL metadata, matching octet_length(NULL)/hex(NULL) on the oracle
-    side, never a task failure."""
-    import pandas as pd
-
-    for pdf in batches:
-        metas = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-            if blob is None:
-                metas.append((int(doc_id), None, None))
-                continue
-            b = bytes(blob)
-            try:
-                _decode_image_real(b)  # stub: raises NotImplementedError
-            except NotImplementedError:
-                pass
-            metas.append((int(doc_id), len(b), b[:4].hex()))
-        yield pd.DataFrame(
-            metas, columns=["doc_id", "n_bytes", "header_hex"]
-        )
-
-
-def _fake_media(spark, sf, kind: str) -> DataFrame:
-    """Stage an opaque binary media column (the encode half of the
-    plumbing) — one mapInPandas producing bytes rows, exactly how a
-    real pipeline would carry fetched image/video blobs."""
-    import pandas as pd
-
-    enc = {
-        "image": _fake_image_bytes,
-        "image_ramp": _fake_image_ramp_bytes,
-        "page": _fake_page_bytes,
-        "video": _fake_video_bytes,
-        "audio": _fake_audio_bytes,
-    }[kind]
-
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "media": [enc(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
-    d = load_table(spark, sf, "documents").select("doc_id")
-    return d.mapInPandas(gen, "doc_id long, media binary")
-
-
-_DECODE_SCHEMA = (
-    "doc_id long, width long, height long, mean_px double, error string"
-)
-
-
-def decode_image_batches(batches):
-    """mapInPandas body for image decode (module-level so tests can run
-    it on adversarial frames). Row-level try/except: malformed blobs
-    yield an error row, never a task failure."""
-    import pandas as pd
-
-    for pdf in batches:
-        rows = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-            try:
-                if blob is None:
-                    raise ValueError("null media")
-                b = bytes(blob)
-                try:
-                    w, h = _decode_image_real(b)
-                    mean = None
-                except NotImplementedError:
-                    w, h, mean = _decode_fake_image(b)
-                rows.append((int(doc_id), w, h, mean, None))
-            except Exception as exc:  # never-drop fallback (R8)
-                rows.append((int(doc_id), None, None, None, str(exc)))
-        yield pd.DataFrame(
-            rows,
-            columns=["doc_id", "width", "height", "mean_px", "error"],
-        )
-
-
-@register(
-    "multimodal_decode",
-    "SELECT doc_id, 1 + doc_id % 64 AS width, "
-    "1 + (doc_id * 7) % 48 AS height, "
-    "CAST(doc_id % 256 AS DOUBLE) AS mean_px, "
-    "CAST(NULL AS VARCHAR) AS error FROM documents",
-)
-def multimodal_decode(spark, sf):
-    """Image decode plumbing: binary media column -> typed metadata +
-    pixel stats via mapInPandas (real codec gated; deterministic fake
-    format decoded with numpy)."""
-    return _fake_media(spark, sf, "image").mapInPandas(
-        decode_image_batches, _DECODE_SCHEMA
-    )
-
-
-@register(
-    "multimodal_resize",
-    # numpy [::2] keeps ceil(n/2) elements -> thumb dim = (dim + 1) // 2
-    "SELECT doc_id, 1 + doc_id % 64 AS width, 1 + (doc_id * 7) % 48 "
-    "AS height, (2 + doc_id % 64) // 2 AS thumb_w, "
-    "(2 + (doc_id * 7) % 48) // 2 AS thumb_h, "
-    "((2 + doc_id % 64) // 2) * ((2 + (doc_id * 7) % 48) // 2) "
-    "AS thumb_bytes FROM documents",
-)
-def multimodal_resize(spark, sf):
-    """Thumbnail resize plumbing: decode -> 2x2 numpy stride downsample
-    -> re-emit binary thumbnail + dims. The array slicing is the real
-    resize kernel shape; only the codec is fake."""
-    import numpy as np
-    import pandas as pd
-
-    def resize(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-                b = bytes(blob)
-                w, h, _ = _decode_fake_image(b)
-                px = np.frombuffer(b[9 : 9 + w * h], dtype=np.uint8)
-                thumb = px.reshape(h, w)[:: 2, :: 2]  # stride downsample
-                rows.append(
-                    (
-                        int(doc_id), w, h,
-                        thumb.shape[1], thumb.shape[0],
-                        len(thumb.tobytes()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "thumb_w", "thumb_h",
-                    "thumb_bytes",
-                ],
-            )
-
-    return _fake_media(spark, sf, "image").mapInPandas(
-        resize,
-        "doc_id long, width long, height long, thumb_w long, "
-        "thumb_h long, thumb_bytes long",
-    )
-
-
-_FRAME_SAMPLE_SCHEMA = (
-    "doc_id long, n_frames long, n_sampled long, error string"
-)
-
-
-def sample_video_batches(batches):
-    """mapInPandas body for video frame sampling (module-level so tests
-    can run it on adversarial frames). Row-level try/except: a malformed
-    blob yields an error row, never a task failure — same never-drop
-    contract as :func:`decode_image_batches` (reference analog:
-    _calculate_fallback, src/octopy/plugins/kraken_polygonizer.py:109-122)."""
-    import numpy as np
-    import pandas as pd
-
-    for pdf in batches:
-        rows = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-            try:
-                if blob is None:
-                    raise ValueError("null media")
-                b = bytes(blob)
-                if b[:4] != _VID_MAGIC:
-                    raise ValueError("bad video magic")
-                n = int.from_bytes(b[4:6], "big")
-                frames = np.frombuffer(
-                    b[6 : 6 + n * 16], dtype=np.uint8
-                ).reshape(n, 16)
-                sampled = frames[::5]
-                rows.append((int(doc_id), n, sampled.shape[0], None))
-            except Exception as exc:  # never-drop fallback (R8)
-                rows.append((int(doc_id), None, None, str(exc)))
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "n_frames", "n_sampled", "error"]
-        )
-
-
-@register(
-    "multimodal_frame_sample",
-    "SELECT doc_id, 1 + doc_id % 30 AS n_frames, "
-    "(1 + doc_id % 30 + 4) // 5 AS n_sampled, "
-    "CAST(NULL AS VARCHAR) AS error FROM documents",
-)
-def multimodal_frame_sample(spark, sf):
-    """Video frame-sample plumbing: binary stream -> every-5th-frame
-    sample via numpy reshape/stride — the decode is the fake OVID
-    container; the batching, frame indexing, and output schema are what
-    an ffmpeg-backed sampler needs."""
-    return _fake_media(spark, sf, "video").mapInPandas(
-        sample_video_batches, _FRAME_SAMPLE_SCHEMA
-    )
-
-
 @register(
     "dedup_url_canonicalize",
     # raw variants synthesized identically in both engines: case noise,
@@ -1865,8 +1554,6 @@ def dedup_cluster_cc(spark, sf):
             break
         prev_sum = cur_sum
     return cc
-
-
 
 
 def simhash_signatures(docs: DataFrame, bits: int = 32) -> DataFrame:
@@ -2336,7 +2023,6 @@ def graph_label_propagation(spark, sf):
             )
         )
     return labels.select("node", F.col("lbl").alias("label"))
-
 
 
 _FRONTIER_SQL = f"""
@@ -2997,130 +2683,6 @@ def text_repetition_filter(spark, sf):
                 <= 2 * F.col("n_bigrams")
             )
         ).alias("keep"),
-    )
-
-
-# --------------------------------------------------------------------------
-# multimodal: audio
-# --------------------------------------------------------------------------
-
-_AUD_MAGIC = b"OAUD"
-
-
-def _fake_audio_bytes(doc_id: int) -> bytes:
-    """Deterministic fake PCM container: magic + u16 sample count +
-    uint8 samples s[i] = (doc_id*3 + i*5) % 256 — a sawtooth whose
-    integer stats are reconstructable analytically (the oracle side)."""
-    n = 64 + doc_id % 192
-    samples = bytes((doc_id * 3 + i * 5) % 256 for i in range(n))
-    return _AUD_MAGIC + n.to_bytes(2, "big") + samples
-
-
-_AUDIO_SCHEMA = (
-    "doc_id long, n_samples long, energy long, peak long, "
-    "n_clipped long, error string"
-)
-
-
-def audio_stats_batches(batches):
-    """mapInPandas body for audio feature extraction (module-level so
-    tests can feed it adversarial frames). All stats are exact int64
-    reductions over the sample buffer — the same buffer-view +
-    vectorized-reduction shape a real resampler/VAD front-end has.
-    Row-level try/except: malformed blobs yield an error row, never a
-    task failure (same never-drop contract as decode_image_batches)."""
-    import numpy as np
-    import pandas as pd
-
-    for pdf in batches:
-        rows = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-            try:
-                # inside the try: a NULL media value (nullable binary
-                # column upstream) must yield an error row, not a
-                # TypeError that kills the task
-                if blob is None:
-                    raise ValueError("null media")
-                b = bytes(blob)
-                if b[:4] != _AUD_MAGIC:
-                    raise ValueError("bad audio magic")
-                n = int.from_bytes(b[4:6], "big")
-                s = np.frombuffer(b[6 : 6 + n], dtype=np.uint8).astype(
-                    np.int64
-                )
-                if len(s) != n:
-                    raise ValueError("truncated audio payload")
-                rows.append(
-                    (
-                        int(doc_id),
-                        n,
-                        int((s * s).sum()),
-                        int(s.max()),
-                        int((s > 250).sum()),
-                        None,
-                    )
-                )
-            except Exception as exc:  # never-drop fallback (R8)
-                rows.append(
-                    (int(doc_id), None, None, None, None, str(exc))
-                )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "n_samples", "energy", "peak", "n_clipped",
-                "error",
-            ],
-        )
-
-
-@register(
-    "multimodal_audio_stats",
-    # the sawtooth's integer stats reconstructed analytically per doc:
-    # energy = sum of squares, peak = max, n_clipped = count > 250 —
-    # all exact int64 so the comparison is engine-independent
-    """
-    SELECT doc_id,
-           64 + doc_id % 192 AS n_samples,
-           CAST(list_aggregate(
-             list_transform(range(64 + doc_id % 192),
-               i -> ((doc_id * 3 + i * 5) % 256)
-                    * ((doc_id * 3 + i * 5) % 256)),
-             'sum') AS BIGINT) AS energy,
-           list_aggregate(
-             list_transform(range(64 + doc_id % 192),
-               i -> (doc_id * 3 + i * 5) % 256),
-             'max') AS peak,
-           len(list_filter(
-             list_transform(range(64 + doc_id % 192),
-               i -> (doc_id * 3 + i * 5) % 256),
-             x -> x > 250)) AS n_clipped,
-           CAST(NULL AS VARCHAR) AS error
-    FROM documents
-    """,
-)
-def multimodal_audio_stats(spark, sf):
-    """Audio feature-extraction plumbing: opaque binary PCM column ->
-    exact integer energy/peak/clipping stats via Arrow-batched
-    mapInPandas — completes the image/video/audio multimodal triple.
-    The codec is the documented fake OAUD container (no audio libs in
-    this container); the batching, buffer views, vectorized reductions,
-    and never-drop error rows are the real deployment shape."""
-    import pandas as pd
-
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "media": [
-                        _fake_audio_bytes(int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    d = load_table(spark, sf, "documents").select("doc_id")
-    return d.mapInPandas(gen, "doc_id long, media binary").mapInPandas(
-        audio_stats_batches, _AUDIO_SCHEMA
     )
 
 
@@ -4202,9 +3764,6 @@ def _train_logistic_sql(steps: int, emit: str = "model") -> str:
     )
 
 
-
-
-
 def _train_feature_frame(spark, sf):
     """Shared trainer input: doc_id + integer char-count features + the
     deterministic quality label + the content-stable split flag."""
@@ -4229,7 +3788,6 @@ def _train_feature_frame(spark, sf):
         ((F.col("doc_id") % 10) < 8).alias("is_train"),
     )
     return frame, list(feats)
-
 
 
 @register("train_quality_classifier", _train_logistic_sql(_TRAIN_STEPS))
@@ -4608,97 +4166,6 @@ def sim_ann_recall_eval(spark, sf):
 
 
 # --------------------------------------------------------------------------
-# multimodal_scene_cut — shot-boundary detection over the video column
-# --------------------------------------------------------------------------
-
-_SCENE_CUT_THRESHOLD = 32.0
-
-_SCENE_CUT_SCHEMA = (
-    "doc_id long, n_frames long, n_cuts long, "
-    "first_cut_frame long, error string"
-)
-
-
-def scene_cut_batches(batches):
-    """mapInPandas body: decode OVID frames -> per-frame mean luma ->
-    abs inter-frame delta -> cut where delta > threshold. The numpy
-    reshape/mean/diff is the real shot-boundary kernel shape an
-    ffmpeg-backed detector runs on decoded luma planes; only the
-    container parse is the fake codec. Never-drop: malformed or null
-    blobs yield an error row, never a task failure (R8)."""
-    import numpy as np
-    import pandas as pd
-
-    for pdf in batches:
-        rows = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-            try:
-                if blob is None:
-                    raise ValueError("null media")
-                b = bytes(blob)
-                if b[:4] != _VID_MAGIC:
-                    raise ValueError("bad magic")
-                n = int.from_bytes(b[4:6], "big")
-                px = np.frombuffer(
-                    b[6 : 6 + 16 * n], dtype=np.uint8
-                ).reshape(n, 16)
-                means = px.mean(axis=1)
-                cuts = np.nonzero(
-                    np.abs(np.diff(means)) > _SCENE_CUT_THRESHOLD
-                )[0]
-                rows.append(
-                    (
-                        int(doc_id), n, int(cuts.size),
-                        int(cuts[0]) if cuts.size else None, None,
-                    )
-                )
-            except Exception as exc:
-                rows.append((int(doc_id), None, None, None, str(exc)))
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "n_frames", "n_cuts", "first_cut_frame", "error",
-            ],
-        )
-
-
-@register(
-    "multimodal_scene_cut",
-    # frame i fills with (doc_id+i)%256, so the ONLY above-threshold
-    # delta is the 255->0 wrap: cut index r = 255 - doc_id%256 exists
-    # iff r <= n-2 (diff i sits between frames i and i+1; n = 1+doc_id%30)
-    """
-    SELECT doc_id,
-           CAST(1 + doc_id % 30 AS BIGINT) AS n_frames,
-           CAST(CASE WHEN 255 - doc_id % 256 <= doc_id % 30 - 1
-                THEN 1 ELSE 0 END AS BIGINT) AS n_cuts,
-           CASE WHEN 255 - doc_id % 256 <= doc_id % 30 - 1
-                THEN CAST(255 - doc_id % 256 AS BIGINT)
-                ELSE NULL END AS first_cut_frame,
-           CAST(NULL AS VARCHAR) AS error
-    FROM documents
-    """,
-)
-def multimodal_scene_cut(spark, sf):
-    """Shot-boundary (scene-cut) detection over the opaque video
-    column — the segmentation step a video-training pipeline runs
-    before frame sampling (sample per SHOT, not per fixed stride, so
-    no shot is missed and none dominates). Per clip: frame count, cut
-    count, first cut index; the fake codec's deterministic fill makes
-    every expected cut reconstructable in SQL, so threshold logic and
-    indexing are oracle-pinned exactly.
-
-    Scale shape: identical to the other multimodal keys — Arrow
-    batches through one mapInPandas, numpy vectorized per clip, no
-    shuffle at all; never-drop error rows. Reference analog: R3
-    stage-1 segmentation (reference src/octopy/segment.py baseline
-    detection) applied on the time axis."""
-    return _fake_media(spark, sf, "video").mapInPandas(
-        scene_cut_batches, _SCENE_CUT_SCHEMA
-    )
-
-
-# --------------------------------------------------------------------------
 # text_tfidf_topk — per-document top-k TF-IDF keyword extraction
 # --------------------------------------------------------------------------
 
@@ -4974,103 +4441,6 @@ def cluster_kmeans_step(spark, sf):
             (F.col("code_sum").cast("double") / F.col("n_members"))
             .alias("centroid"),
         )
-    )
-
-
-# --------------------------------------------------------------------------
-# multimodal_audio_vad — voice-activity segments over the audio column
-# --------------------------------------------------------------------------
-
-_VAD_THRESHOLD = 128  # uint8 amplitude gate
-
-_VAD_SCHEMA = (
-    "doc_id long, n_samples long, n_active long, n_segments long, "
-    "error string"
-)
-
-
-def audio_vad_batches(batches):
-    """mapInPandas body: OAUD samples -> amplitude gate -> contiguous
-    active-run count. The numpy compare + diff transition count is the
-    real energy-VAD kernel shape (a production front-end swaps the
-    gate for a smoothed energy threshold; the segmentation logic is
-    identical). Never-drop: malformed/null blobs yield error rows."""
-    import numpy as np
-    import pandas as pd
-
-    for pdf in batches:
-        rows = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-            try:
-                if blob is None:
-                    raise ValueError("null media")
-                b = bytes(blob)
-                if b[:4] != _AUD_MAGIC:
-                    raise ValueError("bad magic")
-                n = int.from_bytes(b[4:6], "big")
-                s = np.frombuffer(b[6 : 6 + n], dtype=np.uint8)
-                if len(s) != n:
-                    raise ValueError("truncated audio payload")
-                active = s >= _VAD_THRESHOLD
-                starts = int(active[0]) + int(
-                    (active[1:] & ~active[:-1]).sum()
-                ) if n else 0
-                rows.append(
-                    (int(doc_id), n, int(active.sum()), starts, None)
-                )
-            except Exception as exc:
-                rows.append((int(doc_id), None, None, None, str(exc)))
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "n_samples", "n_active", "n_segments", "error",
-            ],
-        )
-
-
-@register(
-    "multimodal_audio_vad",
-    # samples are the sawtooth s[i] = (doc_id*3 + 5i) % 256; a segment
-    # STARTS at i=0 if s[0] >= 128, else exactly where s[i] crosses up
-    # into [128, 132] (the previous sample s[i]-5 was < 128; the 256
-    # wrap lands at s[i] < 5, whose predecessor was active — no start)
-    f"""
-    WITH ex AS (
-      SELECT doc_id,
-             unnest(range(0, 64 + doc_id % 192)) AS i,
-             (doc_id * 3 + 5 * unnest(range(0, 64 + doc_id % 192))) % 256
-               AS v
-      FROM documents)
-    SELECT doc_id,
-           CAST(count(*) AS BIGINT) AS n_samples,
-           CAST(sum(CASE WHEN v >= {_VAD_THRESHOLD} THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_active,
-           CAST(sum(CASE
-                 WHEN i = 0 AND v >= {_VAD_THRESHOLD} THEN 1
-                 WHEN i > 0 AND v BETWEEN {_VAD_THRESHOLD}
-                      AND {_VAD_THRESHOLD + 4} THEN 1
-                 ELSE 0 END) AS BIGINT) AS n_segments,
-           CAST(NULL AS VARCHAR) AS error
-    FROM ex GROUP BY doc_id
-    """,
-)
-def multimodal_audio_vad(spark, sf):
-    """Voice-activity detection over the opaque audio column — the
-    segmentation step a speech-data pipeline runs before transcription
-    (cut on silence, transcribe per active segment): per clip the
-    sample count, active-sample count, and number of contiguous active
-    segments. The sawtooth codec makes every expected segment boundary
-    reconstructable analytically, so the gate AND the run-counting
-    logic are oracle-pinned exactly.
-
-    Scale shape: same as the other multimodal keys — one Arrow-batched
-    mapInPandas, numpy-vectorized per clip, zero shuffle, never-drop
-    error rows; the oracle's per-sample explode exists only on the
-    DuckDB side (the Spark side never materializes per-sample rows).
-    Reference analog: R3 stage-1 segmentation on the time axis, like
-    multimodal_scene_cut for video."""
-    return _fake_media(spark, sf, "audio").mapInPandas(
-        audio_vad_batches, _VAD_SCHEMA
     )
 
 
@@ -5738,227 +5108,6 @@ def corpus_vocab_growth(spark, sf):
 
 
 # --------------------------------------------------------------------------
-# dedup_image_phash — banded perceptual-hash image dedup
-# --------------------------------------------------------------------------
-
-_PHASH_CAP = 64  # per-bucket member cap (deterministic, oracle-mirrored)
-_PHASH_HAM_T = 3  # <= 3 differing bits over 4 bands => pigeonhole-complete
-
-_PHASH_SQL = f"""
-    WITH img AS (
-      SELECT doc_id,
-             16 + doc_id % 48 AS w, 16 + (doc_id * 7) % 32 AS h,
-             doc_id % 256 AS base, 1 + doc_id % 97 AS xstep,
-             doc_id % 5 AS ystep
-      FROM documents),
-    bits AS (
-      SELECT doc_id, gi.i AS i, gj.j AS j,
-             CASE WHEN (base + (((gj.j + 1) * w) // 9) * xstep
-                        + ((gi.i * h) // 8) * ystep) % 256
-                      > (base + ((gj.j * w) // 9) * xstep
-                        + ((gi.i * h) // 8) * ystep) % 256
-                  THEN 1 ELSE 0 END AS bit
-      FROM img, generate_series(0, 7) gi(i), generate_series(0, 7) gj(j)),
-    bands AS (
-      SELECT doc_id, i // 2 AS band_idx,
-             CAST(sum(bit * (1 << ((i % 2) * 8 + j))) AS BIGINT)
-               AS band_val
-      FROM bits GROUP BY doc_id, i // 2),
-    mem AS (
-      SELECT band_idx, band_val, doc_id,
-             row_number() OVER (
-               PARTITION BY band_idx, band_val ORDER BY doc_id) AS rn
-      FROM bands),
-    pairs AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM mem a JOIN mem b
-        ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-       AND a.doc_id < b.doc_id
-      WHERE a.rn <= {_PHASH_CAP} AND b.rn <= {_PHASH_CAP}),
-    ham AS (
-      SELECT p.doc_a, p.doc_b,
-             CAST(sum(bit_count(xor(x.band_val, y.band_val))) AS BIGINT)
-               AS hamming
-      FROM pairs p
-      JOIN bands x ON x.doc_id = p.doc_a
-      JOIN bands y ON y.doc_id = p.doc_b AND y.band_idx = x.band_idx
-      GROUP BY 1, 2)
-    SELECT doc_a, doc_b, hamming FROM ham WHERE hamming <= {_PHASH_HAM_T}
-    """
-
-
-def _fake_image_ramp_bytes(doc_id: int) -> bytes:
-    """OIMG container with a two-axis modular RAMP fill (px[y][x] =
-    (base + x*xstep + y*ystep) mod 256) instead of the constant fill —
-    constant images hash identically under any perceptual hash, so the
-    dedup key needs structured pixels; the ramp keeps every pixel (and
-    therefore the expected dHash) SQL-reconstructable from doc_id alone,
-    the multimodal_scene_cut oracle discipline."""
-    import numpy as np
-
-    w = 16 + doc_id % 48
-    h = 16 + (doc_id * 7) % 32
-    base = doc_id % 256
-    xstep = 1 + doc_id % 97
-    ystep = doc_id % 5
-    x = np.arange(w, dtype=np.int64)
-    y = np.arange(h, dtype=np.int64)
-    px = (
-        (base + x[None, :] * xstep + y[:, None] * ystep) % 256
-    ).astype(np.uint8)
-    return (
-        _IMG_MAGIC
-        + w.to_bytes(2, "big")
-        + h.to_bytes(2, "big")
-        + bytes([1])
-        + px.tobytes()
-    )
-
-
-_PHASH_SCHEMA = (
-    "doc_id long, b0 long, b1 long, b2 long, b3 long, error string"
-)
-
-
-def phash_batches(batches):
-    """mapInPandas body: decode OIMG -> 8x9 grid sample -> dHash
-    (horizontal neighbor comparisons, 64 bits) emitted as FOUR 16-bit
-    band values (b0..b3, rows 2k/2k+1) — banding is the point, and four
-    bounded ints also sidestep the signed-BIGINT overflow a packed
-    64-bit hash would hit in cross-engine sums. Row-level try/except:
-    malformed blobs yield an error row, never a task failure (R8)."""
-    import numpy as np
-    import pandas as pd
-
-    for pdf in batches:
-        rows = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-            try:
-                if blob is None:
-                    raise ValueError("null media")
-                b = bytes(blob)
-                if b[:4] != _IMG_MAGIC:
-                    raise ValueError("bad image magic")
-                w = int.from_bytes(b[4:6], "big")
-                h = int.from_bytes(b[6:8], "big")
-                px = np.frombuffer(b[9 : 9 + w * h], dtype=np.uint8)
-                if px.size != w * h or w < 9 or h < 8:
-                    raise ValueError("truncated or tiny image")
-                g = px.reshape(h, w)[
-                    np.ix_(
-                        (np.arange(8) * h) // 8, (np.arange(9) * w) // 9
-                    )
-                ].astype(np.int64)
-                bits = (g[:, 1:] > g[:, :-1]).astype(np.int64)
-                vals = [
-                    int(
-                        (
-                            bits[2 * k : 2 * k + 2].reshape(-1)
-                            << np.arange(16)
-                        ).sum()
-                    )
-                    for k in range(4)
-                ]
-                rows.append((int(doc_id), *vals, None))
-            except Exception as exc:  # never-drop fallback (R8)
-                rows.append(
-                    (int(doc_id), None, None, None, None, str(exc))
-                )
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "b0", "b1", "b2", "b3", "error"]
-        )
-
-
-@register("dedup_image_phash", _PHASH_SQL)
-def dedup_image_phash(spark, sf):
-    """Near-duplicate IMAGE detection via banded perceptual hashing —
-    the dedup x multimodal cell: dHash over the decoded pixel grid,
-    split into 4 x 16-bit bands, candidate pairs only WITHIN shared
-    band buckets (never all-pairs), exact Hamming verify <= 3. With 4
-    bands, any pair within Hamming 3 differs in at most 3 bands and
-    therefore SHARES at least one — the same pigeonhole completeness
-    law as dedup_simhash_banded, here over pixels instead of text.
-
-    Buckets are capped at the 64 LOWEST doc_ids (not the keyed-hash
-    sample minhash uses) because this key's cap must replay exactly in
-    the DuckDB oracle — row_number over doc_id is the SQL-expressible
-    deterministic choice; the bias (hot buckets keep early docs) is
-    acceptable for a guardrail that, like every LSH cap here, only
-    bounds degenerate buckets. Members carry their full hash in the
-    struct so pair expansion needs NO join back to the hash table (and
-    therefore never recomputes the Python decode stage — the
-    minhash-lsh no-self-join lesson).
-
-    Scale shape: one Arrow-batched mapInPandas (decode + hash, the only
-    Python stage), one groupBy shuffle on (band_idx, band_val), pair
-    expansion from capped member arrays, distinct. At 100 TB the decode
-    stage is embarrassingly parallel and the banding keeps candidate
-    generation linear in bucket count. Reference analog: R3 stage-1
-    segmentation features feeding R9 classification
-    (/root/reference/src/octopy/segment.py) — here the 'features' are
-    the perceptual hash and the 'classes' are dup clusters."""
-    media = _fake_media(spark, sf, "image_ramp")
-    hashes = media.mapInPandas(phash_batches, _PHASH_SCHEMA).filter(
-        F.col("error").isNull()
-    )
-    bands = hashes.select(
-        "doc_id",
-        "b0",
-        "b1",
-        "b2",
-        "b3",
-        F.posexplode(F.array("b0", "b1", "b2", "b3")).alias(
-            "band_idx", "band_val"
-        ),
-    )
-    buckets = (
-        bands.groupBy("band_idx", "band_val")
-        .agg(
-            F.slice(
-                F.sort_array(
-                    F.collect_set(
-                        F.struct(
-                            F.col("doc_id").alias("id"),
-                            F.col("b0"),
-                            F.col("b1"),
-                            F.col("b2"),
-                            F.col("b3"),
-                        )
-                    )
-                ),
-                1,
-                _PHASH_CAP,
-            ).alias("members")
-        )
-        .filter(F.size("members") >= 2)
-    )
-    lhs = buckets.select(
-        F.posexplode("members").alias("i", "m"), "members"
-    )
-    pairs = lhs.select(
-        F.col("m"),
-        F.explode(
-            F.slice(F.col("members"), F.col("i") + 2, F.size("members"))
-        ).alias("m2"),
-    )
-    hamming = sum(
-        F.bit_count(
-            F.col(f"m.b{k}").bitwiseXOR(F.col(f"m2.b{k}"))
-        ).cast("long")
-        for k in range(4)
-    )
-    return (
-        pairs.select(
-            F.col("m.id").alias("doc_a"),
-            F.col("m2.id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= _PHASH_HAM_T)
-        .distinct()
-    )
-
-
-# --------------------------------------------------------------------------
 # text_bpe_merges — distributed BPE merge learning (vocab induction)
 # --------------------------------------------------------------------------
 
@@ -6340,159 +5489,6 @@ def text_bpe_apply(spark, sf):
 
 
 # --------------------------------------------------------------------------
-# multimodal_ocr_lines — segment-then-recognize over page images
-# --------------------------------------------------------------------------
-
-# page geometry, all derived from doc_id alone so the DuckDB oracle can
-# replay segmentation AND recognition arithmetically (the
-# multimodal_scene_cut / dedup_image_phash oracle discipline)
-_OCR_CW = 8  # character cell width in px
-
-
-def _fake_page_bytes(doc_id: int) -> bytes:
-    """OIMG container holding a striped 'scanned page': n_lines ink
-    bands (pixel = (doc_id + x) % 96, always dark) separated by blank
-    gaps (255).  Ink value depends on x only, so each character cell's
-    ink sum — and therefore the deterministic 'recognition' output —
-    is reconstructable from doc_id in pure SQL."""
-    import numpy as np
-
-    w = 24 + doc_id % 40
-    lh = 3 + doc_id % 4
-    g = 2 + doc_id % 3
-    nl = 3 + doc_id % 6
-    h = nl * (lh + g) + g
-    px = np.full((h, w), 255, dtype=np.uint8)
-    ink = ((doc_id + np.arange(w, dtype=np.int64)) % 96).astype(np.uint8)
-    for k in range(nl):
-        y0 = g + k * (lh + g)
-        px[y0 : y0 + lh, :] = ink[None, :]
-    return (
-        _IMG_MAGIC
-        + w.to_bytes(2, "big")
-        + h.to_bytes(2, "big")
-        + bytes([1])
-        + px.tobytes()
-    )
-
-
-_OCR_SCHEMA = (
-    "doc_id long, line_idx long, y0 long, y1 long, "
-    "text string, n_chars long, error string"
-)
-
-
-def ocr_line_batches(batches):
-    """mapInPandas body: the reference's two CLI stages fused per page.
-    Stage 1 SEGMENT: horizontal projection profile (row mean < 128 =>
-    ink) -> consecutive-run detection -> line boxes, exactly Kraken's
-    baseline-segmentation shape flattened to stripes. Stage 2
-    RECOGNIZE: per 8-px character cell, ink-sum mod 26 -> letter (the
-    deterministic stand-in for a recognition model's argmax). Row-level
-    try/except: malformed pages yield an error row, never a task
-    failure (R8)."""
-    import numpy as np
-    import pandas as pd
-
-    cols = ["doc_id", "line_idx", "y0", "y1", "text", "n_chars", "error"]
-    for pdf in batches:
-        rows = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-            try:
-                if blob is None:
-                    raise ValueError("null media")
-                b = bytes(blob)
-                if b[:4] != _IMG_MAGIC:
-                    raise ValueError("bad image magic")
-                w = int.from_bytes(b[4:6], "big")
-                h = int.from_bytes(b[6:8], "big")
-                px = np.frombuffer(b[9 : 9 + w * h], dtype=np.uint8)
-                if px.size != w * h or w < _OCR_CW:
-                    raise ValueError("truncated or tiny page")
-                page = px.reshape(h, w).astype(np.int64)
-                inky = page.mean(axis=1) < 128  # projection profile
-                edges = np.flatnonzero(np.diff(inky.astype(np.int8)))
-                starts = (
-                    ([0] if inky[0] else []) + (edges + 1).tolist()
-                )
-                runs = [
-                    (int(s), int(e))
-                    for s, e in zip(starts, starts[1:] + [h])
-                    if inky[s]
-                ]
-                nc = w // _OCR_CW
-                for k, (y0, y1) in enumerate(runs):
-                    band = page[y0:y1, : nc * _OCR_CW]
-                    sums = band.sum(axis=0).reshape(nc, _OCR_CW).sum(
-                        axis=1
-                    )
-                    text = "".join(
-                        chr(65 + int(s) % 26) for s in sums
-                    )
-                    rows.append(
-                        (int(doc_id), k, y0, y1, text, nc, None)
-                    )
-            except Exception as exc:  # never-drop fallback (R8)
-                rows.append(
-                    (int(doc_id), None, None, None, None, None,
-                     str(exc))
-                )
-        yield pd.DataFrame(rows, columns=cols)
-
-
-_OCR_SQL = """
-    WITH p AS (
-      SELECT doc_id, 24 + doc_id % 40 AS w, 3 + doc_id % 4 AS lh,
-             2 + doc_id % 3 AS g, 3 + doc_id % 6 AS nl
-      FROM documents),
-    lines AS (
-      SELECT doc_id, w, lh, g, k.k AS line_idx,
-             g + k.k * (lh + g) AS y0,
-             g + k.k * (lh + g) + lh AS y1
-      FROM p, generate_series(0, 7) k(k) WHERE k.k < nl),
-    cells AS (
-      SELECT doc_id, line_idx, y0, y1, lh, w, c.c AS c
-      FROM lines, generate_series(0, 7) c(c) WHERE c.c < w // 8),
-    codes AS (
-      SELECT doc_id, line_idx, y0, y1, c,
-             CAST(lh * sum((doc_id + c * 8 + x.x) % 96) AS BIGINT)
-               % 26 AS code
-      FROM cells, generate_series(0, 7) x(x)
-      GROUP BY doc_id, line_idx, y0, y1, c, lh)
-    SELECT doc_id, line_idx, y0, y1,
-           string_agg(chr(65 + CAST(code AS INTEGER)), ''
-                      ORDER BY c) AS text,
-           count(*) AS n_chars
-    FROM codes
-    GROUP BY doc_id, line_idx, y0, y1
-    """
-
-
-@register("multimodal_ocr_lines", _OCR_SQL)
-def multimodal_ocr_lines(spark, sf):
-    """Page-image OCR: segment each scanned page into text lines, then
-    recognize each line — the closest analog in this engine to the
-    reference's entire reason to exist (octopy wraps Kraken's segment
-    -> recognize CLI; /root/reference/src/octopy/segment.py and
-    recognize.py are stages 1 and 2). Here stage 1 is a horizontal
-    projection-profile segmenter and stage 2 a deterministic per-cell
-    classifier, both fused into ONE Arrow-batched mapInPandas so each
-    page is decoded once (the R3/R6 shared-precompute discipline).
-
-    Scale shape: embarrassingly parallel — one Python stage, zero
-    shuffles, output rows ~8 per page. At 100 TB the plan is scan ->
-    mapInPandas -> sink; per-page cost is bounded by the (w*h <= 64*84)
-    decode. The striped synthetic page keeps the expected line boxes
-    AND the recognized text SQL-reconstructable from doc_id, so the
-    whole two-stage flow is oracle-verified end to end — segmentation
-    (y0/y1 boxes), reading order (line_idx), and recognition (text)."""
-    media = _fake_media(spark, sf, "page")
-    return media.mapInPandas(ocr_line_batches, _OCR_SCHEMA).filter(
-        F.col("error").isNull()
-    ).drop("error")
-
-
-# --------------------------------------------------------------------------
 # sim_ann_pq_adc — product-quantization codebook + asymmetric distance
 # --------------------------------------------------------------------------
 
@@ -6803,101 +5799,6 @@ def text_cooccurrence_pmi(spark, sf):
                 "pair_n * n_tokens * 1000000 div (x_n * y_n)"
             ).alias("pmi_ratio_micro"),
         )
-    )
-
-
-# --------------------------------------------------------------------------
-# scan_binary_files — binaryFile ingestion of an image-blob landing dir
-# --------------------------------------------------------------------------
-
-_BINSCAN_MAX_ID = 200
-
-
-def _stage_image_blobs(spark, sf: str) -> str:
-    """Materialize one OIMG blob file per document (doc_id < 200) under
-    /tmp, once per (sf, fingerprint) — the simulated object-store
-    landing a multimodal ingest job reads. Same idempotent staging
-    contract as sources.stage_format_copy."""
-    import os
-
-    from octospark.sources import _staged_dir
-
-    def write(dest: str) -> None:
-        # the ids collect lives INSIDE write() so the idempotent fast
-        # path (marker already present) costs zero Spark jobs — the
-        # stage_format_copy discipline; the collect itself is bounded
-        # by _BINSCAN_MAX_ID rows
-        ids = [
-            r.doc_id
-            for r in load_table(spark, sf, "documents")
-            .select("doc_id")
-            .filter(F.col("doc_id") < _BINSCAN_MAX_ID)
-            .collect()
-        ]
-        os.makedirs(dest, exist_ok=True)
-        for i in ids:
-            with open(os.path.join(dest, f"img_{i:06d}.oimg"), "wb") as f:
-                f.write(_fake_image_bytes(i))
-        # marker last: a crashed write never looks complete
-        open(os.path.join(dest, "_STAGED"), "w").close()
-
-    return _staged_dir(
-        sf, "documents", "octospark_src", "images.bin", "_STAGED", write
-    )
-
-
-def _be_int(pos: int, nbytes: int):
-    """Big-endian unsigned int from a binary-column slice, decoded
-    entirely JVM-side (substring -> hex -> base-16 conv)."""
-    return F.conv(
-        F.hex(F.expr(f"substring(content, {pos}, {nbytes})")), 16, 10
-    ).cast("long")
-
-
-@register(
-    "scan_binary_files",
-    f"""
-    SELECT doc_id,
-           1 + doc_id % 64 AS width,
-           1 + (doc_id * 7) % 48 AS height,
-           CAST(1 AS BIGINT) AS channels,
-           doc_id % 256 AS first_px,
-           (1 + doc_id % 64) * (1 + (doc_id * 7) % 48) AS n_px
-    FROM documents WHERE doc_id < {_BINSCAN_MAX_ID}
-    """,
-)
-def scan_binary_files(spark, sf):
-    """Whole-file binary ingestion via Spark's ``binaryFile`` source —
-    the R1-family reader for image/audio corpora that land as one
-    object per item rather than as parquet rows: each file becomes a
-    (path, modificationTime, length, content) row, and the OIMG
-    container header (magic | width:u16be | height:u16be |
-    channels:u8 | pixels) is parsed ENTIRELY JVM-side with
-    substring/hex/conv — no Python stage, so header-only metadata
-    extraction never deserializes pixels into the Python worker.  The
-    DuckDB oracle reconstructs every field from doc_id (the
-    deterministic-container discipline of the multimodal keys).
-
-    Scale shape: binaryFile packs many small objects per task
-    (spark.sql.files.maxPartitionBytes), so a 10^9-image landing
-    reads as a normal well-partitioned scan; the header parse is a
-    map-side projection and the pixel payload is never touched unless
-    a downstream decode stage asks for ``content``.
-
-    Reference analog: octopy's segment command globs page-image FILES
-    from a directory as its input unit (reference
-    src/octopy/cli/segment.py)."""
-    d = spark.read.format("binaryFile").load(_stage_image_blobs(spark, sf))
-    fname = F.element_at(F.split(F.col("path"), "/"), -1)
-    return d.select(
-        F.regexp_extract(fname, r"img_(\d+)\.oimg", 1)
-        .cast("long")
-        .alias("doc_id"),
-        _be_int(5, 2).alias("width"),
-        _be_int(7, 2).alias("height"),
-        _be_int(9, 1).alias("channels"),
-        _be_int(10, 1).alias("first_px"),
-        (F.col("length") - 9).cast("long").alias("n_px"),
     )
 
 
@@ -8690,111 +7591,6 @@ def sim_maxsim_colbert(spark, sf):
 
 
 # --------------------------------------------------------------------------
-# multimodal_image_histogram — per-image luminance histogram (16 bins)
-# --------------------------------------------------------------------------
-
-_IMGHIST_BINS = 16  # 256 levels / 16 per bin
-
-_IMGHIST_SCHEMA = "doc_id long, bin long, n_px long, error string"
-
-
-def image_hist_batches(batches):
-    """mapInPandas body: decode ramp-OIMG -> vectorized 16-bin
-    luminance histogram (np.bincount over px >> 4); emits one row per
-    NON-EMPTY bin. Row-level try/except: malformed blobs yield an
-    error row, never a task failure (R8)."""
-    import numpy as np
-    import pandas as pd
-
-    for pdf in batches:
-        rows = []
-        for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
-            try:
-                if blob is None:
-                    raise ValueError("null media")
-                b = bytes(blob)
-                if b[:4] != _IMG_MAGIC:
-                    raise ValueError("bad image magic")
-                w = int.from_bytes(b[4:6], "big")
-                h = int.from_bytes(b[6:8], "big")
-                px = np.frombuffer(b[9 : 9 + w * h], dtype=np.uint8)
-                if px.size != w * h:
-                    raise ValueError("truncated image")
-                hist = np.bincount(
-                    px >> 4, minlength=_IMGHIST_BINS
-                )
-                rows.extend(
-                    (int(doc_id), int(bin_), int(n), None)
-                    for bin_, n in enumerate(hist)
-                    if n > 0
-                )
-            except Exception as exc:  # never-drop fallback (R8)
-                rows.append((int(doc_id), None, None, str(exc)))
-        yield pd.DataFrame(
-            rows, columns=["doc_id", "bin", "n_px", "error"]
-        )
-
-
-@register(
-    "multimodal_image_histogram",
-    f"""
-    WITH dims AS (
-      SELECT doc_id, 16 + doc_id % 48 AS w, 16 + (doc_id * 7) % 32 AS h,
-             doc_id % 256 AS base, 1 + doc_id % 97 AS xstep,
-             doc_id % 5 AS ystep
-      FROM documents),
-    xs AS (
-      SELECT doc_id, base, xstep, ystep, h,
-             unnest(range(0, w)) AS i
-      FROM dims),
-    ys AS (
-      SELECT doc_id, base, xstep, ystep, i,
-             unnest(range(0, h)) AS j
-      FROM xs)
-    SELECT doc_id,
-           ((base + i * xstep + j * ystep) % 256)
-             // {256 // _IMGHIST_BINS} AS bin,
-           CAST(count(*) AS BIGINT) AS n_px
-    FROM ys GROUP BY 1, 2
-    """,
-)
-def multimodal_image_histogram(spark, sf):
-    """Per-image luminance HISTOGRAM (16 bins over the 256 gray
-    levels) — the exposure/contrast statistics pass every vision
-    corpus runs before training: all-dark, all-bright, and
-    low-dynamic-range images are curation rejects, and the histogram
-    is the input to contrast normalization and quality scoring
-    (the image twin of text_zipf_histogram's shape census).  Emits
-    (doc_id, bin, n_px) for non-empty bins only.
-
-    Decode is the ramp-OIMG codec (dedup_image_phash's media): the
-    fill px[y][x] = (base + x*xstep + y*ystep) mod 256 makes every
-    pixel SQL-reconstructable from doc_id alone, so the DuckDB twin
-    regenerates the pixel grid with two correlated unnest(range())
-    levels and aggregates the identical integer bins — the
-    multimodal_scene_cut oracle discipline.  The binning is integer
-    shift (px >> 4 == px // 16): no float anywhere.
-
-    Scale shape: ONE Arrow-batched mapInPandas (decode + vectorized
-    np.bincount — the only Python stage, embarrassingly parallel,
-    emitting at most 16 rows per image regardless of resolution), and
-    that's it: the histogram is computed inside the UDF, so NOTHING
-    per-pixel ever crosses a shuffle — at 10^12 images the job moves
-    16 longs per image, not megapixels.
-
-    Reference analog: octopy's segmentation computes per-region
-    char-class/intensity histograms as stage-1 features (reference
-    src/octopy/segment.py feature extraction) — the same binned
-    density census, per image."""
-    media = _fake_media(spark, sf, "image_ramp")
-    return (
-        media.mapInPandas(image_hist_batches, _IMGHIST_SCHEMA)
-        .filter(F.col("error").isNull())
-        .select("doc_id", "bin", "n_px")
-    )
-
-
-# --------------------------------------------------------------------------
 # graph_harmonic_closeness — per-seed harmonic centrality (sampled)
 # --------------------------------------------------------------------------
 
@@ -9454,7 +8250,7 @@ def _stage_rowgroup_parquet(spark, sf: str) -> str:
     a multiplicative hash — the as-ingested layout).  Deterministic:
     same rows, same order, same writer chunking every time, so footer
     stats are SQL-reconstructable.  Same idempotent staging contract
-    as _stage_image_blobs."""
+    as mediaops._stage_image_blobs."""
     import os
 
     from octospark.sources import _staged_dir
@@ -9835,7 +8631,7 @@ def _stage_text_lines(spark, sf: str) -> str:
     """Materialize documents as a pipe-delimited plain-text file under
     /tmp (one line per doc, doc_id order) — the log-file landing the
     text reader ingests. Same idempotent staging contract as
-    _stage_image_blobs."""
+    mediaops._stage_image_blobs."""
     import os
 
     from octospark.sources import _staged_dir

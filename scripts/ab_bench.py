@@ -16,10 +16,11 @@ per run.
 
 Sides are git commits, each extracted with ``git archive`` into
 ``<dir>/octospark_ab_<sha>`` (``--dir``, default the system temp
-directory); ``HEAD`` or ``WORKING`` is this checkout as it stands. A
-side reuses this checkout's generated perfbench inputs
-(``.perfbench/inputs``) when its ``perfbench/gen.py`` ``code_version``
-matches theirs, so only a side whose generator differs regenerates.
+directory); ``HEAD`` is its commit like any other, and only ``WORKING``
+is this checkout as it stands, uncommitted changes included. A side
+reuses this checkout's generated perfbench inputs (``.perfbench/inputs``)
+when its ``perfbench/gen.py`` ``code_version`` matches theirs, so only a
+side whose generator differs regenerates.
 
 Usage:
   python scripts/ab_bench.py queries  <name,name,...> <label=commit> ... \
@@ -288,7 +289,7 @@ def main() -> None:
     sides, commits = [], {}
     for spec in side_specs:
         label, commit = spec.split("=", 1)
-        path = (REPO if commit in ("HEAD", "WORKING")
+        path = (REPO if commit == "WORKING"
                 else checkout_for(commit, root))
         if mode == "perfbench":
             share_perfbench_inputs(path)

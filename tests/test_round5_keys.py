@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from collections import defaultdict
 
+import octospark.mediaops  # noqa: F401  (registers the media keys)
 import octospark.relational as R
 import octospark.textops as T
 import octospark.webops as W

@@ -86,3 +86,11 @@ def test_checkpoint_dir_survives_lost_blocks(spark, sf_dir, tmp_path):
     for key in KEYS:
         assert isinstance(lost[key], dict), key
         assert "CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND" in lost[key]["error"]
+
+
+def test_session_cleans_checkpoint_files(spark):
+    """A checkpoint directory does not grow with every cut: the session
+    lets Spark delete a checkpoint's files once its RDD is collected."""
+    conf = spark.sparkContext.getConf()
+    flag = "spark.cleaner.referenceTracking.cleanCheckpoints"
+    assert conf.get(flag) == "true"

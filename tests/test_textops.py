@@ -8,7 +8,9 @@ aggregation (exactly one Exchange below the signature aggregate).
 
 from __future__ import annotations
 
+import octospark.mediaops as M
 import octospark.textops as T
+from octospark import QUERIES
 
 
 def test_minhash_lsh_recalls_injected_duplicates(spark, sf_dir):
@@ -107,7 +109,7 @@ def test_sim_ann_ivf_subset_of_probed_cells_only(spark, sf_dir):
 def test_multimodal_decode_roundtrip(spark, sf_dir):
     """Decode inverts the fake encoder exactly; constant-fill pixels
     make mean_px == doc_id % 256; no error rows on well-formed media."""
-    rows = T.QUERIES["multimodal_decode"](spark, sf_dir).collect()
+    rows = QUERIES["multimodal_decode"](spark, sf_dir).collect()
     assert rows and all(r.error is None for r in rows)
     for r in rows:
         assert r.width == 1 + r.doc_id % 64
@@ -115,65 +117,18 @@ def test_multimodal_decode_roundtrip(spark, sf_dir):
         assert abs(r.mean_px - (r.doc_id % 256)) < 1e-9
 
 
-def test_multimodal_decode_malformed_never_drops(spark, sf_dir):
-    """A corrupt blob yields an error row, not a task failure (R8)."""
-    import pandas as pd
-
-    mixed = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": [6, 7, 8],
-                "media": [None, b"JUNKxxxx", T._fake_image_bytes(8)],
-            }
-        )
-    )
-    rows = {
-        r.doc_id: r
-        for r in mixed.mapInPandas(
-            T.decode_image_batches, T._DECODE_SCHEMA
-        ).collect()
-    }
-    assert rows[6].error == "null media" and rows[6].width is None
-    assert rows[7].error is not None and rows[7].width is None
-    assert rows[8].error is None and rows[8].width == 1 + 8 % 64
-
-
 def test_multimodal_resize_dims(spark, sf_dir):
-    for r in T.QUERIES["multimodal_resize"](spark, sf_dir).collect():
+    for r in QUERIES["multimodal_resize"](spark, sf_dir).collect():
         assert r.thumb_w == (r.width + 1) // 2
         assert r.thumb_h == (r.height + 1) // 2
         assert r.thumb_bytes == r.thumb_w * r.thumb_h
 
 
 def test_multimodal_frame_sample_every_fifth(spark, sf_dir):
-    for r in T.QUERIES["multimodal_frame_sample"](spark, sf_dir).collect():
+    for r in QUERIES["multimodal_frame_sample"](spark, sf_dir).collect():
         assert r.error is None
         assert r.n_sampled == (r.n_frames + 4) // 5
         assert 1 <= r.n_frames <= 30
-
-
-def test_multimodal_frame_sample_malformed_never_drops(spark, sf_dir):
-    """A bad-magic video blob yields an error row, not a task failure
-    (R8) — same contract as decode_image_batches."""
-    import pandas as pd
-
-    mixed = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": [2, 3, 4],
-                "media": [None, b"NOPE\x00\x01junk", T._fake_video_bytes(4)],
-            }
-        )
-    )
-    rows = {
-        r.doc_id: r
-        for r in mixed.mapInPandas(
-            T.sample_video_batches, T._FRAME_SAMPLE_SCHEMA
-        ).collect()
-    }
-    assert rows[2].error == "null media" and rows[2].n_frames is None
-    assert rows[3].error is not None and rows[3].n_frames is None
-    assert rows[4].error is None and rows[4].n_frames == 1 + 4 % 30
 
 
 def test_multimodal_meta_null_blob_yields_null_metadata(spark, sf_dir):
@@ -192,7 +147,7 @@ def test_multimodal_meta_null_blob_yields_null_metadata(spark, sf_dir):
     rows = {
         r.doc_id: r
         for r in mixed.mapInPandas(
-            T.meta_batches, "doc_id long, n_bytes long, header_hex string"
+            M.meta_batches, "doc_id long, n_bytes long, header_hex string"
         ).collect()
     }
     assert rows[1].n_bytes is None and rows[1].header_hex is None
@@ -637,7 +592,7 @@ def test_audio_stats_exact_and_never_drop(spark, sf_dir):
     import pandas as pd
 
     for r in (
-        T.QUERIES["multimodal_audio_stats"](spark, sf_dir).limit(50).collect()
+        QUERIES["multimodal_audio_stats"](spark, sf_dir).limit(50).collect()
     ):
         n = 64 + r.doc_id % 192
         s = [(r.doc_id * 3 + i * 5) % 256 for i in range(n)]
@@ -662,70 +617,12 @@ def test_audio_stats_exact_and_never_drop(spark, sf_dir):
     rows = {
         r.doc_id: r
         for r in mixed.mapInPandas(
-            T.audio_stats_batches, T._AUDIO_SCHEMA
+            M.audio_stats_batches, M._AUDIO_SCHEMA
         ).collect()
     }
     assert rows[1].error is not None and rows[1].energy is None
     assert rows[2].error is not None and rows[2].n_samples is None
     assert rows[3].error is not None and rows[3].energy is None
-
-
-def test_image_backend_plug_point_mocked():
-    """The real-codec plug-point works end-to-end when a backend IS
-    present (mocked here, since the sandbox has no PIL): (a)
-    _load_image_backend resolves a mocked PIL module into a bytes ->
-    (w, h) callable; (b) decode_image_batches routes through a plugged
-    backend — width/height from the backend, mean_px None — and a blob
-    the backend rejects still yields an error row, never a task
-    failure. The day codecs land, only _load_image_backend changes."""
-    import sys
-    import types
-
-    import pandas as pd
-
-    import octospark.textops as TT
-
-    # (a) mocked PIL module resolves through the plug-point
-    class _Img:
-        size = (320, 200)
-
-    pil = types.ModuleType("PIL")
-    pil_image = types.ModuleType("PIL.Image")
-    pil_image.open = lambda fh: _Img()
-    pil.Image = pil_image
-    old = {k: sys.modules.get(k) for k in ("PIL", "PIL.Image")}
-    sys.modules["PIL"] = pil
-    sys.modules["PIL.Image"] = pil_image
-    try:
-        backend = TT._load_image_backend()
-        assert backend is not None and backend(b"anything") == (320, 200)
-    finally:
-        for k, v in old.items():
-            if v is None:
-                sys.modules.pop(k, None)
-            else:
-                sys.modules[k] = v
-
-    # (b) decode path uses the plugged backend, never-drop intact
-    def fake_backend(data):
-        if data.startswith(b"JUNK"):
-            raise ValueError("corrupt file")
-        return (640, 480)
-
-    TT._IMAGE_BACKEND_CACHE.clear()
-    TT._IMAGE_BACKEND_CACHE.append(fake_backend)
-    try:
-        frames = [pd.DataFrame(
-            {"doc_id": [1, 2], "media": [b"\x89PNG1234", b"JUNK5678"]}
-        )]
-        out = pd.concat(list(TT.decode_image_batches(iter(frames))))
-        r1 = out[out.doc_id == 1].iloc[0]
-        r2 = out[out.doc_id == 2].iloc[0]
-        assert (r1.width, r1.height) == (640, 480)
-        assert r1.mean_px is None and r1.error is None
-        assert r2.error is not None and "corrupt" in r2.error
-    finally:
-        TT._IMAGE_BACKEND_CACHE.clear()
 
 
 def test_repetition_filter_flags_injected_repeats(spark, sf_dir):
@@ -1277,7 +1174,7 @@ def test_scene_cut_matches_formula_and_never_drops():
     yield error rows instead of raising."""
     import pandas as pd
 
-    from octospark.textops import (
+    from octospark.mediaops import (
         _SCENE_CUT_THRESHOLD,
         _fake_video_bytes,
         scene_cut_batches,
@@ -1453,7 +1350,7 @@ def test_audio_vad_segments_match_replay_and_never_drop():
     blobs yield error rows instead of raising."""
     import pandas as pd
 
-    from octospark.textops import (
+    from octospark.mediaops import (
         _VAD_THRESHOLD,
         _fake_audio_bytes,
         audio_vad_batches,
@@ -1831,8 +1728,6 @@ def test_image_phash_replay_law_and_pigeonhole_recall(spark, sf_dir):
     a band, so none can be missed."""
     import numpy as np
 
-    import octospark.textops as T
-
     ids = [
         int(r.doc_id)
         for r in spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1863,25 +1758,25 @@ def test_image_phash_replay_law_and_pigeonhole_recall(spark, sf_dir):
             buckets.setdefault((bi, H[d][bi]), []).append(d)
     want = set()
     for mem in buckets.values():
-        mem = mem[: T._PHASH_CAP]
+        mem = mem[: M._PHASH_CAP]
         for i in range(len(mem)):
             for j in range(i + 1, len(mem)):
                 a, b = mem[i], mem[j]
                 ham = sum(
                     bin(x ^ y).count("1") for x, y in zip(H[a], H[b])
                 )
-                if ham <= T._PHASH_HAM_T:
+                if ham <= M._PHASH_HAM_T:
                     want.add((a, b, ham))
 
     got = {
         (r.doc_a, r.doc_b, r.hamming)
-        for r in T.QUERIES["dedup_image_phash"](spark, sf_dir).collect()
+        for r in QUERIES["dedup_image_phash"](spark, sf_dir).collect()
     }
     assert got == want
     assert len(got) > 0
     # pigeonhole: with no truncated buckets at this sf, EVERY pair
     # within Hamming<=3 anywhere in the corpus must have been found
-    assert all(len(m) <= T._PHASH_CAP for m in buckets.values())
+    assert all(len(m) <= M._PHASH_CAP for m in buckets.values())
     ids_sorted = sorted(ids)
     for ai in range(0, len(ids_sorted), 17):  # sampled full scan
         a = ids_sorted[ai]
@@ -1889,32 +1784,8 @@ def test_image_phash_replay_law_and_pigeonhole_recall(spark, sf_dir):
             ham = sum(
                 bin(x ^ y).count("1") for x, y in zip(H[a], H[b])
             )
-            if ham <= T._PHASH_HAM_T:
+            if ham <= M._PHASH_HAM_T:
                 assert (a, b, ham) in got, (a, b, ham)
-
-
-def test_image_phash_batches_never_drop_on_malformed_blobs():
-    import pandas as pd
-
-    from octospark.textops import (
-        _fake_image_ramp_bytes,
-        phash_batches,
-    )
-
-    ok = _fake_image_ramp_bytes(7)
-    bad = pd.DataFrame(
-        {
-            "doc_id": [1, 2, 3, 4],
-            "media": [None, b"XXXX" + ok[4:], ok[:12], ok],
-        }
-    )
-    rows = pd.concat(list(phash_batches(iter([bad]))))
-    assert len(rows) == 4
-    errs = [r.error for _, r in rows.iterrows()]
-    assert errs[0] is not None  # null
-    assert errs[1] is not None  # bad magic
-    assert errs[2] is not None  # truncated pixels
-    assert errs[3] is None  # clean decode
 
 
 def test_bpe_merges_match_sequential_trainer_and_drop_fertility(
@@ -2027,8 +1898,6 @@ def test_ocr_lines_replay_law(spark, sf_dir):
     """Pure-Python replay of the OCR flow (striped page -> projection
     profile runs -> per-cell ink-sum recognition) must equal the
     registered key exactly: boxes, reading order, and text."""
-    import octospark.textops as T
-
     ids = [
         int(r.doc_id)
         for r in spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -2040,7 +1909,7 @@ def test_ocr_lines_replay_law(spark, sf_dir):
         w, lh, g, nl = (
             24 + d % 40, 3 + d % 4, 2 + d % 3, 3 + d % 6,
         )
-        nc = w // T._OCR_CW
+        nc = w // M._OCR_CW
         for k in range(nl):
             y0 = g + k * (lh + g)
             text = "".join(
@@ -2052,33 +1921,10 @@ def test_ocr_lines_replay_law(spark, sf_dir):
             want.add((d, k, y0, y0 + lh, text, nc))
     got = {
         (r.doc_id, r.line_idx, r.y0, r.y1, r.text, r.n_chars)
-        for r in T.QUERIES["multimodal_ocr_lines"](
+        for r in QUERIES["multimodal_ocr_lines"](
             spark, sf_dir
         ).collect()
     }
     assert got == want
     assert len(got) > 0
 
-
-def test_ocr_line_batches_never_drop_on_malformed_pages():
-    import pandas as pd
-
-    from octospark.textops import _fake_page_bytes, ocr_line_batches
-
-    ok = _fake_page_bytes(11)
-    bad = pd.DataFrame(
-        {
-            "doc_id": [1, 2, 3, 4],
-            "media": [None, b"YYYY" + ok[4:], ok[:11], ok],
-        }
-    )
-    rows = pd.concat(list(ocr_line_batches(iter([bad]))))
-    per_doc_err = rows.groupby("doc_id")["error"].agg(
-        lambda s: s.notna().any()
-    )
-    assert bool(per_doc_err[1]) and bool(per_doc_err[2])
-    assert bool(per_doc_err[3])  # truncated pixel buffer
-    ok_rows = rows[rows["doc_id"] == 4]
-    assert ok_rows["error"].isna().all()
-    assert len(ok_rows) == 3 + 11 % 6  # nl lines, in reading order
-    assert list(ok_rows["line_idx"]) == list(range(len(ok_rows)))
