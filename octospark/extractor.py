@@ -27,10 +27,21 @@ Structure mirrors the reference's two-stage flow (jahtz/octopy):
   try/except, reference src/octopy/cli/segment.py:137-145).
   :func:`extract` returns the same row as a dict.
 
-Stage 1 has two walks that produce the same block records: the one-pass
-regex tokenizer (:func:`_fast_walk`, the default) and the stdlib
-``html.parser`` reference (:class:`_BlockParser`), which no Spark path
-runs and which the tests hold the fast walk and the fused kernel to.
+Stage 1 has three walks that produce the same block records:
+
+- the compiled walk (``octospark/_walk.c``, the default): the fast
+  walk's loop in C, built at import by :mod:`octospark.native` into a
+  cache keyed by its source hash. It hands back to this module's own
+  objects whatever is rare: a construct its hand matcher declines goes
+  to :data:`_TOKEN` and :func:`_tolerant_token`, data holding ``&`` to
+  ``html.unescape``, and the tag vocabularies are passed in, not copied;
+- the one-pass regex tokenizer (:func:`_fast_walk`), which runs where
+  the compiled walk cannot be built (the build failure is logged once);
+- the stdlib ``html.parser`` reference (:class:`_BlockParser`), which
+  no Spark path runs and which the tests hold the other two walks and
+  the fused kernel to.
+
+:data:`WALK` names the walk stage 1 runs.
 
 Determinism rules (SURVEY.md §7.3):
 - pure functions of the input bytes; no RNG, no global state;
@@ -46,6 +57,8 @@ import re
 from dataclasses import dataclass
 from html import unescape as _unescape  # same fn HTMLParser uses
 from html.parser import HTMLParser
+
+from octospark import native
 
 # --- vocabulary -----------------------------------------------------------
 # Block label vocabulary — the analog of the reference's 27-class region
@@ -328,13 +341,15 @@ _TOKEN = re.compile(
     # '<'/'>'/stray quotes inside), optional '/>' suffix. By construction
     # every match is tokenized identically by the stdlib tolerant
     # machinery (incl. the self-closing rule: a bare value eats a
-    # trailing '/', so only a detached '/' marks '/>')
-    r"|([a-zA-Z][-a-zA-Z0-9:_.]*)"
+    # trailing '/', so only a detached '/' marks '/>'). The name ends
+    # where tagfind_tolerant's does: any other whitespace (\x0b, \xa0,
+    # U+3000, ...) continues the stdlib's tag name
+    r"|([a-zA-Z][-a-zA-Z0-9:_.]*)(?=[\t\n\r\f />])"
     r"(?:\s+[^\s/>=\"'<]+"
     r"(?:\s*=\s*(?:\"[^\"<>]*\"|'[^'<>]*'|[^\s>\"'`=<]+))?)*"
     r"\s*(/?)>"
-    # closed comment
-    r"|!--(?s:.*?)-->"
+    # closed comment, up to the first commentclose ('--\s*>') as stdlib
+    r"|!--(?s:.*?)--\s*>"
     # doctype / bogus comment: '<!' not opening a comment or marked section
     r"|!(?!--|\[)[^>]*+>"
     r")"
@@ -553,8 +568,28 @@ def _fast_walk(text: str) -> tuple:
     return records, salvage
 
 
+def _select_walk() -> tuple:
+    """``(name, walk)``: the walk stage 1 runs. It is the compiled walk
+    (``octospark/_walk.c``, built by :func:`octospark.native.load`) when
+    it builds, configured with this module's vocabularies and
+    tokenizers; else :func:`_fast_walk` (the build failure is logged);
+    or :func:`_stdlib_walk` where html.parser lacks the tolerant regexes
+    the other two delegate to."""
+    if not _HAVE_TOLERANT:
+        return "stdlib", _stdlib_walk
+    mod = native.load("_walk")
+    if mod is None:
+        return "fast", _fast_walk
+    mod.configure(_SKIP_TAGS, _BLOCK_TAGS, _ANCESTOR_LABELS, _TABLE_TAGS,
+                  _CDATA_STRICT, _TOKEN.match, _tolerant_token, _unescape,
+                  _ROOT)
+    return "compiled", mod.walk
+
+
 _WALKS = {"fast": _fast_walk, "stdlib": _stdlib_walk}
-_DEFAULT_WALK = _fast_walk if _HAVE_TOLERANT else _stdlib_walk
+#: the walk stage 1 runs: 'compiled', 'fast' or 'stdlib'
+WALK, _DEFAULT_WALK = _select_walk()
+_WALKS[WALK] = _DEFAULT_WALK
 
 
 def _block(block_id: int, record: tuple, with_hist: bool) -> Block:
@@ -586,9 +621,9 @@ def segment_blocks(
     order, analog of reference src/octopy/segment.py:149-156). Used by
     the staged path and the tests; the fused path (:func:`extract_row`)
     runs the same walk without building Blocks. ``with_hist=False``
-    skips the char-class histogram. ``engine='fast'`` (default) uses the
-    one-pass regex tokenizer; ``'stdlib'`` uses html.parser.HTMLParser
-    as the reference — both produce the same block records and are
+    skips the char-class histogram. ``engine=None`` (default) runs the
+    walk :data:`WALK` names; ``'compiled'`` (when built), ``'fast'`` and
+    ``'stdlib'`` pick one — all produce the same block records and are
     tested block-identical. Any other engine name raises ``ValueError``.
     """
     if engine is None:

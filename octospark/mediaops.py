@@ -117,8 +117,9 @@ def never_drop(kind: str, kernel, columns: tuple[str, ...]):
     (see :func:`unpack`) on each ``kind`` blob of a ``(doc_id, media)``
     batch. The kernel returns the blob's rows, one value per name in
     ``columns``; each gets ``doc_id`` in front and a null ``error``
-    behind. A blob that fails to unpack, or whose kernel raises, yields
-    the one row ``(doc_id, None, ..., str(exc))``."""
+    behind. A blob whose kernel returns no rows yields the one row
+    ``(doc_id, None, ..., None)``; a blob that fails to unpack, or whose
+    kernel raises, yields the one row ``(doc_id, None, ..., str(exc))``."""
     failed = (None,) * len(columns)
     names = ["doc_id", *columns, "error"]
 
@@ -130,6 +131,8 @@ def never_drop(kind: str, kernel, columns: tuple[str, ...]):
                     out = [(*r, None) for r in kernel(*unpack(kind, blob))]
                 except Exception as exc:  # never-drop fallback
                     out = [(*failed, str(exc))]
+                if not out:  # a clean blob with no rows still has one
+                    out = [(*failed, None)]
                 rows.extend((int(doc_id), *r) for r in out)
             yield pd.DataFrame(rows, columns=names)
 

@@ -14,7 +14,10 @@ python - "$REPO" "$ZIP" <<'EOF'
 import pathlib, sys, zipfile
 root, dest = pathlib.Path(sys.argv[1]), sys.argv[2]
 with zipfile.ZipFile(dest, "w") as z:
-    for f in sorted((root / "octospark").rglob("*.py")):
+    # the C sources too: a worker that imports octospark from the zip
+    # builds its extensions from them (octospark.native)
+    pkg = root / "octospark"
+    for f in sorted([*pkg.rglob("*.py"), *pkg.rglob("*.c")]):
         z.write(f, f.relative_to(root))
 EOF
 JOB="$1"; shift

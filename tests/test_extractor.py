@@ -10,6 +10,7 @@ import pathlib
 import duckdb
 import pytest
 
+import octospark.extractor as E
 from octospark.extractor import (
     CONTENT_LABELS,
     LABELS,
@@ -153,10 +154,17 @@ def _salvage(html, engine="stdlib"):
     return _WALKS[engine](decode_html(html))[1]
 
 
+# every walk, the stdlib reference last; a missing compiled walk fails
+ENGINES = ("compiled", "fast", "stdlib")
+
+
 def _engines_agree(html) -> bool:
-    return [_block_key(b) for b in segment_blocks(html, engine="fast")] == [
-        _block_key(b) for b in segment_blocks(html, engine="stdlib")
-    ] and _salvage(html, "fast") == _salvage(html)
+    """The compiled walk, the fast walk and the stdlib reference give
+    the same blocks and the same salvage flag."""
+    keys = [[_block_key(b) for b in segment_blocks(html, engine=e)]
+            for e in ENGINES]
+    flags = [_salvage(html, e) for e in ENGINES]
+    return all(k == keys[-1] for k in keys) and len(set(flags)) == 1
 
 
 @pytest.mark.parametrize("name,html", CASES, ids=[c[0] for c in CASES])
@@ -185,6 +193,11 @@ def _corpus_and_mutations():
         b"<scriptx>y</scriptx>", b"<vector</p>", b"<p\x00weird>",
         b"<P UPPER>x</P>", b"<a href=x/>", b"<hr />",
         b"<input type='checkbox' checked/>",
+        # forms the compiled walk's hand matcher must take as _TOKEN does
+        b"<a href=x/ >", b'<p class = "a" / >', b"<div\x0cid=x>",
+        "<p\u3000a=b>".encode(), b"<A HREF='x'>", b"<a>caf&eacute;</a>",
+        "<a>x \U0001f600y</a>".encode(), "<b\u212a>x</bk>".encode(),
+        b"<!--a-- >b<p>c</p>-->",
     ]
     for h in pages[:12]:
         n = len(h)
@@ -206,16 +219,28 @@ def test_fast_engine_equivalent_on_corpus_and_mutations():
 
 # --- fused kernel vs the staged reference -----------------------------------
 
+def _extract_with(engine, html) -> dict:
+    """extract() with stage 1 running the ``engine`` walk."""
+    default = E._DEFAULT_WALK
+    E._DEFAULT_WALK = _WALKS[engine]
+    try:
+        return extract(html)
+    finally:
+        E._DEFAULT_WALK = default
+
+
 def _kernel_agrees(html) -> bool:
-    """extract() (the fused kernel) equals the three stages composed over
-    the stdlib reference walk, on text, spans and n_blocks, and reports
-    the stdlib walk's salvage flag as its error."""
-    r = extract(html)
+    """extract() (the fused kernel) through the compiled walk and through
+    the fast walk equals the three stages composed over the stdlib
+    reference walk, on text, spans and n_blocks, and reports the stdlib
+    walk's salvage flag as its error."""
     blocks = classify_blocks(segment_blocks(html, engine="stdlib"))
     text, spans = merge_spans(blocks)
-    return (r["text"], r["spans"], r["n_blocks"], r["error"]) == (
-        text, [dataclasses.asdict(s) for s in spans], len(blocks),
-        _salvage(html),
+    want = (text, [dataclasses.asdict(s) for s in spans], len(blocks),
+            _salvage(html))
+    return all(
+        (r["text"], r["spans"], r["n_blocks"], r["error"]) == want
+        for r in (_extract_with(e, html) for e in ENGINES[:-1])
     )
 
 
@@ -232,9 +257,95 @@ def test_kernel_equals_reference_on_corpus_and_mutations():
 def test_unknown_engine_rejected():
     with pytest.raises(ValueError, match="unknown engine 'fsat'"):
         segment_blocks(b"<p>x</p>", engine="fsat")
-    for engine in (None, "fast", "stdlib"):
+    for engine in (None, *ENGINES):
         blocks = segment_blocks(b"<p>x</p>", engine=engine)
         assert [b.text for b in blocks] == ["x"]
+
+
+def test_compiled_walk_is_the_default():
+    """Stage 1 runs the compiled walk; a build failure would show here,
+    not as a silent fallback."""
+    assert E.WALK == "compiled"
+    assert E._DEFAULT_WALK is _WALKS["compiled"]
+
+
+def _configure_compiled(**replace):
+    """Configure the compiled walk with extractor's objects, the named
+    ones replaced; this also empties its table of tag names."""
+    objs = dict(
+        skip_tags=E._SKIP_TAGS, block_tags=E._BLOCK_TAGS,
+        ancestor_labels=E._ANCESTOR_LABELS, table_tags=E._TABLE_TAGS,
+        cdata_strict=E._CDATA_STRICT, token_match=E._TOKEN.match,
+        tolerant_token=E._tolerant_token, unescape=E._unescape,
+        root=E._ROOT,
+    )
+    objs.update(replace)
+    _WALKS["compiled"].__self__.configure(*objs.values())
+
+
+def test_compiled_walk_takes_every_token_of_generated_pages():
+    """The compiled walk's hand matcher takes every token of the
+    generated pages: none goes to ``_TOKEN.match`` or
+    ``_tolerant_token``, which it calls for what it declines."""
+    calls = []
+
+    def counted(fn):
+        def call(*args):
+            calls.append(fn)
+            return fn(*args)
+        return call
+
+    _configure_compiled(token_match=counted(E._TOKEN.match),
+                        tolerant_token=counted(E._tolerant_token))
+    try:
+        pages = [build_html(r[0], r[1], r[3]) for r in _docs()]
+        for h in pages:
+            _WALKS["compiled"](decode_html(h))
+    finally:
+        _configure_compiled()
+    assert len(pages) > 100 and calls == []
+
+
+def test_compiled_walk_past_its_tag_table():
+    """The compiled walk keeps the first 512 distinct tag names in a
+    table; past it, and for names longer than 32 characters, it looks a
+    name up in the vocabularies each time. Either way its blocks are
+    the fast walk's, a name lowercased to ASCII ('\u212a' is 'k')
+    included."""
+    names = [f"t{k}" for k in range(600)] + ["x" * 40, "nav", "bk"]
+    html = (
+        "".join(f"<{n}><p>x {n}</p>" for n in names)
+        + "".join(f"</{n.upper()}>y" for n in names[::-3])
+        + "<b\u212a>x</bk><p>z</p></X" + "X" * 39 + "><td>w"
+    )
+    try:
+        for text in (html, html[::-1], html):  # the last with a full table
+            assert _WALKS["compiled"](text) == E._fast_walk(text)
+    finally:
+        _configure_compiled()
+
+
+def test_failed_build_warns_once_and_falls_back(monkeypatch, tmp_path,
+                                                caplog):
+    """With no compiler, selecting the walk logs one warning and picks
+    the fast walk, and extract_row gives the same rows as through the
+    compiled walk."""
+    import logging
+
+    from octospark import native
+
+    def no_compiler(src, out):
+        raise FileNotFoundError("cc")
+
+    monkeypatch.setattr(native, "_compile", no_compiler)
+    monkeypatch.setattr(native, "_cache_dir", lambda: str(tmp_path))
+    with caplog.at_level(logging.WARNING):
+        name, walk = E._select_walk()
+    assert (name, walk) == ("fast", E._fast_walk)
+    assert [r.levelno for r in caplog.records] == [logging.WARNING]
+    want = [E.extract_row(h) for _, h in CASES]
+    monkeypatch.setattr(E, "_DEFAULT_WALK", walk)
+    assert [E.extract_row(h) for _, h in CASES] == want
 
 
 def test_adversarial_nesting_is_linear_time():
@@ -246,9 +357,12 @@ def test_adversarial_nesting_is_linear_time():
     fused kernel and through the staged walk alike. Each ratio is of the
     best of 5 interleaved runs per size with the cyclic GC paused; a
     shared machine can slow every run of one window, so the bound is
-    checked on the least disturbed of up to 3 such measurements."""
+    checked on the least disturbed of up to 3 such measurements. Both run
+    the compiled walk, the one stage 1 runs."""
     import gc
     import time
+
+    assert E._DEFAULT_WALK is _WALKS["compiled"]
 
     h4, h8 = "<div><span>x " * 4000, "<div><span>x " * 8000
     for run in (extract, lambda h: segment_blocks(h, with_hist=False)):
@@ -283,7 +397,7 @@ def test_salvaged_parse_is_reported():
     r = extract(html)
     assert r["error"] == "salvaged:AssertionError"
     assert r["n_blocks"] == 1
-    assert _salvage(html) == _salvage(html, "fast") == r["error"]
+    assert _salvage(html) == _salvage(html, "compiled") == r["error"]
     assert _engines_agree(html) and _kernel_agrees(html)
     for cut in (b"<p>hello world</p><![", b"<p>hello world</p><![BAD"):
         assert extract(cut)["error"] is None
@@ -298,7 +412,8 @@ try:
 
     _HTMLISH = st.text(
         alphabet=st.sampled_from(
-            list("<>/!-='\"& abcdefghijklmnopqrstuvwxyzPBR&#;\n\t中\U0001f600")
+            list("<>/!-='\"& abcdefghijklmnopqrstuvwxyzPBR&#;\n\t中\U0001f600"
+                 "\x0b\x1c\x85\xa0\u3000")
         ),
         max_size=400,
     )

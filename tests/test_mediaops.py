@@ -38,12 +38,20 @@ KERNELS = {
                   M._fake_page_bytes(11)),
 }
 
+# a clean blob on which the kernel finds no rows at all
+NO_ROWS = {
+    "image_histogram": M.pack("image", (0, 0, 1), b""),  # 0x0 image
+    "ocr_lines": M.pack("image", (32, 12, 1), b"\xff" * 32 * 12),  # blank
+}
+
 
 @pytest.mark.parametrize("kernel", sorted(KERNELS))
 def test_container_kernels_never_drop(spark, kernel):
     """Through Spark, each blob that is null, has a bad magic, or is cut
     inside its magic, header or payload yields exactly one error row
-    with every value null; the clean blob yields rows with no error."""
+    with every value null; the clean blob yields rows with no error, and
+    a clean blob with no rows yields one row with every value and the
+    error null."""
     batches, schema, ok = KERNELS[kernel]
     cases = {
         1: None,
@@ -53,6 +61,8 @@ def test_container_kernels_never_drop(spark, kernel):
         5: ok[:-1],  # cut inside the payload
         6: ok,
     }
+    if kernel in NO_ROWS:
+        cases[7] = NO_ROWS[kernel]
     media = spark.createDataFrame(
         pd.DataFrame({"doc_id": list(cases), "media": list(cases.values())}),
         schema="doc_id long, media binary",
@@ -69,6 +79,8 @@ def test_container_kernels_never_drop(spark, kernel):
         assert all(v is None for k, v in row.items()
                    if k not in ("doc_id", "error")), (doc_id, row)
     assert all(r["error"] is None for r in by_doc[6])
+    if 7 in cases:
+        assert [set(r.values()) for r in by_doc[7]] == [{7, None}]
 
 
 def test_outputs_do_not_depend_on_pillow():

@@ -49,6 +49,22 @@ def test_never_drop_every_url_once(spark, pages):
     assert ext.count() == pages.count()
 
 
+def test_workers_run_the_compiled_walk(spark):
+    """The shared session's Python workers extract through the compiled
+    walk, not a silent fallback."""
+    import pandas as pd
+
+    def walk_name(frames):
+        from octospark import extractor
+
+        for _ in frames:
+            yield pd.DataFrame({"walk": [extractor.WALK]})
+
+    rows = spark.range(2, numPartitions=2).mapInPandas(
+        walk_name, "walk string").collect()
+    assert [r.walk for r in rows] == ["compiled", "compiled"]
+
+
 def test_adversarial_pages_through_spark(spark):
     import json
     import pathlib
