@@ -1,18 +1,18 @@
 /* The compiled block walk of octospark.extractor.
 
-   walk(text) -> (records, salvage) returns exactly what
-   extractor._fast_walk returns: the same block records
+   walk(text) -> (records, salvage) returns exactly what the stdlib
+   reference, extractor._stdlib_walk, returns: the same block records
    (text, n_words, n_link_chars, link_density, node), the same linked
    open-tag nodes (tag, parent, forced, in_table, depth) and the same
    'salvaged:<type>' flag. It is one loop that tokenizes and keeps the
    block state (skip depth, link depth, open-tag node, pieces) in C.
 
-   Everything hard is delegated to the objects the fast walk uses, which
+   Everything hard is delegated to extractor's own objects, which
    configure() hands over once:
    - the tag vocabularies (_SKIP_TAGS, _BLOCK_TAGS, _ANCESTOR_LABELS,
      _TABLE_TAGS) and the strict script/style close patterns;
    - a construct the hand matcher below declines goes to _TOKEN.match,
-     then to _tolerant_token, as in the fast walk's loop;
+     then to _tolerant_token;
    - data holding '&' goes through html.unescape;
    - a block's text and word count come from str.split and str.join.
 
@@ -340,7 +340,7 @@ add_data(Walk *w, PyObject *data)
 }
 
 /* The data text[a:b]. It is unescaped when it holds '&', inside a
-   skipped subtree too, as in the fast walk. */
+   skipped subtree too, as HTMLParser's charref conversion does. */
 static int
 add_span(Walk *w, Py_ssize_t a, Py_ssize_t b)
 {
@@ -694,8 +694,8 @@ tag_from_str(Walk *w, PyObject *name, int is_end, int selfclose, Py_ssize_t *i)
 }
 
 /* A construct the hand matcher declined, at the first '<' (lt) after
-   the data start i: _TOKEN.match, then _tolerant_token, as the fast
-   walk does. Returns as start_tag, with *i the resume index. */
+   the data start i: _TOKEN.match, then _tolerant_token. Returns as
+   start_tag, with *i the resume index. */
 static int
 slow_token(Walk *w, Py_ssize_t lt, Py_ssize_t *i)
 {
@@ -904,7 +904,7 @@ static PyMethodDef methods[] = {
      "cdata_strict, token_match, tolerant_token, unescape, root)\n"
      "Hand the walk extractor's vocabularies and tokenizers."},
     {"walk", walk, METH_O,
-     "walk(text) -> (records, salvage), as extractor._fast_walk."},
+     "walk(text) -> (records, salvage), as extractor._stdlib_walk."},
     {NULL, NULL, 0, NULL},
 };
 

@@ -27,19 +27,19 @@ Structure mirrors the reference's two-stage flow (jahtz/octopy):
   try/except, reference src/octopy/cli/segment.py:137-145).
   :func:`extract` returns the same row as a dict.
 
-Stage 1 has three walks that produce the same block records:
+Stage 1 has two walks that produce the same block records:
 
-- the compiled walk (``octospark/_walk.c``, the default): the fast
-  walk's loop in C, built at import by :mod:`octospark.native` into a
-  cache keyed by its source hash. It hands back to this module's own
-  objects whatever is rare: a construct its hand matcher declines goes
-  to :data:`_TOKEN` and :func:`_tolerant_token`, data holding ``&`` to
-  ``html.unescape``, and the tag vocabularies are passed in, not copied;
-- the one-pass regex tokenizer (:func:`_fast_walk`), which runs where
-  the compiled walk cannot be built (the build failure is logged once);
+- the compiled walk (``octospark/_walk.c``, the default), one loop in C
+  that tokenizes and keeps the block state, built at import by
+  :mod:`octospark.native` into a cache keyed by its source hash. It
+  hands back to this module's own objects whatever is rare: a construct
+  its hand matcher declines goes to :data:`_TOKEN` and
+  :func:`_tolerant_token`, data holding ``&`` to ``html.unescape``, and
+  the tag vocabularies are passed in, not copied;
 - the stdlib ``html.parser`` reference (:class:`_BlockParser`), which
-  no Spark path runs and which the tests hold the other two walks and
-  the fused kernel to.
+  the tests hold the compiled walk and the fused kernel to, and which
+  runs where the compiled walk cannot be built (the build failure is
+  logged once).
 
 :data:`WALK` names the walk stage 1 runs.
 
@@ -222,7 +222,8 @@ def _flush(pieces: list, links: list, node: tuple, records: list) -> None:
 
 class _BlockParser(HTMLParser):
     """Stdlib-HTMLParser DOM walk into block records — the reference the
-    fast walk (:func:`_fast_walk`) is tested block-identical against.
+    compiled walk (``octospark/_walk.c``) is tested block-identical
+    against.
 
     Lenient on malformed nesting by design (FIXTURES.md §C case 4): stray
     end tags pop to the nearest matching open tag; unclosed tags simply
@@ -308,18 +309,23 @@ def _stdlib_walk(text: str) -> tuple:
     return p.records, salvage
 
 
-# --- fast tokenizer --------------------------------------------------------
-# One loop that tokenizes and keeps the block state itself (skip depth,
-# link depth, open-tag node, pieces), with no per-token method call: the
-# stdlib machinery — attribute materialization, updatepos, charref
-# splitting, handler dispatch — dominates a HTMLParser profile and none of
-# it feeds our features. One compiled pattern, :data:`_TOKEN`, takes the
-# data before the next '<' together with the common construct there;
-# any other construct goes through :func:`_tolerant_token`, whose
-# tag-boundary decisions reuse html.parser's OWN compiled tolerant
-# regexes. Equivalence with the stdlib walk is enforced block-for-block
-# in tests/test_extractor.py over every fixture, generated pages,
-# thousands of byte-level mutations and a hypothesis fuzz.
+# --- tokenizers of the compiled walk -----------------------------------------
+# The compiled walk (``octospark/_walk.c``) is one loop that tokenizes and
+# keeps the block state itself (skip depth, link depth, open-tag node,
+# pieces), with no per-token method call: the stdlib machinery —
+# attribute materialization, updatepos, charref splitting, handler
+# dispatch — dominates a HTMLParser profile and none of it feeds our
+# features. It mirrors HTMLParser(convert_charrefs=True) for everything
+# the block state observes: charrefs decoded in data; CDATA content mode
+# for script/style (tags inside are NOT parsed, and only a strict
+# ``</script>`` leaves the mode, :data:`_CDATA_STRICT`); '/>'-suffixed
+# tags are start-end tags. Its hand matcher takes the common forms of
+# :data:`_TOKEN`; any other construct goes to :data:`_TOKEN` and then
+# :func:`_tolerant_token`, whose tag-boundary decisions reuse
+# html.parser's OWN compiled tolerant regexes. Equivalence with the
+# stdlib walk is enforced block-for-block in tests/test_extractor.py
+# over every fixture, generated pages, thousands of byte-level
+# mutations and a hypothesis fuzz.
 
 try:  # CPython html.parser module-level regexes (3.8-3.12 stable names)
     from html.parser import attrfind_tolerant as _ATTRFIND
@@ -327,7 +333,7 @@ try:  # CPython html.parser module-level regexes (3.8-3.12 stable names)
     from html.parser import tagfind_tolerant as _TAGFIND
 
     _HAVE_TOLERANT = True
-except ImportError:  # pragma: no cover — fall back to stdlib engine
+except ImportError:  # pragma: no cover — fall back to the stdlib walk
     _HAVE_TOLERANT = False
 
 # Groups: (1) the data before '<', then at most one of (2) an end-tag
@@ -461,135 +467,23 @@ def _tolerant_token(text: str, lt: int) -> tuple:
     return "<", None, None, False, lt + 1  # lone/stray '<': data
 
 
-def _fast_walk(text: str) -> tuple:
-    """``(records, salvage)`` as :func:`_stdlib_walk`: the block records
-    of ``text``, mirroring stdlib
-    HTMLParser(convert_charrefs=True) semantics for everything the block
-    state observes: charrefs decoded in data; CDATA content mode for
-    script/style (tags inside are NOT parsed, and only a strict
-    ``</script>`` leaves the mode); '/>'-suffixed tags are start-end
-    tags; the rest as :func:`_tolerant_token`. A tokenizer exception
-    (the stdlib's own, e.g. on an unknown marked section) keeps the
-    blocks produced so far and is reported in ``salvage``, as the stdlib
-    walk does."""
-    records: list = []
-    pieces: list = []
-    links: list = []
-    node = block_node = _ROOT
-    open_counts: dict = {}
-    skip_depth = link_depth = 0
-    scanner = _TOKEN.scanner
-    scan = scanner(text).match  # each match starts where the last ended
-    last = None  # the current scanner's last match
-    i, n = 0, len(text)  # where the current scanner started
-    salvage = None
-    try:
-        while True:
-            m = scan()
-            if m is not None:
-                last = m
-                data, etag, stag, selfclose = m.groups()
-                if "&" in data:
-                    data = _unescape(data)
-            else:
-                if last is not None:
-                    i = last.end()
-                if i >= n:
-                    break
-                lt = text.find("<", i)
-                if lt == i:
-                    data, etag, stag, selfclose, i = _tolerant_token(text, i)
-                else:  # the data before the construct, or up to the end
-                    if lt < 0:
-                        data, i = text[i:], n
-                    else:
-                        data, i = text[i:lt], lt
-                    if "&" in data:
-                        data = _unescape(data)
-                    etag = stag = None
-                scan = scanner(text, i).match
-                last = None
-            if data and not skip_depth:
-                if not pieces:
-                    block_node = node
-                pieces.append(data)
-                if link_depth:
-                    links.append(data)
-            if etag is not None:
-                tag = etag.lower()
-                if tag in _SKIP_TAGS:
-                    if skip_depth:
-                        skip_depth -= 1
-                    continue
-                if tag == "a" and link_depth:
-                    link_depth -= 1
-                if open_counts.get(tag):  # pop to the nearest matching tag
-                    while True:
-                        top = node[0]
-                        node = node[1]
-                        open_counts[top] -= 1
-                        if top == tag:
-                            break
-            elif stag is not None:
-                tag = stag.lower()
-                if selfclose:
-                    if tag == "br" or tag == "hr":
-                        pieces.append(" ")
-                        if link_depth:
-                            links.append(" ")
-                    continue
-                if tag in _SKIP_TAGS:
-                    skip_depth += 1
-                    cd = _CDATA_STRICT.get(tag)
-                    if cd is not None:  # content mode: no tag parsing inside
-                        mc = cd.search(text, i if last is None else last.end())
-                        if mc is None:
-                            break  # never strictly closed: rest is raw data
-                        i = mc.start()  # the strict close is an end tag
-                        scan = scanner(text, i).match
-                        last = None
-                    continue
-                if tag == "a":
-                    link_depth += 1
-                if tag != "br" and tag != "hr":  # void elements don't nest
-                    node = (tag, node, _ANCESTOR_LABELS.get(tag) or node[2],
-                            node[3] or tag in _TABLE_TAGS, node[4] + 1)
-                    open_counts[tag] = open_counts.get(tag, 0) + 1
-            else:
-                continue
-            # a block tag closes the open block; the push/pop above does
-            # not touch what the flush reads
-            if pieces and tag in _BLOCK_TAGS:
-                _flush(pieces, links, block_node, records)
-    except Exception as exc:
-        salvage = f"salvaged:{type(exc).__name__}"
-    if pieces:
-        _flush(pieces, links, block_node, records)
-    return records, salvage
-
-
 def _select_walk() -> tuple:
     """``(name, walk)``: the walk stage 1 runs. It is the compiled walk
-    (``octospark/_walk.c``, built by :func:`octospark.native.load`) when
-    it builds, configured with this module's vocabularies and
-    tokenizers; else :func:`_fast_walk` (the build failure is logged);
-    or :func:`_stdlib_walk` where html.parser lacks the tolerant regexes
-    the other two delegate to."""
-    if not _HAVE_TOLERANT:
+    (``octospark/_walk.c``, built by :func:`octospark.native.load`),
+    configured with this module's vocabularies and tokenizers, when
+    html.parser has the tolerant regexes it delegates to and the build
+    succeeds; else :func:`_stdlib_walk` (a failed build is logged),
+    which gives the same records about 18x slower."""
+    if not _HAVE_TOLERANT or (mod := native.load("_walk")) is None:
         return "stdlib", _stdlib_walk
-    mod = native.load("_walk")
-    if mod is None:
-        return "fast", _fast_walk
     mod.configure(_SKIP_TAGS, _BLOCK_TAGS, _ANCESTOR_LABELS, _TABLE_TAGS,
                   _CDATA_STRICT, _TOKEN.match, _tolerant_token, _unescape,
                   _ROOT)
     return "compiled", mod.walk
 
 
-_WALKS = {"fast": _fast_walk, "stdlib": _stdlib_walk}
-#: the walk stage 1 runs: 'compiled', 'fast' or 'stdlib'
+#: the walk stage 1 runs: 'compiled' or 'stdlib'
 WALK, _DEFAULT_WALK = _select_walk()
-_WALKS[WALK] = _DEFAULT_WALK
 
 
 def _block(block_id: int, record: tuple, with_hist: bool) -> Block:
@@ -612,29 +506,16 @@ def _block(block_id: int, record: tuple, with_hist: bool) -> Block:
     )
 
 
-def segment_blocks(
-    html: bytes | str | None, with_hist: bool = True, engine: str | None = None
-) -> list:
+def segment_blocks(html: bytes | str | None, with_hist: bool = True) -> list:
     """Stage 1: html -> ordered list[Block] in DOM order.
 
     Pure function of the input bytes; DOM order is preserved (reading
     order, analog of reference src/octopy/segment.py:149-156). Used by
     the staged path and the tests; the fused path (:func:`extract_row`)
-    runs the same walk without building Blocks. ``with_hist=False``
-    skips the char-class histogram. ``engine=None`` (default) runs the
-    walk :data:`WALK` names; ``'compiled'`` (when built), ``'fast'`` and
-    ``'stdlib'`` pick one — all produce the same block records and are
-    tested block-identical. Any other engine name raises ``ValueError``.
+    runs the same walk, the one :data:`WALK` names, without building
+    Blocks. ``with_hist=False`` skips the char-class histogram.
     """
-    if engine is None:
-        walk = _DEFAULT_WALK
-    else:
-        walk = _WALKS.get(engine)
-        if walk is None:
-            raise ValueError(
-                f"unknown engine {engine!r}; expected one of {sorted(_WALKS)}"
-            )
-    records, _ = walk(decode_html(html))
+    records, _ = _DEFAULT_WALK(decode_html(html))
     return [_block(k, r, with_hist) for k, r in enumerate(records)]
 
 

@@ -12,7 +12,10 @@ a stale build. The cache is the package's ``__pycache__`` directory, or
 zip); it never follows ``TMPDIR``, so a driver that builds before it
 points its workers' ``TMPDIR`` elsewhere leaves the workers a build to
 load. A build is written to a temporary name and renamed into place, so
-processes that build at once never load a partial file.
+processes that build at once never load a partial file. A build into
+the package's ``__pycache__`` deletes the builds of the source's other
+versions there; the shared ``~/.cache/octospark`` keeps them, since two
+submitted versions of the package can load from it on one host at once.
 
 With no compiler or an unwritable cache, :func:`load` logs one warning
 and returns None; the caller keeps its pure-Python path.
@@ -20,6 +23,8 @@ and returns None; the caller keeps its pure-Python path.
 
 from __future__ import annotations
 
+import contextlib
+import glob
 import hashlib
 import importlib.machinery
 import importlib.util
@@ -31,12 +36,14 @@ import sysconfig
 
 log = logging.getLogger(__name__)
 
+_SHARED_CACHE = os.path.join(os.path.expanduser("~"), ".cache", "octospark")
+
 
 def _cache_dir() -> str:
     here = os.path.dirname(os.path.abspath(__file__))
     if os.path.isdir(here):
         return os.path.join(here, "__pycache__")
-    return os.path.join(os.path.expanduser("~"), ".cache", "octospark")
+    return _SHARED_CACHE
 
 
 def _compile(src: bytes, out: str) -> None:
@@ -46,6 +53,15 @@ def _compile(src: bytes, out: str) -> None:
          "-I" + sysconfig.get_paths()["include"], "-x", "c", "-", "-o", out],
         input=src, capture_output=True, check=True, timeout=300,
     )
+
+
+def _prune(cache: str, pattern: str, keep: str) -> None:
+    """Delete the files in ``cache`` matching ``pattern`` but ``keep``;
+    one another process deleted first is skipped."""
+    for old in glob.glob(os.path.join(glob.escape(cache), pattern)):
+        if old != keep:
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(old)
 
 
 def load(name: str):
@@ -66,6 +82,8 @@ def load(name: str):
             finally:
                 if os.path.exists(tmp):
                     os.unlink(tmp)
+            if cache != _SHARED_CACHE:
+                _prune(cache, f"{name}-*{suffix}", path)
         loader = importlib.machinery.ExtensionFileLoader(
             f"{__package__}.{name}", path)
         module = importlib.util.module_from_spec(

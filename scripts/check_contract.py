@@ -20,12 +20,17 @@ per-key wall seconds, and a per-key order-insensitive ``value_sha``
 (sha256 of the normalized Spark result), so a judge can re-run the
 whole surface (or any subset: append key names) with one command and
 diff both statuses AND values against the committed artifact
-(VERDICT r4 next-round #1). ``--json`` additionally prints the full
-artifact JSON to stdout for machine capture.
+(VERDICT r4 next-round #1). Its ``source_digest`` (:func:`source_digest`)
+ties it to the sources it was generated from, and
+tests/test_contract_static.py fails when they have changed since.
+``--json`` additionally prints the full artifact JSON to stdout for
+machine capture.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
 import sys
 import time
@@ -34,7 +39,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -74,8 +80,6 @@ def value_hash(pdf: pd.DataFrame) -> str:
     """Order-insensitive sha256 of the normalized result — recorded
     per key in the artifact so a judge (or the driver) can diff two
     runs' VALUES without re-running either engine."""
-    import hashlib
-
     n = normalize(pdf)
     payload = "\x1f".join(n.columns) + "\x1e" + n.to_csv(
         index=False, header=False
@@ -112,13 +116,33 @@ def compare(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame) -> str | None:
     return None
 
 
+def source_digest() -> str:
+    """sha256 over the sorted paths and bytes of the sources the
+    artifact was generated from: ``octospark/*.py``, ``octospark/*.c``,
+    ``__spark_entry__.py`` and this script. A committed artifact whose
+    digest differs from the tree's is stale."""
+    paths = sorted(
+        os.path.relpath(p, REPO).replace(os.sep, "/")
+        for pattern in ("octospark/*.py", "octospark/*.c",
+                        "__spark_entry__.py", "scripts/check_contract.py")
+        for p in glob.glob(os.path.join(REPO, pattern))
+    )
+    h = hashlib.sha256()
+    for rel in paths:
+        with open(os.path.join(REPO, rel), "rb") as f:
+            data = f.read()
+        h.update(f"{rel}\0{len(data)}\0".encode())
+        h.update(data)
+    return h.hexdigest()
+
+
 def _git_head() -> str:
     import subprocess
 
     try:
         return subprocess.run(
             ["git", "rev-parse", "HEAD"],
-            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            cwd=REPO,
             capture_output=True,
             text=True,
             timeout=10,
@@ -203,11 +227,9 @@ def main() -> int:
         "n_rows_only": n_rowsonly,
         "n_fail": n_fail,
         "keys": results,
+        "source_digest": source_digest(),
     }
-    art = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "CONTRACT_SELFCHECK.json",
-    )
+    art = os.path.join(REPO, "CONTRACT_SELFCHECK.json")
     if as_diff:
         # one-command drift check for a judge: re-run (any subset) and
         # diff status + value_sha against the committed artifact

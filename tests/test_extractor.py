@@ -15,7 +15,6 @@ from octospark.extractor import (
     CONTENT_LABELS,
     LABELS,
     _structural,
-    _WALKS,
     classify_blocks,
     decode_html,
     extract,
@@ -131,7 +130,7 @@ def test_htmlgen_deterministic():
         assert p1 == p2
 
 
-# --- fast-tokenizer equivalence (engine='fast' vs stdlib HTMLParser) -------
+# --- walk equivalence (the compiled walk vs stdlib HTMLParser) ---------------
 
 def _open_tags(node) -> tuple:
     """The open-tag chain of a block's node, innermost first."""
@@ -149,22 +148,24 @@ def _block_key(b):
             b.text_density, tuple(b.char_hist))
 
 
-def _salvage(html, engine="stdlib"):
+def _salvage(html, walk=E._stdlib_walk):
     """The walk's salvage flag: None, or 'salvaged:<exception type>'."""
-    return _WALKS[engine](decode_html(html))[1]
+    return walk(decode_html(html))[1]
 
 
-# every walk, the stdlib reference last; a missing compiled walk fails
-ENGINES = ("compiled", "fast", "stdlib")
+def _stdlib_blocks(html) -> list:
+    """segment_blocks() through the stdlib reference walk."""
+    records, _ = E._stdlib_walk(decode_html(html))
+    return [E._block(k, r, True) for k, r in enumerate(records)]
 
 
 def _engines_agree(html) -> bool:
-    """The compiled walk, the fast walk and the stdlib reference give
-    the same blocks and the same salvage flag."""
-    keys = [[_block_key(b) for b in segment_blocks(html, engine=e)]
-            for e in ENGINES]
-    flags = [_salvage(html, e) for e in ENGINES]
-    return all(k == keys[-1] for k in keys) and len(set(flags)) == 1
+    """segment_blocks(), through the walk stage 1 runs (the compiled
+    one, see test_compiled_walk_is_the_default), gives the stdlib
+    reference's blocks, and both walks give the same salvage flag."""
+    return ([_block_key(b) for b in segment_blocks(html)]
+            == [_block_key(b) for b in _stdlib_blocks(html)]
+            and _salvage(html, E._DEFAULT_WALK) == _salvage(html))
 
 
 @pytest.mark.parametrize("name,html", CASES, ids=[c[0] for c in CASES])
@@ -209,39 +210,27 @@ def _corpus_and_mutations():
 
 
 def test_fast_engine_equivalent_on_corpus_and_mutations():
-    """Block-identical fast vs stdlib tokenization over generated pages
-    plus byte-level mutations (truncations + adversarial injections at
-    several positions) — the contract that lets the fast engine be the
-    default."""
+    """Block-identical compiled vs stdlib tokenization over generated
+    pages plus byte-level mutations (truncations + adversarial
+    injections at several positions) — the contract that lets the
+    compiled walk be the default."""
     for h, note in _corpus_and_mutations():
         assert _engines_agree(h), note
 
 
 # --- fused kernel vs the staged reference -----------------------------------
 
-def _extract_with(engine, html) -> dict:
-    """extract() with stage 1 running the ``engine`` walk."""
-    default = E._DEFAULT_WALK
-    E._DEFAULT_WALK = _WALKS[engine]
-    try:
-        return extract(html)
-    finally:
-        E._DEFAULT_WALK = default
-
-
 def _kernel_agrees(html) -> bool:
-    """extract() (the fused kernel) through the compiled walk and through
-    the fast walk equals the three stages composed over the stdlib
-    reference walk, on text, spans and n_blocks, and reports the stdlib
-    walk's salvage flag as its error."""
-    blocks = classify_blocks(segment_blocks(html, engine="stdlib"))
+    """extract() (the fused kernel, through the walk stage 1 runs)
+    equals the three stages composed over the stdlib reference walk, on
+    text, spans and n_blocks, and reports the stdlib walk's salvage flag
+    as its error."""
+    blocks = classify_blocks(_stdlib_blocks(html))
     text, spans = merge_spans(blocks)
-    want = (text, [dataclasses.asdict(s) for s in spans], len(blocks),
-            _salvage(html))
-    return all(
-        (r["text"], r["spans"], r["n_blocks"], r["error"]) == want
-        for r in (_extract_with(e, html) for e in ENGINES[:-1])
-    )
+    r = extract(html)
+    return (r["text"], r["spans"], r["n_blocks"], r["error"]) == (
+        text, [dataclasses.asdict(s) for s in spans], len(blocks),
+        _salvage(html))
 
 
 @pytest.mark.parametrize("name,html", CASES, ids=[c[0] for c in CASES])
@@ -254,19 +243,11 @@ def test_kernel_equals_reference_on_corpus_and_mutations():
         assert _kernel_agrees(h), note
 
 
-def test_unknown_engine_rejected():
-    with pytest.raises(ValueError, match="unknown engine 'fsat'"):
-        segment_blocks(b"<p>x</p>", engine="fsat")
-    for engine in (None, *ENGINES):
-        blocks = segment_blocks(b"<p>x</p>", engine=engine)
-        assert [b.text for b in blocks] == ["x"]
-
-
 def test_compiled_walk_is_the_default():
     """Stage 1 runs the compiled walk; a build failure would show here,
     not as a silent fallback."""
     assert E.WALK == "compiled"
-    assert E._DEFAULT_WALK is _WALKS["compiled"]
+    assert E._DEFAULT_WALK.__module__ == "octospark._walk"
 
 
 def _configure_compiled(**replace):
@@ -280,7 +261,7 @@ def _configure_compiled(**replace):
         root=E._ROOT,
     )
     objs.update(replace)
-    _WALKS["compiled"].__self__.configure(*objs.values())
+    E._DEFAULT_WALK.__self__.configure(*objs.values())
 
 
 def test_compiled_walk_takes_every_token_of_generated_pages():
@@ -300,7 +281,7 @@ def test_compiled_walk_takes_every_token_of_generated_pages():
     try:
         pages = [build_html(r[0], r[1], r[3]) for r in _docs()]
         for h in pages:
-            _WALKS["compiled"](decode_html(h))
+            E._DEFAULT_WALK(decode_html(h))
     finally:
         _configure_compiled()
     assert len(pages) > 100 and calls == []
@@ -310,7 +291,7 @@ def test_compiled_walk_past_its_tag_table():
     """The compiled walk keeps the first 512 distinct tag names in a
     table; past it, and for names longer than 32 characters, it looks a
     name up in the vocabularies each time. Either way its blocks are
-    the fast walk's, a name lowercased to ASCII ('\u212a' is 'k')
+    the stdlib walk's, a name lowercased to ASCII ('\u212a' is 'k')
     included."""
     names = [f"t{k}" for k in range(600)] + ["x" * 40, "nav", "bk"]
     html = (
@@ -320,7 +301,7 @@ def test_compiled_walk_past_its_tag_table():
     )
     try:
         for text in (html, html[::-1], html):  # the last with a full table
-            assert _WALKS["compiled"](text) == E._fast_walk(text)
+            assert E._DEFAULT_WALK(text) == E._stdlib_walk(text)
     finally:
         _configure_compiled()
 
@@ -328,7 +309,7 @@ def test_compiled_walk_past_its_tag_table():
 def test_failed_build_warns_once_and_falls_back(monkeypatch, tmp_path,
                                                 caplog):
     """With no compiler, selecting the walk logs one warning and picks
-    the fast walk, and extract_row gives the same rows as through the
+    the stdlib walk, and extract_row gives the same rows as through the
     compiled walk."""
     import logging
 
@@ -341,11 +322,52 @@ def test_failed_build_warns_once_and_falls_back(monkeypatch, tmp_path,
     monkeypatch.setattr(native, "_cache_dir", lambda: str(tmp_path))
     with caplog.at_level(logging.WARNING):
         name, walk = E._select_walk()
-    assert (name, walk) == ("fast", E._fast_walk)
+    assert (name, walk) == ("stdlib", E._stdlib_walk)
     assert [r.levelno for r in caplog.records] == [logging.WARNING]
     want = [E.extract_row(h) for _, h in CASES]
     monkeypatch.setattr(E, "_DEFAULT_WALK", walk)
     assert [E.extract_row(h) for _, h in CASES] == want
+
+
+def test_build_deletes_stale_builds(monkeypatch, tmp_path):
+    """A build into the package's own cache leaves one build of the
+    extension there: the builds of the source's other versions are
+    deleted. The shared cache keeps them."""
+    import sysconfig
+
+    from octospark import native
+
+    src = {"v": b"int v1;"}
+    monkeypatch.setattr(native.pkgutil, "get_data", lambda pkg, f: src["v"])
+    monkeypatch.setattr(native, "_compile",
+                        lambda s, out: pathlib.Path(out).write_bytes(s))
+    monkeypatch.setattr(native, "_cache_dir", lambda: str(tmp_path))
+    suffix = sysconfig.get_config_var("EXT_SUFFIX")
+    (tmp_path / f"_other-0{suffix}").write_bytes(b"")
+    for v in (b"int v1;", b"int v2;"):
+        src["v"] = v
+        native.load("_walk")  # the stub builds no loadable module
+    left = sorted(p.name for p in tmp_path.iterdir())
+    assert len(left) == 2 and left[0] == f"_other-0{suffix}", left
+    assert (tmp_path / left[1]).read_bytes() == b"int v2;"
+    # the shared cache, which two versions may load from at once, keeps all
+    monkeypatch.setattr(native, "_SHARED_CACHE", str(tmp_path))
+    src["v"] = b"int v3;"
+    native.load("_walk")
+    assert len(list(tmp_path.iterdir())) == 3
+
+
+def test_no_tolerant_regexes_selects_stdlib_without_building(monkeypatch):
+    """Where html.parser lacks the tolerant regexes the compiled walk
+    delegates to, stage 1 runs the stdlib walk and no build is tried."""
+    from octospark import native
+
+    def no_build(name):
+        raise AssertionError(f"built {name}")
+
+    monkeypatch.setattr(E, "_HAVE_TOLERANT", False)
+    monkeypatch.setattr(native, "load", no_build)
+    assert E._select_walk() == ("stdlib", E._stdlib_walk)
 
 
 def test_adversarial_nesting_is_linear_time():
@@ -362,7 +384,7 @@ def test_adversarial_nesting_is_linear_time():
     import gc
     import time
 
-    assert E._DEFAULT_WALK is _WALKS["compiled"]
+    assert E.WALK == "compiled"
 
     h4, h8 = "<div><span>x " * 4000, "<div><span>x " * 8000
     for run in (extract, lambda h: segment_blocks(h, with_hist=False)):
@@ -397,7 +419,7 @@ def test_salvaged_parse_is_reported():
     r = extract(html)
     assert r["error"] == "salvaged:AssertionError"
     assert r["n_blocks"] == 1
-    assert _salvage(html) == _salvage(html, "compiled") == r["error"]
+    assert _salvage(html) == _salvage(html, E._DEFAULT_WALK) == r["error"]
     assert _engines_agree(html) and _kernel_agrees(html)
     for cut in (b"<p>hello world</p><![", b"<p>hello world</p><![BAD"):
         assert extract(cut)["error"] is None
