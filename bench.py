@@ -431,7 +431,6 @@ def write_bench_md(result: dict) -> None:
     with open(hist_path, "a") as f:
         f.write(json.dumps(result) + "\n")
     best_thr, best_eff = result["pages_per_sec"], None
-    pair_best: dict = {}  # pair -> {eff, vs_hw} best across history
     with open(hist_path) as f:
         for ln in f:
             r = json.loads(ln)
@@ -444,15 +443,6 @@ def write_bench_md(result: dict) -> None:
             e = s.get("efficiency")
             if e is not None:
                 best_eff = e if best_eff is None else max(best_eff, e)
-            for pair, v in (s.get("pairs") or {}).items():
-                pb = pair_best.setdefault(pair, {"eff": None, "vs_hw": None})
-                for src_key, dst_key in (("efficiency", "eff"),
-                                         ("efficiency_vs_hw", "vs_hw")):
-                    val = v.get(src_key)
-                    if val is not None and (
-                        pb[dst_key] is None or val > pb[dst_key]
-                    ):
-                        pb[dst_key] = val
     path = os.path.join(REPO, "BENCH", "BASELINE.md")
     eff_now = (result.get("scaling") or {}).get("efficiency")
     lines = [
@@ -482,7 +472,6 @@ def write_bench_md(result: dict) -> None:
             f"{s['checksum_identical']})\n"
         )
         for pair, v in s["pairs"].items():
-            pb = pair_best.get(pair, {})
             lines.append(
                 f"- N->4N pair {pair}: level-throughput ratio "
                 f"{v['efficiency']}, median paired pass "
@@ -491,9 +480,7 @@ def write_bench_md(result: dict) -> None:
                 f"best pass {v.get('efficiency_best_pass')}; pure-CPU "
                 f"hardware ceiling on this VM: "
                 f"{v['hw_ceiling_efficiency']}; software efficiency vs "
-                f"ceiling: {v['efficiency_vs_hw']}; quietest-window run "
-                f"across history: efficiency {pb.get('eff')}, vs-ceiling "
-                f"{pb.get('vs_hw')})\n"
+                f"ceiling: {v['efficiency_vs_hw']})\n"
             )
         lines.append(
             f"- primary pair {s['primary_pair']}: efficiency "

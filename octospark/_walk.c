@@ -11,18 +11,33 @@
    configure() hands over once:
    - the tag vocabularies (_SKIP_TAGS, _BLOCK_TAGS, _ANCESTOR_LABELS,
      _TABLE_TAGS) and the strict script/style close patterns;
-   - a construct the hand matcher below declines goes to _TOKEN.match,
-     then to _tolerant_token;
+   - a construct the hand matcher below declines goes to
+     _tolerant_token;
    - data holding '&' goes through html.unescape;
    - a block's text and word count come from str.split and str.join.
 
-   The hand matcher takes the common forms of _TOKEN: data up to '<',
-   '</name>', a simple start tag with quoted or simple attributes, a
-   closed comment and a doctype. At every choice point of the pattern
-   it takes the first alternative the regex engine would try, and it
-   declines whenever that alternative fails later, so a token it takes
-   is the token _TOKEN.match returns. '\s' is Py_UNICODE_ISSPACE, which
-   is what the re module uses for str patterns. */
+   The hand matcher, match(), takes the construct at a '<' when it has
+   one of these forms, which html.parser tokenizes the same way:
+
+     <(?:/\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>               end tag
+       |([a-zA-Z][-.a-zA-Z0-9:_]*)(?=[\t\n\r\f />])       start tag
+        (?:\s+[^\s/>="'<]+
+         (?:\s*=\s*(?:"[^"<>]*"|'[^'<>]*'|[^\s>"'`=<]+))?)*
+        \s*(/?)>
+       |!--(?s:.*?)--\s*>                                 comment
+       |!(?!--|\[)[^>]*+>)                                doctype
+
+   It follows the pattern left to right, takes at each choice point the
+   alternative a regex engine tries first, and declines when that one
+   fails. No backtracking could match instead: the character after '<'
+   picks the branch, an attribute value that does not match leaves the
+   attribute valueless (the one other choice, which it takes), and
+   every greedy run ends at a character its class excludes, so giving
+   any of it back leaves a character the rest cannot start with (but
+   for a value's '/' before '>', where the greedy run has matched). A
+   declined construct is thus one the pattern does not match, and
+   _tolerant_token, html.parser's own machinery, decides it. '\s' is
+   Py_UNICODE_ISSPACE, as in the re module's str patterns. */
 
 #define PY_SSIZE_T_CLEAN
 #include <Python.h>
@@ -47,7 +62,7 @@ typedef struct {
 
 /* configure()'s objects */
 static PyObject *skip_tags, *block_tags, *ancestor_labels, *table_tags,
-    *cdata_strict, *token_match, *tolerant_token, *unescape, *root;
+    *cdata_strict, *tolerant_token, *unescape, *root;
 static PyObject *empty_str, *space_str, *comment_close;
 
 /* The names seen so far, each with its Tag; shared by every walk. */
@@ -65,6 +80,7 @@ typedef struct {
     PyObject *records, *pieces;
     PyObject *node, *block_node;
     Py_ssize_t link_chars; /* normalized length of the block's link data */
+    Py_ssize_t no_comment_close; /* no '--\s*>' starts at or past it */
     Py_ssize_t skip_depth, link_depth;
     int *levels; /* the table index of each open tag, -1 outside it */
     Py_ssize_t depth, cap;
@@ -578,8 +594,9 @@ at(int kind, const void *data, Py_ssize_t n, Py_ssize_t k)
 #define AT(k) at(kind, data, n, (k))
 #define SKIP_SPACE(k) while (is_space(AT(k))) (k)++
 
-/* The construct at text[lt] == '<' as _TOKEN matches it: 1 when taken
-   (tk filled), 0 when declined, -1 on error. */
+/* The construct at text[lt] == '<' as the pattern in the header
+   matches it: 1 when taken (tk filled), 0 when declined, -1 on
+   error. */
 static int
 match(Walk *w, Py_ssize_t lt, Token *tk)
 {
@@ -654,9 +671,15 @@ match(Walk *w, Py_ssize_t lt, Token *tk)
     }
     if (c == '!') {
         if (AT(lt + 2) == '-' && AT(lt + 3) == '-') { /* !--.*?--\s*> */
+            /* a failed scan searched to the end: every later comment
+               is declined without scanning again */
+            if (lt + 4 >= w->no_comment_close)
+                return 0;
             for (p = lt + 4;; p++) {
-                if ((p = PyUnicode_Find(w->text, comment_close, p, n, 1)) < 0)
+                if ((p = PyUnicode_Find(w->text, comment_close, p, n, 1)) < 0) {
+                    w->no_comment_close = lt + 4;
                     return p == -2 ? -1 : 0;
+                }
                 q = p + 2;
                 SKIP_SPACE(q);
                 if (AT(q) == '>')
@@ -678,7 +701,7 @@ match(Walk *w, Py_ssize_t lt, Token *tk)
     return 0;
 }
 
-/* A tag from _TOKEN or _tolerant_token: an end tag when is_end. */
+/* A tag from _tolerant_token: an end tag when is_end. */
 static int
 tag_from_str(Walk *w, PyObject *name, int is_end, int selfclose, Py_ssize_t *i)
 {
@@ -694,60 +717,27 @@ tag_from_str(Walk *w, PyObject *name, int is_end, int selfclose, Py_ssize_t *i)
 }
 
 /* A construct the hand matcher declined, at the first '<' (lt) after
-   the data start i: _TOKEN.match, then _tolerant_token. Returns as
-   start_tag, with *i the resume index. */
+   the data start *i: the data text[*i:lt], then _tolerant_token.
+   Returns as start_tag, with *i the resume index. */
 static int
 slow_token(Walk *w, Py_ssize_t lt, Py_ssize_t *i)
 {
-    PyObject *res, *groups, *name, *end, *sc;
+    PyObject *res, *name;
     int is_end, selfclose, r = -1;
 
-    if ((res = PyObject_CallFunction(token_match, "On", w->text, *i)) == NULL)
+    if (add_span(w, *i, lt) < 0)
         return -1;
-    if (res != Py_None) {
-        /* its data group is text[i:lt] */
-        groups = PyObject_CallMethod(res, "groups", NULL);
-        end = PyObject_CallMethod(res, "end", NULL);
-        Py_DECREF(res);
-        if (groups == NULL || end == NULL || add_span(w, *i, lt) < 0)
-            goto done_m;
-        if ((*i = PyLong_AsSsize_t(end)) == -1 && PyErr_Occurred())
-            goto done_m;
-        name = PyTuple_GET_ITEM(groups, 1);
-        is_end = name != Py_None;
-        if (!is_end)
-            name = PyTuple_GET_ITEM(groups, 2);
-        sc = PyTuple_GET_ITEM(groups, 3);
-        r = 0;
-        if (name != Py_None) {
-            if ((selfclose = sc == Py_None ? 0 : PyObject_IsTrue(sc)) < 0)
-                r = -1;
-            else
-                r = tag_from_str(w, name, is_end, selfclose, i);
-        }
-    done_m:
-        Py_XDECREF(groups);
-        Py_XDECREF(end);
-        return r;
-    }
-    Py_DECREF(res);
-    if (lt > *i) { /* the data before the construct */
-        r = add_span(w, *i, lt);
-        *i = lt;
-        return r;
-    }
-    res = PyObject_CallFunction(tolerant_token, "On", w->text, *i);
-    if (res == NULL)
+    if ((res = PyObject_CallFunction(tolerant_token, "On", w->text, lt)) == NULL)
         return -1;
     if (!PyTuple_Check(res) || PyTuple_GET_SIZE(res) != 5) {
         PyErr_SetString(PyExc_TypeError, "_tolerant_token: expected a 5-tuple");
-        goto done_t;
+        goto done;
     }
     if (add_data(w, PyTuple_GET_ITEM(res, 0)) < 0)
-        goto done_t;
+        goto done;
     *i = PyLong_AsSsize_t(PyTuple_GET_ITEM(res, 4));
     if (*i == -1 && PyErr_Occurred())
-        goto done_t;
+        goto done;
     name = PyTuple_GET_ITEM(res, 1);
     is_end = name != Py_None;
     if (!is_end)
@@ -759,7 +749,7 @@ slow_token(Walk *w, Py_ssize_t lt, Py_ssize_t *i)
         else
             r = tag_from_str(w, name, is_end, selfclose, i);
     }
-done_t:
+done:
     Py_DECREF(res);
     return r;
 }
@@ -845,6 +835,7 @@ walk(PyObject *module, PyObject *text)
     w->n = PyUnicode_GET_LENGTH(text);
     w->node = Py_NewRef(root);
     w->block_node = Py_NewRef(root);
+    w->no_comment_close = PY_SSIZE_T_MAX;
     if ((w->records = PyList_New(0)) == NULL || (w->pieces = PyList_New(0)) == NULL)
         goto done;
     if (run(w) < 0) {
@@ -871,13 +862,13 @@ done:
 static PyObject *
 configure(PyObject *module, PyObject *args)
 {
-    PyObject *a[9];
+    PyObject *a[8];
 
-    if (!PyArg_ParseTuple(args, "OOO!OO!OOOO!:configure", &a[0], &a[1],
+    if (!PyArg_ParseTuple(args, "OOO!OO!OOO!:configure", &a[0], &a[1],
                           &PyDict_Type, &a[2], &a[3], &PyDict_Type, &a[4],
-                          &a[5], &a[6], &a[7], &PyTuple_Type, &a[8]))
+                          &a[5], &a[6], &PyTuple_Type, &a[7]))
         return NULL;
-    if (PyTuple_GET_SIZE(a[8]) != 5) {
+    if (PyTuple_GET_SIZE(a[7]) != 5) {
         PyErr_SetString(PyExc_ValueError, "configure(): root must be a 5-tuple");
         return NULL;
     }
@@ -886,10 +877,9 @@ configure(PyObject *module, PyObject *args)
     Py_XSETREF(ancestor_labels, Py_NewRef(a[2]));
     Py_XSETREF(table_tags, Py_NewRef(a[3]));
     Py_XSETREF(cdata_strict, Py_NewRef(a[4]));
-    Py_XSETREF(token_match, Py_NewRef(a[5]));
-    Py_XSETREF(tolerant_token, Py_NewRef(a[6]));
-    Py_XSETREF(unescape, Py_NewRef(a[7]));
-    Py_XSETREF(root, Py_NewRef(a[8]));
+    Py_XSETREF(tolerant_token, Py_NewRef(a[5]));
+    Py_XSETREF(unescape, Py_NewRef(a[6]));
+    Py_XSETREF(root, Py_NewRef(a[7]));
     maybe_untrack(root);
     for (int k = 0; k < n_table; k++)
         tag_clear(&table[k]);
@@ -901,7 +891,7 @@ configure(PyObject *module, PyObject *args)
 static PyMethodDef methods[] = {
     {"configure", configure, METH_VARARGS,
      "configure(skip_tags, block_tags, ancestor_labels, table_tags, "
-     "cdata_strict, token_match, tolerant_token, unescape, root)\n"
+     "cdata_strict, tolerant_token, unescape, root)\n"
      "Hand the walk extractor's vocabularies and tokenizers."},
     {"walk", walk, METH_O,
      "walk(text) -> (records, salvage), as extractor._stdlib_walk."},

@@ -33,9 +33,9 @@ Stage 1 has two walks that produce the same block records:
   that tokenizes and keeps the block state, built at import by
   :mod:`octospark.native` into a cache keyed by its source hash. It
   hands back to this module's own objects whatever is rare: a construct
-  its hand matcher declines goes to :data:`_TOKEN` and
-  :func:`_tolerant_token`, data holding ``&`` to ``html.unescape``, and
-  the tag vocabularies are passed in, not copied;
+  its hand matcher declines goes to :func:`_tolerant_token`, data
+  holding ``&`` to ``html.unescape``, and the tag vocabularies are
+  passed in, not copied;
 - the stdlib ``html.parser`` reference (:class:`_BlockParser`), which
   the tests hold the compiled walk and the fused kernel to, and which
   runs where the compiled walk cannot be built (the build failure is
@@ -319,9 +319,9 @@ def _stdlib_walk(text: str) -> tuple:
 # the block state observes: charrefs decoded in data; CDATA content mode
 # for script/style (tags inside are NOT parsed, and only a strict
 # ``</script>`` leaves the mode, :data:`_CDATA_STRICT`); '/>'-suffixed
-# tags are start-end tags. Its hand matcher takes the common forms of
-# :data:`_TOKEN`; any other construct goes to :data:`_TOKEN` and then
-# :func:`_tolerant_token`, whose tag-boundary decisions reuse
+# tags are start-end tags. Its hand matcher takes the common, well-formed
+# constructs (the pattern in its header comment); any other construct
+# goes to :func:`_tolerant_token`, whose tag-boundary decisions reuse
 # html.parser's OWN compiled tolerant regexes. Equivalence with the
 # stdlib walk is enforced block-for-block in tests/test_extractor.py
 # over every fixture, generated pages, thousands of byte-level
@@ -336,30 +336,6 @@ try:  # CPython html.parser module-level regexes (3.8-3.12 stable names)
 except ImportError:  # pragma: no cover — fall back to the stdlib walk
     _HAVE_TOLERANT = False
 
-# Groups: (1) the data before '<', then at most one of (2) an end-tag
-# name, (3) a start-tag name with (4) '/' when self-closing; a comment or
-# declaration sets none of them.
-_TOKEN = re.compile(
-    r"([^<]*+)<(?:"
-    # end tag in endtagfind's form '</ name >'
-    r"/\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>"
-    # conservative well-formed start tag: simple name, simple attrs (no
-    # '<'/'>'/stray quotes inside), optional '/>' suffix. By construction
-    # every match is tokenized identically by the stdlib tolerant
-    # machinery (incl. the self-closing rule: a bare value eats a
-    # trailing '/', so only a detached '/' marks '/>'). The name ends
-    # where tagfind_tolerant's does: any other whitespace (\x0b, \xa0,
-    # U+3000, ...) continues the stdlib's tag name
-    r"|([a-zA-Z][-a-zA-Z0-9:_.]*)(?=[\t\n\r\f />])"
-    r"(?:\s+[^\s/>=\"'<]+"
-    r"(?:\s*=\s*(?:\"[^\"<>]*\"|'[^'<>]*'|[^\s>\"'`=<]+))?)*"
-    r"\s*(/?)>"
-    # closed comment, up to the first commentclose ('--\s*>') as stdlib
-    r"|!--(?s:.*?)--\s*>"
-    # doctype / bogus comment: '<!' not opening a comment or marked section
-    r"|!(?!--|\[)[^>]*+>"
-    r")"
-)
 _CDATA_STRICT = {
     "script": re.compile(r"</\s*script\s*>", re.IGNORECASE),
     "style": re.compile(r"</\s*style\s*>", re.IGNORECASE),
@@ -395,16 +371,17 @@ def _recover(text: str, lt: int) -> tuple:
 
 
 def _tolerant_token(text: str, lt: int) -> tuple:
-    """Tokenize a construct at ``text[lt] == '<'`` that :data:`_TOKEN`
-    does not match, as stdlib HTMLParser(convert_charrefs=True) does for
-    everything our walk observes: returns ``(data, end tag, start tag,
-    self-closing, resume index)`` with at most one of data / end tag /
-    start tag set. Tolerant end tags and weird start tags follow
-    html.parser's own regexes; broken start tags are emitted raw; bogus
-    end tags, marked sections and processing instructions are consumed
-    silently; incomplete constructs (an unclosed comment among them)
-    recover via :func:`_recover`; a stray '<' is data. An unknown marked
-    section raises AssertionError, as stdlib does."""
+    """Tokenize a construct at ``text[lt] == '<'`` that the compiled
+    walk's hand matcher declines, as stdlib
+    HTMLParser(convert_charrefs=True) does for everything our walk
+    observes: returns ``(data, end tag, start tag, self-closing, resume
+    index)`` with at most one of data / end tag / start tag set.
+    Tolerant end tags and weird start tags follow html.parser's own
+    regexes; broken start tags are emitted raw; bogus end tags, marked
+    sections and processing instructions are consumed silently;
+    incomplete constructs (an unclosed comment among them) recover via
+    :func:`_recover`; a stray '<' is data. An unknown marked section
+    raises AssertionError, as stdlib does."""
     nxt = text[lt + 1 : lt + 2]
     if nxt == "/":
         gt = text.find(">", lt + 1)
@@ -477,8 +454,7 @@ def _select_walk() -> tuple:
     if not _HAVE_TOLERANT or (mod := native.load("_walk")) is None:
         return "stdlib", _stdlib_walk
     mod.configure(_SKIP_TAGS, _BLOCK_TAGS, _ANCESTOR_LABELS, _TABLE_TAGS,
-                  _CDATA_STRICT, _TOKEN.match, _tolerant_token, _unescape,
-                  _ROOT)
+                  _CDATA_STRICT, _tolerant_token, _unescape, _ROOT)
     return "compiled", mod.walk
 
 

@@ -125,18 +125,25 @@ def test_lineage_cuts_only_in_session_materialize():
     ], cuts
 
 
-def test_contract_selfcheck_matches_the_sources():
-    """CONTRACT_SELFCHECK.json records the digest of the sources it was
-    generated from; an edit under ``octospark/`` (or to the entry point
-    or the check script) without regenerating the artifact fails here."""
+def _check_contract():
+    """scripts/check_contract.py as a module."""
     import importlib.util
-    import json
 
     spec = importlib.util.spec_from_file_location(
         "check_contract", os.path.join(REPO, "scripts", "check_contract.py")
     )
     cc = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(cc)
+    return cc
+
+
+def test_contract_selfcheck_matches_the_sources():
+    """CONTRACT_SELFCHECK.json records the digest of the sources it was
+    generated from; an edit under ``octospark/`` (or to the entry point
+    or the check script) without regenerating the artifact fails here."""
+    import json
+
+    cc = _check_contract()
     with open(os.path.join(REPO, "CONTRACT_SELFCHECK.json")) as f:
         recorded = json.load(f).get("source_digest")
     assert recorded == cc.source_digest(), (
@@ -144,3 +151,37 @@ def test_contract_selfcheck_matches_the_sources():
         "regenerate it with `python scripts/check_contract.py` (all keys, "
         "default sf0.01) and check that no value_sha changed"
     )
+
+
+def test_value_hash_is_canonical():
+    """A key's value_sha hashes canonical JSON, not pandas or numpy
+    formatting: the pinned frame hashes to a pinned constant, and row
+    order, column order, NaN's and zero's sign, numpy against Python
+    scalars and arrays against lists do not change it."""
+    import datetime
+
+    import numpy as np
+    import pandas as pd
+
+    cc = _check_contract()
+    frame = pd.DataFrame({
+        "f": [0.1, float("nan"), -0.0, 1 / 3, 2.0000000004],
+        "l": [[1, 2], [], None, [0.5, -0.0], ["a", None]],
+        "s": ["x", None, "é", "z", "q"],
+        "st": [{"b": 1, "a": 2.5}, None, {"a": float("nan")}, {}, {"a": 0}],
+        "t": pd.to_datetime(
+            ["2024-01-02 03:04:05.123456789", None, "1969-12-31 23:59:59.5",
+             "2000-01-01 00:00:00", "2024-02-29 00:00:00"], format="ISO8601"),
+    })
+    pinned = "690453fba4d50525"
+    assert cc.value_hash(frame) == pinned
+    same = frame.iloc[::-1][["t", "st", "s", "l", "f"]].copy()
+    same["f"] = [2.0, np.float64(1 / 3), 0.0, np.nan, 0.1]
+    same["l"] = [["a", None], [np.float64(0.5), 0.0], None, [],
+                 np.array([1, 2])]
+    assert cc.value_hash(same) == pinned
+    assert cc._canon(-0.0) == cc._canon(0.0) == 0.0
+    assert str(cc._canon(np.float32("nan"))) == "nan"
+    assert cc._canon(np.datetime64("1970-01-01T00:00:01")) == (
+        "1970-01-01T00:00:01.000000")
+    assert cc._canon(datetime.date(2024, 1, 2)) == "2024-01-02"
